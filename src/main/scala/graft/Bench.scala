@@ -101,7 +101,9 @@ object Bench {
     // probe exactly this way). Probes land in probe-scoped files; the
     // round-named BENCH_r*_full.json is written only by full runs.
     val isProbe = onlySet.isDefined
-    val artifactName = if (isProbe) s"probe_$sfName.json" else s"full_$sfName.json"
+    // a probe's core count is in its name, so an 8-core and a 32-core
+    // probe of one corpus no longer overwrite each other
+    val artifactName = if (isProbe) s"probe_${sfName}_c$cpus.json" else s"full_$sfName.json"
     val contractLine =
       s"""{"metric":"total","value":$total,"unit":"sec","failures":$failures,"runs":3,""" +
         s""""n_queries":${results.size},"normalizer":"q01_filter_project","normalizer_sec":$normT,""" +

@@ -61,8 +61,22 @@ object GraftSession {
     // default is unchanged, so every driver bench/verify run is
     // identical to prior rounds.
     "spark.sql.files.maxPartitionBytes" ->
-      sys.env.getOrElse("SPARK_GRAFT_MAX_PARTITION_BYTES", (16L * 1024 * 1024).toString),
+      maxPartitionBytes(sys.env.get("SPARK_GRAFT_MAX_PARTITION_BYTES")).toString,
+    // every streaming checkpoint file goes through graft's manager: local
+    // paths skip Hadoop's forked chmod/readlink, other schemes keep
+    // Spark's default manager (see LocalCheckpointFileManager)
+    "spark.sql.streaming.checkpointFileManagerClass" ->
+      classOf[graft.streaming.LocalCheckpointFileManager].getName,
   )
+
+  /** `SPARK_GRAFT_MAX_PARTITION_BYTES` as a positive byte count; unset
+    * means 16 MB.
+    */
+  private[graft] def maxPartitionBytes(env: Option[String]): Long = env match {
+    case None => 16L * 1024 * 1024
+    case Some(v) => v.trim.toLongOption.filter(_ > 0).getOrElse(throw new IllegalArgumentException(
+      s"SPARK_GRAFT_MAX_PARTITION_BYTES must be a positive whole number of bytes, got '$v'"))
+  }
 
   def local(threads: Int = 4): SparkSession = {
     val b = SparkSession

@@ -55,7 +55,7 @@ object MakeSf {
     // `<t>.parquet` as a file): write a single part then move it
     def writeSingle(df: DataFrame, table: String): Unit = {
       val tmp = s"$out/_tmp_$table"
-      // r17: ~8 MB row groups (default 128 MB left every table ONE row
+      // r17: ~2 MB row groups (default 128 MB left every table ONE row
       // group, so any scan — and the per-row expression work that runs
       // inside it — was a single task at any core count; the r17 scaling
       // probe read flat 8v32 purely from this). A 100 TB table is many

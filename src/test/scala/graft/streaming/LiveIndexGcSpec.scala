@@ -113,14 +113,20 @@ class LiveIndexGcSpec extends SparkSpec {
     // external bulk ingest or pre-r16 engine leaves behind) — and
     // assert compactStore shrinks it back with probes unchanged.
     locally {
-      val leaf = Files.list(Paths.get(root, "post")).iterator().asScala
-        .filter(Files.isDirectory(_)).toSeq.minBy(_.getFileName.toString)
+      def entries(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+        val s = Files.list(dir)
+        try s.iterator().asScala.toList finally s.close()
+      }
+      val leaf = entries(Paths.get(root, "post"))
+        .filter(Files.isDirectory(_)).minBy(_.getFileName.toString)
+      // leaf files omit the path-encoded partition column, so reading one
+      // leaf directly yields exactly the rows to re-lay
       val rows = spark.read.parquet(leaf.toString)
       val splitDir = tmp("gcpost_split")
       rows.repartition(3).write
         .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(splitDir)
-      Files.list(leaf).iterator().asScala.foreach(Files.delete)
-      Files.list(Paths.get(splitDir)).iterator().asScala
+      entries(leaf).filter(Files.isRegularFile(_)).foreach(Files.delete)
+      entries(Paths.get(splitDir))
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .zipWithIndex.foreach { case (p, i) =>
           Files.move(p, leaf.resolve(f"part-split-$i%05d.parquet")): Unit

@@ -3,6 +3,8 @@ package graft.streaming
 import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
@@ -1163,5 +1165,76 @@ class ViewCatalogSpec extends SparkSpec {
       Seq("s", "6", "1"), Seq("s", "1", "2")),
       s"6 hashes lowest and enters: ${snapRows(cat, "reservoir", v.cols)}")
     cat.stopAll()
+  }
+
+  test("#234af checkpoint manager migration: a view begun on Spark's default manager resumes on graft's, replays over stale .crc sidecars; a new view writes none") {
+    val key = "spark.sql.streaming.checkpointFileManagerClass"
+    val graftManager = spark.conf.get(key)
+    val (root, src) = (tmp("vcmig"), tmp("vcmigsrc"))
+    def files(dir: java.nio.file.Path): Seq[java.nio.file.Path] = {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(Files.isRegularFile(_)).toSeq finally s.close()
+    }
+    def isSidecar(f: java.nio.file.Path) = f.getFileName.toString.matches("""\..*\.crc""")
+    val sql = "SELECT city, count(*) AS n, sum(amount) AS total, max(amount) AS hi FROM t GROUP BY city"
+    spark.conf.set(key, classOf[org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager].getName)
+    try {
+      val cat1 = new ViewCatalog(spark, root)
+      cat1.registerSource("t", () => ChangeFeed.readJsonDir(spark, src).as[Change])
+      cat1.createView("mig", sql)
+      writeChanges(src, "b1.json", Seq(
+        Change("insert", 1L, ts(0), Map("city" -> "ber", "amount" -> "50"), 1L),
+        Change("insert", 2L, ts(1), Map("city" -> "ber", "amount" -> "30"), 2L),
+        Change("insert", 3L, ts(2), Map("city" -> "par", "amount" -> "20"), 3L)))
+      cat1.awaitAll()
+      writeChanges(src, "b2.json", Seq(
+        Change("insert", 4L, ts(3), Map("city" -> "par", "amount" -> "40"), 4L),
+        Change("update", 3L, ts(4), Map("city" -> "par", "amount" -> "25"), 5L)))
+      cat1.awaitAll()
+      cat1.stopAll()
+    } finally spark.conf.set(key, graftManager)
+    val ck = Paths.get(root, "views", "mig", "checkpoint")
+    // a crash between the last batch's state commit and its commit-log
+    // entry: the resumed query must replay that batch, overwriting
+    // deltas that still carry the default manager's Hadoop sidecars
+    val commits = ck.resolve("commits")
+    val last = files(commits).map(_.getFileName.toString).filter(_.forall(_.isDigit)).map(_.toLong).max
+    Files.delete(commits.resolve(last.toString))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    val staleSidecars = files(ck.resolve("state")).filter(_.getFileName.toString == s".${last + 1}.delta.crc")
+    assert(staleSidecars.nonEmpty, s"the default manager should have left delta sidecars under $ck")
+
+    val cat2 = new ViewCatalog(spark, root)
+    cat2.registerSource("t", () => ChangeFeed.readJsonDir(spark, src).as[Change])
+    assert(cat2.resume() == Seq("mig"))
+    cat2.awaitAll()
+    assert(Files.exists(commits.resolve(last.toString)), s"batch $last was not replayed")
+    assert(staleSidecars.forall(f => !Files.exists(f)),
+      s"replayed deltas kept stale sidecars: ${staleSidecars.filter(Files.exists(_))}")
+    // continuity: the delete must fall back to the CHECKPOINTED next-best
+    writeChanges(src, "b3.json", Seq(
+      Change("delete", 1L, ts(10), Map.empty, 6L),
+      Change("insert", 5L, ts(11), Map("city" -> "lis", "amount" -> "11"), 7L)))
+    cat2.awaitAll()
+    val cols = cat2.view("mig").get.cols
+    assert(snapRows(cat2, "mig", cols) == Set(
+      Seq("ber", "1", "30.0", "30.0"), Seq("par", "2", "65.0", "40.0"), Seq("lis", "1", "11.0", "11.0")),
+      s"migrated view state: ${snapRows(cat2, "mig", cols)}")
+    // every sidecar left behind still matches its file, so Hadoop's
+    // checksummed reader (Spark's default manager) can read the whole checkpoint
+    val lfs = org.apache.hadoop.fs.FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    files(ck).filterNot(isSidecar).foreach { f =>
+      val in = lfs.open(new org.apache.hadoop.fs.Path(f.toUri))
+      try in.readAllBytes() finally in.close()
+    }
+
+    cat2.createView("mig_new", "SELECT city, count(*) AS n FROM t GROUP BY city")
+    cat2.awaitAll()
+    assert(snapRows(cat2, "mig_new", cat2.view("mig_new").get.cols) ==
+      Set(Seq("ber", "1"), Seq("par", "2"), Seq("lis", "1")))
+    val fresh = files(Paths.get(root, "views", "mig_new", "checkpoint"))
+    assert(fresh.exists(_.getFileName.toString.endsWith(".delta")), s"no state deltas in $fresh")
+    assert(fresh.count(isSidecar) == 0, s"Hadoop sidecars in a new checkpoint: ${fresh.filter(isSidecar)}")
+    cat2.stopAll()
   }
 }

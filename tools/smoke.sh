@@ -3,12 +3,17 @@
 # dataflow class — flat agg, keyed min/max, value-equi join, ranked,
 # ASOF, session, ROWS frames, session-DISTINCT, approx HLL, key-equi
 # residual join — plus restart continuity, snapshot bootstrap, and the
-# Debezium adapter. The full 300-test fleet (sbt test, ~11 min serial)
+# Debezium adapter. Every streaming spec checkpoints through
+# LocalCheckpointFileManager, so its semantics spec, the default-manager
+# migration case (#234af) and the RocksDB restart (#220h) ride along too.
+# The full 300-test fleet (sbt test, ~11 min serial)
 # remains the round gate; this is the fast inner loop.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 exec sbt \
   'testOnly graft.streaming.IncrementalPlannerSpec -- -z "171a " -z "171f " -z "171at " -z "171aq " -z "171bk " -z "171an " -z "171bq " -z "171bs " -z "171bt " -z "171bo "' \
-  'testOnly graft.streaming.PlannerRestartSpec -- -z "220a " -z "220c "' \
+  'testOnly graft.streaming.PlannerRestartSpec -- -z "220a " -z "220c " -z "220h "' \
+  'testOnly graft.streaming.CheckpointFileManagerSpec' \
+  'testOnly graft.streaming.ViewCatalogSpec -- -z "234af "' \
   'testOnly graft.streaming.PlannerBootstrapSpec -- -z "221a "' \
   'testOnly graft.streaming.DebeziumSpec -- -z "222b "'
