@@ -109,20 +109,50 @@ object FeedSink {
     * side of [[writeChangeBatch]], and how a downstream named view
     * consumes an upstream one WITHOUT re-running its dataflow: the
     * upstream view maintains its state once, persists its deltas here,
-    * and any number of dependents tail the directory. A crash-replayed
-    * upstream batch rewrites its partition with fresh file names, so a
-    * tailing reader may see those changes twice — harmless by the same
-    * argument that makes the sink idempotent: re-applying a change at an
-    * already-applied `(ts, seq)` position leaves every LWW fold's state
-    * unchanged, and diff-only emission forwards nothing.
+    * and any number of dependents tail the directory. The tail reads
+    * through the commit markers ([[FeedSource]]): its offset is the
+    * highest committed batch id, each batch id is delivered exactly once,
+    * after its marker lands, and a crash-replayed upstream batch, which
+    * re-stamps an id the tail has already passed, is not delivered again.
     */
   def readChangeFeed(spark: org.apache.spark.sql.SparkSession,
       feedDir: String): org.apache.spark.sql.Dataset[Change] = {
     implicit val enc = org.apache.spark.sql.Encoders.product[Change]
-    spark.readStream.schema(feedSchema).parquet(feedDir)
+    spark.readStream.format(classOf[FeedSourceProvider].getName).load(feedDir)
       .select(col("op"), col("key"), expr("timestamp_micros(ts_us)").as("ts"),
         col("payload"), col("seq"))
       .as[Change]
+  }
+
+  /** The one reader of a feed directory: the `batch_id` partitions named
+    * by `batches`, read with [[feedSchema]] through a [[FeedFileIndex]].
+    * Spark infers no schema, reads no footer to plan, and lists no
+    * directory beyond the named partitions, whatever the feed's history
+    * length. `streaming` marks the frame as one micro-batch of
+    * [[FeedSource]].
+    */
+  private[streaming] def readBatches(spark: org.apache.spark.sql.SparkSession, feedDir: String,
+      batches: Iterable[Long], streaming: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.types.StructType
+    val index = new FeedFileIndex(spark, feedDir, batches.toSeq.sorted)
+    val relation = org.apache.spark.sql.execution.datasources.HadoopFsRelation(index,
+      index.partitionSchema, StructType(feedSchema.filterNot(_.name == "batch_id")), None,
+      new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat, Map.empty)(spark)
+    if (streaming) org.apache.spark.sql.GraftStreamingShim.streamingFrame(spark, relation)
+    else spark.baseRelationToDataFrame(relation)
+  }
+
+  /** Every batch partition present on disk, committed or not: what the
+    * erasure verbs rewrite and audit, since they account for bytes at
+    * rest rather than for visible state.
+    */
+  private[streaming] def atRest(spark: org.apache.spark.sql.SparkSession, feedDir: String): DataFrame = {
+    val (fs, root) = IndexStoreOps.storeFs(spark, feedDir)
+    val onDisk =
+      if (!fs.exists(root)) Nil
+      else fs.listStatus(root).toSeq.map(_.getPath.getName)
+        .collect { case n if n.startsWith("batch_id=") => n.stripPrefix("batch_id=").toLong }
+    readBatches(spark, feedDir, onDisk)
   }
 
   /** The atomic commit point of batch `batchId` (see [[writeBatch]]).
@@ -212,15 +242,6 @@ object FeedSink {
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) => writeWireBatch(batch, batchId, wireDir) }
 
-  /** Time travel over the sink's own output: materialize the view's state
-    * as of `asOfBatch` (inclusive) by folding the retained batch
-    * partitions with the engine's `(ts_us, seq)` last-writer-wins order.
-    * `batch_id` is a partition column, so the `<= asOfBatch` predicate is
-    * PARTITION PRUNING — replaying to batch N reads only N+1 directories,
-    * never the whole feed history; tombstoned keys fold away. This is the
-    * changefeed trifecta closing: the sink's output is itself a feed the
-    * engine can re-materialize at any past point.
-    */
   /** #125: compact the sink feed — fold every retained partition with
     * `batch_id <= upTo` into ONE base partition at `batch_id = upTo`
     * (the live state at that point: LWW-folded, tombstones dropped —
@@ -277,17 +298,26 @@ object FeedSink {
     }
   }
 
+  /** Time travel over the sink's own output: materialize the view's state
+    * as of `asOfBatch` (inclusive) by folding the retained batch
+    * partitions with the engine's `(ts_us, seq)` last-writer-wins order.
+    * The bound selects partitions before anything is read: [[readBatches]]
+    * gets the committed ids `<= asOfBatch`, so replaying to batch N lists
+    * and reads only those directories, never the whole feed history;
+    * tombstoned keys fold away. This is the changefeed trifecta closing:
+    * the sink's output is itself a feed the engine can re-materialize at
+    * any past point.
+    */
   def stateAsOf(spark: org.apache.spark.sql.SparkSession, feedDir: String, asOfBatch: Long): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("key")
       .orderBy(col("ts_us").desc, col("seq").desc, col("batch_id").desc)
     // visibility = committed partitions only (reader isolation: a batch
-    // whose marker hasn't landed doesn't exist yet). The isin list is the
-    // RETAINED batch set — bounded by compaction, not feed lifetime — and
-    // on a partition column it prunes directories, same as the <= bound.
-    val visible = committedBatches(feedDir).filter(_ <= asOfBatch).toSeq
-    spark.read.parquet(feedDir)
-      .filter(col("batch_id").isin(visible: _*))
+    // whose marker hasn't landed doesn't exist yet). The visible set is
+    // the RETAINED batch set up to the bound — bounded by compaction, not
+    // feed lifetime — and only those directories are ever listed or read.
+    val visible = committedBatches(feedDir).filter(_ <= asOfBatch)
+    readBatches(spark, feedDir, visible)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1 && col("op") =!= "delete")
       .select(col("key"), col("ts_us"), col("seq"), col("payload"))

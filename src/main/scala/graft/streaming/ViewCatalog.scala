@@ -482,11 +482,11 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     * rewritten via dynamic partition overwrite minus the key's rows
     * (commit markers untouched — the batch stays committed, possibly
     * empty; an emptied partition directory is cleared explicitly, the
-    * PartitionedUpsert rule). Dependents tailing a rewritten partition
-    * re-deliver its surviving changes with fresh file names — harmless
-    * by the sink's own idempotent-replay contract
-    * ([[FeedSink.readChangeFeed]]). Cost ∝ partitions mentioning the
-    * key, never the feed.
+    * PartitionedUpsert rule). Dependents tail by batch id
+    * ([[FeedSink.readChangeFeed]]), so a rewritten partition they have
+    * already read is not delivered again: the erasure reaches a
+    * dependent's own sink through this same sweep, not through its tail.
+    * Cost ∝ partitions mentioning the key, never the feed.
     *
     * Returns the audit: one row per artifact touched
     * `(artifact, kind, partitions_rewritten, rows_dropped)`.
@@ -509,10 +509,9 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     val keySet = keys.distinct
     require(keySet.nonEmpty, "FORGET KEYS requires at least one key")
     val audit = mutable.Buffer[(String, String, Long, Long)]()
-    val feeds = views.keys.toSeq.sorted.flatMap { n =>
+    val feeds = views.keys.toSeq.sorted.map { n =>
       val fd = feedDir(n)
-      try Some((n, fd, spark.read.parquet(fd)))
-      catch { case _: org.apache.spark.sql.AnalysisException => None }
+      (n, fd, FeedSink.atRest(spark, fd))
     }
     // refuse while ANY listed key is still live in ANY view's sink: the
     // running dataflow would simply re-emit it (and the rewritten
@@ -531,7 +530,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     }
     feeds.foreach { case (n, fd, feed) =>
       val touched = feed.filter(col("key").isin(keySet: _*))
-        .select(col("batch_id").cast("long")).distinct()
+        .select(col("batch_id")).distinct()
         .collect().map(_.getLong(0)).sorted.toSeq
       if (touched.nonEmpty) {
         val before = feed.filter(col("batch_id").isin(touched: _*))
@@ -546,7 +545,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
           .option("partitionOverwriteMode", "dynamic")
           .partitionBy("batch_id")
           .parquet(fd)
-        val survivors = kept.select(col("batch_id").cast("long")).distinct()
+        val survivors = kept.select(col("batch_id")).distinct()
           .collect().map(_.getLong(0)).toSet
         IndexStoreOps.clearEmptiedLeaves(spark, fd, "batch_id",
           touched.map(_.toString), survivors.map(_.toString))
@@ -598,9 +597,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
   def keyTraces(key: Long, historyDirs: Seq[String] = Nil): DataFrame = {
     val rows = mutable.Buffer[(String, String, Long)]()
     views.keys.toSeq.sorted.foreach { n =>
-      val sinkRows =
-        try spark.read.parquet(feedDir(n)).filter(col("key") === key).count()
-        catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+      val sinkRows = FeedSink.atRest(spark, feedDir(n)).filter(col("key") === key).count()
       rows += ((n, "sink", sinkRows))
       val stateRows =
         try {
@@ -654,9 +651,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     require(keySet.nonEmpty, "keyTracesAll requires at least one key")
     val rows = mutable.Buffer[(String, String, Long)]()
     views.keys.toSeq.sorted.foreach { n =>
-      val sinkRows =
-        try spark.read.parquet(feedDir(n)).filter(col("key").isin(keySet: _*)).count()
-        catch { case _: org.apache.spark.sql.AnalysisException => 0L }
+      val sinkRows = FeedSink.atRest(spark, feedDir(n)).filter(col("key").isin(keySet: _*)).count()
       rows += ((n, "sink", sinkRows))
     }
     historyDirs.foreach { hd =>

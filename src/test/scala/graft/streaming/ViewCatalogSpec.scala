@@ -1237,4 +1237,90 @@ class ViewCatalogSpec extends SparkSpec {
     assert(fresh.count(isSidecar) == 0, s"Hadoop sidecars in a new checkpoint: ${fresh.filter(isSidecar)}")
     cat2.stopAll()
   }
+
+  test("#234ag feed-reader migration: dependents checkpointed on the file-source tail resume at the upstream batch they reached") {
+    val (root, src) = (tmp("vcfeedmig"), tmp("vcfeedmigsrc"))
+    val cat1 = new ViewCatalog(spark, root)
+    cat1.registerSource("t", () => ChangeFeed.readJsonDir(spark, src).as[Change])
+    cat1.createView("base", "SELECT city, amount FROM t WHERE amount > 10")
+    val upFeed = Paths.get(root, "views", "base", "feed").toString
+    // the earlier tail: Spark's file source over the upstream directory
+    def fileSourceTail() = spark.readStream.schema(FeedSink.feedSchema).parquet(upFeed)
+      .select(col("op"), col("key"), org.apache.spark.sql.functions.expr("timestamp_micros(ts_us)").as("ts"),
+        col("payload"), col("seq"))
+      .as[Change]
+    val deps = Seq(
+      ("plain_dep", "SELECT city, count(*) AS n, sum(amount) AS total FROM base GROUP BY city", None),
+      ("ttl_dep", "SELECT city, count(*) AS n FROM base GROUP BY city", Some(("1 second", 1000L))))
+    // each dependent runs on the catalog's own layout (meta, checkpoint,
+    // sink), as a view created before the marker-offset reader existed
+    val queries = deps.map { case (name, sql, ttl) =>
+      val (changes, cols) = IncrementalPlanner.namedChanges(spark, sql, Map("base" -> fileSourceTail()), ttl)
+      val out = Paths.get(root, "views", name, "feed").toString
+      Files.createDirectories(Paths.get(out))
+      def begin() = changes.toDF().writeStream.outputMode("append")
+        .option("checkpointLocation", Paths.get(root, "views", name, "checkpoint").toString)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) => FeedSink.writeChangeBatch(b, id, out) }
+        .start()
+      val q = if (ttl.isDefined) IncrementalView.withRelaxedWatermarkCheck(spark)(begin()) else begin()
+      val p = new java.util.Properties()
+      p.setProperty("sql", sql)
+      p.setProperty("deps", "base")
+      p.setProperty("cols", cols.mkString(","))
+      ttl.foreach { case (d, ms) => p.setProperty("ttlDelay", d); p.setProperty("ttlMs", ms.toString) }
+      val w = Files.newBufferedWriter(Paths.get(root, "meta", s"$name.properties"))
+      try p.store(w, null) finally w.close()
+      q
+    }
+    // four upstream batches; key 2's delete dies past the ttl dependent's
+    // watermark, so its tombstone expires there before the stop
+    Seq(
+      Seq(Change("insert", 1L, ts(0), Map("city" -> "ber", "amount" -> "50"), 1L),
+        Change("insert", 2L, ts(0), Map("city" -> "par", "amount" -> "20"), 2L),
+        Change("insert", 3L, ts(0), Map("city" -> "ber", "amount" -> "30"), 3L)),
+      Seq(Change("delete", 2L, ts(1), Map.empty, 4L)),
+      Seq(Change("insert", 4L, ts(60), Map("city" -> "lis", "amount" -> "40"), 5L)),
+      Seq(Change("insert", 5L, ts(120), Map("city" -> "lis", "amount" -> "12"), 6L))
+    ).zipWithIndex.foreach { case (cs, i) =>
+      writeChanges(src, s"b$i.json", cs)
+      cat1.awaitAll()
+      queries.foreach(_.processAllAvailable())
+    }
+    queries.foreach(_.stop())
+    val reached = FeedSink.committedBatches(upFeed).max
+    // the upstream advances while the dependents are down
+    writeChanges(src, "b9.json", Seq(
+      Change("update", 1L, ts(121), Map("city" -> "ber", "amount" -> "70"), 7L),
+      Change("delete", 3L, ts(122), Map.empty, 8L),
+      Change("insert", 6L, ts(123), Map("city" -> "par", "amount" -> "15"), 9L)))
+    cat1.awaitAll()
+    cat1.stopAll()
+    val newRows = FeedSink.atRest(spark, upFeed).filter(col("batch_id") > reached).count()
+    assert(newRows > 0, "the upstream must commit while the dependents are down")
+
+    val cat2 = new ViewCatalog(spark, root)
+    cat2.registerSource("t", () => ChangeFeed.readJsonDir(spark, src).as[Change])
+    assert(cat2.resume() == Seq("base", "plain_dep", "ttl_dep"))
+    cat2.awaitAll()
+    deps.foreach { case (name, _, _) =>
+      val read = cat2.view(name).get.query.recentProgress.map(_.numInputRows).sum
+      assert(read == newRows, s"$name read $read upstream rows after resume, expected only the $newRows " +
+        s"committed after batch $reached")
+    }
+    // batch recompute over the LWW-final source state
+    val w = org.apache.spark.sql.expressions.Window.partitionBy("key").orderBy(col("ts").desc, col("seq").desc)
+    spark.read.schema(ChangeFeed.schema).json(src)
+      .withColumn("rn", org.apache.spark.sql.functions.row_number().over(w))
+      .filter(col("rn") === 1 && col("op") =!= "delete")
+      .select(col("payload")("city").as("city"), col("payload")("amount").cast("double").as("amount"))
+      .filter(col("amount") > 10)
+      .createOrReplaceTempView("vcfeedmig_base")
+    deps.foreach { case (name, sql, _) =>
+      val cols = cat2.view(name).get.cols
+      val want = spark.sql(sql.replace("FROM base", "FROM vcfeedmig_base")).collect()
+        .map(r => cols.map(c => String.valueOf(r.getAs[Any](c)))).toSet
+      assert(snapRows(cat2, name, cols) == want, s"$name after resume: ${snapRows(cat2, name, cols)} vs $want")
+    }
+    cat2.stopAll()
+  }
 }

@@ -6,6 +6,9 @@
 # Debezium adapter. Every streaming spec checkpoints through
 # LocalCheckpointFileManager, so its semantics spec, the default-manager
 # migration case (#234af) and the RocksDB restart (#220h) ride along too.
+# Every view over a view tails its upstream sink through FeedSource, so
+# its contract spec (idle cost, marker isolation, exactly-once by batch
+# id) and the file-source-checkpoint migration case (#234ag) run as well.
 # The full 300-test fleet (sbt test, ~11 min serial)
 # remains the round gate; this is the fast inner loop.
 set -euo pipefail
@@ -14,6 +17,7 @@ exec sbt \
   'testOnly graft.streaming.IncrementalPlannerSpec -- -z "171a " -z "171f " -z "171at " -z "171aq " -z "171bk " -z "171an " -z "171bq " -z "171bs " -z "171bt " -z "171bo "' \
   'testOnly graft.streaming.PlannerRestartSpec -- -z "220a " -z "220c " -z "220h "' \
   'testOnly graft.streaming.CheckpointFileManagerSpec' \
-  'testOnly graft.streaming.ViewCatalogSpec -- -z "234af "' \
+  'testOnly graft.streaming.FeedSourceSpec' \
+  'testOnly graft.streaming.ViewCatalogSpec -- -z "234af " -z "234ag "' \
   'testOnly graft.streaming.PlannerBootstrapSpec -- -z "221a "' \
   'testOnly graft.streaming.DebeziumSpec -- -z "222b "'
