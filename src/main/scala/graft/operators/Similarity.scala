@@ -468,7 +468,7 @@ object Similarity {
     */
   def annPqServed(spark: SparkSession, dir: String, k: Int = 3, rerank: Int = 60): DataFrame = {
     val indexDir = pqIndexDirs.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, corpusFingerprint(spark, dir)), {
+      (spark.sparkContext.applicationId, dir, Tables.fingerprint(spark, dir, "embeddings")), {
         val d = java.nio.file.Files.createTempDirectory("graft_pq_served").toString
         savePqIndex(spark, dir, d)
         d
@@ -604,26 +604,6 @@ object Similarity {
   private val planeMemo =
     new scala.collection.concurrent.TrieMap[(String, String, Long), Int]
 
-  /** Fingerprint of the corpus BEHIND a dir: a hash of every file's
-    * (name, length, mtime) under the embeddings table path. Keying the
-    * plane memo on this — instead of the dir string alone — means a
-    * rewritten corpus (probe dirs regenerated in-session, compaction,
-    * new partitions) gets fresh plane sizing rather than a silently
-    * stale bucket count. One namenode listing, no data read.
-    */
-  private[graft] def corpusFingerprint(spark: SparkSession, dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it = fs.listFiles(path, true)
-    var h = 1125899906842597L // large prime seed, FNV-ish rolling hash
-    while (it.hasNext) {
-      val st = it.next()
-      val s = s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-      h = s.foldLeft(h * 31 + 7)((a, c) => a * 131 + c)
-    }
-    h
-  }
-
   def knnJoin(spark: SparkSession, dir: String): DataFrame = {
     val raw = Tables.embeddings(spark, dir)
     // the sizing count is per (app, corpus-fingerprint), not per call —
@@ -634,7 +614,7 @@ object Similarity {
     // rewritten; the plane count is a pure function of corpus size, so
     // sharing across sessions of one app is sound.
     val planes = planeMemo.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, corpusFingerprint(spark, dir)),
+      (spark.sparkContext.applicationId, dir, Tables.fingerprint(spark, dir, "embeddings")),
       autoPlanes(raw.count(), 1024L))
     val emb = withHyperplaneBucket(raw, planes)
       .withColumn("norm", l2Norm(col("embedding")))

@@ -46,6 +46,25 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame  = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
 
+  /** Fingerprint of the table BEHIND a dir: a hash of every file's
+    * (name, length, mtime) under `<dir>/<name>.parquet`. Keying a memo on
+    * this, not on the dir string alone, means a rewritten table
+    * (regenerated in-session, compacted, new partitions) gets a fresh
+    * entry instead of a silently stale one. One namenode listing, no
+    * data read.
+    */
+  def fingerprint(spark: SparkSession, dir: String, name: String): Long = {
+    val p  = new org.apache.hadoop.fs.Path(path(dir, name))
+    val it = p.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(p, true)
+    var h = 1125899906842597L // large prime seed, FNV-ish rolling hash
+    while (it.hasNext) {
+      val st = it.next()
+      val s  = s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
+      h = s.foldLeft(h * 31 + 7)((a, c) => a * 131 + c)
+    }
+    h
+  }
+
   /** events.parquet stores `ts` as parquet TIMESTAMP(NANOS), which Spark
     * refuses to read natively (PARQUET_TYPE_ILLEGAL). With
     * `spark.sql.legacy.parquet.nanosAsLong=true` (set in

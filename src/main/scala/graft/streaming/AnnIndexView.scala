@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -41,9 +39,11 @@ import graft.operators.Similarity
   * new/changed vectors re-bucket only themselves (the hyperplane
   * signature is a narrow per-row expression), deletes retract exactly
   * their posting row, and only the touched bucket/key partitions are
-  * read back (`IN`-filter partition pruning) and rewritten (dynamic
-  * partition overwrite; a partition whose last posting was retracted is
-  * cleared explicitly — the PartitionedUpsert delete-all-bucket rule).
+  * read back (`IN`-filter partition pruning) and rewritten (a staged
+  * leaf swap; a partition whose last posting was retracted is removed —
+  * the PartitionedUpsert delete-all-bucket rule). The fold, erasure and
+  * GC are the shared [[LocatorStore]] discipline; this family supplies
+  * the hyperplane bucket.
   * The corpus-sized store is never re-shuffled: at 100 TB with 2²⁰
   * buckets, a 1M-doc crawl batch rewrites ~its own buckets, and an
   * UPDATE whose embedding moves buckets costs one retraction + one
@@ -66,200 +66,38 @@ import graft.operators.Similarity
   * therefore means a rebuild, exactly as for the batch index
   * ([[Similarity.autoPlanes]] picks it from expected corpus size).
   */
-object AnnIndexView {
+object AnnIndexView extends LocatorStore {
 
-  private def dataDir(root: String) = s"$root/data"
-  private def keysDir(root: String) = s"$root/keys"
-
-  private val dataSchema = StructType(Seq(
+  val kind = "ann"
+  protected val dataName = "data"
+  protected val dataPart = "bucket"
+  protected val keyCol   = "vec_id"
+  protected val dataSchema = StructType(Seq(
     StructField("bucket", IntegerType), StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)), StructField("norm", DoubleType)))
-  private val keysSchema = StructType(Seq(
+  protected val keysSchema = StructType(Seq(
     StructField("kb", IntegerType), StructField("vec_id", LongType),
     StructField("tsUs", LongType), StructField("seq", LongType),
     StructField("live", BooleanType), StructField("bucket", IntegerType)))
 
-  private def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    try spark.read.parquet(path).select(schema.fieldNames.map(col).toSeq: _*)
-    catch { case _: AnalysisException =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema) }
-
-  /** Clear partition directories that were touched but ended the batch
-    * with zero surviving rows — dynamic overwrite only rewrites
-    * partitions PRESENT in the output, so an emptied partition would
-    * otherwise resurrect its retracted rows on the next read.
-    */
-  private def clearEmptied(spark: SparkSession, root: String, colName: String,
-      touched: Seq[Long], survivors: Set[Long]): Unit =
-    IndexStoreOps.clearEmptiedLeaves(spark, root, colName,
-      touched.map(_.toString), survivors.map(_.toString))
-
   /** Fold one micro-batch of changes (`op` ∈ I/U/D, `vec_id`,
     * `embedding`, `tsUs`, `seq`) into the live index at `root`.
     */
-  def updateBatch(batch: DataFrame, root: String, numPlanes: Int = 8, keyBuckets: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    // LWW winner per key: a batch may carry a key's whole history (and
-    // redeliveries); only its latest change contends with the store.
-    // Ties on (tsUs, seq) are redeliveries of the same change — op desc
-    // makes even a pathological same-position I/D pair deterministic.
-    val wLww = Window.partitionBy("vec_id")
-      .orderBy(col("tsUs").desc, col("seq").desc, col("op").desc)
-    val winners = batch
-      .select(col("op"), col("vec_id"), col("embedding"), col("tsUs"), col("seq"))
-      .withColumn("__rn", row_number().over(wLww)).filter(col("__rn") === 1).drop("__rn")
-      .withColumn("kb", pmod(col("vec_id"), lit(keyBuckets.toLong)).cast("int"))
-      .persist()
-    // every cached frame unpersists in the finally — a failed store
-    // write must not leak blocks in a long-lived foreachBatch session
-    val cached = scala.collection.mutable.Buffer[DataFrame](winners)
-    try {
-      // locator partitions the batch touches — driver-side (≤ keyBuckets)
-      val kbs = winners.select("kb").distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-      val keysOld = readOr(spark, keysDir(root), keysSchema)
-        .filter(col("kb").isin(kbs: _*))
-      // stored position + current bucket of every batch key
-      val loc = keysOld.join(winners.select("vec_id"), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"), col("tsUs").as("s_ts"), col("seq").as("s_seq"),
-          col("live"), col("bucket").as("old_bucket"))
-      // stale detection, CdcMaterializer order: drop a batch winner
-      // strictly older than the store's position (late change after a
-      // newer upsert OR after a delete tombstone); batch wins ties so a
-      // replayed change rewrites its own identical content.
-      val eff = winners.join(loc, Seq("vec_id"), "left")
-        .filter(col("s_ts").isNull || col("tsUs") > col("s_ts") ||
-          (col("tsUs") === col("s_ts") && col("seq") >= col("s_seq")))
-        .persist()
-      cached += eff
-      val ups = Similarity.withHyperplaneBucket(eff.filter(col("op") =!= "D"), numPlanes)
+  def updateBatch(batch: DataFrame, root: String, numPlanes: Int = 8, keyBuckets: Int = 64): Unit =
+    fold(batch, root, Seq("embedding"), keyBuckets) { (eff, _, keep) =>
+      val ups = keep(Similarity.withHyperplaneBucket(eff.filter(col("op") =!= "D"), numPlanes)
         .withColumn("norm", l2Norm(col("embedding")))
         .select(col("bucket").cast("int").as("bucket"), col("vec_id"), col("embedding"),
-          col("norm"), col("kb"), col("tsUs"), col("seq"))
-        .persist()
-      cached += ups
-      val effKeys = eff.select("vec_id")
-
+          col("norm"), col("kb"), col("tsUs"), col("seq")))
       // touched DATA partitions = current buckets of effective LIVE keys
       // (retractions/moves) ∪ new buckets of upserts — bounded by
       // 2 × batch keys, the small side
       val touched = eff.filter(col("live") === true).select(col("old_bucket").as("bucket"))
         .union(ups.select("bucket"))
         .distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-      IndexStoreOps.inParallel(
-        if (touched.nonEmpty) {
-          val dataOld = readOr(spark, dataDir(root), dataSchema)
-            .filter(col("bucket").isin(touched: _*))
-          IndexStoreOps.overwriteLeaves(// staged: store is both source and sink of this job
-            dataOld
-            .join(effKeys, Seq("vec_id"), "left_anti") // retract old copies of effective keys
-            .unionByName(ups.select(col("bucket"), col("vec_id"), col("embedding"), col("norm"))),
-            "bucket", dataDir(root), touched.map(_.toString)): Unit
-        },
-        if (kbs.nonEmpty) {
-          val keysNew = eff.select(col("kb"), col("vec_id"), col("tsUs"), col("seq"), col("op"))
-            .join(ups.select(col("vec_id"), col("bucket")), Seq("vec_id"), "left")
-            .select(col("kb"), col("vec_id"), col("tsUs"), col("seq"),
-              (col("op") =!= "D").as("live"), col("bucket"))
-          IndexStoreOps.overwriteLeaves(keysOld
-            .join(effKeys, Seq("vec_id"), "left_anti")
-            .unionByName(keysNew), "kb", keysDir(root), kbs.map(_.toString)): Unit
-        })
-    } finally cached.foreach(_.unpersist())
-  }
-
-  /** Compaction sweep: drop delete tombstones older than the feed's
-    * maximum admissible lateness (a change older than a pruned tombstone
-    * can no longer be rejected by it — the standard tombstone-GC
-    * contract). Sidecar-only rewrite; the posting store is untouched.
-    */
-  def pruneTombstones(spark: SparkSession, root: String, olderThanUs: Long): Unit = {
-    val kept = IndexStoreOps.clusterByLeaf(readOr(spark, keysDir(root), keysSchema)
-      .filter(col("live") || col("tsUs") >= olderThanUs), "kb")
-    kept.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(keysDir(root))
-  }
-
-  /** Small-file compaction over the churned store (r15) — see
-    * [[PostingIndexView.compactStore]]; same OPTIMIZE pass, same
-    * rows-unchanged contract.
-    */
-  def compactStore(spark: SparkSession, root: String,
-      targetBytes: Long = 64L << 20, smallBytes: Long = 16L << 20): Seq[graft.sources.Compaction.LeafReport] =
-    graft.sources.Compaction.compact(spark, dataDir(root), targetBytes, smallBytes) ++
-      graft.sources.Compaction.compact(spark, keysDir(root), targetBytes, smallBytes)
-
-  /** `FORGET KEY` over THIS store (#338 extended to the live-index tier,
-    * r15): erase every at-rest trace of `key` — its posting row (if
-    * live) AND its locator row INCLUDING a delete tombstone (the
-    * tombstone itself names the key, so GDPR erasure must take it too).
-    * The locator answers WHERE the posting lives, so the data-store
-    * rewrite is partition-pruned to exactly the key's bucket; only the
-    * key's kb locator partition is rewritten. Erasing the tombstone
-    * forfeits its late-replay protection for this key — the same trade
-    * [[pruneTombstones]] makes, acceptable because the purge contract
-    * (as in [[ViewCatalog.forgetKey]]) is that the SOURCE has stopped
-    * feeding the key. Returns (partitions_rewritten, rows_dropped).
-    */
-  def forgetKey(spark: SparkSession, root: String, key: Long): (Long, Long) =
-    forgetKeys(spark, root, Seq(key))
-
-  /** Batch `FORGET KEYS` (#367, r16 — the compliance-pipeline shape):
-    * ONE IN-pruned rewrite per touched store partition for the WHOLE
-    * purge list. A daily list of 10k keys through per-key [[forgetKey]]
-    * re-reads and rewrites hot partitions up to 10k times; here cost is
-    * ∝ distinct touched partitions, never ∝ keys × partitions.
-    */
-  def forgetKeys(spark: SparkSession, root: String, keys: Seq[Long]): (Long, Long) = {
-    val keySet = keys.distinct
-    if (keySet.isEmpty) return (0L, 0L)
-    val locRows = readOr(spark, keysDir(root), keysSchema)
-      .filter(col("vec_id").isin(keySet: _*)).collect()
-    if (locRows.isEmpty) return (0L, 0L)
-    var parts = 0L
-    var dropped = 0L
-    val liveBuckets = locRows.filter(_.getAs[Boolean]("live"))
-      .map(_.getAs[Int]("bucket").toLong).distinct.toSeq
-    if (liveBuckets.nonEmpty) {
-      val dataOld = readOr(spark, dataDir(root), dataSchema)
-        .filter(col("bucket").isin(liveBuckets: _*))
-      val kept = IndexStoreOps.clusterByLeaf(
-        dataOld.filter(!col("vec_id").isin(keySet: _*)), "bucket")
-      dropped += dataOld.count() - kept.count()
-      kept.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("bucket")
-        .parquet(dataDir(root))
-      clearEmptied(spark, dataDir(root), "bucket", liveBuckets,
-        kept.select("bucket").distinct().collect().map(_.getInt(0).toLong).toSet)
-      parts += liveBuckets.size
+      LocatorStore.DataStep(touched, replaceKeys(eff, ups),
+        locate = _.join(ups.select(col("vec_id"), col("bucket")), Seq("vec_id"), "left"))
     }
-    val kbs = locRows.map(_.getAs[Int]("kb").toLong).distinct.toSeq
-    val keysOld = readOr(spark, keysDir(root), keysSchema).filter(col("kb").isin(kbs: _*))
-    val keysKept = IndexStoreOps.clusterByLeaf(
-      keysOld.filter(!col("vec_id").isin(keySet: _*)), "kb")
-    dropped += locRows.length
-    keysKept.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(keysDir(root))
-    clearEmptied(spark, keysDir(root), "kb", kbs,
-      keysKept.select("kb").distinct().collect().map(_.getInt(0).toLong).toSet)
-    parts += kbs.size
-    (parts, dropped)
-  }
-
-  /** The [[forgetKey]] auditor for this store: at-rest rows still
-    * naming `key` — posting rows plus locator rows (tombstones count:
-    * they carry the key id). Zero = forgotten.
-    */
-  def keyTraces(spark: SparkSession, root: String, key: Long): Long =
-    keyTraces(spark, root, Seq(key))
-
-  /** Batch auditor (#367's companion): traces for the WHOLE list in one
-    * scan per store side, not |list| scans.
-    */
-  def keyTraces(spark: SparkSession, root: String, keys: Seq[Long]): Long =
-    readOr(spark, dataDir(root), dataSchema).filter(col("vec_id").isin(keys: _*)).count() +
-      readOr(spark, keysDir(root), keysSchema).filter(col("vec_id").isin(keys: _*)).count()
 
   /** #337 wired end-to-end: changefeed → live LSH index. */
   def maintain(feed: DataFrame, root: String, checkpointDir: String,
@@ -358,7 +196,7 @@ object AnnIndexView {
     */
   def liveStoreFor(spark: SparkSession, dir: String): String =
     liveIndexDirs.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, Similarity.corpusFingerprint(spark, dir)), {
+      (spark.sparkContext.applicationId, dir, graft.sources.Tables.fingerprint(spark, dir, "embeddings")), {
         val d = Files.createTempDirectory("graft_ann_live").toString
         val e = graft.sources.Tables.embeddings(spark, dir).select("vec_id", "embedding")
         def ins(pred: org.apache.spark.sql.Column) = e.filter(pred).select(

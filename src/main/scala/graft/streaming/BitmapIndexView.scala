@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
@@ -37,49 +34,29 @@ import org.apache.spark.sql.types._
   * LWW winners, the locator answers each key's current value from the
   * batch's key partitions, word-level set/clear masks fold map-side
   * (bit_or), and only the touched value partitions are read back and
-  * dynamic-partition-overwritten ((old AND NOT clear) OR set per word;
-  * an emptied partition is cleared explicitly). At 100 TB the word
+  * rewritten ((old AND NOT clear) OR set per word; an emptied partition
+  * is removed) through the shared [[LocatorStore]] fold. At 100 TB the word
   * tables are |universe|/63-sized per value and the whole merge is a
   * keyed join on (val, w) over batch-derived masks.
   */
-object BitmapIndexView {
+object BitmapIndexView extends LocatorStore {
 
-  private def bmDir(root: String)   = s"$root/bm"
-  private def keysDir(root: String) = s"$root/keys"
-
-  private val bmSchema = StructType(Seq(
+  val kind = "bitmap"
+  protected val dataName = "bm"
+  protected val dataPart = "val"
+  protected val keyCol   = "key"
+  protected val dataSchema = StructType(Seq(
     StructField("val", StringType), StructField("w", LongType), StructField("bits", LongType)))
-  private val keysSchema = StructType(Seq(
+  protected val keysSchema = StructType(Seq(
     StructField("kb", IntegerType), StructField("key", LongType),
     StructField("tsUs", LongType), StructField("seq", LongType),
     StructField("live", BooleanType), StructField("val", StringType)))
 
-  private def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    try spark.read.parquet(path).select(schema.fieldNames.map(col).toSeq: _*)
-    catch { case _: AnalysisException =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema) }
-
-  private def clearEmptied(spark: SparkSession, root: String, colName: String,
-      touched: Seq[String], survivors: Set[String]): Unit =
-    IndexStoreOps.clearEmptiedLeaves(spark, root, colName, touched, survivors)
-
   /** Fold one micro-batch of changes (`op` ∈ I/U/D, `key`, `value`,
     * `tsUs`, `seq`) into the live index at `root`.
     */
-  def updateBatch(batch: DataFrame, root: String, keyBuckets: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    val wLww = Window.partitionBy("key")
-      .orderBy(col("tsUs").desc, col("seq").desc, col("op").desc)
-    val winners = batch
-      .select(col("op"), col("key"), col("value"), col("tsUs"), col("seq"))
-      .withColumn("__rn", row_number().over(wLww)).filter(col("__rn") === 1).drop("__rn")
-      .withColumn("kb", pmod(col("key"), lit(keyBuckets.toLong)).cast("int"))
-      .persist()
-    try {
-      val kbs = winners.select("kb").distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-      foldWinners(spark, winners, kbs, root)
-    } finally winners.unpersist(): Unit
-  }
+  def updateBatch(batch: DataFrame, root: String, keyBuckets: Int = 64): Unit =
+    fold(batch, root, Seq("value"), keyBuckets)(wordStep)
 
   /** Fold ONE micro-batch into TWO attribute stores over the same key
     * universe (r17, the q147 path): the LWW winners window and the `kbs`
@@ -93,197 +70,73 @@ object BitmapIndexView {
       aCol: String, aRoot: String, bCol: String, bRoot: String,
       keyBuckets: Int = 64): Unit = {
     val spark = batch.sparkSession
-    val wLww = Window.partitionBy("key")
-      .orderBy(col("tsUs").desc, col("seq").desc, col("op").desc)
-    val winners = batch
-      .select(col("op"), col("key"), col(aCol), col(bCol), col("tsUs"), col("seq"))
-      .withColumn("__rn", row_number().over(wLww)).filter(col("__rn") === 1).drop("__rn")
-      .withColumn("kb", pmod(col("key"), lit(keyBuckets.toLong)).cast("int"))
-      .persist()
+    val w = winners(batch, Seq(aCol, bCol), keyBuckets)
     try {
-      val kbs = winners.select("kb").distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
+      val kbs = kbsOf(w)
       val base = Seq(col("op"), col("key"), col("tsUs"), col("seq"), col("kb"))
       IndexStoreOps.inParallel(
-        foldWinners(spark, winners.select(base :+ col(aCol).as("value"): _*), kbs, aRoot),
-        foldWinners(spark, winners.select(base :+ col(bCol).as("value"): _*), kbs, bRoot))
-    } finally winners.unpersist(): Unit
+        foldWinners(spark, aRoot, w.select(base :+ col(aCol).as("value"): _*), kbs)(wordStep),
+        foldWinners(spark, bRoot, w.select(base :+ col(bCol).as("value"): _*), kbs)(wordStep))
+    } finally w.unpersist(): Unit
   }
 
-  /** The store-side fold from an already-persisted winners frame
-    * (`op`, `key`, `value`, `tsUs`, `seq`, `kb`) and its collected key
-    * buckets — the [[updateBatch]] body below the winners window.
+  private def wCol   = expr("key DIV 63")
+  private def bitCol = expr("shiftleft(CAST(1 AS BIGINT), CAST(key % 63 AS INT))")
+
+  /** The data step: word-level masks, folded map-side — clear the key's
+    * bit from its OLD value (moves + deletes), set it in its NEW value —
+    * then (old AND NOT clear) OR set per touched word.
     */
-  private def foldWinners(spark: SparkSession, winners: DataFrame, kbs: Seq[Long],
-      root: String): Unit = {
-    // every cached frame unpersists in the finally — a failed store
-    // write must not leak blocks in a long-lived foreachBatch session
-    val cached = scala.collection.mutable.Buffer[DataFrame]()
-    try {
-      val keysOld = readOr(spark, keysDir(root), keysSchema).filter(col("kb").isin(kbs: _*))
-      val loc = keysOld.join(winners.select("key"), Seq("key"), "left_semi")
-        .select(col("key"), col("tsUs").as("s_ts"), col("seq").as("s_seq"),
-          col("live"), col("val").as("old_val"))
-      val eff = winners.join(loc, Seq("key"), "left")
-        .filter(col("s_ts").isNull || col("tsUs") > col("s_ts") ||
-          (col("tsUs") === col("s_ts") && col("seq") >= col("s_seq")))
-        .persist()
-      cached += eff
-      val ups = eff.filter(col("op") =!= "D")
-      val wCol   = expr("key DIV 63")
-      val bitCol = expr("shiftleft(CAST(1 AS BIGINT), CAST(key % 63 AS INT))")
-
-      // word-level masks, folded map-side: clear the key's bit from its
-      // OLD value (moves + deletes), set it in its NEW value
-      val clears = eff.filter(col("live") === true)
-        .select(col("old_val").as("val"), wCol.as("w"), bitCol.as("bit"))
-        .groupBy("val", "w").agg(expr("bit_or(bit)").as("clr"))
-      val sets = ups
-        .select(col("value").as("val"), wCol.as("w"), bitCol.as("bit"))
-        .groupBy("val", "w").agg(expr("bit_or(bit)").as("st"))
-      val deltas = clears.join(sets, Seq("val", "w"), "full_outer").persist()
-      cached += deltas
-
-      val touched = deltas.select("val").distinct().collect().map(_.getString(0)).sorted.toSeq
-      IndexStoreOps.inParallel(
-        if (touched.nonEmpty) {
-          val bmOld = readOr(spark, bmDir(root), bmSchema).filter(col("val").isin(touched: _*))
-          IndexStoreOps.overwriteLeaves(// staged: store is both source and sink of this job
-            bmOld.join(deltas, Seq("val", "w"), "full_outer")
-            .select(col("val"), col("w"),
-              expr("(coalesce(bits, 0) & ~coalesce(clr, 0)) | coalesce(st, 0)").as("bits"))
-            .filter(col("bits") =!= 0L), "val", bmDir(root), touched): Unit
-        },
-        if (kbs.nonEmpty) {
-          val keysNew = eff.select(col("kb"), col("key"), col("tsUs"), col("seq"),
-            (col("op") =!= "D").as("live"),
-            when(col("op") =!= "D", col("value")).as("val"))
-          IndexStoreOps.overwriteLeaves(keysOld
-            .join(eff.select("key"), Seq("key"), "left_anti")
-            .unionByName(keysNew)
-            .select(keysSchema.fieldNames.map(col).toSeq: _*),
-            "kb", keysDir(root), kbs.map(_.toString)): Unit
-        })
-    } finally cached.foreach(_.unpersist())
+  private val wordStep: LocatorStore.Step = { (eff, _, keep) =>
+    val clears = eff.filter(col("live") === true)
+      .select(col("old_val").as("val"), wCol.as("w"), bitCol.as("bit"))
+      .groupBy("val", "w").agg(expr("bit_or(bit)").as("clr"))
+    val sets = eff.filter(col("op") =!= "D")
+      .select(col("value").as("val"), wCol.as("w"), bitCol.as("bit"))
+      .groupBy("val", "w").agg(expr("bit_or(bit)").as("st"))
+    val deltas = keep(clears.join(sets, Seq("val", "w"), "full_outer"))
+    val touched = deltas.select("val").distinct().collect().map(_.getString(0)).sorted.toSeq
+    LocatorStore.DataStep(touched,
+      _.join(deltas, Seq("val", "w"), "full_outer")
+        .select(col("val"), col("w"),
+          expr("(coalesce(bits, 0) & ~coalesce(clr, 0)) | coalesce(st, 0)").as("bits"))
+        .filter(col("bits") =!= 0L),
+      locate = _.withColumn("val", when(col("op") =!= "D", col("value"))))
   }
 
-  /** Tombstone GC (r15, the [[AnnIndexView.pruneTombstones]] contract
-    * ported): drop delete tombstones older than the feed's maximum
-    * admissible lateness. Sidecar-only rewrite; bitmaps untouched (a
-    * deleted key's bit was already cleared by its delete batch).
+  /** Erasure is word surgery: the whole purge list's bits fold into ONE
+    * clear-mask per touched `(val, w)` word driver-side (∝ list size),
+    * ANDed out of the key's live value partitions; a zeroed word drops.
+    * A cleared bit counts as one dropped row.
     */
-  def pruneTombstones(spark: SparkSession, root: String, olderThanUs: Long): Unit = {
-    val kept = IndexStoreOps.clusterByLeaf(readOr(spark, keysDir(root), keysSchema)
-      .filter(col("live") || col("tsUs") >= olderThanUs), "kb")
-    kept.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(keysDir(root))
-  }
-
-  /** Small-file compaction over the churned store (r15) — see
-    * [[PostingIndexView.compactStore]]; same OPTIMIZE pass, same
-    * rows-unchanged contract.
-    */
-  def compactStore(spark: SparkSession, root: String,
-      targetBytes: Long = 64L << 20, smallBytes: Long = 16L << 20): Seq[graft.sources.Compaction.LeafReport] =
-    graft.sources.Compaction.compact(spark, bmDir(root), targetBytes, smallBytes) ++
-      graft.sources.Compaction.compact(spark, keysDir(root), targetBytes, smallBytes)
-
-  /** `FORGET KEY` over THIS store (#338 extended to the live-index
-    * tier, r15): clear the key's bit from its live value's bitmap (the
-    * locator says WHICH value — one partition opened) and drop its
-    * locator row INCLUDING a delete tombstone (the tombstone names the
-    * key). Word-level surgery: only the key's word in the key's value
-    * partition changes; a zeroed word drops, an emptied partition
-    * clears. Returns (partitions_rewritten, rows_dropped) where a
-    * cleared bit counts as one dropped row.
-    */
-  def forgetKey(spark: SparkSession, root: String, key: Long): (Long, Long) =
-    forgetKeys(spark, root, Seq(key))
-
-  /** Batch `FORGET KEYS` (#367, r16 — see [[AnnIndexView.forgetKeys]]):
-    * the whole purge list's bits fold into ONE clear-mask per touched
-    * `(val, w)` word driver-side (∝ list size), then a single IN-pruned
-    * rewrite per touched value partition ANDs them out — never one
-    * rewrite per key.
-    */
-  def forgetKeys(spark: SparkSession, root: String, keys: Seq[Long]): (Long, Long) = {
+  override protected def purgeData(spark: SparkSession, old: DataFrame, keys: Seq[Long],
+      live: Seq[Row]): (Long, DataFrame) = {
     import spark.implicits._
-    val keySet = keys.distinct
-    if (keySet.isEmpty) return (0L, 0L)
-    val locRows = readOr(spark, keysDir(root), keysSchema)
-      .filter(col("key").isin(keySet: _*)).collect()
-    if (locRows.isEmpty) return (0L, 0L)
-    var parts = 0L
-    var dropped = 0L
-    // one clear mask per (val, w) across ALL live purge keys
-    val clears = locRows.filter(_.getAs[Boolean]("live"))
-      .map { r =>
+    val clears = live.map { r =>
         val k = r.getAs[Long]("key")
         (r.getAs[String]("val"), k / 63L, 1L << (k % 63L).toInt)
       }
       .groupBy(t => (t._1, t._2))
       .map { case ((v, w), ts) => (v, w, ts.map(_._3).reduce(_ | _)) }
       .toSeq
-    val liveVals = clears.map(_._1).distinct
-    if (liveVals.nonEmpty) {
-      val clrDf = clears.toDF("val", "w", "clr")
-      val bmOld = readOr(spark, bmDir(root), bmSchema).filter(col("val").isin(liveVals: _*))
-      val joined = bmOld.join(broadcast(clrDf), Seq("val", "w"), "left")
-      // bits actually cleared, counted BEFORE the rewrite (the store
-      // write refreshes the path and would recompute against new data)
-      val hadBits = joined
-        .agg(coalesce(sum(bit_count(col("bits").bitwiseAND(coalesce(col("clr"), lit(0L))))), lit(0L)))
-        .collect().head.getLong(0)
-      val kept = IndexStoreOps.clusterByLeaf(joined
-        .select(col("val"), col("w"),
-          col("bits").bitwiseAND(expr("~coalesce(clr, 0)")).as("bits"))
-        .filter(col("bits") =!= 0L), "val")
-      dropped += hadBits
-      kept.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("val")
-        .parquet(bmDir(root))
-      clearEmptied(spark, bmDir(root), "val", liveVals,
-        kept.select("val").distinct().collect().map(_.getString(0)).toSet)
-      parts += liveVals.size
-    }
-    val kbs = locRows.map(_.getAs[Int]("kb").toLong).distinct.toSeq
-    val keysOld = readOr(spark, keysDir(root), keysSchema)
-      .filter(col("kb").isin(kbs: _*))
-    val keysKept = IndexStoreOps.clusterByLeaf(
-      keysOld.filter(!col("key").isin(keySet: _*)), "kb")
-    dropped += locRows.length
-    keysKept.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(keysDir(root))
-    // keys partition column is int; normalize through string to reuse
-    // the one directory-removal helper (its touched values are the
-    // partition-dir suffixes, stringly for the val= bitmap partitions)
-    val survivors = keysKept.select(col("kb").cast("long")).distinct()
-      .collect().map(_.getLong(0).toString).toSet
-    clearEmptied(spark, keysDir(root), "kb", kbs.map(_.toString), survivors)
-    parts += kbs.size
-    (parts, dropped)
+    val joined = old.join(broadcast(clears.toDF("val", "w", "clr")), Seq("val", "w"), "left")
+    val cleared = joined
+      .agg(coalesce(sum(bit_count(col("bits").bitwiseAND(coalesce(col("clr"), lit(0L))))), lit(0L)))
+      .collect().head.getLong(0)
+    (cleared, joined
+      .select(col("val"), col("w"), col("bits").bitwiseAND(expr("~coalesce(clr, 0)")).as("bits"))
+      .filter(col("bits") =!= 0L))
   }
 
-  /** The [[forgetKey]] auditor for this store: locator rows naming the
-    * key (tombstones count) plus bitmaps where its bit is still set —
-    * the word-position predicate pushes to the parquet scan.
+  /** Words where any listed key's bit is still set: the masks fold per
+    * word driver-side, then one scan counts the words carrying one.
     */
-  def keyTraces(spark: SparkSession, root: String, key: Long): Long =
-    keyTraces(spark, root, Seq(key))
-
-  /** Batch auditor: the whole list's bit-masks fold per word
-    * driver-side, then one scan counts surviving words carrying any
-    * listed bit + one locator scan.
-    */
-  def keyTraces(spark: SparkSession, root: String, keys: Seq[Long]): Long = {
+  override protected def dataTraces(spark: SparkSession, data: DataFrame, keys: Seq[Long]): Long = {
     import spark.implicits._
     val masks = keys.distinct.map(k => (k / 63L, 1L << (k % 63L).toInt))
       .groupBy(_._1).map { case (w, bs) => (w, bs.map(_._2).reduce(_ | _)) }.toSeq
-    val bm = readOr(spark, bmDir(root), bmSchema)
-      .join(broadcast(masks.toDF("w", "mask")), Seq("w"))
+    data.join(broadcast(masks.toDF("w", "mask")), Seq("w"))
       .filter((col("bits").bitwiseAND(col("mask"))) =!= 0L).count()
-    bm + readOr(spark, keysDir(root), keysSchema).filter(col("key").isin(keys: _*)).count()
   }
 
   /** #339 wired end-to-end: changefeed → live bitmap index. */
@@ -296,7 +149,7 @@ object BitmapIndexView {
 
   /** The live word rows `(val, w, bits)`. */
   def readIndex(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(bmDir(root))
+    spark.read.parquet(dataDir(root))
       .select(col("val").cast("string").as("val"), col("w").cast("long").as("w"), col("bits"))
 
   /** Conjunctive count in WORD SPACE from two live indexes: for every
@@ -334,7 +187,7 @@ object BitmapIndexView {
     */
   def bitmapLiveCells(spark: SparkSession, dir: String): DataFrame = {
     val (rootP, rootS) = liveDirs.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, ordersFingerprint(spark, dir)), {
+      (spark.sparkContext.applicationId, dir, graft.sources.Tables.fingerprint(spark, dir, "orders")), {
         val p = Files.createTempDirectory("graft_bm_pri").toString
         val s = Files.createTempDirectory("graft_bm_sta").toString
         val o = graft.sources.Tables.orders(spark, dir)
@@ -368,18 +221,5 @@ object BitmapIndexView {
     cellCounts(spark, rootP, rootS)
       .filter(col("n_bitmap") > 0) // empty word intersections are not cells
       .select(col("a_val").as("priority"), col("b_val").as("status"), col("n_bitmap"))
-  }
-
-  private def ordersFingerprint(spark: SparkSession, dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/orders.parquet")
-    val fs   = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it   = fs.listFiles(path, true)
-    var h = 1125899906842597L
-    while (it.hasNext) {
-      val st = it.next()
-      val s  = s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-      h = s.foldLeft(h * 31 + 7)((a, c) => a * 131 + c)
-    }
-    h
   }
 }

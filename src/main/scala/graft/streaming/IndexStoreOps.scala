@@ -1,8 +1,10 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.functions.{col, lit, pmod, row_number}
+import org.apache.spark.sql.types.StructType
 
 import graft.sources.Compaction
 
@@ -13,9 +15,9 @@ import graft.sources.Compaction
   * the census flags a leaf — the same measurement→policy closure the
   * IVF retrain loop got ([[IvfIndexView.RetrainPolicy]]).
   *
-  * Why files-per-leaf is the right trigger: every dynamic partition
-  * overwrite leaves up to shuffle-partitions files in each touched
-  * leaf, so a churn-heavy feed accretes small files even though row
+  * Why files-per-leaf is the right trigger: a partition rewrite that
+  * is not clustered on its leaf leaves up to shuffle-partitions files in
+  * each touched leaf, so a churn-heavy feed accretes small files even though row
   * counts stay bounded; probe cost then scales with file count (footer
   * opens), not bytes. The census is driver-side METADATA work — one
   * directory listing per store, the same altitude as a planner listing
@@ -23,20 +25,13 @@ import graft.sources.Compaction
   */
 object IndexStoreOps {
 
-  /** Cluster store output on its partition column before the eager
-    * checkpoint that precedes every store write (r16 optimization,
-    * guide §6 "small files hurt twice"): without this each dynamic
-    * partition overwrite lands up to shuffle-partitions files in EVERY
-    * touched leaf (measured: 2,412 files across a 6-batch sf0.1 IVF
-    * store — and probe/merge cost scales with footer opens, not bytes),
-    * with it each leaf gets the files its BYTES justify (here: one).
-    * The extra exchange moves exactly the rows the write was about to
-    * move anyway, and hash-clustering keeps each leaf's rows in one
-    * task so the fold stays shuffle-light at any store size. A single
-    * monster leaf becoming one write task is the known trade — that is
-    * what [[fileCensus]]/compaction watch, and at 100 TB the leaf
-    * granularity (cells/buckets/key-buckets) is sized well below task
-    * scale by construction.
+  /** Cluster a FULL store rewrite on its partition column and
+    * materialize it (the IVF/PQ retrain paths, whose input is the store
+    * being replaced): one file per leaf where a plain write would land
+    * up to shuffle-partitions files in every leaf (measured: 2,412 files
+    * across a 6-batch sf0.1 IVF store). Incremental rewrites go through
+    * [[overwriteLeaves]], which clusters the same way without the eager
+    * checkpoint.
     */
   private[streaming] def clusterByLeaf(df: DataFrame, partCol: String): DataFrame =
     df.repartition(col(partCol)).localCheckpoint(true)
@@ -176,30 +171,8 @@ object IndexStoreOps {
       throw new java.io.IOException(s"rename failed: $src -> $dst")
   }
 
-  /** Drop the leaf dirs of `touched` partition values that did not
-    * survive a dynamic-overwrite rewrite (GC / FORGET KEYS paths).
-    * Values are Hive-escaped the same way the write that created the
-    * leaves escaped them.
-    */
-  private[streaming] def clearEmptiedLeaves(spark: SparkSession, root: String,
-      colName: String, touched: Seq[String], survivors: Set[String]): Unit = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    val (fs, p) = storeFs(spark, root)
-    touched.filterNot(survivors).foreach { v =>
-      fs.delete(new Path(p, s"$colName=${escapePathName(v)}"), true): Unit
-    }
-  }
-
   /** One leaf directory's census row. */
   final case class LeafCensus(dir: String, files: Long, bytes: Long, flagged: Boolean)
-
-  /** The physical directories of each live-index store family. */
-  def storeDirs(kind: String, root: String): Seq[String] = kind match {
-    case "ann" | "ivf" | "pq" => Seq(s"$root/data", s"$root/keys")
-    case "bitmap"             => Seq(s"$root/bm", s"$root/keys")
-    case "posting"            => Seq(s"$root/post", s"$root/keys")
-    case other => throw new IllegalArgumentException(s"unknown index-store kind $other")
-  }
 
   /** Per-leaf file census over a store's directories: a LEAF is any
     * directory directly holding parquet files (a partition dir, or an
@@ -210,7 +183,7 @@ object IndexStoreOps {
   def fileCensus(spark: SparkSession, kind: String, root: String,
       maxFilesPerPart: Int = 8): Seq[LeafCensus] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    storeDirs(kind, root).flatMap { d =>
+    LocatorStore(kind).storeDirs(root).flatMap { d =>
       val p = new Path(d)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) Nil
@@ -248,14 +221,242 @@ object IndexStoreOps {
       targetBytes: Long = 64L << 20,
       smallBytes: Long = 16L << 20): (Boolean, Seq[Compaction.LeafReport]) =
     if (!needsCompaction(spark, kind, root, maxFilesPerPart)) (false, Nil)
-    else {
-      val reports = kind match {
-        case "ann"     => AnnIndexView.compactStore(spark, root, targetBytes, smallBytes)
-        case "bitmap"  => BitmapIndexView.compactStore(spark, root, targetBytes, smallBytes)
-        case "posting" => PostingIndexView.compactStore(spark, root, targetBytes, smallBytes)
-        case "ivf"     => IvfIndexView.compactStore(spark, root, targetBytes, smallBytes)
-        case "pq"      => PqIndexView.compactStore(spark, root, targetBytes, smallBytes)
-      }
-      (true, reports)
+    else (true, LocatorStore(kind).compactStore(spark, root, targetBytes, smallBytes))
+}
+
+/** The store discipline every live-index family shares: a DATA store
+  * partitioned by the family's leaf column beside a LOCATOR store
+  * `keys/kb=<key mod keyBuckets>/` of `(key, tsUs, seq, live, …)` rows
+  * that carry each key's CdcMaterializer commit position, its delete
+  * TOMBSTONE, and where its data rows live.
+  *
+  * A family supplies its layout (data dir, partition and key columns,
+  * the two schemas) and, per batch, its data-side step from the
+  * effective winners ([[LocatorStore.DataStep]]). Everything else is
+  * implemented here once: the last-writer-wins window, the stale filter
+  * (a change strictly older than the key's stored position is ignored;
+  * the batch wins ties so a replay rewrites identical content), the
+  * locator-side rewrite, erasure ([[forgetKeys]]) and its auditor
+  * ([[keyTraces]]), tombstone GC and small-file compaction. Every
+  * incremental store rewrite goes through [[IndexStoreOps.overwriteLeaves]],
+  * so untouched leaves are never rewritten and each touched leaf gets one
+  * file (only the IVF/PQ retrains rewrite a whole store).
+  */
+trait LocatorStore {
+
+  /** The kind name a catalog registers the store under. */
+  def kind: String
+  protected def dataName: String
+  protected def dataPart: String
+  protected def keyCol: String
+  protected def dataSchema: StructType
+  protected def keysSchema: StructType
+
+  protected def dataDir(root: String): String = s"$root/$dataName"
+  protected def keysDir(root: String): String = s"$root/keys"
+  def storeDirs(root: String): Seq[String] = Seq(dataDir(root), keysDir(root))
+
+  /** Refuse maintenance and erasure while the store's sides may
+    * disagree. No-op unless a family can be caught mid-rewrite.
+    */
+  def guard(spark: SparkSession, root: String): Unit = ()
+
+  protected def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
+    try spark.read.parquet(path).select(schema.fieldNames.map(col).toSeq: _*)
+    catch { case _: AnalysisException =>
+      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema) }
+
+  protected def readData(spark: SparkSession, root: String): DataFrame =
+    readOr(spark, dataDir(root), dataSchema)
+  protected def readKeys(spark: SparkSession, root: String): DataFrame =
+    readOr(spark, keysDir(root), keysSchema)
+
+  /** LWW winner per key of one micro-batch (`op`, key, `payload`,
+    * `tsUs`, `seq`), tagged with its locator bucket `kb` and persisted
+    * (the caller unpersists). A batch may carry a key's whole history
+    * and redeliveries; only its latest change contends with the store.
+    * Ties on (tsUs, seq) are redeliveries of one change, and op desc
+    * makes even a same-position I/D pair deterministic.
+    */
+  protected def winners(batch: DataFrame, payload: Seq[String], keyBuckets: Int): DataFrame = {
+    val w = Window.partitionBy(keyCol).orderBy(col("tsUs").desc, col("seq").desc, col("op").desc)
+    batch.select((Seq("op", keyCol) ++ payload ++ Seq("tsUs", "seq")).map(col): _*)
+      .withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1).drop("__rn")
+      .withColumn("kb", pmod(col(keyCol), lit(keyBuckets.toLong)).cast("int"))
+      .persist()
+  }
+
+  /** The locator leaves a winners frame touches (driver-side, at most keyBuckets). */
+  protected def kbsOf(winners: DataFrame): Seq[Long] =
+    winners.select("kb").distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
+
+  /** Fold one micro-batch into the store at `root`. */
+  protected def fold(batch: DataFrame, root: String, payload: Seq[String], keyBuckets: Int)(
+      step: LocatorStore.Step): Unit = {
+    guard(batch.sparkSession, root)
+    val w = winners(batch, payload, keyBuckets)
+    try foldWinners(batch.sparkSession, root, w, kbsOf(w))(step)
+    finally w.unpersist(): Unit
+  }
+
+  /** The store-side fold below the winners window: the stale filter
+    * against the locator's stored positions, the family's data step,
+    * then the data and locator rewrites run concurrently (disjoint
+    * directories, both reading only pre-swap state). The effective
+    * winners `eff` carry the stored position `s_ts`/`s_seq`, `live`, and
+    * every locator payload column `c` as `old_c`.
+    */
+  protected def foldWinners(spark: SparkSession, root: String, winners: DataFrame,
+      kbs: Seq[Long])(step: LocatorStore.Step): Unit = {
+    // every cached frame unpersists in the finally: a failed store write
+    // must not leak blocks in a long-lived foreachBatch session
+    val cached = scala.collection.mutable.Buffer[DataFrame]()
+    def keep(df: DataFrame): DataFrame = { val p = df.persist(); cached += p; p }
+    try {
+      val keysOld = readKeys(spark, root).filter(col("kb").isin(kbs: _*))
+      val fixed = Set("kb", keyCol, "tsUs", "seq", "live")
+      val loc = keysOld.join(winners.select(keyCol), Seq(keyCol), "left_semi")
+        .select((Seq(col(keyCol), col("tsUs").as("s_ts"), col("seq").as("s_seq"), col("live")) ++
+          keysSchema.fieldNames.filterNot(fixed).map(c => col(c).as(s"old_$c"))): _*)
+      val eff = keep(winners.join(loc, Seq(keyCol), "left")
+        .filter(col("s_ts").isNull || col("tsUs") > col("s_ts") ||
+          (col("tsUs") === col("s_ts") && col("seq") >= col("s_seq"))))
+      val s = step(eff, kbs, keep)
+      IndexStoreOps.inParallel(
+        if (s.touched.nonEmpty)
+          IndexStoreOps.overwriteLeaves(
+            s.merge(readData(spark, root).filter(col(dataPart).isin(s.touched: _*))),
+            dataPart, dataDir(root), s.touched.map(_.toString)): Unit,
+        if (kbs.nonEmpty) {
+          val keysNew = s.locate(eff).select(keysSchema.fieldNames.toSeq.map {
+            case "live" => (col("op") =!= "D").as("live")
+            case c      => col(c)
+          }: _*)
+          IndexStoreOps.overwriteLeaves(keysOld
+            .join(eff.select(keyCol), Seq(keyCol), "left_anti")
+            .unionByName(keysNew), "kb", keysDir(root), kbs.map(_.toString)): Unit
+        })
+      s.commit()
+    } finally cached.foreach(_.unpersist())
+  }
+
+  /** The common data-side merge: retract every effective key's old
+    * rows from the touched leaves and add `rows` (the batch's upserts).
+    */
+  protected def replaceKeys(eff: DataFrame, rows: DataFrame): DataFrame => DataFrame =
+    _.join(eff.select(keyCol), Seq(keyCol), "left_anti")
+      .unionByName(rows.select(dataSchema.fieldNames.map(col).toSeq: _*))
+
+  /** Data leaves a LIVE locator row's key occupies. */
+  protected def leavesOf(loc: Row): Seq[Any] = Seq(loc.getAs[Any](dataPart))
+
+  /** Drop `keys` from the touched data rows `old` (`live` = their
+    * locator rows): (rows dropped, rows kept).
+    */
+  protected def purgeData(spark: SparkSession, old: DataFrame, keys: Seq[Long],
+      live: Seq[Row]): (Long, DataFrame) =
+    (old.filter(col(keyCol).isin(keys: _*)).count(), old.filter(!col(keyCol).isin(keys: _*)))
+
+  /** At-rest data rows still naming any of `keys`. */
+  protected def dataTraces(spark: SparkSession, data: DataFrame, keys: Seq[Long]): Long =
+    data.filter(col(keyCol).isin(keys: _*)).count()
+
+  /** `FORGET KEY` over this store: erase every at-rest trace of `key`,
+    * its data rows AND its locator row, a delete tombstone included (the
+    * tombstone names the key). Returns (partitions_rewritten,
+    * rows_dropped).
+    */
+  def forgetKey(spark: SparkSession, root: String, key: Long): (Long, Long) =
+    forgetKeys(spark, root, Seq(key))
+
+  /** Batch `FORGET KEYS`: the locator says which data leaves the listed
+    * keys live in, and each touched data and locator leaf is rewritten
+    * once for the whole list, never once per key. Erasing a tombstone
+    * forfeits its late-replay protection for that key, the trade
+    * [[pruneTombstones]] makes too: the purge contract is that the
+    * source has stopped feeding the key.
+    */
+  def forgetKeys(spark: SparkSession, root: String, keys: Seq[Long]): (Long, Long) = {
+    guard(spark, root)
+    val keySet = keys.distinct
+    if (keySet.isEmpty) return (0L, 0L)
+    val locRows = readKeys(spark, root).filter(col(keyCol).isin(keySet: _*)).collect()
+    if (locRows.isEmpty) return (0L, 0L)
+    val live = locRows.filter(_.getAs[Boolean]("live")).toSeq
+    val leaves = live.flatMap(leavesOf).distinct
+    // rows dropped are counted BEFORE the swap: after it the same plan
+    // would recount against the rewritten leaves
+    val dataDropped = if (leaves.isEmpty) 0L else {
+      val (n, kept) = purgeData(spark,
+        readData(spark, root).filter(col(dataPart).isin(leaves: _*)), keySet, live)
+      IndexStoreOps.overwriteLeaves(kept, dataPart, dataDir(root), leaves.map(_.toString))
+      n
     }
+    val kbs = locRows.map(_.getAs[Int]("kb")).distinct.toSeq
+    IndexStoreOps.overwriteLeaves(readKeys(spark, root)
+      .filter(col("kb").isin(kbs: _*) && !col(keyCol).isin(keySet: _*)),
+      "kb", keysDir(root), kbs.map(_.toString))
+    (leaves.size.toLong + kbs.size, dataDropped + locRows.length)
+  }
+
+  /** The [[forgetKey]] auditor: data rows plus locator rows (tombstones
+    * count) still naming `key`. Zero = forgotten.
+    */
+  def keyTraces(spark: SparkSession, root: String, key: Long): Long =
+    keyTraces(spark, root, Seq(key))
+
+  /** Batch auditor: the whole list in one scan per store side. */
+  def keyTraces(spark: SparkSession, root: String, keys: Seq[Long]): Long =
+    dataTraces(spark, readData(spark, root), keys) +
+      readKeys(spark, root).filter(col(keyCol).isin(keys: _*)).count()
+
+  /** Tombstone GC: drop delete tombstones older than the feed's maximum
+    * admissible lateness (a change older than a pruned tombstone can no
+    * longer be rejected by it, the standard tombstone-GC contract). Only
+    * the locator leaves holding such a tombstone are rewritten; the data
+    * store is untouched (a delete already retracted its data rows).
+    */
+  def pruneTombstones(spark: SparkSession, root: String, olderThanUs: Long): Unit = {
+    val expired = !col("live") && col("tsUs") < olderThanUs
+    val kbs = readKeys(spark, root).filter(expired).select("kb").distinct()
+      .collect().map(_.getInt(0)).toSeq
+    if (kbs.nonEmpty)
+      IndexStoreOps.overwriteLeaves(readKeys(spark, root)
+        .filter(col("kb").isin(kbs: _*) && !expired), "kb", keysDir(root), kbs.map(_.toString)): Unit
+  }
+
+  /** Small-file compaction over the churned store: the OPTIMIZE pass
+    * plain tables get ([[graft.sources.Compaction]]), over the data and
+    * locator directories. Probe results are unchanged (same rows, fewer
+    * files); run between batches like any maintenance.
+    */
+  def compactStore(spark: SparkSession, root: String,
+      targetBytes: Long = 64L << 20, smallBytes: Long = 16L << 20): Seq[Compaction.LeafReport] =
+    storeDirs(root).flatMap(Compaction.compact(spark, _, targetBytes, smallBytes))
+}
+
+object LocatorStore {
+
+  /** A family's data side of one batch: the data leaves it rewrites, how
+    * their current rows become their new rows, the new locator payload
+    * columns added to the effective winners (the trait derives `live`),
+    * and what runs once both sides have swapped.
+    */
+  final case class DataStep(
+      touched: Seq[Any],
+      merge: DataFrame => DataFrame,
+      locate: DataFrame => DataFrame = identity,
+      commit: () => Unit = () => ())
+
+  /** (effective winners, locator leaves, persist-until-the-fold-ends) → the data step. */
+  type Step = (DataFrame, Seq[Long], DataFrame => DataFrame) => DataStep
+
+  private lazy val byKind: Map[String, LocatorStore] =
+    Seq(AnnIndexView, BitmapIndexView, PostingIndexView, IvfIndexView, PqIndexView)
+      .map(s => s.kind -> s).toMap
+
+  /** The one kind → family lookup. */
+  def apply(kind: String): LocatorStore = byKind.getOrElse(kind,
+    throw new IllegalArgumentException(
+      s"unknown index-store kind $kind (ann | bitmap | posting | ivf | pq)"))
 }

@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -59,38 +57,31 @@ import graft.operators.Similarity
   * rewrite, cost documented in the drift artifact), and
   * [[stalenessReport]] is the measurement that schedules it.
   */
-object IvfIndexView {
+object IvfIndexView extends LocatorStore {
 
-  private def dataDir(root: String)  = s"$root/data"
-  private def keysDir(root: String)  = s"$root/keys"
-  private def centDir(root: String)  = s"$root/centroids"
-  private def driftDir(root: String) = s"$root/drift"
-  // present while a retrain is mid-flight: centroids/data/keys may
-  // disagree, so probes and reports refuse instead of answering wrong
-  private def retrainMarker(root: String) = s"$root/_retrain_inprogress"
-
-  private def requireNoHalfRetrain(spark: SparkSession, root: String): Unit =
-    require(!IndexStoreOps.pathExists(spark, retrainMarker(root)),
-      s"index store at $root has a half-finished retrain (marker present) — " +
-        "re-run retrain to restore the live ≡ rebuild invariant")
-
-  private val dataSchema = StructType(Seq(
+  val kind = "ivf"
+  protected val dataName = "data"
+  protected val dataPart = "cid"
+  protected val keyCol   = "vec_id"
+  protected val dataSchema = StructType(Seq(
     StructField("cid", IntegerType), StructField("vec_id", LongType),
     StructField("embedding", ArrayType(FloatType)), StructField("norm", DoubleType)))
-  private val keysSchema = StructType(Seq(
+  protected val keysSchema = StructType(Seq(
     StructField("kb", IntegerType), StructField("vec_id", LongType),
     StructField("tsUs", LongType), StructField("seq", LongType),
     StructField("live", BooleanType), StructField("cid", IntegerType)))
 
-  private def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    try spark.read.parquet(path).select(schema.fieldNames.map(col).toSeq: _*)
-    catch { case _: AnalysisException =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema) }
+  private def centDir(root: String)  = s"$root/centroids"
+  private def driftDir(root: String) = s"$root/drift"
+  // present while a retrain is mid-flight: centroids/data/keys may
+  // disagree, so probes, reports, folds and erasure refuse instead of
+  // answering (or rewriting) wrong
+  private def retrainMarker(root: String) = s"$root/_retrain_inprogress"
 
-  private def clearEmptied(spark: SparkSession, root: String, colName: String,
-      touched: Seq[Long], survivors: Set[Long]): Unit =
-    IndexStoreOps.clearEmptiedLeaves(spark, root, colName,
-      touched.map(_.toString), survivors.map(_.toString))
+  override def guard(spark: SparkSession, root: String): Unit =
+    require(!IndexStoreOps.pathExists(spark, retrainMarker(root)),
+      s"index store at $root has a half-finished retrain (marker present) — " +
+        "re-run retrain to restore the live ≡ rebuild invariant")
 
   /** Pinned centroids `(cid, ci, c2)`. */
   def readCentroids(spark: SparkSession, root: String): DataFrame =
@@ -166,105 +157,48 @@ object IvfIndexView {
     * swapped for pinned-centroid assignment, plus the drift row.
     */
   def updateBatch(batch: DataFrame, root: String, keyBuckets: Int = 64,
-      batchId: Long = -1L): Unit = {
-    requireNoHalfRetrain(batch.sparkSession, root)
-    val spark = batch.sparkSession
-    val wLww = Window.partitionBy("vec_id")
-      .orderBy(col("tsUs").desc, col("seq").desc, col("op").desc)
-    val winners = batch
-      .select(col("op"), col("vec_id"), col("embedding"), col("tsUs"), col("seq"))
-      .withColumn("__rn", row_number().over(wLww)).filter(col("__rn") === 1).drop("__rn")
-      .withColumn("kb", pmod(col("vec_id"), lit(keyBuckets.toLong)).cast("int"))
-      .persist()
-    val cached = scala.collection.mutable.Buffer[DataFrame](winners)
-    try {
-      val kbs = Prof.timed("kbs collect") {
-        winners.select("kb").distinct().collect().map(_.getInt(0).toLong).sorted.toSeq }
-      val keysOld = readOr(spark, keysDir(root), keysSchema)
-        .filter(col("kb").isin(kbs: _*))
-      val loc = keysOld.join(winners.select("vec_id"), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"), col("tsUs").as("s_ts"), col("seq").as("s_seq"),
-          col("live"), col("cid").as("old_cid"))
-      val eff = winners.join(loc, Seq("vec_id"), "left")
-        .filter(col("s_ts").isNull || col("tsUs") > col("s_ts") ||
-          (col("tsUs") === col("s_ts") && col("seq") >= col("s_seq")))
-        .persist()
-      cached += eff
-      val ups = assignAt(readCentroids(spark, root),
-          eff.filter(col("op") =!= "D")
-            .select(col("vec_id"), col("embedding"), col("kb"), col("tsUs"), col("seq"),
-              col("live"), col("old_cid"))
-            .withColumn("norm", l2Norm(col("embedding")))
-            .withColumn("xi", toMicro(col("embedding"))))
-        .persist()
-      cached += ups
-      val effKeys = eff.select("vec_id")
-
+      batchId: Long = -1L): Unit =
+    fold(batch, root, Seq("embedding"), keyBuckets) { (eff, _, keep) =>
+      val spark = batch.sparkSession
+      val ups = keep(assignAt(readCentroids(spark, root),
+        eff.filter(col("op") =!= "D")
+          .select(col("vec_id"), col("embedding"), col("kb"), col("tsUs"), col("seq"),
+            col("live"), col("old_cid"))
+          .withColumn("norm", l2Norm(col("embedding")))
+          .withColumn("xi", toMicro(col("embedding")))))
       // drift measurement: the batch's mean quantization error at the
       // PINNED centroids + the assignment-churn count (updates that
       // changed cell), taken where the work already is (assignAt
-      // computed qerr and cid per upsert). COLLECTED here — before the
-      // store writes — because the dynamic partition overwrite below
-      // refreshes the store path and would invalidate the cached plan,
-      // silently recomputing old_cid against the already-updated store
-      // (churn would read 0). The LOG WRITE waits until after the store
-      // writes commit, so a failed micro-batch never skews the signal.
-      // the drift agg and the touched-cell set are independent reads of
-      // the batch's cached frames; r16 overlapped them as two futures —
-      // r17 folds them into ONE tagged-union collect (verdict item 5):
-      // one driver action instead of two on a fold that is round-trip
-      // bound, and no drift job can ever be orphaned by a failure in
-      // the other collect (the r16 ADVICE hazard disappears outright).
-      // Still collected BEFORE the store writes: the overwrite below
-      // refreshes the store path and would silently recompute old_cid
-      // against post-swap state.
-      val taggedRows = Prof.timed("touched+drift collect") {
-        eff.filter(col("live") === true).select(col("old_cid").cast("long").as("cid"))
-          .union(ups.select(col("cid").cast("long")))
-          .distinct()
-          .select(lit("t").as("tag"), col("cid").as("l"),
-            lit(0.0).as("m"), lit(0L).as("moved"), lit(0L).as("had_old"))
-          .unionByName(
-            ups.agg(count(lit(1)).as("l"), avg(col("qerr").cast("double")).as("m"),
-              count(when(col("live") === true && col("old_cid") =!= col("cid"), 1)).as("moved"),
-              count(when(col("live") === true, 1)).as("had_old"))
-            .select(lit("d").as("tag"), col("l"),
-              coalesce(col("m"), lit(0.0)).as("m"), col("moved"), col("had_old")))
-          .collect()
-      }
+      // computed qerr and cid per upsert), in ONE tagged-union collect
+      // with the touched-cell set. COLLECTED here, before the store
+      // writes: the swap refreshes the store path, and the cached plan
+      // would silently recompute old_cid against post-swap state (churn
+      // would read 0). The LOG WRITE waits until both sides have swapped,
+      // so a failed micro-batch never skews the signal.
+      val taggedRows = eff.filter(col("live") === true).select(col("old_cid").cast("long").as("cid"))
+        .union(ups.select(col("cid").cast("long")))
+        .distinct()
+        .select(lit("t").as("tag"), col("cid").as("l"),
+          lit(0.0).as("m"), lit(0L).as("moved"), lit(0L).as("had_old"))
+        .unionByName(
+          ups.agg(count(lit(1)).as("l"), avg(col("qerr").cast("double")).as("m"),
+            count(when(col("live") === true && col("old_cid") =!= col("cid"), 1)).as("moved"),
+            count(when(col("live") === true, 1)).as("had_old"))
+          .select(lit("d").as("tag"), col("l"),
+            coalesce(col("m"), lit(0.0)).as("m"), col("moved"), col("had_old")))
+        .collect()
       val touched = taggedRows.filter(_.getString(0) == "t").map(_.getLong(1)).sorted.toSeq
       val d = taggedRows.find(_.getString(0) == "d").get
-      IndexStoreOps.inParallel(
-        if (touched.nonEmpty) {
-          val dataOld = readOr(spark, dataDir(root), dataSchema)
-            .filter(col("cid").isin(touched: _*))
-          Prof.timed("data write+swap") {
-            IndexStoreOps.overwriteLeaves(dataOld
-              .join(effKeys, Seq("vec_id"), "left_anti")
-              .unionByName(ups.select(col("cid"), col("vec_id"), col("embedding"), col("norm"))),
-              "cid", dataDir(root), touched.map(_.toString)) }: Unit
-        },
-        if (kbs.nonEmpty) {
-          val keysNew = eff.select(col("kb"), col("vec_id"), col("tsUs"), col("seq"), col("op"))
-            .join(ups.select(col("vec_id"), col("cid")), Seq("vec_id"), "left")
-            .select(col("kb"), col("vec_id"), col("tsUs"), col("seq"),
-              (col("op") =!= "D").as("live"), col("cid"))
-          Prof.timed("keys write+swap") {
-            IndexStoreOps.overwriteLeaves(keysOld
-              .join(effKeys, Seq("vec_id"), "left_anti")
-              .unionByName(keysNew), "kb", keysDir(root), kbs.map(_.toString)) }: Unit
-        })
-
-      // drift row, measured above: a restart-replayed batch appends a
-      // second row for the same batch_id with its effects already
-      // applied (moved reads 0) — [[stalenessReport]] dedupes per
-      // (kind, batch_id, base_seq) keeping the first application's
-      // churn evidence.
-      if (d.getLong(1) > 0L)
-        appendDrift(spark, root, batchId, "batch", d.getLong(1), d.getDouble(2),
-          baseSeq = baselineCount(spark, root) - 1L, moved = d.getLong(3), hadOld = d.getLong(4))
-    } finally cached.foreach(_.unpersist())
-  }
+      // drift row: a restart-replayed batch appends a second row for the
+      // same batch_id with its effects already applied (moved reads 0) —
+      // [[stalenessReport]] dedupes per (kind, batch_id, base_seq)
+      // keeping the first application's churn evidence
+      LocatorStore.DataStep(touched, replaceKeys(eff, ups),
+        locate = _.join(ups.select(col("vec_id"), col("cid")), Seq("vec_id"), "left"),
+        commit = () => if (d.getLong(1) > 0L)
+          appendDrift(spark, root, batchId, "batch", d.getLong(1), d.getDouble(2),
+            baseSeq = baselineCount(spark, root) - 1L, moved = d.getLong(3), hadOld = d.getLong(4)))
+    }
 
   /** The self-running retrain policy (#366, r16 — closes the loop the
     * r15 measurement opened): thresholds on the CUMULATIVE staleness
@@ -356,7 +290,7 @@ object IvfIndexView {
     * batch, so the window over it is driver-scale by construction.
     */
   def stalenessReport(spark: SparkSession, root: String): DataFrame = {
-    requireNoHalfRetrain(spark, root)
+    guard(spark, root)
     val raw = spark.read.parquet(driftDir(root))
     val cols = raw.columns.toSeq
     val d = raw.groupBy("kind", "batch_id", "base_seq")
@@ -366,7 +300,7 @@ object IvfIndexView {
     val baseline = d.filter(col("kind") === "baseline")
       .orderBy(col("base_seq").desc).limit(1)
       .select(col("mean_err").as("baseline_err"), col("base_seq").as("cur_base"))
-    val storeSize = readOr(spark, dataDir(root), dataSchema).count()
+    val storeSize = readData(spark, root).count()
     val w = Window.partitionBy("base_seq").orderBy("batch_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     d.crossJoin(broadcast(baseline))
@@ -436,7 +370,7 @@ object IvfIndexView {
       .withColumn("qerr", col("x2") - (lit(2L) * dotLong(col("xi"), col("ci")) - col("c2")))
       .agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"))
       .collect().head
-    val keys = IndexStoreOps.clusterByLeaf(readOr(spark, keysDir(root), keysSchema)
+    val keys = IndexStoreOps.clusterByLeaf(readKeys(spark, root)
       .drop("cid")
       .join(assigned.select(col("vec_id"), col("cid")), Seq("vec_id"), "left")
       .select(keysSchema.fieldNames.map(col).toSeq: _*), "kb")
@@ -455,80 +389,6 @@ object IvfIndexView {
     IndexStoreOps.deleteFile(spark, retrainMarker(root))
   }
 
-  /** Small-file compaction over the churned store (r16 — the family
-    * was the one of the four without it; see
-    * [[PostingIndexView.compactStore]] for the contract).
-    */
-  def compactStore(spark: SparkSession, root: String,
-      targetBytes: Long = 64L << 20, smallBytes: Long = 16L << 20): Seq[graft.sources.Compaction.LeafReport] =
-    graft.sources.Compaction.compact(spark, dataDir(root), targetBytes, smallBytes) ++
-      graft.sources.Compaction.compact(spark, keysDir(root), targetBytes, smallBytes)
-
-  /** Tombstone GC — the [[AnnIndexView.pruneTombstones]] contract. */
-  def pruneTombstones(spark: SparkSession, root: String, olderThanUs: Long): Unit = {
-    val kept = IndexStoreOps.clusterByLeaf(readOr(spark, keysDir(root), keysSchema)
-      .filter(col("live") || col("tsUs") >= olderThanUs), "kb")
-    kept.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(keysDir(root))
-  }
-
-  /** `FORGET KEY` over this store — the #338 live-index contract
-    * ([[AnnIndexView.forgetKey]] with the cell locator).
-    */
-  def forgetKey(spark: SparkSession, root: String, key: Long): (Long, Long) =
-    forgetKeys(spark, root, Seq(key))
-
-  /** Batch `FORGET KEYS` (#367, r16 — see [[AnnIndexView.forgetKeys]]):
-    * one IN-pruned rewrite per touched cell/locator partition for the
-    * whole purge list.
-    */
-  def forgetKeys(spark: SparkSession, root: String, keys: Seq[Long]): (Long, Long) = {
-    val keySet = keys.distinct
-    if (keySet.isEmpty) return (0L, 0L)
-    val locRows = readOr(spark, keysDir(root), keysSchema)
-      .filter(col("vec_id").isin(keySet: _*)).collect()
-    if (locRows.isEmpty) return (0L, 0L)
-    var parts = 0L
-    var dropped = 0L
-    val liveCells = locRows.filter(_.getAs[Boolean]("live"))
-      .map(_.getAs[Int]("cid").toLong).distinct.toSeq
-    if (liveCells.nonEmpty) {
-      val dataOld = readOr(spark, dataDir(root), dataSchema)
-        .filter(col("cid").isin(liveCells: _*))
-      val kept = IndexStoreOps.clusterByLeaf(
-        dataOld.filter(!col("vec_id").isin(keySet: _*)), "cid")
-      dropped += dataOld.count() - kept.count()
-      kept.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cid")
-        .parquet(dataDir(root))
-      clearEmptied(spark, dataDir(root), "cid", liveCells,
-        kept.select(col("cid").cast("long")).distinct().collect().map(_.getLong(0)).toSet)
-      parts += liveCells.size
-    }
-    val kbs = locRows.map(_.getAs[Int]("kb").toLong).distinct.toSeq
-    val keysOld = readOr(spark, keysDir(root), keysSchema).filter(col("kb").isin(kbs: _*))
-    val keysKept = IndexStoreOps.clusterByLeaf(
-      keysOld.filter(!col("vec_id").isin(keySet: _*)), "kb")
-    dropped += locRows.length
-    keysKept.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(keysDir(root))
-    clearEmptied(spark, keysDir(root), "kb", kbs,
-      keysKept.select("kb").distinct().collect().map(_.getInt(0).toLong).toSet)
-    parts += kbs.size
-    (parts, dropped)
-  }
-
-  /** The [[forgetKey]] auditor for this store. */
-  def keyTraces(spark: SparkSession, root: String, key: Long): Long =
-    keyTraces(spark, root, Seq(key))
-
-  /** Batch auditor: the whole list in one scan per store side. */
-  def keyTraces(spark: SparkSession, root: String, keys: Seq[Long]): Long =
-    readOr(spark, dataDir(root), dataSchema).filter(col("vec_id").isin(keys: _*)).count() +
-      readOr(spark, keysDir(root), keysSchema).filter(col("vec_id").isin(keys: _*)).count()
-
   /** Probe the LIVE index: top-k cosine neighbors per query row
     * `(query_id, embedding)` at the pinned centroids — s04's nprobe
     * dataflow served from the maintained store, the probed cell ids
@@ -537,7 +397,7 @@ object IvfIndexView {
     */
   def similarTo(spark: SparkSession, root: String, queries: DataFrame,
       k: Int = 3, nprobe: Int = 2): DataFrame = {
-    requireNoHalfRetrain(spark, root)
+    guard(spark, root)
     val centroids = readCentroids(spark, root)
     val pw = Window.partitionBy("query_id").orderBy(col("pscore").desc, col("cid"))
     val q = queries
@@ -585,7 +445,7 @@ object IvfIndexView {
     */
   def annIvfLive(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val root = liveIndexDirs.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, Similarity.corpusFingerprint(spark, dir)), {
+      (spark.sparkContext.applicationId, dir, graft.sources.Tables.fingerprint(spark, dir, "embeddings")), {
         val d = Files.createTempDirectory("graft_ivf_live").toString
         val e = graft.sources.Tables.embeddings(spark, dir).select("vec_id", "embedding")
         create(spark, d, e, k = 16, iters = 2)

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.types._
@@ -34,34 +31,25 @@ import org.apache.spark.sql.types._
   * bucket partitions: LWW winners fold first, the locator resolves
   * stale changes exactly as the materializer does, new docs tokenize in
   * one scan-shaped posexplode, and only touched `tb` partitions are
-  * read back, anti-joined on the effective doc ids, and
-  * dynamic-partition-overwritten (emptied partitions cleared — the
-  * PartitionedUpsert rule). At 100 TB the bucket count scales with the
+  * read back, anti-joined on the effective doc ids, and rewritten
+  * (emptied partitions removed — the PartitionedUpsert rule) through the
+  * shared [[LocatorStore]] fold. At 100 TB the bucket count scales with the
   * token space and each partition is one shard of the posting table;
   * an update re-tokenizes only itself.
   */
-object PostingIndexView {
+object PostingIndexView extends LocatorStore {
 
-  private def postDir(root: String) = s"$root/post"
-  private def keysDir(root: String) = s"$root/keys"
-
-  private val postSchema = StructType(Seq(
+  val kind = "posting"
+  protected val dataName = "post"
+  protected val dataPart = "tb"
+  protected val keyCol   = "doc_id"
+  protected val dataSchema = StructType(Seq(
     StructField("tb", IntegerType), StructField("tok", StringType),
     StructField("doc_id", LongType), StructField("pos", IntegerType)))
-  private val keysSchema = StructType(Seq(
+  protected val keysSchema = StructType(Seq(
     StructField("kb", IntegerType), StructField("doc_id", LongType),
     StructField("tsUs", LongType), StructField("seq", LongType),
     StructField("live", BooleanType), StructField("tbs", ArrayType(IntegerType))))
-
-  private def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    try spark.read.parquet(path).select(schema.fieldNames.map(col).toSeq: _*)
-    catch { case _: AnalysisException =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema) }
-
-  private def clearEmptied(spark: SparkSession, root: String, colName: String,
-      touched: Seq[Long], survivors: Set[Long]): Unit =
-    IndexStoreOps.clearEmptiedLeaves(spark, root, colName,
-      touched.map(_.toString), survivors.map(_.toString))
 
   private def tbOf(tok: org.apache.spark.sql.Column, buckets: Int) =
     pmod(xxhash64(tok), lit(buckets.toLong)).cast("int")
@@ -69,154 +57,26 @@ object PostingIndexView {
   /** Fold one micro-batch of document changes (`op` ∈ I/U/D, `doc_id`,
     * `text`, `tsUs`, `seq`) into the live index at `root`.
     */
-  def updateBatch(batch: DataFrame, root: String, buckets: Int = 64, keyBuckets: Int = 64): Unit = {
-    val spark = batch.sparkSession
-    val wLww = Window.partitionBy("doc_id")
-      .orderBy(col("tsUs").desc, col("seq").desc, col("op").desc)
-    val winners = batch
-      .select(col("op"), col("doc_id"), col("text"), col("tsUs"), col("seq"))
-      .withColumn("__rn", row_number().over(wLww)).filter(col("__rn") === 1).drop("__rn")
-      .withColumn("kb", pmod(col("doc_id"), lit(keyBuckets.toLong)).cast("int"))
-      .persist()
-    // every cached frame unpersists in the finally — a failed store
-    // write must not leak blocks in a long-lived foreachBatch session
-    val cached = scala.collection.mutable.Buffer[DataFrame](winners)
-    try {
-      val kbs = winners.select("kb").distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-      val keysOld = readOr(spark, keysDir(root), keysSchema).filter(col("kb").isin(kbs: _*))
-      val loc = keysOld.join(winners.select("doc_id"), Seq("doc_id"), "left_semi")
-        .select(col("doc_id"), col("tsUs").as("s_ts"), col("seq").as("s_seq"),
-          col("live"), col("tbs").as("old_tbs"))
-      val eff = winners.join(loc, Seq("doc_id"), "left")
-        .filter(col("s_ts").isNull || col("tsUs") > col("s_ts") ||
-          (col("tsUs") === col("s_ts") && col("seq") >= col("s_seq")))
-        .persist()
-      cached += eff
+  def updateBatch(batch: DataFrame, root: String, buckets: Int = 64, keyBuckets: Int = 64): Unit =
+    fold(batch, root, Seq("text"), keyBuckets) { (eff, _, keep) =>
       // new postings, tokenized exactly as q143 (whitespace positions)
-      val newPost = eff.filter(col("op") =!= "D")
+      val newPost = keep(eff.filter(col("op") =!= "D")
         .select(col("doc_id"),
           posexplode(graft.functions.TextFunctions.words(col("text"))).as(Seq("pos", "tok")))
         .select(tbOf(col("tok"), buckets).as("tb"), col("tok"), col("doc_id"),
-          col("pos").cast("int").as("pos"))
-        .persist()
-      cached += newPost
-      val newTbs = newPost.groupBy("doc_id").agg(collect_set("tb").as("tbs"))
-
+          col("pos").cast("int").as("pos")))
       val touched = eff.filter(col("live") === true)
         .select(explode(col("old_tbs")).as("tb")).select(col("tb").cast("long"))
         .union(newPost.select(col("tb").cast("long")))
         .distinct().collect().map(_.getLong(0)).sorted.toSeq
-      val effKeys = eff.select("doc_id")
-      IndexStoreOps.inParallel(
-        if (touched.nonEmpty) {
-          val postOld = readOr(spark, postDir(root), postSchema).filter(col("tb").isin(touched: _*))
-          IndexStoreOps.overwriteLeaves(// staged: store is both source and sink of this job
-            postOld
-            .join(effKeys, Seq("doc_id"), "left_anti")
-            .unionByName(newPost.select(postSchema.fieldNames.map(col).toSeq: _*)),
-            "tb", postDir(root), touched.map(_.toString)): Unit
-        },
-        if (kbs.nonEmpty) {
-          val keysNew = eff.select(col("kb"), col("doc_id"), col("tsUs"), col("seq"),
-              (col("op") =!= "D").as("live"))
-            .join(newTbs, Seq("doc_id"), "left")
-            .select(col("kb"), col("doc_id"), col("tsUs"), col("seq"), col("live"),
-              coalesce(col("tbs"), array().cast("array<int>")).as("tbs"))
-          IndexStoreOps.overwriteLeaves(keysOld
-            .join(effKeys, Seq("doc_id"), "left_anti")
-            .unionByName(keysNew)
-            .select(keysSchema.fieldNames.map(col).toSeq: _*),
-            "kb", keysDir(root), kbs.map(_.toString)): Unit
-        })
-    } finally cached.foreach(_.unpersist())
-  }
-
-  /** Tombstone GC (r15, the [[AnnIndexView.pruneTombstones]] contract
-    * ported): drop delete tombstones older than the feed's maximum
-    * admissible lateness. Sidecar-only rewrite; postings untouched (a
-    * deleted doc's postings were already retracted by its delete batch).
-    */
-  def pruneTombstones(spark: SparkSession, root: String, olderThanUs: Long): Unit = {
-    val kept = IndexStoreOps.clusterByLeaf(readOr(spark, keysDir(root), keysSchema)
-      .filter(col("live") || col("tsUs") >= olderThanUs), "kb")
-    kept.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(keysDir(root))
-  }
-
-  /** Small-file compaction over the CHURNED store (r15): every dynamic
-    * partition overwrite leaves up to shuffle-partitions files per
-    * touched `tb`/`kb` leaf, so a churn-heavy feed accretes small files
-    * even though row counts stay bounded — the classic small-file
-    * disease, fixed by the same OPTIMIZE pass plain tables get
-    * ([[graft.sources.Compaction]]). Probe results are unchanged (same
-    * rows, fewer files); run between batches like any maintenance.
-    */
-  def compactStore(spark: SparkSession, root: String,
-      targetBytes: Long = 64L << 20, smallBytes: Long = 16L << 20): Seq[graft.sources.Compaction.LeafReport] =
-    graft.sources.Compaction.compact(spark, postDir(root), targetBytes, smallBytes) ++
-      graft.sources.Compaction.compact(spark, keysDir(root), targetBytes, smallBytes)
-
-  /** `FORGET KEY` over THIS store (#338 extended to the live-index
-    * tier, r15): drop the doc's postings (the locator's token-bucket
-    * set prunes the rewrite to exactly the partitions its postings
-    * inhabit) and its locator row INCLUDING a delete tombstone (the
-    * tombstone names the doc). Returns
-    * (partitions_rewritten, rows_dropped).
-    */
-  def forgetKey(spark: SparkSession, root: String, key: Long): (Long, Long) =
-    forgetKeys(spark, root, Seq(key))
-
-  /** Batch `FORGET KEYS` (#367, r16 — see [[AnnIndexView.forgetKeys]]):
-    * one IN-pruned rewrite per touched posting/locator partition for
-    * the whole purge list (the union of the docs' token-bucket sets).
-    */
-  def forgetKeys(spark: SparkSession, root: String, keys: Seq[Long]): (Long, Long) = {
-    val keySet = keys.distinct
-    if (keySet.isEmpty) return (0L, 0L)
-    val locRows = readOr(spark, keysDir(root), keysSchema)
-      .filter(col("doc_id").isin(keySet: _*)).collect()
-    if (locRows.isEmpty) return (0L, 0L)
-    var parts = 0L
-    var dropped = 0L
-    val liveTbs = locRows.filter(_.getAs[Boolean]("live"))
-      .flatMap(_.getAs[scala.collection.Seq[Int]]("tbs")).map(_.toLong).distinct.toSeq
-    if (liveTbs.nonEmpty) {
-      val postOld = readOr(spark, postDir(root), postSchema).filter(col("tb").isin(liveTbs: _*))
-      val kept = IndexStoreOps.clusterByLeaf(
-        postOld.filter(!col("doc_id").isin(keySet: _*)), "tb")
-      dropped += postOld.count() - kept.count()
-      kept.write.mode(SaveMode.Overwrite)
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("tb")
-        .parquet(postDir(root))
-      clearEmptied(spark, postDir(root), "tb", liveTbs,
-        kept.select(col("tb").cast("long")).distinct().collect().map(_.getLong(0)).toSet)
-      parts += liveTbs.size
+      LocatorStore.DataStep(touched, replaceKeys(eff, newPost),
+        locate = _.join(newPost.groupBy("doc_id").agg(collect_set("tb").as("tbs")), Seq("doc_id"), "left")
+          .withColumn("tbs", coalesce(col("tbs"), array().cast("array<int>"))))
     }
-    val kbs = locRows.map(_.getAs[Int]("kb").toLong).distinct.toSeq
-    val keysOld = readOr(spark, keysDir(root), keysSchema).filter(col("kb").isin(kbs: _*))
-    val keysKept = IndexStoreOps.clusterByLeaf(
-      keysOld.filter(!col("doc_id").isin(keySet: _*)), "kb")
-    dropped += locRows.length
-    keysKept.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(keysDir(root))
-    clearEmptied(spark, keysDir(root), "kb", kbs,
-      keysKept.select(col("kb").cast("long")).distinct().collect().map(_.getLong(0)).toSet)
-    parts += kbs.size
-    (parts, dropped)
-  }
 
-  /** The [[forgetKey]] auditor for this store: posting rows plus
-    * locator rows (tombstones count) still naming the doc.
-    */
-  def keyTraces(spark: SparkSession, root: String, key: Long): Long =
-    keyTraces(spark, root, Seq(key))
-
-  /** Batch auditor: the whole list in one scan per store side. */
-  def keyTraces(spark: SparkSession, root: String, keys: Seq[Long]): Long =
-    readOr(spark, postDir(root), postSchema).filter(col("doc_id").isin(keys: _*)).count() +
-      readOr(spark, keysDir(root), keysSchema).filter(col("doc_id").isin(keys: _*)).count()
+  /** A doc's postings live in every bucket of its locator's token-bucket set. */
+  override protected def leavesOf(loc: Row): Seq[Any] =
+    loc.getAs[scala.collection.Seq[Int]]("tbs").toSeq
 
   /** #340 wired end-to-end: document changefeed → live posting index. */
   def maintain(feed: DataFrame, root: String, checkpointDir: String,
@@ -229,7 +89,7 @@ object PostingIndexView {
 
   /** The live postings `(tb, tok, doc_id, pos)`. */
   def readIndex(spark: SparkSession, root: String): DataFrame =
-    spark.read.parquet(postDir(root))
+    spark.read.parquet(dataDir(root))
       .select(col("tb").cast("int").as("tb"), col("tok"), col("doc_id"),
         col("pos").cast("int").as("pos"))
 
@@ -329,7 +189,7 @@ object PostingIndexView {
     */
   def liveStoreFor(spark: SparkSession, dir: String): String =
     liveDirs.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, IndexFingerprint.docsFingerprint(spark, dir)), {
+      (spark.sparkContext.applicationId, dir, graft.sources.Tables.fingerprint(spark, dir, "documents")), {
         val d = Files.createTempDirectory("graft_post_live").toString
         val docs = graft.sources.Tables.documents(spark, dir).select(col("doc_id"), col("text"))
         def ins(pred: org.apache.spark.sql.Column) = docs.filter(pred).select(
@@ -352,20 +212,4 @@ object PostingIndexView {
         ).foreach(b => updateBatch(b, d))
         d
       })
-}
-
-/** File-fingerprint helper shared by the live-index driver entries. */
-private[streaming] object IndexFingerprint {
-  def docsFingerprint(spark: SparkSession, dir: String): Long = {
-    val path = new org.apache.hadoop.fs.Path(s"$dir/documents.parquet")
-    val fs   = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val it   = fs.listFiles(path, true)
-    var h = 1125899906842597L
-    while (it.hasNext) {
-      val st = it.next()
-      val s  = s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
-      h = s.foldLeft(h * 31 + 7)((a, c) => a * 131 + c)
-    }
-    h
-  }
 }

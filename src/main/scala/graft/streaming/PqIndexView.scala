@@ -1,10 +1,8 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 
-import scala.jdk.CollectionConverters._
-
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.DataStreamWriter
@@ -51,30 +49,22 @@ import graft.operators.Similarity
   * (`rerankWith`), exactly as s06's persisted index keeps raw
   * embeddings OUTSIDE the scan unit.
   */
-object PqIndexView {
+object PqIndexView extends LocatorStore {
 
-  private def dataDir(root: String)  = s"$root/data"
-  private def keysDir(root: String)  = s"$root/keys"
-  private def cbDir(root: String)    = s"$root/codebook"
-  private def driftDir(root: String) = s"$root/drift"
-
-  private val dataSchema = StructType(Seq(
+  val kind = "pq"
+  protected val dataName = "data"
+  protected val dataPart = "kb"
+  protected val keyCol   = "vec_id"
+  protected val dataSchema = StructType(Seq(
     StructField("kb", IntegerType), StructField("vec_id", LongType),
     StructField("codes", ArrayType(IntegerType)), StructField("norm", DoubleType)))
-  private val keysSchema = StructType(Seq(
+  protected val keysSchema = StructType(Seq(
     StructField("kb", IntegerType), StructField("vec_id", LongType),
     StructField("tsUs", LongType), StructField("seq", LongType),
     StructField("live", BooleanType)))
 
-  private def readOr(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    try spark.read.parquet(path).select(schema.fieldNames.map(col).toSeq: _*)
-    catch { case _: AnalysisException =>
-      spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema) }
-
-  private def clearEmptied(spark: SparkSession, root: String, colName: String,
-      touched: Seq[Long], survivors: Set[Long]): Unit =
-    IndexStoreOps.clearEmptiedLeaves(spark, root, colName,
-      touched.map(_.toString), survivors.map(_.toString))
+  private def cbDir(root: String)    = s"$root/codebook"
+  private def driftDir(root: String) = s"$root/drift"
 
   /** The pinned per-subspace codebooks `(j, code, cvi, c2)`. */
   def readCodebook(spark: SparkSession, root: String): DataFrame =
@@ -158,63 +148,29 @@ object PqIndexView {
     * co-partition on kb, so one batch touches exactly its kb dirs.
     */
   def updateBatch(batch: DataFrame, root: String, m: Int = 4,
-      keyBuckets: Int = 64, batchId: Long = -1L): Unit = {
-    val spark = batch.sparkSession
-    val wLww = Window.partitionBy("vec_id")
-      .orderBy(col("tsUs").desc, col("seq").desc, col("op").desc)
-    val winners = batch
-      .select(col("op"), col("vec_id"), col("embedding"), col("tsUs"), col("seq"))
-      .withColumn("__rn", row_number().over(wLww)).filter(col("__rn") === 1).drop("__rn")
-      .withColumn("kb", pmod(col("vec_id"), lit(keyBuckets.toLong)).cast("int"))
-      .persist()
-    val cached = scala.collection.mutable.Buffer[DataFrame](winners)
-    try {
-      val kbs = winners.select("kb").distinct().collect().map(_.getInt(0).toLong).sorted.toSeq
-      val keysOld = readOr(spark, keysDir(root), keysSchema).filter(col("kb").isin(kbs: _*))
-      val loc = keysOld.join(winners.select("vec_id"), Seq("vec_id"), "left_semi")
-        .select(col("vec_id"), col("tsUs").as("s_ts"), col("seq").as("s_seq"), col("live"))
-      val eff = winners.join(loc, Seq("vec_id"), "left")
-        .filter(col("s_ts").isNull || col("tsUs") > col("s_ts") ||
-          (col("tsUs") === col("s_ts") && col("seq") >= col("s_seq")))
-        .persist()
-      cached += eff
-      val dataOld = readOr(spark, dataDir(root), dataSchema).filter(col("kb").isin(kbs: _*))
-      val ups = encodeAt(readCodebook(spark, root),
+      keyBuckets: Int = 64, batchId: Long = -1L): Unit =
+    fold(batch, root, Seq("embedding"), keyBuckets) { (eff, kbs, keep) =>
+      val spark = batch.sparkSession
+      val ups = keep(encodeAt(readCodebook(spark, root),
           eff.filter(col("op") =!= "D")
             .select(col("vec_id"), col("embedding"), col("kb"), col("live")), m)
-        .join(dataOld.select(col("vec_id"), col("codes").as("old_codes")), Seq("vec_id"), "left")
-        .persist()
-      cached += ups
-      val effKeys = eff.select("vec_id")
-
+        .join(readData(spark, root).filter(col("kb").isin(kbs: _*))
+          .select(col("vec_id"), col("codes").as("old_codes")), Seq("vec_id"), "left"))
       // staleness measurement, COLLECTED before the store writes (the
-      // dynamic overwrite refreshes the path and would recompute
-      // old_codes against the already-updated store): reconstruction
-      // error at the pinned codebooks + code churn
+      // swap refreshes the path and would recompute old_codes against
+      // the already-updated store): reconstruction error at the pinned
+      // codebooks + code churn
       val d = ups.agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"),
           count(when(col("live") === true &&
             coalesce(col("old_codes") =!= col("codes"), lit(true)), 1)).as("moved"),
           count(when(col("live") === true, 1)).as("had_old"))
         .collect().head
-
-      if (kbs.nonEmpty) IndexStoreOps.inParallel(
-        IndexStoreOps.overwriteLeaves(dataOld
-          .join(effKeys, Seq("vec_id"), "left_anti")
-          .unionByName(ups.select(col("kb"), col("vec_id"), col("codes"), col("norm"))),
-          "kb", dataDir(root), kbs.map(_.toString)): Unit,
-        {
-          val keysNew = eff.select(col("kb"), col("vec_id"), col("tsUs"), col("seq"),
-            (col("op") =!= "D").as("live"))
-          IndexStoreOps.overwriteLeaves(keysOld
-            .join(effKeys, Seq("vec_id"), "left_anti")
-            .unionByName(keysNew), "kb", keysDir(root), kbs.map(_.toString)): Unit
-        })
-
-      if (d.getLong(0) > 0L)
-        appendDrift(spark, root, batchId, "batch", d.getLong(0), d.getDouble(1),
-          baseSeq = baselineCount(spark, root) - 1L, moved = d.getLong(2), hadOld = d.getLong(3))
-    } finally cached.foreach(_.unpersist())
-  }
+      // codes co-partition with their locators, so the data leaves are the batch's kbs
+      LocatorStore.DataStep(kbs, replaceKeys(eff, ups),
+        commit = () => if (d.getLong(0) > 0L)
+          appendDrift(spark, root, batchId, "batch", d.getLong(0), d.getDouble(1),
+            baseSeq = baselineCount(spark, root) - 1L, moved = d.getLong(2), hadOld = d.getLong(3)))
+    }
 
   /** The PQ retrain policy (#366's discipline on this family):
     * thresholds on the cumulative reconstruction-error ratio and code
@@ -293,7 +249,7 @@ object PqIndexView {
     val baseline = d.filter(col("kind") === "baseline")
       .orderBy(col("base_seq").desc).limit(1)
       .select(col("mean_err").as("baseline_err"), col("base_seq").as("cur_base"))
-    val storeSize = readOr(spark, dataDir(root), dataSchema).count()
+    val storeSize = readData(spark, root).count()
     val w = Window.partitionBy("base_seq").orderBy("batch_id")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     d.crossJoin(broadcast(baseline))
@@ -347,68 +303,6 @@ object PqIndexView {
     appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
       baseSeq = baselineCount(spark, root))
   }
-
-  /** Tombstone GC — the [[AnnIndexView.pruneTombstones]] contract. */
-  def pruneTombstones(spark: SparkSession, root: String, olderThanUs: Long): Unit = {
-    val kept = IndexStoreOps.clusterByLeaf(readOr(spark, keysDir(root), keysSchema)
-      .filter(col("live") || col("tsUs") >= olderThanUs), "kb")
-    kept.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(keysDir(root))
-  }
-
-  /** Small-file compaction — the [[PostingIndexView.compactStore]] contract. */
-  def compactStore(spark: SparkSession, root: String,
-      targetBytes: Long = 64L << 20, smallBytes: Long = 16L << 20): Seq[graft.sources.Compaction.LeafReport] =
-    graft.sources.Compaction.compact(spark, dataDir(root), targetBytes, smallBytes) ++
-      graft.sources.Compaction.compact(spark, keysDir(root), targetBytes, smallBytes)
-
-  def forgetKey(spark: SparkSession, root: String, key: Long): (Long, Long) =
-    forgetKeys(spark, root, Seq(key))
-
-  /** Batch `FORGET KEYS` (#367 discipline): codes and locators share kb
-    * partitioning, so the whole purge list costs one rewrite per
-    * touched kb directory on each side.
-    */
-  def forgetKeys(spark: SparkSession, root: String, keys: Seq[Long]): (Long, Long) = {
-    val keySet = keys.distinct
-    if (keySet.isEmpty) return (0L, 0L)
-    val locRows = readOr(spark, keysDir(root), keysSchema)
-      .filter(col("vec_id").isin(keySet: _*)).collect()
-    if (locRows.isEmpty) return (0L, 0L)
-    var parts = 0L
-    var dropped = 0L
-    val kbs = locRows.map(_.getAs[Int]("kb").toLong).distinct.toSeq
-    val dataOld = readOr(spark, dataDir(root), dataSchema).filter(col("kb").isin(kbs: _*))
-    val kept = IndexStoreOps.clusterByLeaf(
-      dataOld.filter(!col("vec_id").isin(keySet: _*)), "kb")
-    dropped += dataOld.count() - kept.count()
-    kept.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(dataDir(root))
-    clearEmptied(spark, dataDir(root), "kb", kbs,
-      kept.select(col("kb").cast("long")).distinct().collect().map(_.getLong(0)).toSet)
-    val keysOld = readOr(spark, keysDir(root), keysSchema).filter(col("kb").isin(kbs: _*))
-    val keysKept = IndexStoreOps.clusterByLeaf(
-      keysOld.filter(!col("vec_id").isin(keySet: _*)), "kb")
-    dropped += locRows.length
-    keysKept.write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("kb")
-      .parquet(keysDir(root))
-    clearEmptied(spark, keysDir(root), "kb", kbs,
-      keysKept.select(col("kb").cast("long")).distinct().collect().map(_.getLong(0)).toSet)
-    parts += kbs.size * 2L
-    (parts, dropped)
-  }
-
-  /** The [[forgetKey]] auditor for this store. */
-  def keyTraces(spark: SparkSession, root: String, key: Long): Long =
-    keyTraces(spark, root, Seq(key))
-
-  /** Batch auditor: the whole list in one scan per store side. */
-  def keyTraces(spark: SparkSession, root: String, keys: Seq[Long]): Long =
-    readOr(spark, dataDir(root), dataSchema).filter(col("vec_id").isin(keys: _*)).count() +
-      readOr(spark, keysDir(root), keysSchema).filter(col("vec_id").isin(keys: _*)).count()
 
   /** Probe the LIVE index: s05's asymmetric-distance dataflow served
     * from the maintained code table. The broadcast lookup table (query
@@ -484,7 +378,7 @@ object PqIndexView {
     */
   def annPqLive(spark: SparkSession, dir: String, k: Int = 3): DataFrame = {
     val root = liveIndexDirs.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, Similarity.corpusFingerprint(spark, dir)), {
+      (spark.sparkContext.applicationId, dir, graft.sources.Tables.fingerprint(spark, dir, "embeddings")), {
         val d = Files.createTempDirectory("graft_pq_live").toString
         val e = graft.sources.Tables.embeddings(spark, dir).select("vec_id", "embedding")
         create(spark, d, e, m = 4, k = 16, iters = 2)

@@ -77,13 +77,13 @@ class ViewCatalog(val spark: SparkSession, val root: String)
 
   private val sources = mutable.LinkedHashMap.empty[String, () => Dataset[Change]]
   private val views   = mutable.LinkedHashMap.empty[String, NamedView]
-  // name → (kind, root, params) of a registered live-index store (r15):
-  // kind ∈ ann | bitmap | posting | ivf, dispatching to that family's
-  // own probe/forgetKey/keyTraces (each partition-pruned via its
-  // locator sidecar). params carries the store's CREATION constants the
-  // probe must match (ann: planes; posting: buckets; ivf: nprobe).
+  // name → (family, root, params) of a registered live-index store
+  // (r15): the family's shared LocatorStore erasure/audit verbs and its
+  // own probes (each partition-pruned via its locator sidecar). params
+  // carries the store's CREATION constants the probe must match (ann:
+  // planes; posting: buckets; ivf: nprobe).
   private val indexStores =
-    mutable.LinkedHashMap.empty[String, (String, String, Map[String, Int])]
+    mutable.LinkedHashMap.empty[String, (LocatorStore, String, Map[String, Int])]
 
   private val NameRe = "^[A-Za-z_][A-Za-z0-9_]{0,63}$".r
 
@@ -159,11 +159,10 @@ class ViewCatalog(val spark: SparkSession, val root: String)
       params: Map[String, Int] = Map.empty,
       vectors: Option[() => DataFrame] = None): Unit = {
     requireValidName(name)
-    require(Set("ann", "bitmap", "posting", "ivf", "pq").contains(kind),
-      s"unknown index-store kind $kind (ann | bitmap | posting | ivf | pq)")
+    val store = LocatorStore(kind)
     require(!views.contains(name) && !sources.contains(name),
       s"name $name already exists (drop the view / pick another name)")
-    indexStores(name) = (kind, root, params)
+    indexStores(name) = (store, root, params)
     // a PQ store holds CODES; its SQL probes need the full-precision
     // relation back (query embedding + exact rerank), so the store may
     // register its vectors source — the same relation the Scala probe's
@@ -479,10 +478,11 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     *
     * Mechanics per view: one pruned scan finds the batch partitions
     * mentioning the key (partition-pruned `IN` read), ONLY those are
-    * rewritten via dynamic partition overwrite minus the key's rows
-    * (commit markers untouched — the batch stays committed, possibly
-    * empty; an emptied partition directory is cleared explicitly, the
-    * PartitionedUpsert rule). Dependents tail by batch id
+    * rewritten minus the key's rows, through the index stores' staged
+    * leaf swap ([[IndexStoreOps.overwriteLeaves]]; commit markers
+    * untouched — the batch stays committed, possibly empty; an emptied
+    * partition directory is removed, the PartitionedUpsert rule).
+    * Dependents tail by batch id
     * ([[FeedSink.readChangeFeed]]), so a rewritten partition they have
     * already read is not delivered again: the erasure reaches a
     * dependent's own sink through this same sweep, not through its tail.
@@ -503,7 +503,10 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     * purges the list through its family's own batched verb. Cost ∝
     * distinct touched partitions, never ∝ keys × partitions. Same
     * refusal contract as the single-key form, checked for EVERY key
-    * up front (all-or-nothing: no partial purge on a half-live list).
+    * up front (all-or-nothing: no partial purge on a half-live list),
+    * together with every registered store's [[LocatorStore.guard]]
+    * (an IVF store mid-retrain refuses), so a refused purge rewrites
+    * nothing.
     */
   def forgetKeys(keys: Seq[Long], historyDirs: Seq[String] = Nil): DataFrame = {
     val keySet = keys.distinct
@@ -528,28 +531,18 @@ class ViewCatalog(val spark: SparkSession, val root: String)
           s"still live in view $n — deliver a source delete " +
           "(retract it through the graph) before FORGET KEY")
     }
+    indexStores.values.foreach { case (store, root, _) => store.guard(spark, root) }
     feeds.foreach { case (n, fd, feed) =>
-      val touched = feed.filter(col("key").isin(keySet: _*))
-        .select(col("batch_id")).distinct()
-        .collect().map(_.getLong(0)).sorted.toSeq
-      if (touched.nonEmpty) {
-        val before = feed.filter(col("batch_id").isin(touched: _*))
-        // r17: cluster the rewrite on its partition column (one file per
-        // surviving batch dir, not shuffle-partitions-many — the r16
-        // index-store write discipline); the eager checkpoint it carries
-        // was already paid here (feed is both source and sink)
-        val kept = IndexStoreOps.clusterByLeaf(
-          before.filter(!col("key").isin(keySet: _*)), "batch_id")
-        val dropped = before.count() - kept.count()
-        kept.write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(fd)
-        val survivors = kept.select(col("batch_id")).distinct()
-          .collect().map(_.getLong(0)).toSet
-        IndexStoreOps.clearEmptiedLeaves(spark, fd, "batch_id",
-          touched.map(_.toString), survivors.map(_.toString))
-        audit += ((n, "sink", touched.size.toLong, dropped))
+      // rows to drop per batch partition, counted before the rewrite;
+      // the rewrite is the index stores' staged leaf swap (one file per
+      // surviving batch dir, emptied dirs removed, markers untouched)
+      val hits = feed.filter(col("key").isin(keySet: _*))
+        .groupBy("batch_id").count().collect()
+      if (hits.nonEmpty) {
+        val touched = hits.map(_.getLong(0)).sorted.toSeq
+        IndexStoreOps.overwriteLeaves(feed.filter(col("batch_id").isin(touched: _*) &&
+          !col("key").isin(keySet: _*)), "batch_id", fd, touched.map(_.toString))
+        audit += ((n, "sink", touched.size.toLong, hits.map(_.getLong(1)).sum))
       }
     }
     historyDirs.foreach { hd =>
@@ -571,15 +564,9 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     // through its own locator-pruned batched discipline — posting/bit/
     // locator rows AND the delete tombstones all go in one rewrite per
     // touched partition
-    indexStores.foreach { case (n, (kind, root, _)) =>
-      val (parts, dropped) = kind match {
-        case "ann"     => AnnIndexView.forgetKeys(spark, root, keySet)
-        case "bitmap"  => BitmapIndexView.forgetKeys(spark, root, keySet)
-        case "posting" => PostingIndexView.forgetKeys(spark, root, keySet)
-        case "ivf"     => IvfIndexView.forgetKeys(spark, root, keySet)
-        case "pq"      => PqIndexView.forgetKeys(spark, root, keySet)
-      }
-      audit += ((n, s"index:$kind", parts, dropped))
+    indexStores.foreach { case (n, (store, root, _)) =>
+      val (parts, dropped) = store.forgetKeys(spark, root, keySet)
+      audit += ((n, s"index:${store.kind}", parts, dropped))
     }
     import spark.implicits._
     audit.toSeq.toDF("artifact", "kind", "partitions_rewritten", "rows_dropped")
@@ -625,15 +612,8 @@ class ViewCatalog(val spark: SparkSession, val root: String)
         catch { case _: org.apache.spark.sql.AnalysisException => 0L }
       rows += ((hd, "history", h))
     }
-    indexStores.foreach { case (n, (kind, root, _)) =>
-      val t = kind match {
-        case "ann"     => AnnIndexView.keyTraces(spark, root, key)
-        case "bitmap"  => BitmapIndexView.keyTraces(spark, root, key)
-        case "posting" => PostingIndexView.keyTraces(spark, root, key)
-        case "ivf"     => IvfIndexView.keyTraces(spark, root, key)
-        case "pq"      => PqIndexView.keyTraces(spark, root, key)
-      }
-      rows += ((n, s"index:$kind", t))
+    indexStores.foreach { case (n, (store, root, _)) =>
+      rows += ((n, s"index:${store.kind}", store.keyTraces(spark, root, key)))
     }
     import spark.implicits._
     rows.toSeq.toDF("artifact", "kind", "trace_rows")
@@ -660,15 +640,8 @@ class ViewCatalog(val spark: SparkSession, val root: String)
         catch { case _: org.apache.spark.sql.AnalysisException => 0L }
       rows += ((hd, "history", h))
     }
-    indexStores.foreach { case (n, (kind, root, _)) =>
-      val t = kind match {
-        case "ann"     => AnnIndexView.keyTraces(spark, root, keySet)
-        case "bitmap"  => BitmapIndexView.keyTraces(spark, root, keySet)
-        case "posting" => PostingIndexView.keyTraces(spark, root, keySet)
-        case "ivf"     => IvfIndexView.keyTraces(spark, root, keySet)
-        case "pq"      => PqIndexView.keyTraces(spark, root, keySet)
-      }
-      rows += ((n, s"index:$kind", t))
+    indexStores.foreach { case (n, (store, root, _)) =>
+      rows += ((n, s"index:${store.kind}", store.keyTraces(spark, root, keySet)))
     }
     import spark.implicits._
     rows.toSeq.toDF("artifact", "kind", "trace_rows")
@@ -679,10 +652,10 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     * that schedules compaction.
     */
   def storeFiles(name: String, maxFilesPerPart: Int = 8): DataFrame = {
-    val (kind, root, _) = indexStores.getOrElse(name,
+    val (store, root, _) = indexStores.getOrElse(name,
       throw new IllegalArgumentException(s"no index store named $name (registerIndexStore first)"))
     import spark.implicits._
-    IndexStoreOps.fileCensus(spark, kind, root, maxFilesPerPart)
+    IndexStoreOps.fileCensus(spark, store.kind, root, maxFilesPerPart)
       .map(c => (name, c.dir, c.files, c.bytes, c.flagged))
       .toDF("store", "dir", "files", "bytes", "needs_compact")
   }
@@ -696,7 +669,8 @@ class ViewCatalog(val spark: SparkSession, val root: String)
   def optimizeStores(maxFilesPerPart: Int = 8,
       targetBytes: Long = 64L << 20, smallBytes: Long = 16L << 20): DataFrame = {
     import spark.implicits._
-    val rows = indexStores.toSeq.map { case (n, (kind, root, _)) =>
+    val rows = indexStores.toSeq.map { case (n, (store, root, _)) =>
+      val kind = store.kind
       val before = IndexStoreOps.fileCensus(spark, kind, root, maxFilesPerPart)
       val (ran, _) = IndexStoreOps.compactIfNeeded(spark, kind, root,
         maxFilesPerPart, targetBytes, smallBytes)
@@ -1155,11 +1129,11 @@ class ViewCatalog(val spark: SparkSession, val root: String)
         val SimilarTblRe = "(?i)SIMILAR_TO\\(\\s*'([A-Za-z_][A-Za-z0-9_]*)'\\s*,\\s*TABLE\\s+([A-Za-z_][A-Za-z0-9_.]*)\\s*,\\s*(\\d+)\\s*\\)".r
         val CellsRe = "(?i)CELL_COUNTS\\(\\s*'([A-Za-z_][A-Za-z0-9_]*)'\\s*,\\s*'([A-Za-z_][A-Za-z0-9_]*)'\\s*\\)".r
         val StaleRe = "(?i)INDEX_STALENESS\\(\\s*'([A-Za-z_][A-Za-z0-9_]*)'\\s*\\)".r
-        def store(n: String, wantKinds: Set[String]): (String, String, Map[String, Int]) = {
+        def store(n: String, want: Seq[LocatorStore]): (LocatorStore, String, Map[String, Int]) = {
           val st = indexStores.getOrElse(n,
             throw new IllegalArgumentException(s"no index store named $n (registerIndexStore first)"))
-          require(wantKinds.contains(st._1),
-            s"index store $n has kind ${st._1}; expected one of ${wantKinds.mkString("/")}")
+          require(want.contains(st._1),
+            s"index store $n has kind ${st._1.kind}; expected one of ${want.map(_.kind).mkString("/")}")
           st
         }
         // alias uniqueness is session-global (AtomicLong), not per-call:
@@ -1173,7 +1147,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
         def probeRelation(name: String): DataFrame =
           if (views.contains(name)) snapshot(name) else spark.table(name)
         val phraseTblDone = PhraseTblRe.replaceAllIn(s, m => {
-          val (_, root, params) = store(m.group(1), Set("posting"))
+          val (_, root, params) = store(m.group(1), Seq(PostingIndexView))
           val alias = fresh("phrase")
           // phrase probes are driver-enumerated by construction (the
           // Scala probe takes Seq[Seq[String]] — a probe list is small
@@ -1188,7 +1162,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
           alias
         })
         val phraseDone = PhraseRe.replaceAllIn(phraseTblDone, m => {
-          val (_, root, params) = store(m.group(1), Set("posting"))
+          val (_, root, params) = store(m.group(1), Seq(PostingIndexView))
           val alias = fresh("phrase")
           PostingIndexView.phraseSearch(spark, root,
               Seq(m.group(2).trim.split("\\s+").toSeq),
@@ -1205,62 +1179,63 @@ class ViewCatalog(val spark: SparkSession, val root: String)
               "cannot reconstruct query embeddings")).apply()
         // the relation of (vec_id, embedding) a SIMILAR_TO query draws
         // its query vectors from, per family
-        def embSource(name: String, kind: String, root: String): DataFrame = kind match {
-          case "ann" => AnnIndexView.readIndex(spark, root)
-          case "ivf" => IvfIndexView.readIndex(spark, root)
-          case "pq"  => pqVectors(name)
+        val vectorStores = Seq(AnnIndexView, IvfIndexView, PqIndexView)
+        def embSource(name: String, store: LocatorStore, root: String): DataFrame = store match {
+          case AnnIndexView => AnnIndexView.readIndex(spark, root)
+          case IvfIndexView => IvfIndexView.readIndex(spark, root)
+          case PqIndexView  => pqVectors(name)
         }
-        def similarProbe(name: String, kind: String, root: String,
-            params: Map[String, Int], queries: DataFrame, k: Int): DataFrame = kind match {
-          case "ann" =>
+        def similarProbe(name: String, store: LocatorStore, root: String,
+            params: Map[String, Int], queries: DataFrame, k: Int): DataFrame = store match {
+          case AnnIndexView =>
             AnnIndexView.similarTo(spark, root, queries, k,
               numPlanes = params.getOrElse("planes", 8))
-          case "ivf" =>
+          case IvfIndexView =>
             IvfIndexView.similarTo(spark, root, queries, k,
               nprobe = params.getOrElse("nprobe", 2))
-          case "pq" =>
+          case PqIndexView =>
             PqIndexView.similarTo(spark, root, queries, k,
               m = params.getOrElse("m", 4),
               rerank = params.getOrElse("rerank", 60),
               rerankWith = Some(pqVectors(name)))
         }
         val simTblDone = SimilarTblRe.replaceAllIn(phraseDone, m => {
-          val (kind, root, params) = store(m.group(1), Set("ann", "ivf", "pq"))
+          val (st, root, params) = store(m.group(1), vectorStores)
           val k = m.group(3).toInt
           val alias = fresh("similar")
           // the whole id relation probes in ONE batch: ids join the
           // store's own embeddings (or the pq vectors source), then the
           // family's multi-query probe runs partition-pruned
-          val queries = embSource(m.group(1), kind, root).join(
+          val queries = embSource(m.group(1), st, root).join(
               probeRelation(m.group(2)).select(col("vec_id").cast("long").as("vec_id")).distinct(),
               Seq("vec_id"))
             .select(col("vec_id").as("query_id"), col("embedding"))
-          similarProbe(m.group(1), kind, root, params, queries, k)
+          similarProbe(m.group(1), st, root, params, queries, k)
             .createOrReplaceTempView(alias)
           alias
         })
         val simDone = SimilarRe.replaceAllIn(simTblDone, m => {
-          val (kind, root, params) = store(m.group(1), Set("ann", "ivf", "pq"))
+          val (st, root, params) = store(m.group(1), vectorStores)
           val (id, k) = (m.group(2).toLong, m.group(3).toInt)
           val alias = fresh("similar")
-          val queries = embSource(m.group(1), kind, root)
+          val queries = embSource(m.group(1), st, root)
             .filter(col("vec_id") === id)
             .select(col("vec_id").as("query_id"), col("embedding"))
-          similarProbe(m.group(1), kind, root, params, queries, k)
+          similarProbe(m.group(1), st, root, params, queries, k)
             .createOrReplaceTempView(alias)
           alias
         })
         val cellsDone = CellsRe.replaceAllIn(simDone, m => {
-          val (_, rootA, _) = store(m.group(1), Set("bitmap"))
-          val (_, rootB, _) = store(m.group(2), Set("bitmap"))
+          val (_, rootA, _) = store(m.group(1), Seq(BitmapIndexView))
+          val (_, rootB, _) = store(m.group(2), Seq(BitmapIndexView))
           val alias = fresh("cells")
           BitmapIndexView.cellCounts(spark, rootA, rootB).createOrReplaceTempView(alias)
           alias
         })
         val staleDone = StaleRe.replaceAllIn(cellsDone, m => {
-          val (kind, root, _) = store(m.group(1), Set("ivf", "pq"))
+          val (st, root, _) = store(m.group(1), Seq(IvfIndexView, PqIndexView))
           val alias = fresh("stale")
-          val rep = if (kind == "ivf") IvfIndexView.stalenessReport(spark, root)
+          val rep = if (st == IvfIndexView) IvfIndexView.stalenessReport(spark, root)
                     else PqIndexView.stalenessReport(spark, root)
           rep.createOrReplaceTempView(alias)
           alias
@@ -1268,7 +1243,6 @@ class ViewCatalog(val spark: SparkSession, val root: String)
         // INDEX_FILES('store') — the #370 census as a relation
         val FilesRe = "(?i)INDEX_FILES\\(\\s*'([A-Za-z_][A-Za-z0-9_]*)'\\s*\\)".r
         val filesDone = FilesRe.replaceAllIn(staleDone, m => {
-          store(m.group(1), Set("ann", "bitmap", "posting", "ivf", "pq"))
           val alias = fresh("files")
           storeFiles(m.group(1)).createOrReplaceTempView(alias)
           alias

@@ -12,7 +12,7 @@ import graft.GraftSession
   * guide asks for before touching updateBatch.
   *
   * `runMain graft.tools.ProfileLive <sfDir> <family>` with family in
-  * {ivf, pq, bitmap, posting}.
+  * {ivf, bitmap}.
   */
 object ProfileLive {
   def main(args: Array[String]): Unit = {
@@ -47,8 +47,8 @@ object ProfileLive {
       }
     }
 
-    family match {
-      case "ivf" =>
+    graft.streaming.LocatorStore(family) match {
+      case graft.streaming.IvfIndexView =>
         val root = java.nio.file.Files.createTempDirectory("prof_ivf").toString
         val e = graft.sources.Tables.embeddings(spark, sfDir).select("vec_id", "embedding")
         timed("create (train quantizer)") {
@@ -75,7 +75,7 @@ object ProfileLive {
           }
         }
         countFiles(root)
-      case "bitmap" =>
+      case graft.streaming.BitmapIndexView =>
         val root = java.nio.file.Files.createTempDirectory("prof_bm").toString
         val o = graft.sources.Tables.orders(spark, sfDir)
           .select(col("o_orderkey").as("key"), col("o_orderpriority").as("value"))
@@ -99,7 +99,7 @@ object ProfileLive {
           }
         }
         countFiles(root)
-      case other => sys.error(s"unknown family $other")
+      case other => sys.error(s"no store-build profile for family ${other.kind}")
     }
     spark.stop()
   }

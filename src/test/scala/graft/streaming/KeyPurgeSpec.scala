@@ -347,4 +347,54 @@ class KeyPurgeSpec extends SparkSpec {
       .filter(col("doc_id").isin(purge: _*)).count() == 0L)
     assert(PostingIndexView.keyTraces(spark, postRoot, 110L) > 0L)
   }
+
+  test("#367c FORGET KEYS refuses an IVF store with a half-finished retrain: neither the store nor any sink is rewritten") {
+    def vec(id: Long): Array[Float] =
+      Array((id + 1).toFloat, ((id * 7) % 5 - 2).toFloat, ((id * 3) % 4).toFloat, 1.0f)
+    val ids = (0L until 12L).toSeq
+    val (root, src) = (tmp("gdroot"), tmp("gdsrc"))
+    val cat = new ViewCatalog(spark, root)
+    cat.registerSource("t", () => ChangeFeed.readJsonDir(spark, src).as[Change])
+    cat.createView("v1", "SELECT city, amount FROM t WHERE amount > 0")
+    try {
+      // key 2 reaches v1's sink, then the source deletes it: purgeable
+      writeChanges(src, "b1.json", Seq(
+        Change("insert", 1L, ts(0), Map("city" -> "ber", "amount" -> "10"), 1L),
+        Change("insert", 2L, ts(1), Map("city" -> "par", "amount" -> "20"), 2L)))
+      cat.awaitAll()
+      writeChanges(src, "b2.json", Seq(Change("delete", 2L, ts(5), Map.empty, 3L)))
+      cat.awaitAll()
+
+      val ivfRoot = tmp("gdivf")
+      IvfIndexView.create(spark, ivfRoot, ids.map(i => (i, vec(i))).toDF("vec_id", "embedding"), k = 4, iters = 1)
+      IvfIndexView.updateBatch(ids.map(i => VecChg("I", i, vec(i), 1000L, i)).toDF(), ivfRoot, 4)
+      cat.registerIndexStore("ivf_idx", "ivf", ivfRoot)
+
+      def files(dir: String): Map[String, (Long, Long)] = {
+        import scala.jdk.CollectionConverters._
+        val s = Files.walk(Paths.get(dir))
+        try s.iterator().asScala.filter(Files.isRegularFile(_)).map { f =>
+          f.toString -> ((Files.size(f), Files.getLastModifiedTime(f).toMillis))
+        }.toMap finally s.close()
+      }
+      // a retrain that crashed between its data and keys swaps leaves the
+      // marker and a locator whose cells may name the OLD quantizer
+      val marker = Paths.get(ivfRoot, "_retrain_inprogress")
+      Files.write(marker, Array.emptyByteArray)
+      val (sinkBefore, storeBefore) = (files(s"$root/views/v1/feed"), files(ivfRoot))
+      val eStore = intercept[IllegalArgumentException] { IvfIndexView.forgetKeys(spark, ivfRoot, Seq(2L)) }
+      assert(eStore.getMessage.contains("half-finished retrain"), eStore.getMessage)
+      val eCat = intercept[IllegalArgumentException] { cat.forgetKeys(Seq(2L)) }
+      assert(eCat.getMessage.contains("half-finished retrain"), eCat.getMessage)
+      assert(files(s"$root/views/v1/feed") == sinkBefore, "a refused purge must not rewrite any sink")
+      assert(files(ivfRoot) == storeBefore, "a refused purge must not rewrite the store")
+      assert(IvfIndexView.keyTraces(spark, ivfRoot, 2L) > 0L)
+
+      // once the store is whole again the same purge goes through
+      Files.delete(marker)
+      val audit = cat.forgetKeys(Seq(2L)).collect().map(r => r.getString(0) -> r.getLong(3)).toMap
+      assert(audit("v1") > 0L && audit("ivf_idx") > 0L, s"purge after recovery: $audit")
+      assert(cat.keyTracesAll(Seq(2L)).collect().map(_.getLong(2)).sum == 0L)
+    } finally cat.stopAll()
+  }
 }

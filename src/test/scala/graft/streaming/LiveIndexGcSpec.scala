@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
 import graft.SparkSpec
@@ -165,25 +166,43 @@ class LiveIndexGcSpec extends SparkSpec {
     assert(BitmapIndexView.keyTraces(spark, bmRoot, 15L) == 1L,
       "only the tombstone may trace — the stale re-insert must be rejected")
 
-    // ann
-    val annRoot = tmp("gcann")
+    // the vector families: ann, and ivf/pq over pinned quantizers
+    // trained on the same 20 vectors
     def vec(id: Long): Array[Float] =
       Array((id + 1).toFloat, ((id * 7) % 5 - 2).toFloat, ((id * 3) % 4).toFloat, 1.0f)
-    def ann(rows: Seq[(String, Long, Long)]) =
+    def feed(rows: Seq[(String, Long, Long)]) =
       rows.map { case (op, id, ts) => VecChg(op, id, vec(id), ts, id) }.toDF()
-    AnnIndexView.updateBatch(ann((0L until 20L).map(i => ("I", i, 1000L))), annRoot, numPlanes = 4, keyBuckets = 4)
-    AnnIndexView.updateBatch(ann((0L until 5L).map(i => ("D", i, 2000L))), annRoot, numPlanes = 4, keyBuckets = 4)
-    AnnIndexView.updateBatch(ann((5L until 10L).map(i => ("D", i, 3000L))), annRoot, numPlanes = 4, keyBuckets = 4)
-    AnnIndexView.pruneTombstones(spark, annRoot, olderThanUs = 2500L)
-    val annLoc = spark.read.parquet(s"$annRoot/keys")
-    assert(annLoc.count() == 15L && annLoc.filter(!col("live")).count() == 5L,
-      "older ann tombstones pruned, newer retained")
-    AnnIndexView.updateBatch(ann(Seq(("I", 7L, 2800L))), annRoot, numPlanes = 4, keyBuckets = 4)
-    assert(AnnIndexView.readIndex(spark, annRoot).filter(col("vec_id") === 7L).count() == 0L,
-      "a retained ann tombstone must still reject an older re-insert")
+    val bootstrap = (0L until 20L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     val queries = Seq((10L, vec(10L))).toDF("query_id", "embedding")
-    val nbrs = AnnIndexView.similarTo(spark, annRoot, queries, k = 20, numPlanes = 4)
-      .collect().map(_.getLong(1)).toSet
-    assert(nbrs.nonEmpty && nbrs.forall(_ >= 10L), s"deleted keys must never probe back: $nbrs")
+    Seq[(LocatorStore, String => Unit, (DataFrame, String) => Unit, String => DataFrame, String => DataFrame)](
+      (AnnIndexView, _ => (),
+        AnnIndexView.updateBatch(_, _, numPlanes = 4, keyBuckets = 4),
+        AnnIndexView.readIndex(spark, _),
+        AnnIndexView.similarTo(spark, _, queries, k = 20, numPlanes = 4)),
+      (IvfIndexView, IvfIndexView.create(spark, _, bootstrap, k = 4, iters = 1),
+        IvfIndexView.updateBatch(_, _, keyBuckets = 4),
+        IvfIndexView.readIndex(spark, _),
+        IvfIndexView.similarTo(spark, _, queries, k = 20, nprobe = 4)),
+      (PqIndexView, PqIndexView.create(spark, _, bootstrap, m = 2, k = 4, iters = 1),
+        PqIndexView.updateBatch(_, _, m = 2, keyBuckets = 4),
+        PqIndexView.readIndex(spark, _),
+        PqIndexView.similarTo(spark, _, queries, k = 20, m = 2))
+    ).foreach { case (store, create, fold, read, probe) =>
+      val kind = store.kind
+      val root = tmp(s"gc$kind")
+      create(root)
+      fold(feed((0L until 20L).map(i => ("I", i, 1000L))), root)
+      fold(feed((0L until 5L).map(i => ("D", i, 2000L))), root)
+      fold(feed((5L until 10L).map(i => ("D", i, 3000L))), root)
+      store.pruneTombstones(spark, root, olderThanUs = 2500L)
+      val loc = spark.read.parquet(s"$root/keys")
+      assert(loc.count() == 15L && loc.filter(!col("live")).count() == 5L,
+        s"older $kind tombstones pruned, newer retained")
+      fold(feed(Seq(("I", 7L, 2800L))), root)
+      assert(read(root).filter(col("vec_id") === 7L).count() == 0L,
+        s"a retained $kind tombstone must still reject an older re-insert")
+      val nbrs = probe(root).collect().map(_.getLong(1)).toSet
+      assert(nbrs.nonEmpty && nbrs.forall(_ >= 10L), s"$kind: deleted keys must never probe back: $nbrs")
+    }
   }
 }

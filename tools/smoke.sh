@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Pre-commit smoke gate (~100 s): one representative spec per planner
+# Pre-commit smoke gate (~6 min on 4 cores): one representative spec per planner
 # dataflow class — flat agg, keyed min/max, value-equi join, ranked,
 # ASOF, session, ROWS frames, session-DISTINCT, approx HLL, key-equi
 # residual join — plus restart continuity, snapshot bootstrap, and the
@@ -9,6 +9,10 @@
 # Every view over a view tails its upstream sink through FeedSource, so
 # its contract spec (idle cost, marker isolation, exactly-once by batch
 # id) and the file-source-checkpoint migration case (#234ag) run as well.
+# The live-index tier shares one LocatorStore discipline, so one pass
+# over its shared verbs covers all five families: batch erasure with the
+# untouched-leaf check (#367), the half-finished-retrain refusal (#367c),
+# tombstone GC and the compaction census.
 # The full 300-test fleet (sbt test, ~11 min serial)
 # remains the round gate; this is the fast inner loop.
 set -euo pipefail
@@ -20,4 +24,7 @@ exec sbt \
   'testOnly graft.streaming.FeedSourceSpec' \
   'testOnly graft.streaming.ViewCatalogSpec -- -z "234af " -z "234ag "' \
   'testOnly graft.streaming.PlannerBootstrapSpec -- -z "221a "' \
-  'testOnly graft.streaming.DebeziumSpec -- -z "222b "'
+  'testOnly graft.streaming.DebeziumSpec -- -z "222b "' \
+  'testOnly graft.streaming.KeyPurgeSpec -- -z "367 " -z "367c "' \
+  'testOnly graft.streaming.LiveIndexGcSpec' \
+  'testOnly graft.streaming.LiveIndexCompactionSpec'
