@@ -2,7 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import scala.reflect.runtime.universe.TypeTag
+
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, KeyValueGroupedDataset, SparkSession}
 import org.apache.spark.sql.catalyst.analysis.{MultiAlias, UnresolvedAttribute, UnresolvedFunction, UnresolvedRelation, UnresolvedStar}
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical._
@@ -1882,22 +1884,6 @@ object IncrementalPlanner {
     case other => ScalarSlot(compileExpr(other))
   }
 
-  /** Every group key a row belongs to: the cartesian of the slots' part
-    * values — only a window slot can yield ≠1 part, so this is 1 key
-    * for scalar groupings, dur/slide keys under a sliding window, and
-    * NO keys (a dead contribution) when the event time is NULL.
-    */
-  private def groupKeysOf(slots: Seq[GroupSlot], env: Env): Seq[String] =
-    slots
-      .map {
-        case ScalarSlot(f)  => Seq(f(env).map(String.valueOf(_)).getOrElse(NullMark))
-        case WindowSlot(w)  => windowStartsOf(w, env)
-      }
-      .foldLeft(Seq(Vector.empty[String])) { (acc, parts) =>
-        for (a <- acc; p <- parts) yield a :+ p
-      }
-      .map(_.mkString(Sep))
-
   // ------------------------------------------------------------------
   // Aggregate view compilation
   // ------------------------------------------------------------------
@@ -2052,9 +2038,9 @@ object IncrementalPlanner {
   private val DdqFns = Set("approx_percentile", "percentile_approx")
 
   /** Compile one aggregate-function select item to its [[OutCol]],
-    * registering value slots via `addSlot` — shared by the flat
-    * (signed-delta / keyed) and session-window paths, which differ only
-    * in HOW the slots fold downstream, not in what a select item means.
+    * registering value slots via `addSlot` — shared by all five
+    * aggregate paths (through [[compileGrouped]]), which differ only in
+    * HOW the slots fold downstream, not in what a select item means.
     * `nullSumAsNaN`: re-aggregating paths (session) mark a NULL sum
     * operand with NaN — filtered per session, so an all-NULL session
     * yields SQL NULL, not 0 — where the signed-delta fold must encode
@@ -2180,8 +2166,7 @@ object IncrementalPlanner {
     * signed-delta fold, raw for the keyed and session folds).
     * [[SessionOut]] expands to two columns in the session path only.
     */
-  private def outColExpr(oc: OutCol, slotCol: Int => org.apache.spark.sql.Column,
-      groupParts: org.apache.spark.sql.Column): org.apache.spark.sql.Column = oc match {
+  private def outColExpr(oc: OutCol, slotCol: Int => Column, groupParts: Column): Column = oc match {
     case GroupOut(idx, name) =>
       val p = element_at(groupParts, idx + 1)
       // NullMark = the value was SQL NULL; RollMark = the column is
@@ -2196,8 +2181,8 @@ object IncrementalPlanner {
     case AvgOut(sumSlot, cntSlot, name) =>
       (slotCol(sumSlot) / when(slotCol(cntSlot) =!= 0.0, slotCol(cntSlot))).as(name)
     // NaN marks "no non-null value in the group" → SQL NULL
-    case MinOut(slot, name) => when(isnan(slotCol(slot)), lit(null)).otherwise(slotCol(slot)).as(name)
-    case MaxOut(slot, name) => when(isnan(slotCol(slot)), lit(null)).otherwise(slotCol(slot)).as(name)
+    case MinOut(slot, name) => nullIfNaN(slotCol(slot)).as(name)
+    case MaxOut(slot, name) => nullIfNaN(slotCol(slot)).as(name)
     // all rows NULL-predicate (both counts 0) → SQL NULL; the counts
     // themselves survive micro-unit descaling exactly (integers)
     case BoolOut(t, f, name, isAnd) =>
@@ -2217,7 +2202,7 @@ object IncrementalPlanner {
       val n = slotCol(cnt)
       // centered sums from the raw moments; tiny negative residue from
       // micro-unit quantization clamps to 0 (the VarOut discipline)
-      def pos(c: org.apache.spark.sql.Column) = when(c < 0.0, lit(0.0)).otherwise(c)
+      def pos(c: Column) = when(c < 0.0, lit(0.0)).otherwise(c)
       val sxyC = slotCol(sxy) - slotCol(sx) * slotCol(sy) / when(n > 0.0, n)
       val sxxC = pos(slotCol(sx2) - slotCol(sx) * slotCol(sx) / when(n > 0.0, n))
       val syyC = pos(slotCol(sy2) - slotCol(sy) * slotCol(sy) / when(n > 0.0, n))
@@ -2240,7 +2225,7 @@ object IncrementalPlanner {
     case MomOut(cnt, s, s2, s3, s4, name, kurt) =>
       val n  = slotCol(cnt)
       val mu = slotCol(s) / when(n > 0.0, n)
-      def pos(c: org.apache.spark.sql.Column) = when(c < 0.0, lit(0.0)).otherwise(c)
+      def pos(c: Column) = when(c < 0.0, lit(0.0)).otherwise(c)
       // central moments from the raw power sums (S1 = nμ):
       // m2 = S2 − nμ²; m3 = S3 − 3μS2 + 2nμ³; m4 = S4 − 4μS3 + 6μ²S2 − 3nμ⁴
       val m2 = pos(slotCol(s2) - n * mu * mu)
@@ -2654,117 +2639,160 @@ object IncrementalPlanner {
       case _ => (ges, Seq(ges.indices))
     }
 
-  private def compileAggregateFlat(spark: SparkSession, agg: Aggregate,
-      feeds: Map[String, Dataset[Change]],
-      ttl: Option[(String, Long)] = None,
-      having: Option[Expression] = None,
-      keepMeta: Boolean = false): PlannedView = {
-    val src       = compileSource(spark, agg.child, feeds)
-    val preds     = src.filters.map(compileExpr)
+  // ------------------------------------------------------------------
+  // The grouped-aggregate skeleton. All five aggregate paths — flat
+  // (signed-delta, or keyed when a min/max is present), holistic, session,
+  // approx (HLL) and DDSketch — run one pipeline: the source and its WHERE,
+  // grouping-set expansion with group slots and the window refusals,
+  // select-item parsing, the group-key builder, the TTL-aware stage-1
+  // keying, and the output tail (`_live_rows`, keepMeta, HAVING). A path
+  // supplies only its own parts ([[AggPath]]). The extractor closures
+  // capture plain values only.
+  // ------------------------------------------------------------------
+
+  /** The value vectors a view's select items register into: numeric
+    * `slots`, string `svals`, and `tail` operands that ride AFTER the
+    * slots in every contribution (the DDSketch percentile operands; NaN =
+    * SQL NULL).
+    */
+  private final class AggRegs {
+    val slots, svals, tail = scala.collection.mutable.ArrayBuffer.empty[Eval]
+    def addSlot(f: Eval): Int = { slots += f; slots.size - 1 }
+    def addSval(f: Eval): Int = { svals += f; svals.size - 1 }
+    def addTail(f: Eval): Int = { tail += f; tail.size - 1 }
+  }
+
+  /** What the skeleton hands a path's dataflow: the parsed output
+    * columns, the register counts, the per-slot fold op (sum/min/max),
+    * whether the slots fold as scaled signed deltas, the contribution
+    * extractor, and the (watermarked) changes keyed by change key.
+    */
+  private final case class AggParts(outCols: Seq[OutCol], nSlots: Int, nSvals: Int, nTail: Int,
+      slotOps: Seq[String], scaled: Boolean,
+      extract: Change => Option[(Seq[String], Seq[Double], Seq[String])],
+      keyed: KeyValueGroupedDataset[Long, Change], timeout: GroupStateTimeout,
+      ttl: Option[(String, Long)])
+
+  /** One aggregate path's own parts:
+    *  - `flow`: its two stages (see [[twoStage]]);
+    *  - `item`: its own select items, tried before [[compileAggFnOut]];
+    *  - `render`: its own output columns; `extra()` reads the next result
+    *    the stage-2 fold appends to `sums` after the slots;
+    *  - `nullSumAsNaN`: see [[compileAggFnOut]]; such NaN sums render NULL;
+    *  - `deltas`: count/sum/avg fold as signed micro-unit deltas unless a
+    *    min/max slot is present (then the slots stay raw);
+    *  - `evTs`: session_window's event time, prefixed to every
+    *    contribution (NULL = dead); the grouping must then be scalar;
+    *  - `groupCol`: the keepMeta change identity.
+    */
+  private final case class AggPath(
+      flow: AggParts => DataFrame,
+      item: AggRegs => PartialFunction[(UnresolvedFunction, String), OutCol] =
+        (_: AggRegs) => PartialFunction.empty,
+      render: (AggParts, () => Column) => PartialFunction[OutCol, Seq[Column]] =
+        (_: AggParts, _: () => Column) => PartialFunction.empty,
+      nullSumAsNaN: Boolean = false,
+      deltas: Boolean = false,
+      evTs: Option[Eval] = None,
+      groupCol: Column = col("group"))
+
+  private def nullIfNaN(c: Column): Column = when(isnan(c), lit(null)).otherwise(c)
+
+  /** The one group-key builder: per base expr its part value(s), then
+    * one key per LEVEL with [[RollMark]] in the level's inactive
+    * positions — the cartesian of the parts, so a sliding window yields
+    * dur/slide keys and a NULL window time none (a dead contribution).
+    * One level with every position active is the plain GROUP BY.
+    */
+  private def groupKeysOf(slots: Seq[GroupSlot], levels: Seq[Seq[Int]], env: Env): Seq[String] = {
+    val parts: Seq[Seq[String]] = slots.map {
+      case ScalarSlot(f) => Seq(f(env).map(String.valueOf(_)).getOrElse(NullMark))
+      case WindowSlot(w) => windowStartsOf(w, env)
+    }
+    levels.flatMap { active =>
+      parts.zipWithIndex
+        .map { case (ps, i) => if (active.contains(i)) ps else Seq(RollMark) }
+        .foldLeft(Seq(Vector.empty[String])) { (acc, p) =>
+          for (a <- acc; x <- p) yield a :+ x
+        }
+        .map(_.mkString(Sep))
+    }
+  }
+
+  /** The skeleton: compile `agg` through `path` (see the section note). */
+  private def compileGrouped(spark: SparkSession, agg: Aggregate,
+      feeds: Map[String, Dataset[Change]], ttl: Option[(String, Long)],
+      having: Option[Expression], keepMeta: Boolean, path: AggPath): PlannedView = {
+    val src   = compileSource(spark, agg.child, feeds)
+    val preds = src.filters.map(compileExpr)
     // ROLLUP/CUBE/GROUPING SETS: one BaseGroupingSets grouping expands
     // to its levels — each row contributes to EVERY level's group (the
-    // plural-groups contract the sliding window already uses), with
-    // RollMark in a level's inactive key positions. A plain GROUP BY is
-    // the one-level special case of the same machinery.
+    // plural-groups contract the sliding window already uses)
     val (baseExprs, levels) = expandGroupingSets(agg.groupingExpressions)
     val groupSlots = baseExprs.map(compileGroupSlot)
+    require(path.evTs.isEmpty || groupSlots.forall(_.isInstanceOf[ScalarSlot]),
+      "session_window does not combine with window(...) groupings")
     require(groupSlots.count(_.isInstanceOf[WindowSlot]) <= 1,
       "at most one window(...) grouping per view (Spark's own windowed-aggregation rule)")
     require(levels.length == 1 || groupSlots.forall(_.isInstanceOf[ScalarSlot]),
       "window(...) groupings do not combine with ROLLUP/CUBE/GROUPING SETS")
-    val groupSql  = baseExprs.map(_.sql)
+    val groupSql = baseExprs.map(_.sql)
+    def groupIdx(fn: String, e: Expression): Int = groupSql.indexOf(e.sql) match {
+      case -1 => throw unsupported(s"$fn(${e.sql}) (argument must be a grouping column)")
+      case i  => i
+    }
 
-    val slotFns   = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSlot(f: Eval): Int = { slotFns += f; slotFns.size - 1 }
-
+    val regs  = new AggRegs
+    val items = path.item(regs)
     val outCols: Seq[OutCol] = agg.aggregateExpressions.zipWithIndex.map { case (ne, i) =>
-      val core = coreOf(ne)
       val name = outName(ne, s"col$i")
-      core match {
-        case e if groupSql.indexOf(e.sql) >= 0 => GroupOut(groupSql.indexOf(e.sql), name)
+      coreOf(ne) match {
+        case e if groupSql.contains(e.sql) => GroupOut(groupSql.indexOf(e.sql), name)
         case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping") =>
           f.arguments match {
-            case Seq(e) if groupSql.indexOf(e.sql) >= 0 => GroupingOut(Seq(groupSql.indexOf(e.sql)), name)
-            case other => throw unsupported(
-              s"grouping(${other.map(_.sql).mkString(",")}) (argument must be a grouping column)")
+            case Seq(e) => GroupingOut(Seq(groupIdx("grouping", e)), name)
+            case other  => throw unsupported(
+              s"grouping(${other.map(_.sql).mkString(",")}) (one grouping column)")
           }
         case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping_id") =>
-          val idxs =
-            if (f.arguments.isEmpty) groupSql.indices
-            else f.arguments.map { e =>
-              val i = groupSql.indexOf(e.sql)
-              if (i < 0) throw unsupported(s"grouping_id argument ${e.sql} is not a grouping column")
-              i
-            }
-          GroupingOut(idxs, name)
+          GroupingOut(if (f.arguments.isEmpty) groupSql.indices
+            else f.arguments.map(groupIdx("grouping_id", _)), name)
         case f: UnresolvedFunction =>
-          compileAggFnOut(f.nameParts.last.toLowerCase, f.arguments, name, addSlot)
-        case other => throw unsupported(s"select item ${other.sql} (neither grouping expr nor count/sum/avg/min/max)")
+          items.lift((f, name)).getOrElse(compileAggFnOut(f.nameParts.last.toLowerCase,
+            f.arguments, name, regs.addSlot, path.nullSumAsNaN))
+        case other => throw unsupported(
+          s"select item ${other.sql} (neither grouping expr nor a supported aggregate)")
       }
     }
 
-    val slots = slotFns.toIndexedSeq
-    // serializable extractor: Change → Option[(group keys, slot values)];
-    // None = the row does not contribute (filtered out / delete); an
-    // empty key list (NULL window time) is likewise a dead contribution
+    val numeric = (regs.slots ++ regs.tail).toIndexedSeq
+    val strings = regs.svals.toIndexedSeq
+    val evTs    = path.evTs
+    // serializable extractor: Change → Option[(group keys, slot values,
+    // string values)]; None = the row does not contribute (filtered out,
+    // NULL session time); an empty key list (NULL window time) is
+    // likewise a dead contribution. Slot closures coerce their own
+    // operands (asNum inside addSlot, which rejects NaN/Inf parses); do
+    // NOT re-coerce here — a min/max slot's NaN is the deliberate "SQL
+    // NULL, excluded" marker, and asNum would flatten it into a real 0.0
     val extract: Change => Option[(Seq[String], Seq[Double], Seq[String])] = { c =>
       val env = envOf(c)
-      val pass = preds.forall(p => p(env).contains(true))
-      // slot closures coerce their own operands (asNum inside addSlot,
-      // which rejects NaN/Inf parses); do NOT re-coerce here — a min/max
-      // slot's NaN is the deliberate "SQL NULL, excluded" marker, and
-      // asNum would flatten it into a real 0.0 contribution
-      if (!pass) None
+      if (!preds.forall(p => p(env).contains(true))) None
       else {
-        // per base expr, its part value(s); then one key per LEVEL with
-        // RollMark in the level's inactive positions (one level + all
-        // active = the plain GROUP BY case, byte-identical keys)
-        val parts: Seq[Seq[String]] = groupSlots.map {
-          case ScalarSlot(f) => Seq(f(env).map(String.valueOf(_)).getOrElse(NullMark))
-          case WindowSlot(w) => windowStartsOf(w, env)
+        val ev = evTs.map(_(env).flatMap(tsMicrosOf))
+        if (ev.contains(None)) None
+        else {
+          val vals = numeric.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 })
+          Some((groupKeysOf(groupSlots, levels, env),
+            ev.flatten.fold(vals)(t => t.toDouble +: vals),
+            strings.map(s => s(env).map(String.valueOf(_)).getOrElse(NullMark))))
         }
-        val keys = levels.flatMap { active =>
-          parts.zipWithIndex
-            .map { case (ps, i) => if (active.contains(i)) ps else Seq(RollMark) }
-            .foldLeft(Seq(Vector.empty[String])) { (acc, p) =>
-              for (a <- acc; x <- p) yield a :+ x
-            }
-            .map(_.mkString(Sep))
-        }
-        Some((keys, slots.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 }), Nil))
       }
     }
-
-    implicit val contribEnc = Encoders.product[PlannedContrib]
-    implicit val deltaEnc   = Encoders.product[PlannedDelta]
-    implicit val keyChEnc   = Encoders.product[PlannedKeyChange]
-    implicit val groupEnc   = Encoders.product[PlannedGroupState]
-    implicit val keyedEnc   = Encoders.product[PlannedGroupContribs]
-    implicit val rowEnc     = Encoders.product[PlannedGroupRow]
-    implicit val longEnc    = Encoders.scalaLong
-    implicit val stringEnc  = Encoders.STRING
-    // stage 2 is a keyed FOLD, not a streaming aggregation: Spark allows
-    // chained flatMapGroupsWithState stages only when every stage (and
-    // the sink) is Append — the liveExtremes precedent — and Append is
-    // also the right semantic: each emission is one change of the view's
-    // changefeed (touched groups only).
-    //
-    // Two stage-2 strategies, picked by what the SELECT list needs:
-    //  - count/sum/avg only → signed-delta running totals (O(1) state
-    //    per group);
-    //  - any min/max → per-group keyed contributions + re-aggregation
-    //    on touch (subtracting an extremum is meaningless; deleting the
-    //    group's max must re-emit the next best — the liveExtremes
-    //    strategy, O(live keys in touched groups) per batch).
-    val needsKeyed = outCols.exists { case _: MinOut | _: MaxOut => true; case _ => false }
-    val slotOps: Seq[String] = {
-      val ops = Array.fill(slots.length)("sum")
-      outCols.foreach {
-        case MinOut(s, _) => ops(s) = "min"
-        case MaxOut(s, _) => ops(s) = "max"
-        case _            => ()
-      }
-      ops.toIndexedSeq
+    val slotOps: Seq[String] = outCols.foldLeft(Vector.fill(regs.slots.length)("sum")) {
+      case (ops, MinOut(s, _)) => ops.updated(s, "min")
+      case (ops, MaxOut(s, _)) => ops.updated(s, "max")
+      case (ops, _)            => ops
     }
     // with a TTL the input carries a watermark and stage 1 runs under
     // EventTimeTimeout: DEAD contributions (deletes, filtered-out rows)
@@ -2778,36 +2806,31 @@ object IncrementalPlanner {
       case Some((delay, _)) => src.changes.withWatermark("ts", delay)
       case None             => src.changes
     }
-    val keyStage = inChanges.groupByKey(_.key)
-    val timeoutConf = if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
-    val groupRows =
-      (if (needsKeyed)
-        keyStage
-          .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(expiring(ttl, keyFold(extract)))
-          .groupByKey(_.group)
-          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(groupFoldKeyed(slotOps))
-      else
-        keyStage
-          .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(expiring(ttl, aggFold(extract)))
-          .groupByKey(_.group)
-          .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(groupFold))
-        .toDF()
+    val timeout =
+      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
+    val scaled = path.deltas && slotOps.forall(_ == "sum")
+    val parts  = AggParts(outCols, regs.slots.length, strings.length, regs.tail.length, slotOps,
+      scaled, extract, inChanges.groupByKey(_.key)(Encoders.scalaLong), timeout, ttl)
+    val groupRows = path.flow(parts)
 
-    val parts = split(col("group"), Sep)
-    // the signed-delta path folds micro-unit integers ([[SlotScale]] in
-    // aggFold) — descale on emission; the keyed path re-aggregates raw
-    // values and emits them unscaled
-    def slotCol(slot: Int) =
-      if (needsKeyed) element_at(col("sums"), slot + 1)
-      else element_at(col("sums"), slot + 1) / lit(SlotScale)
-    val outExprs = outCols.map(outColExpr(_, slotCol, parts))
+    val groupParts = split(col("group"), Sep)
+    def sumsAt(i: Int) = element_at(col("sums"), i + 1)
+    // the signed-delta folds carry micro-unit integers ([[SlotScale]] in
+    // aggFold/ddqFold) — descale on emission; the other folds emit raw
+    def slotCol(i: Int) = if (scaled) sumsAt(i) / lit(SlotScale) else sumsAt(i)
+    var extras = regs.slots.length - 1
+    val own = path.render(parts, () => { extras += 1; sumsAt(extras) })
+    val outExprs = outCols.flatMap(oc => own.applyOrElse(oc, (_: OutCol) => Seq(oc match {
+      case SumOut(slot, name) if path.nullSumAsNaN => nullIfNaN(slotCol(slot)).as(name)
+      case _ => outColExpr(oc, slotCol, groupParts)
+    })))
     // _live_rows rides along as the view's tombstone signal: a group
     // whose live-row count reaches 0 re-emits once with _live_rows = 0,
     // which IS the "group left the view" change of the view's changefeed.
-    // `keepMeta` additionally carries the group string + commit position
+    // `keepMeta` additionally carries the group identity + commit position
     // for the changefeed conversion (materializeAggChanges).
     val metaCols =
-      if (keepMeta) Seq(col("group").as("_group"), col("tsUs").as("_ts_us"), col("seq").as("_seq"))
+      if (keepMeta) Seq(path.groupCol.as("_group"), col("tsUs").as("_ts_us"), col("seq").as("_seq"))
       else Nil
     val selected = groupRows.select(outExprs ++ (col("live_rows").as("_live_rows") +: metaCols): _*)
     // HAVING: evaluated over the emitted output columns — a group that
@@ -2824,6 +2847,41 @@ object IncrementalPlanner {
     }
     PlannedView(withHaving, OutputMode.Append())
   }
+
+  /** The two keyed stages of every aggregate path: stage 1 folds each
+    * change key's contribution (tombstone-TTL aware via [[expiring]]),
+    * stage 2 folds per group. Stage 2 is a keyed FOLD, not a streaming
+    * aggregation: Spark allows chained flatMapGroupsWithState stages only
+    * when every stage (and the sink) is Append — the liveExtremes
+    * precedent — and Append is also the right semantic: each emission is
+    * one change of the view's changefeed (touched groups only).
+    */
+  private def twoStage[M <: Product : TypeTag, S <: Product : TypeTag, R <: Product : TypeTag](
+      p: AggParts, stage1: (Long, Iterator[Change], GroupState[PlannedContrib]) => Iterator[M])(
+      groupOf: M => String, stage2: (String, Iterator[M], GroupState[S]) => Iterator[R]): DataFrame =
+    p.keyed
+      .flatMapGroupsWithState(OutputMode.Append(), p.timeout)(expiring(p.ttl, stage1))(
+        Encoders.product[PlannedContrib], Encoders.product[M])
+      .groupByKey(groupOf)(Encoders.STRING)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(stage2)(
+        Encoders.product[S], Encoders.product[R])
+      .toDF()
+
+  /** The flat path. Two stage-2 strategies, picked by the SELECT list:
+    * count/sum/avg only → signed-delta running totals (O(1) state per
+    * group); any min/max → per-group keyed contributions re-aggregated
+    * on touch (subtracting an extremum is meaningless; deleting the
+    * group's max must re-emit the next best — the liveExtremes
+    * strategy, O(live keys in touched groups) per batch).
+    */
+  private def compileAggregateFlat(spark: SparkSession, agg: Aggregate,
+      feeds: Map[String, Dataset[Change]],
+      ttl: Option[(String, Long)] = None,
+      having: Option[Expression] = None,
+      keepMeta: Boolean = false): PlannedView =
+    compileGrouped(spark, agg, feeds, ttl, having, keepMeta, AggPath(deltas = true, flow = p =>
+      if (p.scaled) twoStage(p, aggFold(p.extract))(_.group, groupFold)
+      else twoStage(p, keyFold(p.extract))(_.group, groupFoldKeyed(p.slotOps))))
 
   /** HOLISTIC aggregate views: exact `percentile_cont/percentile_disc
     * (f) WITHIN GROUP (ORDER BY x [DESC])`, `median(x)`, `percentile(x,
@@ -2862,162 +2920,49 @@ object IncrementalPlanner {
       ttl: Option[(String, Long)],
       having: Option[Expression],
       keepMeta: Boolean): PlannedView = {
-    val src       = compileSource(spark, agg.child, feeds)
-    val preds     = src.filters.map(compileExpr)
-    val (baseExprs, levels) = expandGroupingSets(agg.groupingExpressions)
-    val groupSlots = baseExprs.map(compileGroupSlot)
-    require(groupSlots.count(_.isInstanceOf[WindowSlot]) <= 1,
-      "at most one window(...) grouping per view (Spark's own windowed-aggregation rule)")
-    require(levels.length == 1 || groupSlots.forall(_.isInstanceOf[ScalarSlot]),
-      "window(...) groupings do not combine with ROLLUP/CUBE/GROUPING SETS")
-    val groupSql  = baseExprs.map(_.sql)
-
-    val slotFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSlot(f: Eval): Int = { slotFns += f; slotFns.size - 1 }
-    val sFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSval(f: Eval): Int = { sFns += f; sFns.size - 1 }
-
-    val outCols: Seq[OutCol] = agg.aggregateExpressions.zipWithIndex.map { case (ne, i) =>
-      val core = coreOf(ne)
-      val name = outName(ne, s"col$i")
-      core match {
-        case e if groupSql.indexOf(e.sql) >= 0 => GroupOut(groupSql.indexOf(e.sql), name)
-        case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping") =>
-          f.arguments match {
-            case Seq(e) if groupSql.indexOf(e.sql) >= 0 => GroupingOut(Seq(groupSql.indexOf(e.sql)), name)
-            case other => throw unsupported(
-              s"grouping(${other.map(_.sql).mkString(",")}) (argument must be a grouping column)")
-          }
-        case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping_id") =>
-          val idxs =
-            if (f.arguments.isEmpty) groupSql.indices
-            else f.arguments.map { e =>
-              val i = groupSql.indexOf(e.sql)
-              if (i < 0) throw unsupported(s"grouping_id argument ${e.sql} is not a grouping column")
-              i
-            }
-          GroupingOut(idxs, name)
-        case f: UnresolvedFunction if HolisticFns(f.nameParts.last.toLowerCase) =>
-          compileHolisticFnOut(f, name, addSlot, addSval)
-        case f: UnresolvedFunction =>
-          compileAggFnOut(f.nameParts.last.toLowerCase, f.arguments, name, addSlot,
-            nullSumAsNaN = true)
-        case other => throw unsupported(
-          s"select item ${other.sql} (neither grouping expr nor a supported aggregate)")
-      }
-    }
-
-    val slots  = slotFns.toIndexedSeq
-    val sSlots = sFns.toIndexedSeq
-    val extract: Change => Option[(Seq[String], Seq[Double], Seq[String])] = { c =>
-      val env  = envOf(c)
-      val pass = preds.forall(p => p(env).contains(true))
-      if (!pass) None
-      else {
-        val parts: Seq[Seq[String]] = groupSlots.map {
-          case ScalarSlot(f) => Seq(f(env).map(String.valueOf(_)).getOrElse(NullMark))
-          case WindowSlot(w) => windowStartsOf(w, env)
-        }
-        val keys = levels.flatMap { active =>
-          parts.zipWithIndex
-            .map { case (ps, i) => if (active.contains(i)) ps else Seq(RollMark) }
-            .foldLeft(Seq(Vector.empty[String])) { (acc, p) =>
-              for (a <- acc; x <- p) yield a :+ x
-            }
-            .map(_.mkString(Sep))
-        }
-        Some((keys,
-          slots.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 }),
-          sSlots.map(s => s(env).map(String.valueOf(_)).getOrElse(NullMark))))
-      }
-    }
-
-    val slotOps: Seq[String] = {
-      val ops = Array.fill(slots.length)("sum")
-      outCols.foreach {
-        case MinOut(s, _) => ops(s) = "min"
-        case MaxOut(s, _) => ops(s) = "max"
-        case _            => ()
-      }
-      ops.toIndexedSeq
-    }
-    val pSpecs: Seq[(Int, Double, Boolean, Boolean)] =
-      outCols.collect { case PercOut(s, f, d, de, _) => (s, f, d, de) }
-    val lSpecs: Seq[(Int, Int, Boolean, String)] =
-      outCols.collect { case ListAggOut(v, o, d, sep, _) => (v, o, d, sep) }
-    val aSpecs: Seq[(Int, Int, Boolean)] =
-      outCols.collect { case ArgExtOut(v, o, mx, _) => (v, o, mx) }
-    val mSpecs: Seq[Int] =
-      outCols.collect { case ModeOut(v, _) => v }
-    val bSpecs: Seq[(Int, String)] =
-      outCols.collect { case BitOut(v, op, _) => (v, op) }
     val maxRows = spark.conf.get("spark.graft.holistic.maxRowsPerGroup", "1000000").toInt
+    compileGrouped(spark, agg, feeds, ttl, having, keepMeta, AggPath(nullSumAsNaN = true,
+      item = r => {
+        case (f, name) if HolisticFns(f.nameParts.last.toLowerCase) =>
+          compileHolisticFnOut(f, name, r.addSlot, r.addSval)
+      },
+      flow = p => twoStage(p, keyFold(p.extract))(_.group, holisticFold(p.slotOps,
+        p.outCols.collect { case PercOut(s, f, d, de, _) => (s, f, d, de) },
+        p.outCols.collect { case ListAggOut(v, o, d, sep, _) => (v, o, d, sep) },
+        p.outCols.collect { case ArgExtOut(v, o, mx, _) => (v, o, mx) },
+        p.outCols.collect { case ModeOut(v, _) => v },
+        p.outCols.collect { case BitOut(v, op, _) => (v, op) }, maxRows)),
+      render = (p, extra) => {
+        // string results ride `strs` in holisticFold's order: listaggs,
+        // then min_by/max_by, then modes, then bit folds
+        def rank(oc: OutCol): Int = oc match {
+          case _: ListAggOut => 0
+          case _: ArgExtOut  => 1
+          case _: ModeOut    => 2
+          case _: BitOut     => 3
+          case _             => -1
+        }
+        val strOuts = p.outCols.filter(rank(_) >= 0).sortBy(rank)
+        val own: PartialFunction[OutCol, Seq[Column]] = {
+          case PercOut(_, _, _, _, name) => Seq(nullIfNaN(extra()).as(name))
+          case oc if rank(oc) >= 0 =>
+            val c = element_at(col("strs"), strOuts.indexOf(oc) + 1)
+            // bit folds ride as decimal strings, emitted as LONG
+            Seq(when(c === NullMark, lit(null))
+              .otherwise(if (rank(oc) == 3) c.cast("long") else c).as(oc.name))
+        }
+        own
+      }))
+  }
 
-    implicit val contribEnc = Encoders.product[PlannedContrib]
-    implicit val keyChEnc   = Encoders.product[PlannedKeyChange]
-    implicit val stateEnc   = Encoders.product[HolisticContribs]
-    implicit val rowEnc     = Encoders.product[HolisticGroupRow]
-    implicit val longEnc    = Encoders.scalaLong
-    implicit val stringEnc  = Encoders.STRING
-    val inChanges = ttl match {
-      case Some((delay, _)) => src.changes.withWatermark("ts", delay)
-      case None             => src.changes
-    }
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
-    val groupRows = inChanges
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(expiring(ttl, keyFold(extract)))
-      .groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        holisticFold(slotOps, pSpecs, lSpecs, aSpecs, mSpecs, bSpecs, maxRows))
-      .toDF()
-
-    val parts = split(col("group"), Sep)
-    def slotCol(i: Int) = element_at(col("sums"), i + 1)
-    var pSeen = -1
-    var lSeen = -1
-    var aSeen = -1
-    var mSeen = -1
-    var bSeen = -1
-    val outExprs = outCols.map {
-      case PercOut(_, _, _, _, name) =>
-        pSeen += 1
-        val c = element_at(col("sums"), slots.length + pSeen + 1)
-        when(isnan(c), lit(null)).otherwise(c).as(name)
-      case ListAggOut(_, _, _, _, name) =>
-        lSeen += 1
-        val c = element_at(col("strs"), lSeen + 1)
-        when(c === NullMark, lit(null)).otherwise(c).as(name)
-      case ArgExtOut(_, _, _, name) =>
-        aSeen += 1
-        val c = element_at(col("strs"), lSpecs.length + aSeen + 1)
-        when(c === NullMark, lit(null)).otherwise(c).as(name)
-      case ModeOut(_, name) =>
-        mSeen += 1
-        val c = element_at(col("strs"), lSpecs.length + aSpecs.length + mSeen + 1)
-        when(c === NullMark, lit(null)).otherwise(c).as(name)
-      case BitOut(_, _, name) =>
-        bSeen += 1
-        val c = element_at(col("strs"),
-          lSpecs.length + aSpecs.length + mSpecs.length + bSeen + 1)
-        when(c === NullMark, lit(null)).otherwise(c.cast("long")).as(name)
-      // NaN marks an all-NULL-operand group's sum (nullSumAsNaN) → SQL NULL
-      case SumOut(slot, name) =>
-        when(isnan(slotCol(slot)), lit(null)).otherwise(slotCol(slot)).as(name)
-      case oc => outColExpr(oc, slotCol, parts)
-    }
-    val metaCols =
-      if (keepMeta) Seq(col("group").as("_group"), col("tsUs").as("_ts_us"), col("seq").as("_seq"))
-      else Nil
-    val selected = groupRows.select(outExprs ++ (col("live_rows").as("_live_rows") +: metaCols): _*)
-    val withHaving = having match {
-      case Some(cond) =>
-        selected.withColumn("_live_rows",
-          when(coalesce(expr(cond.sql), lit(false)), col("_live_rows")).otherwise(lit(0L)))
-      case None => selected
-    }
-    PlannedView(withHaving, OutputMode.Append())
+  /** A percentile fraction: a numeric literal in [0, 1]. */
+  private def fracOf(e: Expression): Double = e match {
+    case l: Literal =>
+      val d = litValue(l.value).map(String.valueOf).flatMap(_.toDoubleOption)
+        .getOrElse(throw unsupported(s"percentile fraction ${e.sql} (numeric literal)"))
+      require(d >= 0.0 && d <= 1.0, s"percentile fraction $d out of [0, 1]")
+      d
+    case other => throw unsupported(s"percentile fraction ${other.sql} (literal only)")
   }
 
   /** Parse one holistic select item. Fractions must be literals in
@@ -3031,14 +2976,6 @@ object IncrementalPlanner {
     def numSlot(e: Expression): Int = {
       val ca = compileExpr(e)
       addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(Double.NaN)))
-    }
-    def fracOf(e: Expression): Double = e match {
-      case l: Literal =>
-        val d = litValue(l.value).map(String.valueOf).flatMap(_.toDoubleOption)
-          .getOrElse(throw unsupported(s"percentile fraction ${e.sql} (numeric literal)"))
-        require(d >= 0.0 && d <= 1.0, s"percentile fraction $d out of [0, 1]")
-        d
-      case other => throw unsupported(s"percentile fraction ${other.sql} (literal only)")
     }
     (fn, f.arguments, f.orderingWithinGroup) match {
       case ("median", Seq(e), Seq()) =>
@@ -3259,23 +3196,12 @@ object IncrementalPlanner {
       ttl: Option[(String, Long)],
       having: Option[Expression],
       keepMeta: Boolean = false): PlannedView = {
-    val src   = compileSource(spark, agg.child, feeds)
-    val preds = src.filters.map(compileExpr)
     val (sessionExprs, restExprs) = agg.groupingExpressions.partition {
       case f: UnresolvedFunction => f.nameParts.last.equalsIgnoreCase("session_window")
       case _                     => false
     }
     require(sessionExprs.length == 1,
       "exactly one session_window(...) grouping per view (Spark's own rule)")
-    // ROLLUP/CUBE/GROUPING SETS over the scalar keys compose (since r8):
-    // each LEVEL is its own session space — sessions are derived per
-    // (level, level-key) group, so the rolled-up level sessionizes the
-    // UNION of its sub-groups' rows (an adjacent pair from two cities
-    // can share a rolled-up session that neither city-level session
-    // has — the batch GROUP BY session_window, ROLLUP semantic).
-    // Honest cost: L levels hold L copies of the live rows, each on its
-    // level-group's shard (same maxRowsPerGroup guard per shard).
-    val (scalarExprs, levels) = expandGroupingSets(restExprs)
     val (tsF, gapUs) = sessionExprs.head match {
       case f: UnresolvedFunction => f.arguments match {
         case Seq(tsE, Literal(g, _)) =>
@@ -3286,153 +3212,47 @@ object IncrementalPlanner {
       case _ => throw new IllegalStateException("unreachable: partitioned on UnresolvedFunction")
     }
     require(gapUs > 0, "session_window gap must be positive")
-    val scalarSlots = scalarExprs.map(compileGroupSlot)
-    require(scalarSlots.forall(_.isInstanceOf[ScalarSlot]),
-      "session_window does not combine with window(...) groupings")
     val sessionSql = sessionExprs.head.sql
-    val scalarSql  = scalarExprs.map(_.sql)
-
-    val slotFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSlot(f: Eval): Int = { slotFns += f; slotFns.size - 1 }
-    val sFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSval(f: Eval): Int = { sFns += f; sFns.size - 1 }
-    val outCols: Seq[OutCol] = agg.aggregateExpressions.zipWithIndex.map { case (ne, i) =>
-      val core = coreOf(ne)
-      val name = outName(ne, s"col$i")
-      core match {
-        case e if e.sql == sessionSql              => SessionOut(name)
-        case e if scalarSql.indexOf(e.sql) >= 0    => GroupOut(scalarSql.indexOf(e.sql), name)
-        // DISTINCT aggregates: the member's value string rides stage 1;
-        // stage 2 aggregates the session's distinct multiset exactly
-        // (min/max(DISTINCT) were normalized to plain upstream)
-        case f: UnresolvedFunction if f.isDistinct =>
-          val fn = f.nameParts.last.toLowerCase
-          (fn, f.arguments) match {
-            case ("count" | "sum" | "avg", Seq(e)) =>
-              DistinctOut(fn, addSval(compileExpr(e)), name)
-            case _ => throw unsupported(
-              s"session DISTINCT aggregate ${f.sql} (count/sum/avg(DISTINCT <one expr>))")
-          }
-        case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping") =>
-          f.arguments match {
-            case Seq(e) if scalarSql.indexOf(e.sql) >= 0 =>
-              GroupingOut(Seq(scalarSql.indexOf(e.sql)), name)
-            case other => throw unsupported(
-              s"grouping(${other.map(_.sql).mkString(",")}) (argument must be a grouping column)")
-          }
-        case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping_id") =>
-          val idxs =
-            if (f.arguments.isEmpty) scalarSql.indices
-            else f.arguments.map { e =>
-              val i = scalarSql.indexOf(e.sql)
-              if (i < 0) throw unsupported(s"grouping_id argument ${e.sql} is not a grouping column")
-              i
-            }
-          GroupingOut(idxs, name)
-        case f: UnresolvedFunction =>
-          compileAggFnOut(f.nameParts.last.toLowerCase, f.arguments, name, addSlot,
-            nullSumAsNaN = true)
-        case other => throw unsupported(
-          s"select item ${other.sql} (neither grouping expr nor count/sum/avg/min/max)")
-      }
-    }
-    val slots  = slotFns.toIndexedSeq
-    val sSlots = sFns.toIndexedSeq
-    // Change → (one scalar group key, evUs-prefixed slot values, distinct
-    // arg values); a NULL or unparseable event time is a dead
-    // contribution (Spark's windowed aggregation drops null-timestamp
-    // rows the same way)
-    val extract: Change => Option[(Seq[String], Seq[Double], Seq[String])] = { c =>
-      val env  = envOf(c)
-      val pass = preds.forall(p => p(env).contains(true))
-      if (!pass) None
-      else tsF(env).flatMap(tsMicrosOf).map { ev =>
-        val parts = scalarSlots.map { case ScalarSlot(f) =>
-          f(env).map(String.valueOf(_)).getOrElse(NullMark)
-        case _ => throw new IllegalStateException("unreachable: scalar slots asserted above")
-        }
-        // one group key per LEVEL, RollMark in inactive positions (the
-        // flat grouping-sets encoding; plain GROUP BY = the one-level
-        // special case, byte-identical keys)
-        val keys = levels.map { active =>
-          parts.zipWithIndex
-            .map { case (x, i) => if (active.contains(i)) x else RollMark }
-            .mkString(Sep)
-        }
-        (keys,
-          ev.toDouble +: slots.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 }),
-          sSlots.map(s => s(env).map(String.valueOf(_)).getOrElse(NullMark)))
-      }
-    }
-    val slotOps: Seq[String] = {
-      val ops = Array.fill(slots.length)("sum")
-      outCols.foreach {
-        case MinOut(s, _) => ops(s) = "min"
-        case MaxOut(s, _) => ops(s) = "max"
-        case _            => ()
-      }
-      ops.toIndexedSeq
-    }
-    // distinct aggregations, in OUTPUT-COLUMN order: their results land
-    // in the sums vector after the value slots, one per dOps entry
-    val dOps: Seq[(String, Int)] = outCols.collect { case DistinctOut(op, sIdx, _) => (op, sIdx) }
     val maxRows = spark.conf.get("spark.graft.session.maxRowsPerGroup", "1000000").toInt
-
-    implicit val contribEnc = Encoders.product[PlannedContrib]
-    implicit val keyChEnc   = Encoders.product[PlannedKeyChange]
-    implicit val stateEnc   = Encoders.product[SessionGroupState]
-    implicit val rowEnc     = Encoders.product[SessionRow]
-    implicit val longEnc    = Encoders.scalaLong
-    implicit val stringEnc  = Encoders.STRING
-    val inChanges = ttl match {
-      case Some((delay, _)) => src.changes.withWatermark("ts", delay)
-      case None             => src.changes
-    }
-    val timeoutConf = if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
-    val sessionRows = inChanges
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(expiring(ttl, keyFold(extract)))
-      .groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        sessionFold(gapUs, slotOps, dOps, maxRows))
-      .toDF()
-
-    val parts = split(col("group"), Sep)
-    def slotCol(i: Int) = element_at(col("sums"), i + 1)
-    var dSeen = -1
-    val outExprs = outCols.flatMap {
-      case SessionOut(name) =>
-        Seq(col("startUs").as(s"${name}_start_us"), col("endUs").as(s"${name}_end_us"))
-      // NaN marks an all-NULL-operand session's sum (see compileAggFnOut) → SQL NULL
-      case SumOut(slot, name) =>
-        Seq(when(isnan(slotCol(slot)), lit(null)).otherwise(slotCol(slot)).as(name))
-      // distinct results ride after the value slots, in outCols order
-      case DistinctOut(op, _, name) =>
-        dSeen += 1
-        val c = slotCol(slots.length + dSeen)
-        Seq(op match {
-          case "count" => c.cast("long").as(name)
-          case _       => when(isnan(c), lit(null)).otherwise(c).as(name)
-        })
-      case oc => Seq(outColExpr(oc, slotCol, parts))
-    }
-    // keepMeta: the session's change identity is (level-key, start) —
-    // one combined `_group` string, so the generic viewChanges fold and
-    // everything downstream of it (named views, materializeAggChanges,
-    // materializeTopK) treats each session as a keyed row
-    val metaCols: Seq[org.apache.spark.sql.Column] =
-      if (!keepMeta) Seq(col("live_rows").as("_live_rows"))
-      else Seq(col("live_rows").as("_live_rows"),
-        concat_ws(Sep, col("group"), col("startUs")).as("_group"),
-        col("tsUs").as("_ts_us"), col("seq").as("_seq"))
-    val selected = sessionRows.select(outExprs ++ metaCols: _*)
-    val withHaving = having match {
-      case Some(cond) =>
-        selected.withColumn("_live_rows",
-          when(coalesce(expr(cond.sql), lit(false)), col("_live_rows")).otherwise(lit(0L)))
-      case None => selected
-    }
-    PlannedView(withHaving, OutputMode.Append())
+    // ROLLUP/CUBE/GROUPING SETS over the scalar keys compose (since r8):
+    // each LEVEL is its own session space — sessions are derived per
+    // (level, level-key) group, so the rolled-up level sessionizes the
+    // UNION of its sub-groups' rows (an adjacent pair from two cities
+    // can share a rolled-up session that neither city-level session
+    // has — the batch GROUP BY session_window, ROLLUP semantic).
+    // Honest cost: L levels hold L copies of the live rows, each on its
+    // level-group's shard (same maxRowsPerGroup guard per shard).
+    compileGrouped(spark, agg.copy(groupingExpressions = restExprs), feeds, ttl, having, keepMeta,
+      AggPath(evTs = Some(tsF), nullSumAsNaN = true,
+        item = r => {
+          case (f, name) if f.sql == sessionSql => SessionOut(name)
+          // DISTINCT aggregates: the member's value string rides stage 1;
+          // stage 2 aggregates the session's distinct multiset exactly
+          // (min/max(DISTINCT) were normalized to plain upstream)
+          case (f, name) if f.isDistinct =>
+            (f.nameParts.last.toLowerCase, f.arguments) match {
+              case (fn @ ("count" | "sum" | "avg"), Seq(e)) =>
+                DistinctOut(fn, r.addSval(compileExpr(e)), name)
+              case _ => throw unsupported(
+                s"session DISTINCT aggregate ${f.sql} (count/sum/avg(DISTINCT <one expr>))")
+            }
+        },
+        // distinct results land in `sums` after the value slots, in
+        // output-column order, one per dOps entry
+        flow = p => twoStage(p, keyFold(p.extract))(_.group, sessionFold(gapUs, p.slotOps,
+          p.outCols.collect { case DistinctOut(op, sIdx, _) => (op, sIdx) }, maxRows)),
+        render = (_, extra) => {
+          case SessionOut(name) =>
+            Seq(col("startUs").as(s"${name}_start_us"), col("endUs").as(s"${name}_end_us"))
+          case DistinctOut(op, _, name) =>
+            val c = extra()
+            Seq(if (op == "count") c.cast("long").as(name) else nullIfNaN(c).as(name))
+        },
+        // the session's change identity is (level-key, start) — one
+        // combined `_group` string, so the generic viewChanges fold and
+        // everything downstream of it (named views, materializeAggChanges,
+        // materializeTopK) treats each session as a keyed row
+        groupCol = concat_ws(Sep, col("group"), col("startUs"))))
   }
 
   /** `approx_count_distinct(x)` in a SESSION-less aggregate view:
@@ -3456,98 +3276,17 @@ object IncrementalPlanner {
       case f: UnresolvedFunction => f.nameParts.last.equalsIgnoreCase("session_window")
       case _                     => false
     }), "approx_count_distinct does not combine with session_window groupings")
-    val src   = compileSource(spark, agg.child, feeds)
-    val preds = src.filters.map(compileExpr)
-    val (groupExprs, levels) = expandGroupingSets(agg.groupingExpressions)
-    val groupSlots = groupExprs.map(compileGroupSlot)
-    val groupSql   = groupExprs.map(_.sql)
-
-    val slotFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSlot(f: Eval): Int = { slotFns += f; slotFns.size - 1 }
-    val sFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSval(f: Eval): Int = { sFns += f; sFns.size - 1 }
-    val outCols: Seq[OutCol] = agg.aggregateExpressions.zipWithIndex.map { case (ne, i) =>
-      val core = coreOf(ne)
-      val name = outName(ne, s"col$i")
-      core match {
-        case e if groupSql.indexOf(e.sql) >= 0 => GroupOut(groupSql.indexOf(e.sql), name)
-        case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("approx_count_distinct") =>
+    compileGrouped(spark, agg, feeds, None, having, keepMeta = false, AggPath(
+      item = r => {
+        case (f, name) if f.nameParts.last.equalsIgnoreCase("approx_count_distinct") =>
           f.arguments match {
-            case Seq(e) => DistinctOut("approx", addSval(compileExpr(e)), name)
+            case Seq(e) => DistinctOut("approx", r.addSval(compileExpr(e)), name)
             case other  => throw unsupported(
               s"approx_count_distinct(${other.map(_.sql).mkString(",")}) (one argument)")
           }
-        case f: UnresolvedFunction =>
-          compileAggFnOut(f.nameParts.last.toLowerCase, f.arguments, name, addSlot,
-            nullSumAsNaN = false)
-        case other => throw unsupported(
-          s"select item ${other.sql} in an approx aggregate view")
-      }
-    }
-    val slots  = slotFns.toIndexedSeq
-    val sSlots = sFns.toIndexedSeq
-    val extract: Change => Option[(Seq[String], Seq[Double], Seq[String])] = { c =>
-      val env  = envOf(c)
-      val pass = preds.forall(p => p(env).contains(true))
-      if (!pass) None
-      else {
-        val parts: Seq[Seq[String]] = groupSlots.map {
-          case ScalarSlot(f) => Seq(f(env).map(String.valueOf(_)).getOrElse(NullMark))
-          case WindowSlot(w) => windowStartsOf(w, env)
-        }
-        val keys = levels.flatMap { active =>
-          parts.zipWithIndex
-            .map { case (ps, i) => if (active.contains(i)) ps else Seq(RollMark) }
-            .foldLeft(Seq(Vector.empty[String])) { (acc, p) => for (a <- acc; x <- p) yield a :+ x }
-            .map(_.mkString(Sep))
-        }
-        Some((keys, slots.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 }),
-          sSlots.map(s => s(env).map(String.valueOf(_)).getOrElse(NullMark))))
-      }
-    }
-    val slotOps: Seq[String] = {
-      val ops = Array.fill(slots.length)("sum")
-      outCols.foreach {
-        case MinOut(s, _) => ops(s) = "min"
-        case MaxOut(s, _) => ops(s) = "max"
-        case _            => ()
-      }
-      ops.toIndexedSeq
-    }
-    val nSketch = sSlots.length
-
-    implicit val contribEnc = Encoders.product[PlannedContrib]
-    implicit val keyChEnc   = Encoders.product[PlannedKeyChange]
-    implicit val stateEnc   = Encoders.product[ApproxGroupState]
-    implicit val rowEnc     = Encoders.product[PlannedGroupRow]
-    implicit val longEnc    = Encoders.scalaLong
-    implicit val stringEnc  = Encoders.STRING
-    val groupRows = src.changes
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        appendOnlyKeyFold(extract))
-      .groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        approxFold(slotOps, nSketch))
-      .toDF()
-
-    val parts = split(col("group"), Sep)
-    def slotCol(i: Int) = element_at(col("sums"), i + 1)
-    var aSeen = -1
-    val outExprs = outCols.map {
-      case DistinctOut(_, _, name) =>
-        aSeen += 1
-        slotCol(slots.length + aSeen).cast("long").as(name)
-      case oc => outColExpr(oc, slotCol, parts)
-    }
-    val selected = groupRows.select(outExprs :+ col("live_rows").as("_live_rows"): _*)
-    val withHaving = having match {
-      case Some(cond) =>
-        selected.withColumn("_live_rows",
-          when(coalesce(expr(cond.sql), lit(false)), col("_live_rows")).otherwise(lit(0L)))
-      case None => selected
-    }
-    PlannedView(withHaving, OutputMode.Append())
+      },
+      flow = p => twoStage(p, appendOnlyKeyFold(p.extract))(_.group, approxFold(p.slotOps, p.nSvals)),
+      render = (_, extra) => { case DistinctOut(_, _, name) => Seq(extra().cast("long").as(name)) }))
   }
 
   /** Stage-1 fold of the approx path: LWW apply, but RAISE on any
@@ -3736,154 +3475,40 @@ object IncrementalPlanner {
       ttl: Option[(String, Long)],
       having: Option[Expression],
       keepMeta: Boolean): PlannedView = {
-    val src       = compileSource(spark, agg.child, feeds)
-    val preds     = src.filters.map(compileExpr)
-    val (baseExprs, levels) = expandGroupingSets(agg.groupingExpressions)
-    val groupSlots = baseExprs.map(compileGroupSlot)
-    require(groupSlots.count(_.isInstanceOf[WindowSlot]) <= 1,
-      "at most one window(...) grouping per view (Spark's own windowed-aggregation rule)")
-    require(levels.length == 1 || groupSlots.forall(_.isInstanceOf[ScalarSlot]),
-      "window(...) groupings do not combine with ROLLUP/CUBE/GROUPING SETS")
-    val groupSql  = baseExprs.map(_.sql)
-
-    val slotFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSlot(f: Eval): Int = { slotFns += f; slotFns.size - 1 }
     // one sketch per DISTINCT operand sql — approx_percentile(x, 0.5)
-    // and approx_percentile(x, 0.95) share x's sketch
-    val qFns  = scala.collection.mutable.ArrayBuffer.empty[Eval]
+    // and approx_percentile(x, 0.95) share x's sketch; the operands ride
+    // AFTER the plain slots in the contribution (NaN = SQL NULL, excluded
+    // from the sketch), so [[applyLww]]'s stored PlannedContrib carries
+    // what a later retraction must un-bucket
     val qSqls = scala.collection.mutable.ArrayBuffer.empty[String]
-    def addQ(e: Expression): Int = qSqls.indexOf(e.sql) match {
-      case -1 =>
-        val ca = compileExpr(e)
-        qFns  += (env => Some(ca(env).flatMap(asNum).getOrElse(Double.NaN)))
-        qSqls += e.sql
-        qFns.size - 1
-      case i => i
-    }
-    def fracOf(e: Expression): Double = e match {
-      case l: Literal =>
-        val d = litValue(l.value).map(String.valueOf).flatMap(_.toDoubleOption)
-          .getOrElse(throw unsupported(s"percentile fraction ${e.sql} (numeric literal)"))
-        require(d >= 0.0 && d <= 1.0, s"percentile fraction $d out of [0, 1]")
-        d
-      case other => throw unsupported(s"percentile fraction ${other.sql} (literal only)")
-    }
-    val outCols: Seq[OutCol] = agg.aggregateExpressions.zipWithIndex.map { case (ne, i) =>
-      val core = coreOf(ne)
-      val name = outName(ne, s"col$i")
-      core match {
-        case e if groupSql.indexOf(e.sql) >= 0 => GroupOut(groupSql.indexOf(e.sql), name)
-        case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping") =>
-          f.arguments match {
-            case Seq(e) if groupSql.indexOf(e.sql) >= 0 => GroupingOut(Seq(groupSql.indexOf(e.sql)), name)
-            case other => throw unsupported(
-              s"grouping(${other.map(_.sql).mkString(",")}) (argument must be a grouping column)")
-          }
-        case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("grouping_id") =>
-          val idxs =
-            if (f.arguments.isEmpty) groupSql.indices
-            else f.arguments.map { e =>
-              val i = groupSql.indexOf(e.sql)
-              if (i < 0) throw unsupported(s"grouping_id argument ${e.sql} is not a grouping column")
-              i
-            }
-          GroupingOut(idxs, name)
-        case f: UnresolvedFunction if DdqFns(f.nameParts.last.toLowerCase) =>
+    compileGrouped(spark, agg, feeds, ttl, having, keepMeta, AggPath(deltas = true,
+      item = r => {
+        case (f, name) if DdqFns(f.nameParts.last.toLowerCase) =>
           require(!f.isDistinct,
             s"${f.nameParts.last}(DISTINCT ...) is unsupported in planner views")
           f.arguments match {
-            case Seq(e, fr) => DdqPercOut(addQ(e), fracOf(fr), name)
+            case Seq(e, fr) =>
+              val q = qSqls.indexOf(e.sql) match {
+                case -1 =>
+                  qSqls += e.sql
+                  val ca = compileExpr(e)
+                  r.addTail(env => Some(ca(env).flatMap(asNum).getOrElse(Double.NaN)))
+                case i => i
+              }
+              DdqPercOut(q, fracOf(fr), name)
             case Seq(_, _, acc) => throw unsupported(
               s"approx_percentile accuracy argument ${acc.sql} — the planner's DDSketch " +
                 "is fixed at α = 1% relative error; drop the third argument")
             case other => throw unsupported(
               s"approx_percentile(${other.map(_.sql).mkString(",")}) (need (expr, fraction))")
           }
-        case f: UnresolvedFunction =>
-          compileAggFnOut(f.nameParts.last.toLowerCase, f.arguments, name, addSlot) match {
-            case _: MinOut | _: MaxOut => throw unsupported(
-              "min/max alongside approx_percentile (extrema are not invertible; put " +
-                "them in a second view over the same feed, or use a holistic view)")
-            case oc => oc
-          }
-        case other => throw unsupported(
-          s"select item ${other.sql} (neither grouping expr nor a supported aggregate)")
-      }
-    }
-
-    val slots  = slotFns.toIndexedSeq
-    val qSlots = qFns.toIndexedSeq
-    val nPlain = slots.length
-    val qOuts: Seq[(Int, Double)] = outCols.collect { case DdqPercOut(q, f, _) => (q, f) }
-    // the shared extractor contract: percentile operands ride AFTER the
-    // plain slots in the contribution vector (NaN = SQL NULL, excluded
-    // from the sketch), so [[applyLww]]'s stored PlannedContrib carries
-    // what a later retraction must un-bucket
-    val extract: Change => Option[(Seq[String], Seq[Double], Seq[String])] = { c =>
-      val env  = envOf(c)
-      val pass = preds.forall(p => p(env).contains(true))
-      if (!pass) None
-      else {
-        val parts: Seq[Seq[String]] = groupSlots.map {
-          case ScalarSlot(f) => Seq(f(env).map(String.valueOf(_)).getOrElse(NullMark))
-          case WindowSlot(w) => windowStartsOf(w, env)
-        }
-        val keys = levels.flatMap { active =>
-          parts.zipWithIndex
-            .map { case (ps, i) => if (active.contains(i)) ps else Seq(RollMark) }
-            .foldLeft(Seq(Vector.empty[String])) { (acc, p) => for (a <- acc; x <- p) yield a :+ x }
-            .map(_.mkString(Sep))
-        }
-        val plain = slots.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 })
-        val qv    = qSlots.map(s => s(env) match { case Some(d: Double) => d; case _ => Double.NaN })
-        Some((keys, plain ++ qv, Nil))
-      }
-    }
-
-    implicit val contribEnc = Encoders.product[PlannedContrib]
-    implicit val deltaEnc   = Encoders.product[DdqDelta]
-    implicit val stateEnc   = Encoders.product[DdqGroupState]
-    implicit val rowEnc     = Encoders.product[PlannedGroupRow]
-    implicit val longEnc    = Encoders.scalaLong
-    implicit val stringEnc  = Encoders.STRING
-    val inChanges = ttl match {
-      case Some((delay, _)) => src.changes.withWatermark("ts", delay)
-      case None             => src.changes
-    }
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
-    val groupRows = inChanges
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        expiring(ttl, ddqFold(extract, nPlain, qSlots.length)))
-      .groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        ddqGroupFold(nPlain, qSlots.length, qOuts))
-      .toDF()
-
-    val parts = split(col("group"), Sep)
-    // plain slots folded as micro-unit integers (the aggFold discipline)
-    // — descale on emission; estimate entries are raw values
-    def slotCol(slot: Int) = element_at(col("sums"), slot + 1) / lit(SlotScale)
-    var qSeen = -1
-    val outExprs = outCols.map {
-      case DdqPercOut(_, _, name) =>
-        qSeen += 1
-        val c = element_at(col("sums"), nPlain + qSeen + 1)
-        when(isnan(c), lit(null)).otherwise(c).as(name)
-      case oc => outColExpr(oc, slotCol, parts)
-    }
-    val metaCols =
-      if (keepMeta) Seq(col("group").as("_group"), col("tsUs").as("_ts_us"), col("seq").as("_seq"))
-      else Nil
-    val selected = groupRows.select(outExprs ++ (col("live_rows").as("_live_rows") +: metaCols): _*)
-    val withHaving = having match {
-      case Some(cond) =>
-        selected.withColumn("_live_rows",
-          when(coalesce(expr(cond.sql), lit(false)), col("_live_rows")).otherwise(lit(0L)))
-      case None => selected
-    }
-    PlannedView(withHaving, OutputMode.Append())
+        case (f, _) if Set("min", "max")(f.nameParts.last.toLowerCase) => throw unsupported(
+          "min/max alongside approx_percentile (extrema are not invertible; put " +
+            "them in a second view over the same feed, or use a holistic view)")
+      },
+      flow = p => twoStage(p, ddqFold(p.extract, p.nSlots, p.nTail))(_.group,
+        ddqGroupFold(p.nSlots, p.nTail, p.outCols.collect { case DdqPercOut(q, f, _) => (q, f) })),
+      render = (_, extra) => { case DdqPercOut(_, _, name) => Seq(nullIfNaN(extra()).as(name)) }))
   }
 
   /** Stage-1 fold of the DDSketch path: [[aggFold]]'s LWW + signed
@@ -4115,11 +3740,6 @@ object IncrementalPlanner {
     }
   }
 
-  /** Stage-1 fold of a planned aggregate view: LWW-apply the batch to
-    * the key's contribution (same `(tsUs, seq)` order as
-    * [[CdcMaterializer.fold]]), then emit the net signed delta between
-    * pre- and post-batch contributions, per touched group.
-    */
   /** Wrap a stage-1 fold with tombstone-TTL expiry (the
     * [[IncrementalView.deltasExpiring]] mechanics): a DEAD contribution
     * schedules its own event-time timeout at `death ts + ttl` (clamped
@@ -4187,6 +3807,11 @@ object IncrementalPlanner {
     (before, cur)
   }
 
+  /** Stage-1 fold of a planned aggregate view: LWW-apply the batch to
+    * the key's contribution (same `(tsUs, seq)` order as
+    * [[CdcMaterializer.fold]]), then emit the net signed delta between
+    * pre- and post-batch contributions, per touched group.
+    */
   private def aggFold(extract: Change => Option[(Seq[String], Seq[Double], Seq[String])])(
       key: Long,
       changes: Iterator[Change],

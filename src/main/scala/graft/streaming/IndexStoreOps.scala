@@ -171,6 +171,51 @@ object IndexStoreOps {
       throw new java.io.IOException(s"rename failed: $src -> $dst")
   }
 
+  /** Present while an IVF/PQ retrain is mid-flight: the store's sides
+    * may disagree, so probes, reports, folds and erasure refuse instead
+    * of answering (or rewriting) wrong.
+    */
+  private def retrainMarker(root: String) = s"$root/_retrain_inprogress"
+
+  /** The IVF/PQ `guard`: refuse while a retrain is mid-flight. */
+  private[streaming] def requireNoRetrain(spark: SparkSession, root: String): Unit =
+    require(!pathExists(spark, retrainMarker(root)),
+      s"index store at $root has a half-finished retrain (marker present) — " +
+        "re-run retrain to restore the live ≡ rebuild invariant")
+
+  /** A crash-detectable full rewrite of `dirs` under the store at `root`
+    * (the IVF and PQ retrains): `write` lands every new directory in its
+    * staging dir (`staged(dir)`), the swap is directory renames guarded by
+    * the marker, and `afterSwap` (the new drift baseline) runs before the
+    * marker clears. A failure at ANY point leaves either the old store
+    * intact (pre-swap) or the marker present (mid/post-swap), never a
+    * silent half-retrained store. A retrain that finds a complete staging
+    * set from a crashed run (ready flag present) finishes that swap first
+    * so the corpus is readable; a partial set is discarded.
+    */
+  private[streaming] def stagedRetrain[T](spark: SparkSession, root: String, dirs: Seq[String])(
+      write: (String => String) => T)(afterSwap: T => Unit): Unit = {
+    touchFile(spark, retrainMarker(root))
+    def staged(dir: String) = s"$dir.staged"
+    val ready = s"$root/_staged_ready"
+    if (pathExists(spark, ready)) {
+      dirs.filter(d => isDir(spark, staged(d))).foreach { d =>
+        deleteTree(spark, d)
+        renameDir(spark, staged(d), d)
+      }
+      deleteFile(spark, ready)
+    } else dirs.foreach(d => deleteTree(spark, staged(d)))
+    val out = write(staged)
+    touchFile(spark, ready) // staging complete — swap may begin
+    dirs.foreach { d =>
+      deleteTree(spark, d)
+      renameDir(spark, staged(d), d)
+    }
+    deleteFile(spark, ready)
+    afterSwap(out)
+    deleteFile(spark, retrainMarker(root))
+  }
+
   /** One leaf directory's census row. */
   final case class LeafCensus(dir: String, files: Long, bytes: Long, flagged: Boolean)
 

@@ -73,15 +73,9 @@ object IvfIndexView extends LocatorStore {
 
   private def centDir(root: String)  = s"$root/centroids"
   private def driftDir(root: String) = s"$root/drift"
-  // present while a retrain is mid-flight: centroids/data/keys may
-  // disagree, so probes, reports, folds and erasure refuse instead of
-  // answering (or rewriting) wrong
-  private def retrainMarker(root: String) = s"$root/_retrain_inprogress"
 
   override def guard(spark: SparkSession, root: String): Unit =
-    require(!IndexStoreOps.pathExists(spark, retrainMarker(root)),
-      s"index store at $root has a half-finished retrain (marker present) — " +
-        "re-run retrain to restore the live ≡ rebuild invariant")
+    IndexStoreOps.requireNoRetrain(spark, root)
 
   /** Pinned centroids `(cid, ci, c2)`. */
   def readCentroids(spark: SparkSession, root: String): DataFrame =
@@ -331,63 +325,40 @@ object IvfIndexView extends LocatorStore {
     * ∝ store size, vs updateBatch's ∝ batch — which is exactly why
     * centroids are pinned between retrains. Resets the drift baseline.
     */
-  def retrain(spark: SparkSession, root: String, k: Int = 16, iters: Int = 2): Unit = {
-    // crash-detectable (r16, the ADVICE ask): every rewrite lands in
-    // staging dirs first, the swap is three directory renames guarded
-    // by a marker, and the new baseline is recorded only after the
-    // swap — a failure at ANY point leaves either the old store intact
-    // (pre-swap) or the marker present (mid/post-swap), never a silent
-    // half-retrained store that probes would answer from wrongly.
-    IndexStoreOps.touchFile(spark, retrainMarker(root))
-    def staged(dir: String) = s"$dir.staged"
-    val ready = s"$root/_staged_ready"
-    val dirs = Seq(dataDir(root), keysDir(root), centDir(root))
-    // recovery from a prior crashed retrain: a complete staging set
-    // (ready flag present) finishes its swap so the corpus is readable;
-    // a partial one is discarded (the pre-swap store is still intact)
-    if (IndexStoreOps.pathExists(spark, ready)) {
-      dirs.foreach { d =>
-        if (IndexStoreOps.isDir(spark, staged(d))) {
-          IndexStoreOps.deleteTree(spark, d)
-          IndexStoreOps.renameDir(spark, staged(d), d)
-        }
-      }
-      IndexStoreOps.deleteFile(spark, ready)
-    } else dirs.foreach(d => IndexStoreOps.deleteTree(spark, staged(d)))
-    val live = readIndex(spark, root).select(col("vec_id"), col("embedding"))
-      .localCheckpoint(true) // source and sink of the rewrite below
-    val (cells, centroidsRaw) = Similarity.ivfIndex(live, k, iters)
-    val centroids = centroidsRaw
-      .select(col("cid").cast("int").as("cid"), col("ci"), col("c2"))
-      .localCheckpoint(true)
-    val assigned = IndexStoreOps.clusterByLeaf(assignAt(centroids,
-      live.withColumn("norm", l2Norm(col("embedding")))
-        .withColumn("xi", toMicro(col("embedding"))))
-      .select(col("cid"), col("vec_id"), col("embedding"), col("norm"), col("qerr")), "cid")
-    val base = cells
-      .withColumn("x2", dotLong(col("xi"), col("xi")))
-      .join(broadcast(centroids), Seq("cid"))
-      .withColumn("qerr", col("x2") - (lit(2L) * dotLong(col("xi"), col("ci")) - col("c2")))
-      .agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"))
-      .collect().head
-    val keys = IndexStoreOps.clusterByLeaf(readKeys(spark, root)
-      .drop("cid")
-      .join(assigned.select(col("vec_id"), col("cid")), Seq("vec_id"), "left")
-      .select(keysSchema.fieldNames.map(col).toSeq: _*), "kb")
-    assigned.drop("qerr").write.mode(SaveMode.Overwrite).partitionBy("cid")
-      .parquet(staged(dataDir(root)))
-    keys.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(staged(keysDir(root)))
-    centroids.write.mode(SaveMode.Overwrite).parquet(staged(centDir(root)))
-    IndexStoreOps.touchFile(spark, ready) // staging complete — swap may begin
-    dirs.foreach { d =>
-      IndexStoreOps.deleteTree(spark, d)
-      IndexStoreOps.renameDir(spark, staged(d), d)
+  def retrain(spark: SparkSession, root: String, k: Int = 16, iters: Int = 2): Unit =
+    // crash-detectable: the three rewritten directories swap in through
+    // IndexStoreOps.stagedRetrain, and the new baseline is recorded only
+    // after the swap
+    IndexStoreOps.stagedRetrain(spark, root, Seq(dataDir(root), keysDir(root), centDir(root))) { staged =>
+      val live = readIndex(spark, root).select(col("vec_id"), col("embedding"))
+        .localCheckpoint(true) // source and sink of the rewrite below
+      val (cells, centroidsRaw) = Similarity.ivfIndex(live, k, iters)
+      val centroids = centroidsRaw
+        .select(col("cid").cast("int").as("cid"), col("ci"), col("c2"))
+        .localCheckpoint(true)
+      val assigned = IndexStoreOps.clusterByLeaf(assignAt(centroids,
+        live.withColumn("norm", l2Norm(col("embedding")))
+          .withColumn("xi", toMicro(col("embedding"))))
+        .select(col("cid"), col("vec_id"), col("embedding"), col("norm"), col("qerr")), "cid")
+      val base = cells
+        .withColumn("x2", dotLong(col("xi"), col("xi")))
+        .join(broadcast(centroids), Seq("cid"))
+        .withColumn("qerr", col("x2") - (lit(2L) * dotLong(col("xi"), col("ci")) - col("c2")))
+        .agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"))
+        .collect().head
+      val keys = IndexStoreOps.clusterByLeaf(readKeys(spark, root)
+        .drop("cid")
+        .join(assigned.select(col("vec_id"), col("cid")), Seq("vec_id"), "left")
+        .select(keysSchema.fieldNames.map(col).toSeq: _*), "kb")
+      assigned.drop("qerr").write.mode(SaveMode.Overwrite).partitionBy("cid")
+        .parquet(staged(dataDir(root)))
+      keys.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(staged(keysDir(root)))
+      centroids.write.mode(SaveMode.Overwrite).parquet(staged(centDir(root)))
+      base
+    } { base =>
+      appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
+        baseSeq = baselineCount(spark, root))
     }
-    IndexStoreOps.deleteFile(spark, ready)
-    appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
-      baseSeq = baselineCount(spark, root))
-    IndexStoreOps.deleteFile(spark, retrainMarker(root))
-  }
 
   /** Probe the LIVE index: top-k cosine neighbors per query row
     * `(query_id, embedding)` at the pinned centroids — s04's nprobe

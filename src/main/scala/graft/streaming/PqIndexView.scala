@@ -66,6 +66,9 @@ object PqIndexView extends LocatorStore {
   private def cbDir(root: String)    = s"$root/codebook"
   private def driftDir(root: String) = s"$root/drift"
 
+  override def guard(spark: SparkSession, root: String): Unit =
+    IndexStoreOps.requireNoRetrain(spark, root)
+
   /** The pinned per-subspace codebooks `(j, code, cvi, c2)`. */
   def readCodebook(spark: SparkSession, root: String): DataFrame =
     spark.read.parquet(cbDir(root))
@@ -240,6 +243,7 @@ object PqIndexView extends LocatorStore {
     * baseline with first-application-wins replay dedupe.
     */
   def stalenessReport(spark: SparkSession, root: String): DataFrame = {
+    guard(spark, root)
     val raw = spark.read.parquet(driftDir(root))
     val cols = raw.columns.toSeq
     val d = raw.groupBy("kind", "batch_id", "base_seq")
@@ -282,27 +286,32 @@ object PqIndexView extends LocatorStore {
     * retrains.
     */
   def retrain(spark: SparkSession, root: String, vectors: DataFrame,
-      m: Int = 4, k: Int = 16, iters: Int = 2, keyBuckets: Int = 64): Unit = {
-    val live = readIndex(spark, root).select("vec_id")
-      .join(vectors.select(col("vec_id"), col("embedding")), Seq("vec_id"))
-      .localCheckpoint(true)
-    val (_, codebookRaw) = Similarity.pqIndex(live, m, k, iters)
-    val codebook = codebookRaw
-      .select(col("j").cast("int").as("j"), col("code").cast("int").as("code"),
-        col("cvi"), col("c2"))
-      .localCheckpoint(true)
-    val encoded = IndexStoreOps.clusterByLeaf(encodeAt(codebook,
-        live.withColumn("kb", pmod(col("vec_id"), lit(keyBuckets.toLong)).cast("int")), m),
-      "kb")
-    val base = encoded
-      .agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"))
-      .collect().head
-    encoded.select(col("kb"), col("vec_id"), col("codes"), col("norm"))
-      .write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(dataDir(root))
-    codebook.write.mode(SaveMode.Overwrite).parquet(cbDir(root))
-    appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
-      baseSeq = baselineCount(spark, root))
-  }
+      m: Int = 4, k: Int = 16, iters: Int = 2, keyBuckets: Int = 64): Unit =
+    // crash-detectable: codes and codebooks swap in together through
+    // IndexStoreOps.stagedRetrain (the locators keep their positions)
+    IndexStoreOps.stagedRetrain(spark, root, Seq(dataDir(root), cbDir(root))) { staged =>
+      val live = readIndex(spark, root).select("vec_id")
+        .join(vectors.select(col("vec_id"), col("embedding")), Seq("vec_id"))
+        .localCheckpoint(true)
+      val (_, codebookRaw) = Similarity.pqIndex(live, m, k, iters)
+      val codebook = codebookRaw
+        .select(col("j").cast("int").as("j"), col("code").cast("int").as("code"),
+          col("cvi"), col("c2"))
+        .localCheckpoint(true)
+      val encoded = IndexStoreOps.clusterByLeaf(encodeAt(codebook,
+          live.withColumn("kb", pmod(col("vec_id"), lit(keyBuckets.toLong)).cast("int")), m),
+        "kb")
+      val base = encoded
+        .agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"))
+        .collect().head
+      encoded.select(col("kb"), col("vec_id"), col("codes"), col("norm"))
+        .write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(staged(dataDir(root)))
+      codebook.write.mode(SaveMode.Overwrite).parquet(staged(cbDir(root)))
+      base
+    } { base =>
+      appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
+        baseSeq = baselineCount(spark, root))
+    }
 
   /** Probe the LIVE index: s05's asymmetric-distance dataflow served
     * from the maintained code table. The broadcast lookup table (query
@@ -316,6 +325,7 @@ object PqIndexView extends LocatorStore {
   def similarTo(spark: SparkSession, root: String, queries: DataFrame,
       k: Int = 3, m: Int = 4, rerank: Int = 60,
       rerankWith: Option[DataFrame] = None): DataFrame = {
+    guard(spark, root)
     val codebook = readCodebook(spark, root)
     val lut = broadcast(
       queries

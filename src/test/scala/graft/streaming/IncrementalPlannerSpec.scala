@@ -2316,6 +2316,21 @@ class IncrementalPlannerSpec extends SparkSpec {
           "GROUP BY session_window(ev, '0 seconds')", feeds)
     }
     assert(e2.getMessage.contains("positive"), e2.getMessage)
+    // the window refusals hold on every grouped-aggregate form: flat,
+    // holistic, DDSketch and HLL
+    Seq("count(*)", "median(amount)", "approx_percentile(amount, 0.5)",
+      "approx_count_distinct(amount)").foreach { item => withClue(s"$item: ") {
+      val e3 = intercept[IllegalArgumentException] {
+        IncrementalPlanner.materialize(spark, s"SELECT $item AS x FROM t " +
+          "GROUP BY window(ev, '1 hour'), window(ev, '1 minute')", feeds)
+      }
+      assert(e3.getMessage.contains("at most one window(...)"), e3.getMessage)
+      val e4 = intercept[IllegalArgumentException] {
+        IncrementalPlanner.materialize(spark, s"SELECT $item AS x FROM t " +
+          "GROUP BY ROLLUP(window(ev, '1 hour'), city)", feeds)
+      }
+      assert(e4.getMessage.contains("do not combine with ROLLUP"), e4.getMessage)
+    } }
   }
 
   test("#171ap session state guard raises past spark.graft.session.maxRowsPerGroup") {
@@ -3018,6 +3033,24 @@ class IncrementalPlannerSpec extends SparkSpec {
         "SELECT cat, approx_count_distinct(uid) AS a FROM t GROUP BY cat", feeds)
     }
     assert(e2.getMessage.contains("append-only"), e2.getMessage)
+
+    // ROLLUP with grouping(): the rolled-up row answers grouping(cat) = 1
+    // and sketches the union of both cats (uid 2 is in both)
+    val roll = Seq(
+      Change("insert", 1L, ts(0), Map("cat" -> "a", "uid" -> "1"), 1L),
+      Change("insert", 2L, ts(0), Map("cat" -> "a", "uid" -> "2"), 2L),
+      Change("insert", 3L, ts(1), Map("cat" -> "b", "uid" -> "2"), 3L),
+      Change("insert", 4L, ts(1), Map("cat" -> "b", "uid" -> "3"), 4L))
+    runView("SELECT cat, grouping(cat) AS g, count(*) AS n, approx_count_distinct(uid) AS au " +
+      "FROM t GROUP BY ROLLUP(cat)", "pv_approx_rollup", Seq(Map("t" -> roll)))
+    val gotR = spark.table("pv_approx_rollup").collect().toSeq
+      .groupBy(r => (Option(r.getAs[String]("cat")), r.getAs[Long]("g")))
+      .view.mapValues(_.last)
+      .map { case (g, r) => g -> ((r.getAs[Long]("n"), r.getAs[Long]("au"))) }.toMap
+    assert(gotR == Map(
+      (Some("a"), 0L) -> ((2L, 2L)),
+      (Some("b"), 0L) -> ((2L, 2L)),
+      (None, 1L)      -> ((4L, 3L))), s"approx ROLLUP levels: $gotR")
   }
 
   test("#171cb IGNORE NULLS on lag/lead/first/last/nth_value == Spark's own batch windows; misuse rejects") {
@@ -3433,6 +3466,81 @@ class IncrementalPlannerSpec extends SparkSpec {
       "does not mix with exact percentile")
     rejects("SELECT city, percentile_cont(amount) WITHIN GROUP (ORDER BY amount) AS p FROM t GROUP BY city",
       "literal")
+  }
+
+  test("#171cr approx_percentile (DDSketch) under retraction: within α of Spark's exact percentile; shared sketch; rejects") {
+    // two fractions over ONE operand (one shared sketch), plus count(*)
+    val sql = "SELECT city, approx_percentile(amount, 0.5) AS p50, " +
+      "percentile_approx(amount, 0.9) AS p90, count(*) AS n FROM t GROUP BY city"
+    val rnd = new scala.util.Random(17)
+    def amt(sign: Double): String = f"${sign * (1.0 + rnd.nextInt(900000) / 100.0)}%.2f"
+    def ins(k: Long, city: String, amount: String, seq: Long) =
+      Change("insert", k, ts(seq.toInt), Map("city" -> city, "amount" -> amount), seq)
+    def upd(k: Long, city: String, amount: String, seq: Long) =
+      Change("update", k, ts(seq.toInt), Map("city" -> city, "amount" -> amount), seq)
+    def del(k: Long, seq: Long) = Change("delete", k, ts(seq.toInt), Map.empty, seq)
+    // group sizes keep f·(n−1) integral for both fractions (n ∈ {1, 11,
+    // 21}), so Spark's interpolating percentile IS a live element and
+    // the sketch's α contract applies to it directly; osl mixes signs
+    val b1 = (1L to 21L).map(k => ins(k, "ber", amt(1.0), k)) ++
+      (101L to 111L).map(k => ins(k, "par", amt(1.0), k)) ++
+      Seq(ins(201L, "rom", amt(1.0), 201L)) ++
+      (301L to 311L).map(k => ins(k, "osl", amt(if (k % 3 == 0) -1.0 else 1.0), k))
+    // in-place value updates, two par→ber moves, two ber deletes
+    val b2 = (1L to 5L).map(k => upd(k, "ber", amt(1.0), 400L + k)) ++
+      Seq(upd(101L, "ber", amt(1.0), 410L), upd(102L, "ber", amt(1.0), 411L),
+        del(6L, 412L), del(7L, 413L))
+    // more deletes and inserts (sizes back to 21 / 11), a NULL operand
+    // (counted, never sketched), a sign flip, and rom's last row deleted
+    val b3 = Seq(del(8L, 500L), del(9L, 501L),
+      ins(22L, "ber", amt(1.0), 502L), ins(23L, "ber", amt(1.0), 503L),
+      ins(112L, "par", amt(1.0), 504L), ins(113L, "par", amt(1.0), 505L),
+      Change("insert", 114L, ts(506), Map("city" -> "par"), 506L),
+      upd(305L, "osl", amt(-1.0), 507L), upd(306L, "osl", amt(1.0), 508L),
+      del(201L, 509L))
+
+    import spark.implicits._
+    def check(table: String, changes: Seq[Change]): Map[Seq[Any], Seq[Any]] = {
+      val got = aggState(table, Seq("city"))
+      finalState(changes).toSeq
+        .map { case (k, p) => (k, p("city"), p.get("amount").map(_.toDouble)) }
+        .toDF("key", "city", "amount").createOrReplaceTempView("ddq_batch")
+      val want = spark.sql("SELECT city, percentile(amount, 0.5) AS p50, " +
+        "percentile(amount, 0.9) AS p90, count(*) AS n FROM ddq_batch GROUP BY city")
+        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2), r.getLong(3))).toMap
+      assert(got.keySet == want.keySet.map(Seq[Any](_)), s"groups: $got vs $want")
+      want.foreach { case (city, (p50, p90, n)) =>
+        val Seq(e50: Double, e90: Double, gn) = got(Seq[Any](city))
+        assert(gn == n, s"$city count: $gn vs $n")
+        Seq(e50 -> p50, e90 -> p90).foreach { case (est, exact) =>
+          assert(math.abs(est - exact) <= 0.01 * math.abs(exact) + 1e-9,
+            s"$city: DDSketch $est not within α = 1% of Spark's $exact")
+        }
+      }
+      got
+    }
+    runView(sql, "pv_ddq_ins", Seq(Map("t" -> b1)))
+    assert(check("pv_ddq_ins", b1).contains(Seq[Any]("rom")))
+    runView(sql, "pv_ddq", Seq(Map("t" -> b1), Map("t" -> b2), Map("t" -> b3)))
+    val got = check("pv_ddq", b1 ++ b2 ++ b3)
+    assert(!got.contains(Seq[Any]("rom")), "rom's last-row delete must tombstone the group")
+    assert(got(Seq[Any]("par"))(2) == 12L, s"the NULL operand row still counts: $got")
+
+    implicit val sqlCtx = spark.sqlContext
+    def rejects(q: String, needle: String): Unit = {
+      val e = intercept[IllegalArgumentException] {
+        IncrementalPlanner.materialize(spark, q, Map("t" -> MemoryStream[Change].toDS()))
+      }
+      assert(e.getMessage.contains(needle), s"for $q got: ${e.getMessage}")
+    }
+    rejects("SELECT city, approx_percentile(amount, 0.5) AS p, max(amount) AS hi FROM t GROUP BY city",
+      "min/max alongside approx_percentile")
+    rejects("SELECT city, approx_percentile(amount, 0.5) AS p, count(DISTINCT amount) AS d " +
+      "FROM t GROUP BY city", "does not mix with DISTINCT")
+    rejects("SELECT city, approx_percentile(DISTINCT amount, 0.5) AS p FROM t GROUP BY city",
+      "does not mix with DISTINCT")
+    rejects("SELECT session_window(ev, '1 minute') AS sw, approx_percentile(amount, 0.5) AS p " +
+      "FROM t GROUP BY session_window(ev, '1 minute')", "session_window")
   }
 
   test("#171cg corr/covar/regr family under retraction == Spark's own batch fit through churn") {

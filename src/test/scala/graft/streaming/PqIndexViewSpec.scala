@@ -180,5 +180,31 @@ class PqIndexViewSpec extends SparkSpec {
     assert(parts > 0L && dropped >= 3L, s"purge must drop code + locator rows: ($parts, $dropped)")
     assert(PqIndexView.keyTraces(spark, root, 11L) == 0L)
     assert(PqIndexView.keyTraces(spark, root, 12L) == 0L, "the tombstone must be gone")
+
+    // ---- half-retrained store is detectable ----------------------------
+    val marker = Paths.get(root, "_retrain_inprogress")
+    Files.write(marker, Array.emptyByteArray)
+    intercept[IllegalArgumentException] {
+      PqIndexView.similarTo(spark, root, queries, k = 3, m = 4, rerank = 20).collect()
+    }
+    intercept[IllegalArgumentException] {
+      PqIndexView.stalenessReport(spark, root).collect()
+    }
+    intercept[IllegalArgumentException] {
+      PqIndexView.updateBatch(Seq(chg("U", 13L, neg(byId(13L)), 40000L)).toDF(), root, 4, 8)
+    }
+    // the recovery verb is retrain itself: it runs over the marker and
+    // clears it, first finishing a crashed run's complete staging set
+    Seq("data", "codebook").foreach(d => org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(s"$root/$d"), new java.io.File(s"$root/$d.staged")))
+    Files.write(Paths.get(root, "_staged_ready"), Array.emptyByteArray)
+    val liveLast = liveAfter - 11L - 12L
+    PqIndexView.retrain(spark, root, liveLast.toSeq.toDF("vec_id", "embedding"),
+      m = 4, k = 8, iters = 2, keyBuckets = 8)
+    assert(!Files.exists(marker))
+    assert(Seq("_staged_ready", "data.staged", "codebook.staged")
+      .forall(p => !Files.exists(Paths.get(root, p))), "recovery must finish the staged swap")
+    assert(liveCodes(root) == rebuildCodes(root, liveLast),
+      "retrain after a marker must restore live ≡ re-encode")
   }
 }
