@@ -213,7 +213,7 @@ object Temporal {
     val ev = events(spark, dir)
       .select(col("event_id"), col("event_type"), col("tsu"))
       .withColumn("arr", expr("(event_id div 10) * 10 + (9 - pmod(event_id, 10))"))
-    val width = ev.agg(max("arr")).head.getLong(0) / maxBands + 1
+    val width = ev.agg(max("arr")).head().getLong(0) / maxBands + 1
     val banded = ev.withColumn("band", expr(s"arr div $width")).localCheckpoint(false)
     val bandMax = banded.groupBy("band").agg(max("tsu").as("bmax"))
     val offsets = bandMax

@@ -72,8 +72,8 @@ object PartitionedUpsert {
     val current = spark.read.parquet(root)
       .filter(col("kb").isin(kb: _*))
       .withColumn("op", lit("update"))
-      .select(dataCols.map(col) :+ col("op"): _*)
-    val merged = batchWinners.select(dataCols.map(col) :+ col("op"): _*)
+      .select(dataCols.toSeq.map(col) :+ col("op"): _*)
+    val merged = batchWinners.select(dataCols.toSeq.map(col) :+ col("op"): _*)
       .withColumn("__src", lit(1))
       .unionByName(current.withColumn("__src", lit(0)))
       // batch beats table at EQUAL (ts, seq) — a replayed batch must win

@@ -13,7 +13,26 @@ case class KeyState(
     seq: Long,
     payload: Map[String, String],
     deleted: Boolean,
-)
+) extends LwwState
+
+/** A change event [[CdcMaterializer.applyLww]] orders: commit time `ts`
+  * plus source LSN `seq`, and the `op`/`payload` a fold step reads.
+  */
+trait LwwEvent {
+  def op: String
+  def ts: java.sql.Timestamp
+  def payload: Map[String, String]
+  def seq: Long
+}
+
+/** A per-key fold state: `(tsUs, seq)` is the commit position of the
+  * change that produced it, the position later changes are judged
+  * stale against.
+  */
+trait LwwState {
+  def tsUs: Long
+  def seq: Long
+}
 
 /** CDC materialization (SURVEY.md §2.3 #32): fold a changefeed into
   * current-state rows with last-writer-wins upsert/delete semantics.
@@ -37,25 +56,45 @@ object CdcMaterializer {
   private[streaming] def micros(ts: java.sql.Timestamp): Long =
     math.floorDiv(ts.getTime, 1000L) * 1000000L + ts.getNanos / 1000L
 
-  /** True iff state position `(sTs, sSeq)` is strictly after `(ts, seq)`. */
-  private[streaming] def isStale(sTs: Long, sSeq: Long, ts: Long, seq: Long): Boolean =
-    sTs > ts || (sTs == ts && sSeq > seq)
+  /** The per-key last-writer-wins apply every stage-1 fold shares: order
+    * the batch by commit position `(tsUs, seq)`, skip each event whose
+    * position is strictly older than the current state's, and step each
+    * accepted event through `next(prev, event, tsUs)`. Returns the
+    * post-batch state. The sort is stable and the stale test strict, so
+    * events at equal positions apply in arrival order and the last wins.
+    *
+    * The caller persists the result, and persists it even when it is a
+    * first-seen tombstone (a delete, or a row the view filters out, before
+    * any live row): that position is what stale-drops an out-of-order
+    * OLDER upsert arriving in a later batch, which would otherwise
+    * resurrect the row. Only [[IncrementalView]] skips it, as a documented
+    * TTL-bounded trade.
+    */
+  private[graft] def applyLww[E <: LwwEvent, S <: LwwState](prev: Option[S], events: Iterator[E])(
+      next: (Option[S], E, Long) => S): Option[S] = {
+    var cur = prev
+    events.map(e => (micros(e.ts), e)).toSeq
+      .sortWith((a, b) => a._1 < b._1 || (a._1 == b._1 && a._2.seq < b._2.seq))
+      .foreach { case (tsUs, e) =>
+        if (!cur.exists(s => s.tsUs > tsUs || (s.tsUs == tsUs && s.seq > e.seq)))
+          cur = Some(next(cur, e, tsUs))
+      }
+    cur
+  }
+
+  /** [[applyLww]] into a [[KeyState]]: a delete parks a tombstone, any
+    * other op puts the change's after-image. Shared with the
+    * `transformWithState` engine ([[CdcStateProcessor]]).
+    */
+  private[streaming] def applyKeyState(key: Long, changes: Iterator[Change], prev: Option[KeyState]): Option[KeyState] =
+    applyLww(prev, changes) { (_, c, tsUs) =>
+      val deleted = c.op == "delete"
+      KeyState(key, tsUs, c.seq, if (deleted) Map.empty else c.payload, deleted)
+    }
 
   /** The per-group fold. Exposed for direct unit exercise. */
   def fold(key: Long, changes: Iterator[Change], state: GroupState[KeyState]): Iterator[KeyState] = {
-    val ordered = changes.toSeq.sortBy(c => (micros(c.ts), c.seq))
-    var cur = state.getOption
-    ordered.foreach { c =>
-      val tsUs = micros(c.ts)
-      val stale = cur.exists(s => isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur = c.op match {
-          case "delete" => Some(KeyState(key, tsUs, c.seq, Map.empty, deleted = true))
-          case _        => Some(KeyState(key, tsUs, c.seq, c.payload, deleted = false))
-        }
-      }
-    }
-    cur match {
+    applyKeyState(key, changes, state.getOption) match {
       case Some(s) => state.update(s); Iterator.single(s)
       case None    => Iterator.empty
     }
@@ -113,7 +152,7 @@ object CdcMaterializer {
       state.getOption.foreach { s =>
         // timeout must sit beyond the current watermark or Spark rejects it
         if (s.deleted) state.setTimeoutTimestamp(
-          math.max(s.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs + 1L))
+          math.max(s.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs() + 1L))
       }
       out
     }

@@ -192,7 +192,7 @@ class CepProcessor(pattern: String) extends StatefulProcessor[Long, TypedEvent, 
       rows: Iterator[TypedEvent],
       timers: TimerValues): Iterator[CepStatus] = {
     val ordered = rows.toSeq.sortBy(e => (CdcMaterializer.micros(e.ts), e.eventId))
-    var s = if (state.exists) state.get()
+    var s = if (state.exists()) state.get()
             else CepState(closure(1L, toks), matched = false, -1L, -1L, 0L)
     ordered.foreach { e =>
       e.eventType.headOption.foreach { c =>
@@ -244,7 +244,7 @@ class CepOrderedProcessor(pattern: String) extends StatefulProcessor[Long, Typed
       getHandle.registerTimer(rest.map(e => CdcMaterializer.micros(e.ts) / 1000L).min)
     if (ripe.isEmpty) Iterator.empty
     else {
-      var s = if (state.exists) state.get()
+      var s = if (state.exists()) state.get()
               else CepState(closure(1L, toks), matched = false, -1L, -1L, 0L)
       ripe.sortBy(e => (CdcMaterializer.micros(e.ts), e.eventId)).foreach { e =>
         e.eventType.headOption.foreach { c =>

@@ -20,7 +20,7 @@ case class Change(
     ts: java.sql.Timestamp,
     payload: Map[String, String],
     seq: Long = 0L,
-)
+) extends LwwEvent
 
 /** Changefeed sources (SURVEY.md §2.3 #31).
   *
@@ -208,7 +208,7 @@ object ChangeFeed {
       tsCol: String, seqCol: Option[String] = None): DataFrame = {
     val payloadCols = snapshot.columns.filterNot(c => seqCol.contains(c))
     val payload = map_filter(
-      map(payloadCols.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*),
+      map(payloadCols.toSeq.flatMap(c => Seq(lit(c), col(c).cast("string"))): _*),
       (_, v) => v.isNotNull)
     // same keying rule as dbzParsed / AvroWire.fromDebezium: numeric keys
     // keep their value, string PKs hash via xxhash64 (seed 42), a NULL

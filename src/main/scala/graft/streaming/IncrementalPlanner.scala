@@ -19,7 +19,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * yield exactly one.
   */
 case class PlannedContrib(groups: Seq[String], slots: Seq[Double], tsUs: Long, seq: Long, live: Boolean,
-    svals: Seq[String] = Nil)
+    svals: Seq[String] = Nil) extends LwwState
 
 /** Signed per-group delta of a planned aggregate view (one slot per
   * aggregate in the SELECT list; `d_keys` tracks live-row count).
@@ -106,7 +106,7 @@ case class HolisticGroupRow(group: String, live_rows: Long, sums: Seq[Double],
     strs: Seq[String], tsUs: Long, seq: Long)
 
 /** A key's current projected row in a PLANNED select-where view. */
-case class PlannedRow(proj: Map[String, String], tsUs: Long, seq: Long, live: Boolean)
+case class PlannedRow(proj: Map[String, String], tsUs: Long, seq: Long, live: Boolean) extends LwwState
 
 /** One change of a planned non-aggregate view's changefeed. */
 case class PlannedRowChange(op: String, key: Long, proj: Map[String, String], ts_us: Long, seq: Long)
@@ -117,7 +117,7 @@ case class PlannedRowChange(op: String, key: Long, proj: Map[String, String], ts
   * compares against when the family changes shape.
   */
 case class PlannedGenRow(scalars: Map[String, String], elems: Seq[String],
-    tsUs: Long, seq: Long, live: Boolean)
+    tsUs: Long, seq: Long, live: Boolean) extends LwwState
 
 /** One live contribution inside a planned SESSION-window view's group
   * state: the row's event time and its aggregate slot values.
@@ -149,7 +149,7 @@ case class SessionRow(group: String, startUs: Long, endUs: Long, live_rows: Long
   * row's partition key, its ORDER BY values, and its projected payload.
   */
 case class RankedContrib(group: String, sortVals: Seq[String], proj: Map[String, String],
-    tsUs: Long, seq: Long, live: Boolean)
+    tsUs: Long, seq: Long, live: Boolean) extends LwwState
 
 /** Stage-1 → stage-2 wire of a planned ranked view: one key's
   * entry/exit/change within one partition.
@@ -214,11 +214,13 @@ case class MixedWinState(entries: Map[String, Map[String, String]],
   * DISTINCT forms, tumbling/sliding/session windows), set operations,
   * derived tables, scalar/IN/EXISTS subqueries (correlated equi forms
   * included), ranked window functions, HAVING, and ORDER BY..LIMIT —
-  * into the retraction-capable incremental dataflows this package
-  * already maintains by hand ([[IncrementalView]] for grouped
-  * aggregates, [[JoinView]] for the join shapes), so a user writes the
-  * VIEW as SQL and gets its continuously-maintained changefeed without
-  * hand-assembling folds. This is the `query.changes()`
+  * into retraction-capable incremental dataflows: the join shapes wire
+  * [[JoinView]]'s dataflows, while aggregate, row, generator and ranked
+  * views run the planner's own two-stage folds, whose stage 1 is the
+  * same per-key LWW apply as every hand-built view
+  * ([[CdcMaterializer.applyLww]]). A user writes the VIEW as SQL and
+  * gets its continuously-maintained changefeed without hand-assembling
+  * folds. This is the `query.changes()`
   * abstraction of the RethinkDB/Materialize engine class, built
   * Spark-first: the SQL is parsed by Spark's own Catalyst parser and
   * the plan pattern-matched into `flatMapGroupsWithState` stages.
@@ -253,9 +255,10 @@ case class MixedWinState(entries: Map[String, Map[String, String]],
   * emits `<name>_start_us` / `<name>_end_us` epoch-micros columns.
   *
   * Scale shape: identical to the hand-built views — stage-1 state is
-  * sharded by change key, stage-2 by group / join key; nothing here
-  * adds a shuffle or a driver-side loop beyond what those dataflows
-  * already pay, because `materialize` only WIRES them.
+  * sharded by change key, stage-2 by group / join key. The planner's
+  * own folds keep that two-stage layout and the join shapes only wire
+  * [[JoinView]]'s, so no shuffle or driver-side loop is added beyond
+  * what those two stages pay.
   */
 object IncrementalPlanner {
 
@@ -2163,8 +2166,9 @@ object IncrementalPlanner {
 
   /** One OutCol → its output Column, shared by every aggregate path;
     * `slotCol` supplies the path's slot access (descaled for the
-    * signed-delta fold, raw for the keyed and session folds).
-    * [[SessionOut]] expands to two columns in the session path only.
+    * signed-delta fold, raw for the keyed and session folds). The
+    * path-owned columns ([[SessionOut]] expands to two columns in the
+    * session path) throw here: their path's render must claim them.
     */
   private def outColExpr(oc: OutCol, slotCol: Int => Column, groupParts: Column): Column = oc match {
     case GroupOut(idx, name) =>
@@ -2251,8 +2255,17 @@ object IncrementalPlanner {
       val sign = lit(1.0) - lit(2.0) * pmod(slotCol(neg), lit(2.0))
       when(slotCol(cnt) > 0.0,
         when(slotCol(zero) > 0.0, lit(0.0)).otherwise(sign * exp(slotCol(lg)))).as(name)
-    case SessionOut(_) =>
-      throw new IllegalStateException("SessionOut expands to start/end columns in the session path")
+    // path-owned columns render only in their own path's AggPath.render
+    case oc @ (_: SessionOut | _: DistinctOut | _: DdqPercOut | _: PercOut | _: ListAggOut |
+        _: ArgExtOut | _: ModeOut | _: BitOut) =>
+      val path = oc match {
+        case _: SessionOut  => "session"
+        case _: DistinctOut => "session or approx (HLL)"
+        case _: DdqPercOut  => "DDSketch"
+        case _              => "holistic"
+      }
+      throw new IllegalStateException(
+        s"${oc.getClass.getSimpleName} '${oc.name}' must be rendered by the $path path's AggPath.render")
   }
 
   private def outName(ne: Expression, fallback: String): String = ne match {
@@ -3298,7 +3311,7 @@ object IncrementalPlanner {
       key: Long,
       changes: Iterator[Change],
       state: GroupState[PlannedContrib]): Iterator[PlannedKeyChange] = {
-    val (before, cur) = applyLww(extract)(changes, state)
+    val (before, cur) = applyContrib(extract)(changes, state)
     val bOpt = before.filter(_.live)
     val aOpt = cur.filter(_.live)
     def same(x: PlannedContrib, y: PlannedContrib) =
@@ -3478,7 +3491,7 @@ object IncrementalPlanner {
     // one sketch per DISTINCT operand sql — approx_percentile(x, 0.5)
     // and approx_percentile(x, 0.95) share x's sketch; the operands ride
     // AFTER the plain slots in the contribution (NaN = SQL NULL, excluded
-    // from the sketch), so [[applyLww]]'s stored PlannedContrib carries
+    // from the sketch), so [[applyContrib]]'s stored PlannedContrib carries
     // what a later retraction must un-bucket
     val qSqls = scala.collection.mutable.ArrayBuffer.empty[String]
     compileGrouped(spark, agg, feeds, ttl, having, keepMeta, AggPath(deltas = true,
@@ -3522,7 +3535,7 @@ object IncrementalPlanner {
       key: Long,
       changes: Iterator[Change],
       state: GroupState[PlannedContrib]): Iterator[DdqDelta] = {
-    val (before, cur) = applyLww(extract)(changes, state)
+    val (before, cur) = applyContrib(extract)(changes, state)
     val net = scala.collection.mutable.LinkedHashMap
       .empty[String, (Long, Array[Double], Array[scala.collection.mutable.Map[Long, Long]])]
     def add(g: String, dk: Long, vs: Seq[Double], sign: Double): Unit = {
@@ -3773,36 +3786,28 @@ object IncrementalPlanner {
           val out = inner(key, changes, state)
           state.getOption.foreach { s =>
             if (deadOf(s)) state.setTimeoutTimestamp(
-              math.max(tsOf(s) / 1000L + ttlMs, state.getCurrentWatermarkMs + 1L))
+              math.max(tsOf(s) / 1000L + ttlMs, state.getCurrentWatermarkMs() + 1L))
           }
           out
         }
     }
 
-  /** Shared stage-1 LWW apply: fold the batch into the key's
-    * contribution in `(tsUs, seq)` order, update the store, return
-    * (pre-batch, post-batch) for the caller to diff.
+  /** Shared stage-1 apply of the aggregate paths: fold the batch into
+    * the key's contribution ([[CdcMaterializer.applyLww]]), update the
+    * store, return (pre-batch, post-batch) for the caller to diff.
     */
-  private def applyLww(extract: Change => Option[(Seq[String], Seq[Double], Seq[String])])(
+  private def applyContrib(extract: Change => Option[(Seq[String], Seq[Double], Seq[String])])(
       changes: Iterator[Change],
       state: GroupState[PlannedContrib]): (Option[PlannedContrib], Option[PlannedContrib]) = {
     val before = state.getOption
-    var cur    = before
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs  = CdcMaterializer.micros(c.ts)
-      val stale = cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur =
-          if (c.op == "delete") Some(PlannedContrib(Nil, Nil, tsUs, c.seq, live = false))
-          else extract(c) match {
-            // empty group list (NULL window time) = contributes nowhere
-            case Some((gs, vs, sv)) => Some(PlannedContrib(gs, vs, tsUs, c.seq, live = gs.nonEmpty, sv))
-            case None               => Some(PlannedContrib(Nil, Nil, tsUs, c.seq, live = false))
-          }
+    val cur = CdcMaterializer.applyLww(before, changes) { (_, c, tsUs) =>
+      if (c.op == "delete") PlannedContrib(Nil, Nil, tsUs, c.seq, live = false)
+      else extract(c) match {
+        // empty group list (NULL window time) = contributes nowhere
+        case Some((gs, vs, sv)) => PlannedContrib(gs, vs, tsUs, c.seq, live = gs.nonEmpty, sv)
+        case None               => PlannedContrib(Nil, Nil, tsUs, c.seq, live = false)
       }
     }
-    // first-seen dead state persists too (JoinView.factSubs discipline):
-    // the tombstone's position stale-drops later out-of-order older upserts.
     cur.foreach(state.update)
     (before, cur)
   }
@@ -3816,7 +3821,7 @@ object IncrementalPlanner {
       key: Long,
       changes: Iterator[Change],
       state: GroupState[PlannedContrib]): Iterator[PlannedDelta] = {
-    val (before, cur) = applyLww(extract)(changes, state)
+    val (before, cur) = applyContrib(extract)(changes, state)
     val net = scala.collection.mutable.LinkedHashMap.empty[String, (Long, Array[Double])]
     def add(g: String, dk: Long, vs: Seq[Double], sign: Double): Unit = {
       val n = vs.length
@@ -3856,7 +3861,7 @@ object IncrementalPlanner {
       key: Long,
       changes: Iterator[Change],
       state: GroupState[PlannedContrib]): Iterator[PlannedKeyChange] = {
-    val (before, cur) = applyLww(extract)(changes, state)
+    val (before, cur) = applyContrib(extract)(changes, state)
     val (posTs, posSeq) = cur.map(c => (c.tsUs, c.seq)).getOrElse((0L, 0L))
     // per-group set diff (a sliding-window key lives in several groups):
     // leave groups it left, enter groups it entered, re-emit groups it
@@ -3979,20 +3984,13 @@ object IncrementalPlanner {
       changes: Iterator[Change],
       state: GroupState[PlannedRow]): Iterator[PlannedRowChange] = {
     val before = state.getOption
-    var cur    = before
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs  = CdcMaterializer.micros(c.ts)
-      val stale = cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur =
-          if (c.op == "delete") Some(PlannedRow(Map.empty, tsUs, c.seq, live = false))
-          else extract(c) match {
-            case Some(m) => Some(PlannedRow(m, tsUs, c.seq, live = true))
-            case None    => Some(PlannedRow(Map.empty, tsUs, c.seq, live = false))
-          }
+    val cur = CdcMaterializer.applyLww(before, changes) { (_, c, tsUs) =>
+      if (c.op == "delete") PlannedRow(Map.empty, tsUs, c.seq, live = false)
+      else extract(c) match {
+        case Some(m) => PlannedRow(m, tsUs, c.seq, live = true)
+        case None    => PlannedRow(Map.empty, tsUs, c.seq, live = false)
       }
     }
-    // first-seen dead state persists too (JoinView.factSubs discipline).
     cur.foreach(state.update)
     val (posTs, posSeq) = cur.map(r => (r.tsUs, r.seq)).getOrElse((0L, 0L))
     (before.filter(_.live), cur.filter(_.live)) match {
@@ -4157,17 +4155,11 @@ object IncrementalPlanner {
       changes: Iterator[Change],
       state: GroupState[PlannedGenRow]): Iterator[PlannedRowChange] = {
     val before = state.getOption
-    var cur    = before
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs  = CdcMaterializer.micros(c.ts)
-      val stale = cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur =
-          if (c.op == "delete") Some(PlannedGenRow(Map.empty, Nil, tsUs, c.seq, live = false))
-          else extract(c) match {
-            case Some((m, es)) => Some(PlannedGenRow(m, es, tsUs, c.seq, live = true))
-            case None          => Some(PlannedGenRow(Map.empty, Nil, tsUs, c.seq, live = false))
-          }
+    val cur = CdcMaterializer.applyLww(before, changes) { (_, c, tsUs) =>
+      if (c.op == "delete") PlannedGenRow(Map.empty, Nil, tsUs, c.seq, live = false)
+      else extract(c) match {
+        case Some((m, es)) => PlannedGenRow(m, es, tsUs, c.seq, live = true)
+        case None          => PlannedGenRow(Map.empty, Nil, tsUs, c.seq, live = false)
       }
     }
     cur.foreach(state.update)
@@ -4675,7 +4667,7 @@ object IncrementalPlanner {
             valFnsSeq.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)),
           cols.flatMap { case (n, f) => f(env).map(v => n -> String.valueOf(v)) }.toMap))
       }
-      val prefix = i + "\u0001"
+      val prefix = i.toString + "\u0001"
       src.changes
         .groupByKey(_.key)
         .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(rankedKeyFold(extract))
@@ -4715,20 +4707,13 @@ object IncrementalPlanner {
       changes: Iterator[Change],
       state: GroupState[RankedContrib]): Iterator[RankedKeyChange] = {
     val before = state.getOption
-    var cur    = before
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs  = CdcMaterializer.micros(c.ts)
-      val stale = cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur =
-          if (c.op == "delete") Some(RankedContrib("", Nil, Map.empty, tsUs, c.seq, live = false))
-          else extract(c) match {
-            case Some((g, sv, m)) => Some(RankedContrib(g, sv, m, tsUs, c.seq, live = true))
-            case None             => Some(RankedContrib("", Nil, Map.empty, tsUs, c.seq, live = false))
-          }
+    val cur = CdcMaterializer.applyLww(before, changes) { (_, c, tsUs) =>
+      if (c.op == "delete") RankedContrib("", Nil, Map.empty, tsUs, c.seq, live = false)
+      else extract(c) match {
+        case Some((g, sv, m)) => RankedContrib(g, sv, m, tsUs, c.seq, live = true)
+        case None             => RankedContrib("", Nil, Map.empty, tsUs, c.seq, live = false)
       }
     }
-    // first-seen dead state persists too (JoinView.factSubs discipline).
     cur.foreach(state.update)
     val (posTs, posSeq) = cur.map(r => (r.tsUs, r.seq)).getOrElse((0L, 0L))
     val b = before.filter(_.live)
@@ -5359,8 +5344,8 @@ object IncrementalPlanner {
     * monotone-total [[TopKView]] instead. Sort values coerce
     * numerically when they parse as numbers, else lexicographic; ties
     * break by group hash for determinism.
-    */
-  /** `maxGroups` bounds the global fold's state: the fold RAISES when
+    *
+    * `maxGroups` bounds the global fold's state: the fold RAISES when
     * the live-group count would exceed it, naming the HAVING-prefilter /
     * TopKView alternatives — an unbounded group space must fail loudly
     * at the state boundary, not OOM one shard silently at scale.
@@ -5422,9 +5407,6 @@ object IncrementalPlanner {
     }
   }
 
-  /** Stable 64-bit FNV-1a hash of the group string — the change key of
-    * an aggregate view's changefeed (group identity as a Long key).
-    */
   /** FNV-1a 64 content addresses — the one shared implementation
     * ([[JoinView.fnv64]]); two copies would let a future tweak silently
     * diverge sibling dataflows' addresses.

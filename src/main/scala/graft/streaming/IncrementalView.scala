@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * currently counts toward, with what value, at which commit position.
   * `live=false` after a delete (the key contributes nothing).
   */
-case class Contribution(group: String, value: Double, tsUs: Long, seq: Long, live: Boolean)
+case class Contribution(group: String, value: Double, tsUs: Long, seq: Long, live: Boolean) extends LwwState
 
 /** Signed delta a micro-batch applies to one group of the derived view. */
 case class GroupDelta(group: String, d_keys: Long, d_value: Double)
@@ -55,33 +55,21 @@ case class GroupExtremesState(contribs: Map[Long, Double])
   */
 object IncrementalView {
 
-  /** Stage-1 fold: apply the batch's changes to the key's contribution in
-    * `(tsUs, seq)` order (same batching-invariant total order as
-    * [[CdcMaterializer.fold]]), then emit the net signed delta between
-    * the pre-batch and post-batch contribution, per affected group.
-    */
-  /** Shared stage-1 fold: apply the batch to the key's [[Contribution]] in
-    * `(tsUs, seq)` order, update the store, and return the (pre-batch,
-    * post-batch) contributions for the caller to diff.
+  /** Shared stage-1 fold: apply the batch to the key's [[Contribution]]
+    * ([[CdcMaterializer.applyLww]]), update the store, and return the
+    * (pre-batch, post-batch) contributions for the caller to diff.
     */
   private def applyBatch(groupKey: String)(
       changes: Iterator[Change],
       state: GroupState[Contribution]): (Option[Contribution], Option[Contribution]) = {
     val before = state.getOption
-    var cur    = before
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs  = CdcMaterializer.micros(c.ts)
-      val stale = cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur = c.op match {
-          case "delete" =>
-            Some(Contribution(cur.map(_.group).getOrElse(""), 0.0, tsUs, c.seq, live = false))
-          case _ =>
-            // malformed numeric payloads contribute 0 instead of killing
-            // the task — a poison change must not stall the whole view
-            val v = c.payload.get("value").flatMap(s => scala.util.Try(s.toDouble).toOption)
-            Some(Contribution(c.payload.getOrElse(groupKey, ""), v.getOrElse(0.0), tsUs, c.seq, live = true))
-        }
+    val cur = CdcMaterializer.applyLww(before, changes) { (prev, c, tsUs) =>
+      if (c.op == "delete") Contribution(prev.map(_.group).getOrElse(""), 0.0, tsUs, c.seq, live = false)
+      else {
+        // malformed numeric payloads contribute 0 instead of killing
+        // the task — a poison change must not stall the whole view
+        val v = c.payload.get("value").flatMap(s => scala.util.Try(s.toDouble).toOption)
+        Contribution(c.payload.getOrElse(groupKey, ""), v.getOrElse(0.0), tsUs, c.seq, live = true)
       }
     }
     // A delete for a never-seen key has nothing to retract and would only
@@ -93,6 +81,11 @@ object IncrementalView {
     (before, cur)
   }
 
+  /** Stage-1 fold: apply the batch's changes to the key's contribution
+    * (same batching-invariant `(tsUs, seq)` order as
+    * [[CdcMaterializer.fold]]), then emit the net signed delta between
+    * the pre-batch and post-batch contribution, per affected group.
+    */
   def deltas(groupKey: String)(
       key: Long,
       changes: Iterator[Change],
@@ -127,7 +120,7 @@ object IncrementalView {
       state.getOption.foreach { s =>
         // timeout must sit beyond the current watermark or Spark rejects it
         if (!s.live) state.setTimeoutTimestamp(
-          math.max(s.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs + 1L))
+          math.max(s.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs() + 1L))
       }
       out
     }

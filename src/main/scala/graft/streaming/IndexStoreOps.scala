@@ -1,9 +1,9 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.functions.{col, lit, pmod, row_number}
+import org.apache.spark.sql.functions.{broadcast, col, lit, max_by, pmod, row_number, struct, sum, when}
 import org.apache.spark.sql.types.StructType
 
 import graft.sources.Compaction
@@ -215,6 +215,119 @@ object IndexStoreOps {
     afterSwap(out)
     deleteFile(spark, retrainMarker(root))
   }
+
+  // ---- the IVF/PQ staleness (drift) log -----------------------------
+
+  /** `root/drift/`: one row per folded batch `(batch_id, kind, n_vecs,
+    * mean_err, moved, had_old, base_seq)` plus a `baseline` row per
+    * create/retrain — the quantization (IVF) or reconstruction (PQ)
+    * error at the pinned quantizer and the assignment churn.
+    */
+  private def driftDir(root: String) = s"$root/drift"
+
+  /** Count of baselines already recorded — the ordinal of the CURRENT
+    * baseline (r16): every drift row carries `base_seq`, so the report
+    * picks the newest baseline deterministically (the r15 rows were all
+    * stamped `batch_id = -1` and the pick among retrains was arbitrary)
+    * and cumulative-churn accounting scopes to rows measured AT that
+    * baseline without coupling to the stream's epoch-id space.
+    */
+  private def baselineCount(spark: SparkSession, root: String): Long =
+    if (!isDir(spark, driftDir(root))) 0L
+    else spark.read.parquet(driftDir(root)).filter(col("kind") === "baseline").count()
+
+  private def appendDrift(spark: SparkSession, root: String, batchId: Long,
+      kind: String, nVecs: Long, meanErr: Double, baseSeq: Long,
+      moved: Long = 0L, hadOld: Long = 0L): Unit = {
+    import spark.implicits._
+    Seq((batchId, kind, nVecs, meanErr, moved, hadOld, baseSeq))
+      .toDF("batch_id", "kind", "n_vecs", "mean_err", "moved", "had_old", "base_seq")
+      .coalesce(1)
+      .write.mode(SaveMode.Append).parquet(driftDir(root))
+  }
+
+  /** Record a new baseline `(n, mean error)` (create, or after a
+    * retrain's swap): the cumulative signals reset to it.
+    */
+  private[streaming] def appendBaseline(spark: SparkSession, root: String, base: Row): Unit =
+    appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
+      baseSeq = baselineCount(spark, root))
+
+  /** Record one folded batch's drift row, measured at the current baseline. */
+  private[streaming] def appendBatchDrift(spark: SparkSession, root: String, batchId: Long,
+      nVecs: Long, meanErr: Double, moved: Long, hadOld: Long): Unit =
+    appendDrift(spark, root, batchId, "batch", nVecs, meanErr,
+      baseSeq = baselineCount(spark, root) - 1L, moved = moved, hadOld = hadOld)
+
+  /** The staleness surface over the drift log (the family checks its
+    * guard first and passes its live `data` store): every drift row with
+    * its ratio over the CURRENT baseline (the highest `base_seq`
+    * baseline — a retrain records the next one, so the pick is
+    * deterministic across any number of retrains), plus the CUMULATIVE
+    * signals the retrain policy actually triggers on (r16, the
+    * batch-size-weighted form):
+    *
+    *   - `cum_moved` / `cum_churn_frac`: running moved-cell total over
+    *     the batches measured at the current baseline, ÷ live store
+    *     size — a small all-moved batch reads `churn_frac = 1.0` but
+    *     barely moves `cum_churn_frac`, which is why the per-batch
+    *     column is a diagnostic and the cumulative one is the trigger;
+    *   - `cum_err_ratio`: batch-weighted mean error since the baseline
+    *     ÷ baseline error (the expansive-drift trigger).
+    *
+    * Replay-safe: rows dedupe per (kind, batch_id, base_seq) keeping
+    * the first application's churn evidence (a restart-replayed batch
+    * re-logs with its effects already applied, so its `moved` reads 0 —
+    * the max_by keeps the original). The drift log is one row per
+    * batch, so the window over it is driver-scale by construction.
+    */
+  private[streaming] def stalenessReport(spark: SparkSession, root: String, data: DataFrame): DataFrame = {
+    val raw = spark.read.parquet(driftDir(root))
+    val cols = raw.columns.toSeq
+    val d = raw.groupBy("kind", "batch_id", "base_seq")
+      .agg(max_by(struct(cols.map(col): _*),
+        struct(col("moved"), col("had_old"), col("n_vecs"))).as("r"))
+      .select(cols.map(c => col(s"r.$c").as(c)): _*)
+    val baseline = d.filter(col("kind") === "baseline")
+      .orderBy(col("base_seq").desc).limit(1)
+      .select(col("mean_err").as("baseline_err"), col("base_seq").as("cur_base"))
+    val storeSize = data.count()
+    val w = Window.partitionBy("base_seq").orderBy("batch_id")
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    d.crossJoin(broadcast(baseline))
+      .withColumn("drift_ratio", col("mean_err") / col("baseline_err"))
+      .withColumn("churn_frac",
+        when(col("had_old") > 0, col("moved").cast("double") / col("had_old")))
+      .withColumn("__cur", col("kind") === "batch" && col("base_seq") === col("cur_base"))
+      .withColumn("cum_moved",
+        when(col("__cur"), sum(when(col("kind") === "batch", col("moved")).otherwise(0L)).over(w)))
+      .withColumn("store_size", lit(storeSize))
+      .withColumn("cum_churn_frac",
+        when(col("__cur") && lit(storeSize > 0L),
+          col("cum_moved").cast("double") / lit(storeSize.toDouble)))
+      .withColumn("cum_err_ratio",
+        when(col("__cur"),
+          sum(when(col("kind") === "batch", col("mean_err") * col("n_vecs")).otherwise(lit(0.0))).over(w) /
+            sum(when(col("kind") === "batch", col("n_vecs")).otherwise(0L)).over(w) /
+            col("baseline_err")))
+      .select("batch_id", "kind", "n_vecs", "mean_err", "drift_ratio",
+        "moved", "had_old", "churn_frac", "base_seq", "cum_moved",
+        "store_size", "cum_churn_frac", "cum_err_ratio")
+  }
+
+  /** The retrain policies' breach test: the newest batch measured at the
+    * current baseline has a cumulative churn fraction above `churnFrac`
+    * or a cumulative error ratio above `errRatio`.
+    */
+  private[streaming] def driftBreached(report: DataFrame, churnFrac: Double, errRatio: Double): Boolean =
+    report
+      .filter(col("kind") === "batch" && col("cum_moved").isNotNull)
+      .orderBy(col("base_seq").desc, col("batch_id").desc).limit(1)
+      .collect()
+      .exists { r =>
+        def signal(c: String) = if (r.isNullAt(r.fieldIndex(c))) 0.0 else r.getDouble(r.fieldIndex(c))
+        signal("cum_churn_frac") > churnFrac || signal("cum_err_ratio") > errRatio
+      }
 
   /** One leaf directory's census row. */
   final case class LeafCensus(dir: String, files: Long, bytes: Long, flagged: Boolean)

@@ -71,8 +71,7 @@ object IvfIndexView extends LocatorStore {
     StructField("tsUs", LongType), StructField("seq", LongType),
     StructField("live", BooleanType), StructField("cid", IntegerType)))
 
-  private def centDir(root: String)  = s"$root/centroids"
-  private def driftDir(root: String) = s"$root/drift"
+  private def centDir(root: String) = s"$root/centroids"
 
   override def guard(spark: SparkSession, root: String): Unit =
     IndexStoreOps.requireNoRetrain(spark, root)
@@ -94,33 +93,12 @@ object IvfIndexView extends LocatorStore {
       .withColumn("score", lit(2L) * dotLong(col("xi"), col("ci")) - col("c2"))
       .groupBy("vec_id")
       .agg(max_by(
-        struct((rows.columns.filterNot(_ == "vec_id").map(col) ++
+        struct((rows.columns.toSeq.filterNot(_ == "vec_id").map(col) ++
           Seq((col("x2") - col("score")).as("qerr"), col("cid"))): _*),
         struct(col("score"), (-col("cid")).as("ncid"))).as("best"))
       .select((Seq(col("vec_id")) ++
         rows.columns.filterNot(c => c == "vec_id" || c == "xi").map(c => col(s"best.$c").as(c)) ++
         Seq(col("best.qerr").as("qerr"), col("best.cid").cast("int").as("cid"))): _*)
-
-  /** Count of baselines already recorded — the ordinal of the CURRENT
-    * baseline (r16): every drift row carries `base_seq`, so the report
-    * picks the newest baseline deterministically (the r15 rows were all
-    * stamped `batch_id = -1` and the pick among retrains was arbitrary)
-    * and cumulative-churn accounting scopes to rows measured AT that
-    * baseline without coupling to the stream's epoch-id space.
-    */
-  private def baselineCount(spark: SparkSession, root: String): Long =
-    if (!IndexStoreOps.isDir(spark, driftDir(root))) 0L
-    else spark.read.parquet(driftDir(root)).filter(col("kind") === "baseline").count()
-
-  private def appendDrift(spark: SparkSession, root: String, batchId: Long,
-      kind: String, nVecs: Long, meanErr: Double, baseSeq: Long,
-      moved: Long = 0L, hadOld: Long = 0L): Unit = {
-    import spark.implicits._
-    Seq((batchId, kind, nVecs, meanErr, moved, hadOld, baseSeq))
-      .toDF("batch_id", "kind", "n_vecs", "mean_err", "moved", "had_old", "base_seq")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(driftDir(root))
-  }
 
   /** CREATE the index: train the pinned quantizer on `bootstrap`
     * (`vec_id`, `embedding`) with the fixed-point Lloyd, persist the
@@ -141,8 +119,7 @@ object IvfIndexView extends LocatorStore {
       .withColumn("qerr", col("x2") - (lit(2L) * dotLong(col("xi"), col("ci")) - col("c2")))
       .agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"))
       .collect().head
-    appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
-      baseSeq = baselineCount(spark, root))
+    IndexStoreOps.appendBaseline(spark, root, base)
   }
 
   /** Fold one micro-batch of changes (`op` ∈ I/U/D, `vec_id`,
@@ -190,8 +167,8 @@ object IvfIndexView extends LocatorStore {
       LocatorStore.DataStep(touched, replaceKeys(eff, ups),
         locate = _.join(ups.select(col("vec_id"), col("cid")), Seq("vec_id"), "left"),
         commit = () => if (d.getLong(1) > 0L)
-          appendDrift(spark, root, batchId, "batch", d.getLong(1), d.getDouble(2),
-            baseSeq = baselineCount(spark, root) - 1L, moved = d.getLong(3), hadOld = d.getLong(4)))
+          IndexStoreOps.appendBatchDrift(spark, root, batchId, d.getLong(1), d.getDouble(2),
+            moved = d.getLong(3), hadOld = d.getLong(4)))
     }
 
   /** The self-running retrain policy (#366, r16 — closes the loop the
@@ -226,17 +203,7 @@ object IvfIndexView extends LocatorStore {
     * a retrain sees the fresh baseline (cumulative signals ≈ 0).
     */
   def maybeRetrain(spark: SparkSession, root: String, policy: RetrainPolicy): Boolean = {
-    val last = stalenessReport(spark, root)
-      .filter(col("kind") === "batch" && col("cum_moved").isNotNull)
-      .orderBy(col("base_seq").desc, col("batch_id").desc).limit(1)
-      .collect()
-    val breached = last.exists { r =>
-      val churn = if (r.isNullAt(r.fieldIndex("cum_churn_frac"))) 0.0
-                  else r.getDouble(r.fieldIndex("cum_churn_frac"))
-      val err = if (r.isNullAt(r.fieldIndex("cum_err_ratio"))) 0.0
-                else r.getDouble(r.fieldIndex("cum_err_ratio"))
-      churn > policy.churnFrac || err > policy.errRatio
-    }
+    val breached = IndexStoreOps.driftBreached(stalenessReport(spark, root), policy.churnFrac, policy.errRatio)
     if (breached) retrain(spark, root, policy.k, policy.iters)
     breached
   }
@@ -264,58 +231,12 @@ object IvfIndexView extends LocatorStore {
       .select(col("cid").cast("int").as("cid"), col("vec_id"), col("embedding"), col("norm"))
 
   /** The staleness surface: every drift row with its ratio over the
-    * CURRENT baseline (the highest `base_seq` baseline — [[retrain]]
-    * records the next one, so the pick is deterministic across any
-    * number of retrains), plus the CUMULATIVE signals the retrain
-    * policy actually triggers on (r16, the batch-size-weighted form):
-    *
-    *   - `cum_moved` / `cum_churn_frac`: running moved-cell total over
-    *     the batches measured at the current baseline, ÷ live store
-    *     size — a small all-moved batch reads `churn_frac = 1.0` but
-    *     barely moves `cum_churn_frac`, which is why the per-batch
-    *     column is a diagnostic and the cumulative one is the trigger;
-    *   - `cum_err_ratio`: batch-weighted mean error since the baseline
-    *     ÷ baseline error (the expansive-drift trigger).
-    *
-    * Replay-safe: rows dedupe per (kind, batch_id, base_seq) keeping
-    * the first application's churn evidence (a restart-replayed batch
-    * re-logs with its effects already applied, so its `moved` reads 0 —
-    * the max_by keeps the original). The drift log is one row per
-    * batch, so the window over it is driver-scale by construction.
+    * current baseline plus the cumulative signals [[RetrainPolicy]]
+    * triggers on ([[IndexStoreOps.stalenessReport]]).
     */
   def stalenessReport(spark: SparkSession, root: String): DataFrame = {
     guard(spark, root)
-    val raw = spark.read.parquet(driftDir(root))
-    val cols = raw.columns.toSeq
-    val d = raw.groupBy("kind", "batch_id", "base_seq")
-      .agg(max_by(struct(cols.map(col): _*),
-        struct(col("moved"), col("had_old"), col("n_vecs"))).as("r"))
-      .select(cols.map(c => col(s"r.$c").as(c)): _*)
-    val baseline = d.filter(col("kind") === "baseline")
-      .orderBy(col("base_seq").desc).limit(1)
-      .select(col("mean_err").as("baseline_err"), col("base_seq").as("cur_base"))
-    val storeSize = readData(spark, root).count()
-    val w = Window.partitionBy("base_seq").orderBy("batch_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d.crossJoin(broadcast(baseline))
-      .withColumn("drift_ratio", col("mean_err") / col("baseline_err"))
-      .withColumn("churn_frac",
-        when(col("had_old") > 0, col("moved").cast("double") / col("had_old")))
-      .withColumn("__cur", col("kind") === "batch" && col("base_seq") === col("cur_base"))
-      .withColumn("cum_moved",
-        when(col("__cur"), sum(when(col("kind") === "batch", col("moved")).otherwise(0L)).over(w)))
-      .withColumn("store_size", lit(storeSize))
-      .withColumn("cum_churn_frac",
-        when(col("__cur") && lit(storeSize > 0L),
-          col("cum_moved").cast("double") / lit(storeSize.toDouble)))
-      .withColumn("cum_err_ratio",
-        when(col("__cur"),
-          sum(when(col("kind") === "batch", col("mean_err") * col("n_vecs")).otherwise(lit(0.0))).over(w) /
-            sum(when(col("kind") === "batch", col("n_vecs")).otherwise(0L)).over(w) /
-            col("baseline_err")))
-      .select("batch_id", "kind", "n_vecs", "mean_err", "drift_ratio",
-        "moved", "had_old", "churn_frac", "base_seq", "cum_moved",
-        "store_size", "cum_churn_frac", "cum_err_ratio")
+    IndexStoreOps.stalenessReport(spark, root, readData(spark, root))
   }
 
   /** RETRAIN: the explicit re-centering verb — fixed-point Lloyd over
@@ -355,10 +276,7 @@ object IvfIndexView extends LocatorStore {
       keys.write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(staged(keysDir(root)))
       centroids.write.mode(SaveMode.Overwrite).parquet(staged(centDir(root)))
       base
-    } { base =>
-      appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
-        baseSeq = baselineCount(spark, root))
-    }
+    }(IndexStoreOps.appendBaseline(spark, root, _))
 
   /** Probe the LIVE index: top-k cosine neighbors per query row
     * `(query_id, embedding)` at the pinned centroids — s04's nprobe

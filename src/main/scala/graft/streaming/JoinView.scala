@@ -26,9 +26,18 @@ object JoinView {
 
   /** A change tagged with which feed it came from ("L"/"R"). */
   case class Sided(side: String, op: String, key: Long, ts: java.sql.Timestamp, payload: Map[String, String], seq: Long)
+      extends LwwEvent
 
   /** Latest state of one side of the pair. */
-  case class SideState(tsUs: Long, seq: Long, payload: Map[String, String], deleted: Boolean)
+  case class SideState(tsUs: Long, seq: Long, payload: Map[String, String], deleted: Boolean) extends LwwState
+
+  /** One side's LWW step: a delete parks a tombstone, any other op puts
+    * the change's after-image.
+    */
+  private def sideStep(prev: Option[SideState], e: LwwEvent, tsUs: Long): SideState = {
+    val deleted = e.op == "delete"
+    SideState(tsUs, e.seq, if (deleted) Map.empty else e.payload, deleted)
+  }
 
   case class JoinPairState(left: Option[SideState], right: Option[SideState], joined: Boolean)
 
@@ -56,20 +65,10 @@ object JoinView {
     * the key.
     */
   def fold(preserveLeft: Boolean, preserveRight: Boolean)(key: Long, changes: Iterator[Sided], state: GroupState[JoinPairState]): Iterator[JoinedChange] = {
-    val s0 = state.getOption.getOrElse(JoinPairState(None, None, joined = false))
-    var l  = s0.left
-    var r  = s0.right
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs = CdcMaterializer.micros(c.ts)
-      val cur  = if (c.side == "L") l else r
-      if (!cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))) {
-        val next = Some(SideState(
-          tsUs, c.seq,
-          if (c.op == "delete") Map.empty else c.payload,
-          c.op == "delete"))
-        if (c.side == "L") l = next else r = next
-      }
-    }
+    val s0  = state.getOption.getOrElse(JoinPairState(None, None, joined = false))
+    val evs = changes.toSeq
+    val l   = CdcMaterializer.applyLww(s0.left, evs.iterator.filter(_.side == "L"))(sideStep)
+    val r   = CdcMaterializer.applyLww(s0.right, evs.iterator.filter(_.side == "R"))(sideStep)
     val liveL = l.filter(!_.deleted)
     val liveR = r.filter(!_.deleted)
     // the triggering commit position: the max position across both sides
@@ -145,13 +144,14 @@ object JoinView {
 
   /** Hop-1 state: the fact's latest row. */
   case class FactState(tsUs: Long, seq: Long, fk: Long, payload: Map[String, String], live: Boolean)
+      extends LwwState
 
   /** Event routed to a dim-key group: a dim change (`kind="dim"`) or a
     * fact (un)subscription (`kind="sub"/"unsub"`, `moved` marking FK-move
     * legs whose retraction hop 2 must suppress).
     */
   case class FkEvent(fk: Long, kind: String, factKey: Long, op: String,
-      ts: java.sql.Timestamp, payload: Map[String, String], seq: Long, moved: Boolean)
+      ts: java.sql.Timestamp, payload: Map[String, String], seq: Long, moved: Boolean) extends LwwEvent
 
   /** Hop-2 state: the dim row plus subscribed fact payloads. */
   case class FkState(dim: Option[SideState], facts: Map[Long, Map[String, String]])
@@ -181,25 +181,13 @@ object JoinView {
     def parseFk(p: Map[String, String]): Option[Long] =
       p.get(fkField).orElse(p.get(bareField)).flatMap(s => scala.util.Try(s.toLong).toOption)
     val before = state.getOption
-    var cur    = before
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs = CdcMaterializer.micros(c.ts)
-      if (!cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))) {
-        cur = c.op match {
-          case "delete" => Some(FactState(tsUs, c.seq, cur.map(_.fk).getOrElse(0L), Map.empty, live = false))
-          case _ =>
-            parseFk(c.payload) match {
-              case Some(fk) => Some(FactState(tsUs, c.seq, fk, c.payload, live = true))
-              case None     => Some(FactState(tsUs, c.seq, 0L, Map.empty, live = false))
-            }
-        }
+    val cur = CdcMaterializer.applyLww(before, changes) { (prev, c, tsUs) =>
+      if (c.op == "delete") FactState(tsUs, c.seq, prev.map(_.fk).getOrElse(0L), Map.empty, live = false)
+      else parseFk(c.payload) match {
+        case Some(fk) => FactState(tsUs, c.seq, fk, c.payload, live = true)
+        case None     => FactState(tsUs, c.seq, 0L, Map.empty, live = false)
       }
     }
-    // persist even a first-seen DEAD state (delete/poison before any live
-    // row): the tombstone's (ts, seq) is what stale-drops an out-of-order
-    // OLDER upsert arriving later — without it the row would resurrect.
-    // Unlike IncrementalView.deltas (whose skip is spec'd as a TTL-bounded
-    // trade), join feeds see shuffled cross-partition delivery routinely.
     cur.foreach(state.update)
     val ats = new java.sql.Timestamp(cur.map(_.tsUs).getOrElse(0L) / 1000L)
     val seq = cur.map(_.seq).getOrElse(0L)
@@ -233,17 +221,11 @@ object JoinView {
     */
   def foldFkGroup(leftOuter: Boolean, maxFacts: Int = Int.MaxValue)(fk: Long, events: Iterator[FkEvent], state: GroupState[FkState]): Iterator[FkJoinedChange] = {
     val s0       = state.getOption.getOrElse(FkState(None, Map.empty))
-    var dim      = s0.dim
     var facts    = s0.facts
     val movedIn  = scala.collection.mutable.Set.empty[Long]
     val movedOut = scala.collection.mutable.Set.empty[Long]
     val evs      = events.toSeq
-    evs.filter(_.kind == "dim").sortBy(e => (CdcMaterializer.micros(e.ts), e.seq)).foreach { e =>
-      val tsUs = CdcMaterializer.micros(e.ts)
-      if (!dim.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, e.seq)))
-        dim = Some(SideState(tsUs, e.seq,
-          if (e.op == "delete") Map.empty else e.payload, e.op == "delete"))
-    }
+    val dim      = CdcMaterializer.applyLww(s0.dim, evs.iterator.filter(_.kind == "dim"))(sideStep)
     evs.filter(_.kind != "dim").foreach { e =>
       if (e.kind == "sub") {
         facts += (e.factKey -> e.payload)
@@ -360,7 +342,7 @@ object JoinView {
     * key): the row's current bucket (join value), payload, LWW position.
     */
   case class ValSideState(bucket: String, payload: Map[String, String],
-      tsUs: Long, seq: Long, live: Boolean)
+      tsUs: Long, seq: Long, live: Boolean) extends LwwState
 
   /** Stage-1 → stage-2 wire: one key entering/leaving/changing within
     * one join-value bucket.
@@ -400,23 +382,15 @@ object JoinView {
       changes: Iterator[Change],
       state: GroupState[ValSideState]): Iterator[ValEvent] = {
     val before = state.getOption
-    var cur    = before
-    changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
-      val tsUs  = CdcMaterializer.micros(c.ts)
-      val stale = cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur =
-          if (c.op == "delete") Some(ValSideState("", Map.empty, tsUs, c.seq, live = false))
-          else joinValOf(c) match {
-            case Some(v)            => Some(ValSideState(ValueBucketPrefix + v, c.payload, tsUs, c.seq, live = true))
-            case None if preserved  => // NULL join value, outer-preserved: solo-only salted bucket
-              Some(ValSideState(NullBucketPrefix + (key % NullSalt), c.payload, tsUs, c.seq, live = true))
-            case None               => Some(ValSideState("", Map.empty, tsUs, c.seq, live = false))
-          }
+    val cur = CdcMaterializer.applyLww(before, changes) { (_, c, tsUs) =>
+      if (c.op == "delete") ValSideState("", Map.empty, tsUs, c.seq, live = false)
+      else joinValOf(c) match {
+        case Some(v)           => ValSideState(ValueBucketPrefix + v, c.payload, tsUs, c.seq, live = true)
+        case None if preserved => // NULL join value, outer-preserved: solo-only salted bucket
+          ValSideState(NullBucketPrefix + (key % NullSalt), c.payload, tsUs, c.seq, live = true)
+        case None              => ValSideState("", Map.empty, tsUs, c.seq, live = false)
       }
     }
-    // first-seen dead state persists too — see factSubs: the tombstone's
-    // position stale-drops later out-of-order older upserts.
     cur.foreach(state.update)
     val (posTs, posSeq) = cur.map(r => (r.tsUs, r.seq)).getOrElse((0L, 0L))
     val b = before.filter(_.live)
@@ -691,7 +665,7 @@ object JoinView {
       state.getOption.foreach { st =>
         // timeout must sit beyond the current watermark or Spark rejects it
         if (!st.live) state.setTimeoutTimestamp(
-          math.max(st.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs + 1L))
+          math.max(st.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs() + 1L))
       }
       out
     }

@@ -63,8 +63,7 @@ object PqIndexView extends LocatorStore {
     StructField("tsUs", LongType), StructField("seq", LongType),
     StructField("live", BooleanType)))
 
-  private def cbDir(root: String)    = s"$root/codebook"
-  private def driftDir(root: String) = s"$root/drift"
+  private def cbDir(root: String) = s"$root/codebook"
 
   override def guard(spark: SparkSession, root: String): Unit =
     IndexStoreOps.requireNoRetrain(spark, root)
@@ -112,20 +111,6 @@ object PqIndexView extends LocatorStore {
         col("norm"), col("qerr")) ++ passthrough.map(col)): _*)
   }
 
-  private def baselineCount(spark: SparkSession, root: String): Long =
-    if (!IndexStoreOps.isDir(spark, driftDir(root))) 0L
-    else spark.read.parquet(driftDir(root)).filter(col("kind") === "baseline").count()
-
-  private def appendDrift(spark: SparkSession, root: String, batchId: Long,
-      kind: String, nVecs: Long, meanErr: Double, baseSeq: Long,
-      moved: Long = 0L, hadOld: Long = 0L): Unit = {
-    import spark.implicits._
-    Seq((batchId, kind, nVecs, meanErr, moved, hadOld, baseSeq))
-      .toDF("batch_id", "kind", "n_vecs", "mean_err", "moved", "had_old", "base_seq")
-      .coalesce(1)
-      .write.mode(SaveMode.Append).parquet(driftDir(root))
-  }
-
   /** CREATE the index: train the pinned codebooks on `bootstrap`
     * (`vec_id`, `embedding`) with the fixed-point Lloyd and record the
     * baseline reconstruction error. The code table starts EMPTY — the
@@ -140,8 +125,7 @@ object PqIndexView extends LocatorStore {
         bootstrap.select("vec_id", "embedding"), m)
       .agg(count(lit(1)).as("n"), avg(col("qerr").cast("double")).as("m"))
       .collect().head
-    appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
-      baseSeq = baselineCount(spark, root))
+    IndexStoreOps.appendBaseline(spark, root, base)
   }
 
   /** Fold one micro-batch of changes (`op` ∈ I/U/D, `vec_id`,
@@ -171,8 +155,8 @@ object PqIndexView extends LocatorStore {
       // codes co-partition with their locators, so the data leaves are the batch's kbs
       LocatorStore.DataStep(kbs, replaceKeys(eff, ups),
         commit = () => if (d.getLong(0) > 0L)
-          appendDrift(spark, root, batchId, "batch", d.getLong(0), d.getDouble(1),
-            baseSeq = baselineCount(spark, root) - 1L, moved = d.getLong(2), hadOld = d.getLong(3)))
+          IndexStoreOps.appendBatchDrift(spark, root, batchId, d.getLong(0), d.getDouble(1),
+            moved = d.getLong(2), hadOld = d.getLong(3)))
     }
 
   /** The PQ retrain policy (#366's discipline on this family):
@@ -193,17 +177,7 @@ object PqIndexView extends LocatorStore {
     */
   def maybeRetrain(spark: SparkSession, root: String, policy: RetrainPolicy,
       vectors: DataFrame, keyBuckets: Int = 64): Boolean = {
-    val last = stalenessReport(spark, root)
-      .filter(col("kind") === "batch" && col("cum_moved").isNotNull)
-      .orderBy(col("base_seq").desc, col("batch_id").desc).limit(1)
-      .collect()
-    val breached = last.exists { r =>
-      val churn = if (r.isNullAt(r.fieldIndex("cum_churn_frac"))) 0.0
-                  else r.getDouble(r.fieldIndex("cum_churn_frac"))
-      val err = if (r.isNullAt(r.fieldIndex("cum_err_ratio"))) 0.0
-                else r.getDouble(r.fieldIndex("cum_err_ratio"))
-      churn > policy.churnFrac || err > policy.errRatio
-    }
+    val breached = IndexStoreOps.driftBreached(stalenessReport(spark, root), policy.churnFrac, policy.errRatio)
     if (breached) retrain(spark, root, vectors, policy.m, policy.k, policy.iters, keyBuckets)
     breached
   }
@@ -244,37 +218,7 @@ object PqIndexView extends LocatorStore {
     */
   def stalenessReport(spark: SparkSession, root: String): DataFrame = {
     guard(spark, root)
-    val raw = spark.read.parquet(driftDir(root))
-    val cols = raw.columns.toSeq
-    val d = raw.groupBy("kind", "batch_id", "base_seq")
-      .agg(max_by(struct(cols.map(col): _*),
-        struct(col("moved"), col("had_old"), col("n_vecs"))).as("r"))
-      .select(cols.map(c => col(s"r.$c").as(c)): _*)
-    val baseline = d.filter(col("kind") === "baseline")
-      .orderBy(col("base_seq").desc).limit(1)
-      .select(col("mean_err").as("baseline_err"), col("base_seq").as("cur_base"))
-    val storeSize = readData(spark, root).count()
-    val w = Window.partitionBy("base_seq").orderBy("batch_id")
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    d.crossJoin(broadcast(baseline))
-      .withColumn("drift_ratio", col("mean_err") / col("baseline_err"))
-      .withColumn("churn_frac",
-        when(col("had_old") > 0, col("moved").cast("double") / col("had_old")))
-      .withColumn("__cur", col("kind") === "batch" && col("base_seq") === col("cur_base"))
-      .withColumn("cum_moved",
-        when(col("__cur"), sum(when(col("kind") === "batch", col("moved")).otherwise(0L)).over(w)))
-      .withColumn("store_size", lit(storeSize))
-      .withColumn("cum_churn_frac",
-        when(col("__cur") && lit(storeSize > 0L),
-          col("cum_moved").cast("double") / lit(storeSize.toDouble)))
-      .withColumn("cum_err_ratio",
-        when(col("__cur"),
-          sum(when(col("kind") === "batch", col("mean_err") * col("n_vecs")).otherwise(lit(0.0))).over(w) /
-            sum(when(col("kind") === "batch", col("n_vecs")).otherwise(0L)).over(w) /
-            col("baseline_err")))
-      .select("batch_id", "kind", "n_vecs", "mean_err", "drift_ratio",
-        "moved", "had_old", "churn_frac", "base_seq", "cum_moved",
-        "store_size", "cum_churn_frac", "cum_err_ratio")
+    IndexStoreOps.stalenessReport(spark, root, readData(spark, root))
   }
 
   /** RETRAIN: re-learn the codebooks — but a PQ store holds CODES, not
@@ -308,10 +252,7 @@ object PqIndexView extends LocatorStore {
         .write.mode(SaveMode.Overwrite).partitionBy("kb").parquet(staged(dataDir(root)))
       codebook.write.mode(SaveMode.Overwrite).parquet(staged(cbDir(root)))
       base
-    } { base =>
-      appendDrift(spark, root, -1L, "baseline", base.getLong(0), base.getDouble(1),
-        baseSeq = baselineCount(spark, root))
-    }
+    }(IndexStoreOps.appendBaseline(spark, root, _))
 
   /** Probe the LIVE index: s05's asymmetric-distance dataflow served
     * from the maintained code table. The broadcast lookup table (query

@@ -45,30 +45,18 @@ class CdcStateProcessor(tombstoneTtlMs: Long)
       key: Long,
       rows: Iterator[Change],
       timers: TimerValues): Iterator[KeyState] = {
-    val ordered = rows.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq))
-    var cur     = if (state.exists) Option(state.get()) else None
-    ordered.foreach { c =>
-      val tsUs  = CdcMaterializer.micros(c.ts)
-      val stale = cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))
-      if (!stale) {
-        cur = c.op match {
-          case "delete" => Some(KeyState(key, tsUs, c.seq, Map.empty, deleted = true))
-          case _        => Some(KeyState(key, tsUs, c.seq, c.payload, deleted = false))
-        }
-      }
-    }
-    cur match {
+    CdcMaterializer.applyKeyState(key, rows, if (state.exists()) Option(state.get()) else None) match {
       case Some(s) =>
         state.update(s)
         // Timer work ONLY on tombstone transitions — the upsert-dominated
         // hot path (live key stays live) never touches the timer CF.
-        if (tombstoneTtlMs > 0L && (s.deleted || timerAt.exists)) {
-          if (timerAt.exists) { // an old tombstone timer is armed: disarm it
+        if (tombstoneTtlMs > 0L && (s.deleted || timerAt.exists())) {
+          if (timerAt.exists()) { // an old tombstone timer is armed: disarm it
             getHandle.deleteTimer(timerAt.get())
             timerAt.clear()
           }
           if (s.deleted) { // (re-)arm the GC timer for the new tombstone
-            val at = math.max(s.tsUs / 1000L + tombstoneTtlMs, timers.getCurrentWatermarkInMs + 1L)
+            val at = math.max(s.tsUs / 1000L + tombstoneTtlMs, timers.getCurrentWatermarkInMs() + 1L)
             getHandle.registerTimer(at)
             timerAt.update(at)
           }
@@ -91,7 +79,7 @@ class CdcStateProcessor(tombstoneTtlMs: Long)
       key: Long,
       timers: TimerValues,
       info: ExpiredTimerInfo): Iterator[KeyState] = {
-    val last = if (state.exists) Iterator.single(state.get()) else Iterator.empty
+    val last = if (state.exists()) Iterator.single(state.get()) else Iterator.empty
     state.clear()
     timerAt.clear()
     last

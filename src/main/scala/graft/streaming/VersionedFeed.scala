@@ -36,28 +36,18 @@ case class Version(
 object VersionedFeed {
 
   /** The key's currently-open version. */
-  case class OpenVersion(key: Long, tsUs: Long, seq: Long, payload: Map[String, String], deleted: Boolean)
+  case class OpenVersion(key: Long, tsUs: Long, seq: Long, payload: Map[String, String], deleted: Boolean) extends LwwState
 
   /** Per-group fold: emit a closed [[Version]] per superseded open
     * version. Exposed for direct unit exercise.
     */
   def close(key: Long, changes: Iterator[Change], state: GroupState[OpenVersion]): Iterator[Version] = {
-    val ordered = changes.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq))
-    var cur     = state.getOption
-    val out     = Seq.newBuilder[Version]
-    ordered.foreach { c =>
-      val tsUs = CdcMaterializer.micros(c.ts)
-      if (!cur.exists(s => CdcMaterializer.isStale(s.tsUs, s.seq, tsUs, c.seq))) {
-        cur.foreach { o =>
-          out += Version(key, o.payload, o.deleted, o.tsUs, o.seq, tsUs, c.seq)
-        }
-        cur = c.op match {
-          case "delete" => Some(OpenVersion(key, tsUs, c.seq, Map.empty, deleted = true))
-          case _        => Some(OpenVersion(key, tsUs, c.seq, c.payload, deleted = false))
-        }
-      }
-    }
-    cur.foreach(state.update)
+    val out = Seq.newBuilder[Version]
+    CdcMaterializer.applyLww(state.getOption, changes) { (prev, c, tsUs) =>
+      prev.foreach(o => out += Version(key, o.payload, o.deleted, o.tsUs, o.seq, tsUs, c.seq))
+      val deleted = c.op == "delete"
+      OpenVersion(key, tsUs, c.seq, if (deleted) Map.empty else c.payload, deleted)
+    }.foreach(state.update)
     out.result().iterator
   }
 
@@ -102,7 +92,7 @@ object VersionedFeed {
       state.getOption.foreach { o =>
         // timeout must sit beyond the current watermark or Spark rejects it
         if (o.deleted) state.setTimeoutTimestamp(
-          math.max(o.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs + 1L))
+          math.max(o.tsUs / 1000L + ttlMs, state.getCurrentWatermarkMs() + 1L))
       }
       out
     }

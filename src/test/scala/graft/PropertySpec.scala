@@ -56,7 +56,26 @@ class PropertySpec extends AnyFunSuite {
       v    <- Gen.alphaStr.map(_.take(4))
     } yield Change(op, 1L, new java.sql.Timestamp(1700000000000L + tsMs), Map("v" -> v), 0L)
     val feed = Gen.listOf(change).map(_.zipWithIndex.map { case (c, i) => c.copy(seq = i.toLong) })
-    def applyBatches(batches: Seq[Seq[Change]]): Option[KeyState] = {
+    // at-least-once transport: a redelivery is the SAME change (same
+    // position, same after-image) inserted anywhere in the delivery, so
+    // some repeats land in a later batch than their original
+    val repeats = Gen.listOf(Gen.zip(Gen.choose(0, 1000), Gen.choose(0, 1000)))
+    def redeliver(cs: List[Change], reps: List[(Int, Int)]): List[Change] =
+      if (cs.isEmpty) cs
+      else reps.foldLeft(cs) { case (acc, (i, at)) =>
+        val p = at % (acc.length + 1)
+        acc.take(p) ++ (cs(i % cs.length) :: acc.drop(p))
+      }
+    // the shared apply every stage-1 fold runs, with the KeyState step
+    def applyBatches(batches: Seq[Seq[Change]]): Option[KeyState] =
+      batches.foldLeft(Option.empty[KeyState]) { (s, b) =>
+        CdcMaterializer.applyLww(s, b.iterator) { (_, c, tsUs) =>
+          val deleted = c.op == "delete"
+          KeyState(1L, tsUs, c.seq, if (deleted) Map.empty else c.payload, deleted)
+        }
+      }
+    // the same batches through CdcMaterializer.fold's GroupState round trip
+    def foldBatches(batches: Seq[Seq[Change]]): Option[KeyState] = {
       var state: Option[KeyState] = None
       batches.filter(_.nonEmpty).foreach { b =>
         val gs = TestGroupState.create[KeyState](
@@ -71,18 +90,20 @@ class PropertySpec extends AnyFunSuite {
       }
       state
     }
-    val prop = Prop.forAll(feed, Gen.choose(0, 100), Gen.choose(0, 100)) {
-      (changes: List[Change], cut1: Int, cut2: Int) =>
-        // same multiset of changes: one batch vs two arbitrary cuts vs
-        // reversed arrival order in three cuts — the (ts, seq) total order
-        // must make them all converge to the identical final state
-        val all = applyBatches(Seq(changes))
-        val a   = cut1 % (changes.length + 1)
-        val b   = cut2 % (changes.length + 1)
-        val (lo, hi) = (math.min(a, b), math.max(a, b))
-        val split    = applyBatches(Seq(changes.take(lo), changes.slice(lo, hi), changes.drop(hi)))
-        val reversed = applyBatches(Seq(changes.reverse))
-        all == split && all == reversed
+    val prop = Prop.forAll(feed, repeats, Gen.choose(0, 100), Gen.choose(0, 100)) {
+      (changes: List[Change], reps: List[(Int, Int)], cut1: Int, cut2: Int) =>
+        // one batch of the unique feed vs the redelivered feed in one
+        // batch, in two arbitrary cuts, and reversed — the (ts, seq)
+        // total order must make them all converge to the identical state
+        val all       = applyBatches(Seq(changes))
+        val delivered = redeliver(changes, reps)
+        val a         = cut1 % (delivered.length + 1)
+        val b         = cut2 % (delivered.length + 1)
+        val (lo, hi)  = (math.min(a, b), math.max(a, b))
+        val cuts      = Seq(delivered.take(lo), delivered.slice(lo, hi), delivered.drop(hi))
+        val split     = applyBatches(cuts)
+        all == applyBatches(Seq(delivered)) && all == split &&
+          all == applyBatches(Seq(delivered.reverse)) && foldBatches(cuts) == split
     }
     check(prop, "fold batching invariance")
   }

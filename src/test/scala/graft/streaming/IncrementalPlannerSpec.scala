@@ -2474,6 +2474,45 @@ class IncrementalPlannerSpec extends SparkSpec {
     assert(!st.get.live, "tombstone survives the stale delivery")
   }
 
+  test("#171cs JoinView.fold applies LWW per side: interleaved L/R batches equal one batch, a stale side change emits nothing") {
+    import org.apache.spark.sql.streaming.TestGroupState
+    import JoinView.{JoinPairState, Sided}
+    def gs(s0: Option[JoinPairState]) = TestGroupState.create[JoinPairState](
+      optionalState = s0.map(org.apache.spark.api.java.Optional.of[JoinPairState])
+        .getOrElse(org.apache.spark.api.java.Optional.empty[JoinPairState]()),
+      timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
+      batchProcessingTimeMs = 0L,
+      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
+      hasTimedOut = false)
+    def at(ms: Long) = new Timestamp(1700000000000L + ms)
+    def sided(side: String, ms: Long, seq: Long, v: String) =
+      Sided(side, "upsert", 5L, at(ms), Map(if (side == "L") "a" -> v else "b" -> v), seq)
+    // each side is its own changefeed with its own LSNs: L and R share
+    // position (10 ms, 1), which must not make one stale against the other
+    val early = Seq(sided("R", 20, 5, "r2"), sided("L", 10, 1, "l1"), sided("L", 20, 2, "l2"), sided("R", 10, 1, "r1"))
+    val staleL = sided("L", 15, 9, "stale") // older than L's (20 ms, 2) despite the higher seq
+    val sameMsR = sided("R", 20, 6, "r3")   // R's same ms, higher seq: wins
+    def run(batches: Seq[Seq[Sided]]): (Seq[Seq[JoinView.JoinedChange]], Option[JoinPairState]) =
+      batches.foldLeft((Seq.empty[Seq[JoinView.JoinedChange]], Option.empty[JoinPairState])) {
+        case ((outs, s0), b) =>
+          val st  = gs(s0)
+          val out = JoinView.fold(false, false)(5L, b.iterator, st).toSeq
+          (outs :+ out, Some(st.get))
+      }
+    val (oneOut, oneState) = run(Seq(early ++ Seq(staleL, sameMsR)))
+    val (twoOut, twoState) = run(Seq(early, Seq(staleL, sameMsR)))
+    val expected = JoinView.JoinedChange("upsert", 5L, Map("a" -> "l2"), Map("b" -> "r3"),
+      CdcMaterializer.micros(at(20)), 6L)
+    assert(oneOut == Seq(Seq(expected)), s"one batch: $oneOut")
+    assert(twoOut.last == Seq(expected), s"two batches end on the one-batch emission: $twoOut")
+    assert(twoState == oneState, s"final pair state: two $twoState vs one $oneState")
+    assert(oneState.get.left.get.payload == Map("a" -> "l2") && oneState.get.left.get.seq == 2L)
+    // the stale L change alone, after the early batch: no emission, no state move
+    val (staleOut, staleState) = run(Seq(early, Seq(staleL)))
+    assert(staleOut.last.isEmpty, s"stale L change emitted: ${staleOut.last}")
+    assert(staleState == run(Seq(early))._2, "stale L change moved the pair state")
+  }
+
   test("#171bi OUTER joins with non-equi residuals: residual decides match status, crossings retract pairs and resurrect solos") {
     // LEFT JOIN ON equi AND non-equi: the residual's truth value is LIVE —
     // either side moving across it flips pairs <-> solos

@@ -1,5 +1,5 @@
 #!/usr/bin/env bash
-# Pre-commit smoke gate (~4 min on 4 cores): one representative spec per planner
+# Pre-commit smoke gate (~6 min on 4 cores): one representative spec per planner
 # dataflow class — flat agg, keyed min/max, value-equi join, ranked,
 # ASOF, session, ROWS frames, session-DISTINCT, approx HLL, holistic
 # percentile, DDSketch approx_percentile, ROLLUP levels, key-equi
@@ -17,12 +17,21 @@
 # over its shared verbs covers all five families: batch erasure with the
 # untouched-leaf check (#367), the half-finished-retrain refusal (#367c),
 # tombstone GC and the compaction census.
-# The full 466-test fleet (sbt "testOnly *", ~16 min on 4 cores)
+# Every per-key stage-1 fold (the materializers, SCD2 history, the
+# hand-built aggregate and join views, and the planner's aggregate, row,
+# generator and ranked folds) runs one last-writer-wins apply,
+# CdcMaterializer.applyLww, so its property (batching invariance under
+# redelivery), the direct JoinView.fold per-side case (#171cs), the
+# sub-ms ordering (#32b), never-seen-delete (#39d) and SCD2 tombstone
+# (#68b) specs, and the first-seen tombstone case (#171bh) run too.
+# The full 467-test fleet (sbt "testOnly *", ~16 min on 4 cores)
 # remains the round gate; this is the fast inner loop.
 set -euo pipefail
 cd "$(dirname "$0")/.."
 exec sbt \
-  'testOnly graft.streaming.IncrementalPlannerSpec -- -z "171a " -z "171f " -z "171at " -z "171aq " -z "171bk " -z "171an " -z "171bq " -z "171bs " -z "171bt " -z "171bo " -z "171cd " -z "171cr " -z "171bb "' \
+  'testOnly graft.streaming.IncrementalPlannerSpec -- -z "171a " -z "171f " -z "171at " -z "171aq " -z "171bk " -z "171an " -z "171bq " -z "171bs " -z "171bt " -z "171bo " -z "171cd " -z "171cr " -z "171bb " -z "171bh " -z "171cs "' \
+  'testOnly graft.PropertySpec' \
+  'testOnly graft.streaming.StreamingSpec -- -z "32b " -z "39d " -z "68b "' \
   'testOnly graft.streaming.PlannerRestartSpec -- -z "220a " -z "220c " -z "220g " -z "220h "' \
   'testOnly graft.streaming.CheckpointFileManagerSpec' \
   'testOnly graft.streaming.FeedSourceSpec' \
