@@ -82,6 +82,16 @@ object CdcMaterializer {
     cur
   }
 
+  /** The later of two commit positions `(tsUs, seq)`, `a` on a tie: the
+    * one step every emission high-water takes. A fold that re-emits rows
+    * other keys' changes caused stamps them with the later of its stored
+    * high-water and its batch's positions, so a batch carrying an older
+    * change never emits a row older than one it emitted before (a
+    * downstream [[applyLww]] would keep the stale row).
+    */
+  private[graft] def laterPos(a: (Long, Long), b: (Long, Long)): (Long, Long) =
+    if (b._1 > a._1 || (b._1 == a._1 && b._2 > a._2)) b else a
+
   /** [[applyLww]] into a [[KeyState]]: a delete parks a tombstone, any
     * other op puts the change's after-image. Shared with the
     * `transformWithState` engine ([[CdcStateProcessor]]).

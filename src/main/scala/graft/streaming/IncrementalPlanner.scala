@@ -26,8 +26,26 @@ case class PlannedContrib(groups: Seq[String], slots: Seq[Double], tsUs: Long, s
   */
 case class PlannedDelta(group: String, d_keys: Long, d_slots: Seq[Double], tsUs: Long = 0L, seq: Long = 0L)
 
+/** A stage-2 group state of a planned aggregate view: the path's
+  * contents plus the group's emission high-water `(posTs, posSeq)`, the
+  * position every row the group emits is stamped with (see
+  * [[IncrementalPlanner.groupStage]]).
+  */
+trait GroupPosState[S] {
+  def posTs: Long
+  def posSeq: Long
+  /** False once the group holds no live row. */
+  def live: Boolean
+  /** The same contents at emission position `pos`. */
+  def at(pos: (Long, Long)): S
+}
+
 /** Running totals of one group of a planned aggregate view. */
-case class PlannedGroupState(n: Long, sums: Seq[Double])
+case class PlannedGroupState(n: Long, sums: Seq[Double], posTs: Long = 0L, posSeq: Long = 0L)
+    extends GroupPosState[PlannedGroupState] {
+  def live: Boolean = n > 0L
+  def at(pos: (Long, Long)): PlannedGroupState = copy(posTs = pos._1, posSeq = pos._2)
+}
 
 /** Signed per-group delta of an approx-percentile (DDSketch) view:
   * [[PlannedDelta]] plus, per sketch slot, the net bucket-count deltas of
@@ -42,21 +60,18 @@ case class DdqDelta(group: String, d_keys: Long, d_slots: Seq[Double],
   * the full double range), NOT by live rows — the scale trade vs the
   * holistic path's exact multiset.
   */
-case class DdqGroupState(n: Long, sums: Seq[Double], buckets: Seq[Map[Long, Long]])
+case class DdqGroupState(n: Long, sums: Seq[Double], buckets: Seq[Map[Long, Long]],
+    posTs: Long = 0L, posSeq: Long = 0L) extends GroupPosState[DdqGroupState] {
+  def live: Boolean = n > 0L
+  def at(pos: (Long, Long)): DdqGroupState = copy(posTs = pos._1, posSeq = pos._2)
+}
 
-/** One key-level contribution change of a planned MIN/MAX view (the
-  * non-invertible path): which group, which key, the key's slot values,
-  * live=false when the key leaves the group.
+/** One key-level contribution change of a planned keyed view (flat
+  * min/max, holistic, session, approx): which group, which key, the
+  * key's slot values, live=false when the key leaves the group.
   */
 case class PlannedKeyChange(group: String, key: Long, slots: Seq[Double], live: Boolean, tsUs: Long = 0L, seq: Long = 0L,
     svals: Seq[String] = Nil)
-
-/** Per-group keyed state of a planned MIN/MAX view: every live key's
-  * slot values — what re-aggregation needs when the extremum retracts
-  * (subtracting is meaningless for min/max; the [[IncrementalView]]
-  * liveExtremes strategy).
-  */
-case class PlannedGroupContribs(contribs: Map[Long, Seq[Double]])
 
 /** One emitted change of a planned aggregate view: the group's current
   * live-row count and aggregate slot totals (`live_rows = 0` is the
@@ -81,7 +96,10 @@ case class PlannedTopKRow(_emit: Long, rank: Long, row: Map[String, String])
   * group regardless of value cardinality — the reason this path exists.
   */
 case class ApproxGroupState(n: Long, sums: Seq[Double], hlls: Seq[Array[Byte]],
-    posTs: Long = 0L, posSeq: Long = 0L)
+    posTs: Long = 0L, posSeq: Long = 0L) extends GroupPosState[ApproxGroupState] {
+  def live: Boolean = n > 0L
+  def at(pos: (Long, Long)): ApproxGroupState = copy(posTs = pos._1, posSeq = pos._2)
+}
 
 /** One live contribution in a HOLISTIC aggregate view's group state:
   * the key's numeric slot values plus its string values (listagg
@@ -90,13 +108,18 @@ case class ApproxGroupState(n: Long, sums: Seq[Double], hlls: Seq[Array[Byte]],
 case class HContrib(slots: Seq[Double], svals: Seq[String])
 
 /** Per-group state of a planned HOLISTIC aggregate view (exact
-  * percentile/median/listagg under retraction): every live key's raw
-  * contribution — order statistics and ordered concatenation are not
-  * invertible, so the group's full value multiset is the honest state
-  * (the session/exact-top-k class), guarded by
+  * percentile/median/listagg under retraction), and of a flat view with
+  * min/max: every live key's raw contribution — order statistics,
+  * extrema and ordered concatenation are not invertible, so the group's
+  * full value multiset is the honest state (the session/exact-top-k
+  * class), guarded on the holistic path by
   * `spark.graft.holistic.maxRowsPerGroup`.
   */
-case class HolisticContribs(contribs: Map[Long, HContrib])
+case class HolisticContribs(contribs: Map[Long, HContrib], posTs: Long = 0L, posSeq: Long = 0L)
+    extends GroupPosState[HolisticContribs] {
+  def live: Boolean = contribs.nonEmpty
+  def at(pos: (Long, Long)): HolisticContribs = copy(posTs = pos._1, posSeq = pos._2)
+}
 
 /** One emitted change of a planned holistic aggregate view: numeric
   * results ride `sums` (value slots first, percentile results after),
@@ -136,7 +159,10 @@ case class SessionEmitted(endUs: Long, n: Long, sums: Seq[Double])
   * plus the session rows last emitted, for diff-only re-emission.
   */
 case class SessionGroupState(contribs: Map[Long, SessionContrib], emitted: Map[Long, SessionEmitted],
-    posTs: Long = 0L, posSeq: Long = 0L)
+    posTs: Long = 0L, posSeq: Long = 0L) extends GroupPosState[SessionGroupState] {
+  def live: Boolean = contribs.nonEmpty
+  def at(pos: (Long, Long)): SessionGroupState = copy(posTs = pos._1, posSeq = pos._2)
+}
 
 /** One emitted change of a planned session-window view: the session's
   * identity is `(group, startUs)`; `live_rows = 0` is its tombstone
@@ -234,7 +260,16 @@ case class MixedWinState(entries: Map[String, Map[String, String]],
   *    re-emits with `_live_rows = 0` (the view's own delete tombstone);
   *  - both view shapes run in Append output mode: every emission is one
   *    change of the VIEW's changefeed (touched groups / changed rows
-  *    only), so downstream transforms compose.
+  *    only), so downstream transforms compose;
+  *  - emission position: every row a view emits is stamped `(ts, seq)`
+  *    no older than any row it emitted before for the same group
+  *    (aggregate stage 2: [[groupStage]]'s high-water; ranked and mixed
+  *    OVER folds: the same discipline). A group re-emitted because a
+  *    batch carried an older-positioned change gets its high-water, and
+  *    an emptied group keeps its position in state, so a downstream
+  *    last-writer-wins consumer (`FeedSink.stateAsOf`, a view over the
+  *    view) folds split batches exactly as one batch. Equal positions
+  *    are possible; such consumers take the later emission.
   *
   * Feed payloads are stringly-typed (`Map[String,String]`, the Change
   * wire contract), so the compiled expressions coerce: comparisons and
@@ -2041,9 +2076,12 @@ object IncrementalPlanner {
   private val DdqFns = Set("approx_percentile", "percentile_approx")
 
   /** Compile one aggregate-function select item to its [[OutCol]],
-    * registering value slots via `addSlot` — shared by all five
+    * registering its value slots in `regs` — shared by all five
     * aggregate paths (through [[compileGrouped]]), which differ only in
     * HOW the slots fold downstream, not in what a select item means.
+    * Each operand registers once per item, and its slots are transforms
+    * of the operand's (number-parsed) value, so a change evaluates and
+    * parses the operand once however many slots read it.
     * `nullSumAsNaN`: re-aggregating paths (session) mark a NULL sum
     * operand with NaN — filtered per session, so an all-NULL session
     * yields SQL NULL, not 0 — where the signed-delta fold must encode
@@ -2051,50 +2089,41 @@ object IncrementalPlanner {
     * indistinguishable from sum=0, the documented flat-path trade).
     */
   private def compileAggFnOut(fn: String, args: Seq[Expression], name: String,
-      addSlot: Eval => Int, nullSumAsNaN: Boolean = false): OutCol =
+      regs: AggRegs, nullSumAsNaN: Boolean = false): OutCol = {
+    def num(a: Expression): Env => Option[Double] = { val ca = compileExpr(a); env => ca(env).flatMap(asNum) }
+    def bool(a: Expression): Env => Option[Boolean] = { val ca = compileExpr(a); env => ca(env).flatMap(asBool) }
+    val isSome = (v: Option[Any]) => if (v.isDefined) 1.0 else 0.0
     (fn, args) match {
       case ("count", Seq(_: UnresolvedStar)) =>
-        CountOut(addSlot(_ => Some(1.0)), name)
+        CountOut(regs.addSlot((_: Env) => ())(_ => 1.0), name)
       case ("count", Seq(a)) =>
-        val ca = compileExpr(a)
-        CountOut(addSlot(env => Some(if (ca(env).isDefined) 1.0 else 0.0)), name)
+        CountOut(regs.addSlot(compileExpr(a))(isSome), name)
       case ("sum", Seq(a)) =>
-        val ca = compileExpr(a)
         val nullMark = if (nullSumAsNaN) Double.NaN else 0.0
-        SumOut(addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(nullMark))), name)
+        SumOut(regs.addSlot(num(a))(_.getOrElse(nullMark)), name)
       case ("avg", Seq(a)) =>
-        val ca = compileExpr(a)
-        val s  = addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(0.0)))
-        val c  = addSlot(env => Some(if (ca(env).flatMap(asNum).isDefined) 1.0 else 0.0))
+        val Seq(s, c) = regs.addSlots(num(a))(_.getOrElse(0.0), isSome)
         AvgOut(s, c, name)
       // min/max slots carry NaN for SQL NULL (excluded from the
       // extremum, distinguishable from a real 0)
       case ("min", Seq(a)) =>
-        val ca = compileExpr(a)
-        MinOut(addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(Double.NaN))), name)
+        MinOut(regs.addSlot(num(a))(_.getOrElse(Double.NaN)), name)
       case ("max", Seq(a)) =>
-        val ca = compileExpr(a)
-        MaxOut(addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(Double.NaN))), name)
+        MaxOut(regs.addSlot(num(a))(_.getOrElse(Double.NaN)), name)
       case ("stddev" | "stddev_samp" | "stddev_pop" | "variance" | "var_samp" | "var_pop", Seq(a)) =>
-        val ca = compileExpr(a)
-        val s  = addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(0.0)))
-        val sq = addSlot(env => Some(ca(env).flatMap(asNum).map(x => x * x).getOrElse(0.0)))
-        val c  = addSlot(env => Some(if (ca(env).flatMap(asNum).isDefined) 1.0 else 0.0))
+        val Seq(s, sq, c) = regs.addSlots(num(a))(
+          _.getOrElse(0.0), _.map(x => x * x).getOrElse(0.0), isSome)
         VarOut(s, sq, c, name,
           sample = fn != "stddev_pop" && fn != "var_pop",
           root = fn.startsWith("stddev"))
       // boolean aggregates: NULL predicates join neither count (SQL's
       // ignore-NULLs rule); count_if counts Some(true) only
       case ("bool_and" | "every" | "bool_or" | "any" | "some", Seq(a)) =>
-        val ca = compileExpr(a)
-        BoolOut(
-          addSlot(env => Some(if (ca(env).flatMap(asBool).contains(true)) 1.0 else 0.0)),
-          addSlot(env => Some(if (ca(env).flatMap(asBool).contains(false)) 1.0 else 0.0)),
-          name, isAnd = fn == "bool_and" || fn == "every")
+        val Seq(t, f) = regs.addSlots(bool(a))(
+          v => if (v.contains(true)) 1.0 else 0.0, v => if (v.contains(false)) 1.0 else 0.0)
+        BoolOut(t, f, name, isAnd = fn == "bool_and" || fn == "every")
       case ("count_if", Seq(a)) =>
-        val ca = compileExpr(a)
-        CountOut(addSlot(env =>
-          Some(if (ca(env).flatMap(asBool).contains(true)) 1.0 else 0.0)), name)
+        CountOut(regs.addSlot(bool(a))(v => if (v.contains(true)) 1.0 else 0.0), name)
       // two-argument covariance family — pairwise-complete rows only: a
       // row where EITHER operand is NULL contributes to NO slot,
       // including the pair count (SQL's pairwise-deletion rule). SQL
@@ -2102,17 +2131,16 @@ object IncrementalPlanner {
       // corr/covar are symmetric, so order matters only for regr_*.
       case ("corr" | "covar_samp" | "covar_pop" | "regr_slope" | "regr_intercept"
           | "regr_r2" | "regr_count" | "regr_avgx" | "regr_avgy", Seq(argY, argX)) =>
-        val (cy, cx) = (compileExpr(argY), compileExpr(argX))
+        val (ny, nx) = (num(argY), num(argX))
         val both: Env => Option[(Double, Double)] =
-          env => for { y <- cy(env).flatMap(asNum); x <- cx(env).flatMap(asNum) } yield (y, x)
-        CorrOut(
-          addSlot(env => Some(if (both(env).isDefined) 1.0 else 0.0)),
-          addSlot(env => Some(both(env).map(_._2).getOrElse(0.0))),
-          addSlot(env => Some(both(env).map(_._1).getOrElse(0.0))),
-          addSlot(env => Some(both(env).map(t => t._1 * t._2).getOrElse(0.0))),
-          addSlot(env => Some(both(env).map(t => t._2 * t._2).getOrElse(0.0))),
-          addSlot(env => Some(both(env).map(t => t._1 * t._1).getOrElse(0.0))),
-          name, fn)
+          env => for { y <- ny(env); x <- nx(env) } yield (y, x)
+        val Seq(c, sx, sy, sxy, sxx, syy) = regs.addSlots(both)(isSome,
+          _.map(_._2).getOrElse(0.0),
+          _.map(_._1).getOrElse(0.0),
+          _.map(t => t._1 * t._2).getOrElse(0.0),
+          _.map(t => t._2 * t._2).getOrElse(0.0),
+          _.map(t => t._1 * t._1).getOrElse(0.0))
+        CorrOut(c, sx, sy, sxy, sxx, syy, name, fn)
       // third/fourth standardized moments: five raw power sums, all
       // plain (invertible) adds — NULL operands join no slot. A single
       // power contribution past 2^53 in scaled space (|x|^p·1e6 — for
@@ -2121,48 +2149,37 @@ object IncrementalPlanner {
       // per-JVM stderr warn so retraction drift on large-valued feeds
       // is no longer silent.
       case ("skewness" | "kurtosis", Seq(a)) =>
-        val ca = compileExpr(a)
-        def powSlot(p: Int) = addSlot(env =>
-          Some(ca(env).flatMap(asNum).map { x =>
-            val v = math.pow(x, p)
-            if (math.abs(v) * SlotScale > 9.007199254740992e15 &&
-                powSumOverflowWarned.compareAndSet(false, true))
-              System.err.println(
-                s"[graft] WARN skewness/kurtosis power-sum contribution |$x|^$p " +
-                  "exceeds the 2^53 micro-unit exactness bound: add/retract " +
-                  "cancellation is no longer exact for this feed (normalize " +
-                  "operands upstream if exact retraction matters)")
-            v
-          }.getOrElse(0.0)))
-        MomOut(
-          addSlot(env => Some(if (ca(env).flatMap(asNum).isDefined) 1.0 else 0.0)),
-          powSlot(1), powSlot(2), powSlot(3), powSlot(4), name,
-          kurt = fn == "kurtosis")
+        def pow(p: Int)(v: Option[Double]): Double = v.map { x =>
+          val y = math.pow(x, p)
+          if (math.abs(y) * SlotScale > 9.007199254740992e15 &&
+              powSumOverflowWarned.compareAndSet(false, true))
+            System.err.println(
+              s"[graft] WARN skewness/kurtosis power-sum contribution |$x|^$p " +
+                "exceeds the 2^53 micro-unit exactness bound: add/retract " +
+                "cancellation is no longer exact for this feed (normalize " +
+                "operands upstream if exact retraction matters)")
+          y
+        }.getOrElse(0.0)
+        val Seq(c, s1, s2, s3, s4) = regs.addSlots(num(a))(isSome, pow(1), pow(2), pow(3), pow(4))
+        MomOut(c, s1, s2, s3, s4, name, kurt = fn == "kurtosis")
       // product: zero/negative counts + Σln|x| — zeros and signs ride
       // exact counters, magnitude rides the log sum
       case ("product", Seq(a)) =>
-        val ca  = compileExpr(a)
-        val num = (env: Env) => ca(env).flatMap(asNum)
-        ProdOut(
-          addSlot(env => Some(if (num(env).isDefined) 1.0 else 0.0)),
-          addSlot(env => Some(if (num(env).contains(0.0)) 1.0 else 0.0)),
-          addSlot(env => Some(if (num(env).exists(_ < 0.0)) 1.0 else 0.0)),
-          addSlot(env => Some(num(env).filter(_ != 0.0)
-            .map(x => math.log(math.abs(x))).getOrElse(0.0))),
-          name)
+        val Seq(c, z, neg, lg) = regs.addSlots(num(a))(isSome,
+          v => if (v.contains(0.0)) 1.0 else 0.0,
+          v => if (v.exists(_ < 0.0)) 1.0 else 0.0,
+          _.filter(_ != 0.0).map(x => math.log(math.abs(x))).getOrElse(0.0))
+        ProdOut(c, z, neg, lg, name)
       // internal (DISTINCT rewrite only): reaggregation of inner
       // partials — sum of per-value counts emitted as LONG, and
       // sum(a)/sum(b) for plain avg decomposed through the levels
       case ("graft_sumlong", Seq(a)) =>
-        val ca = compileExpr(a)
-        CountOut(addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(0.0))), name)
+        CountOut(regs.addSlot(num(a))(_.getOrElse(0.0)), name)
       case ("graft_ratio", Seq(a, b)) =>
-        val (ca, cb) = (compileExpr(a), compileExpr(b))
-        AvgOut(
-          addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(0.0))),
-          addSlot(env => Some(cb(env).flatMap(asNum).getOrElse(0.0))), name)
+        AvgOut(regs.addSlot(num(a))(_.getOrElse(0.0)), regs.addSlot(num(b))(_.getOrElse(0.0)), name)
       case other => throw unsupported(s"aggregate $fn(${args.map(_.sql).mkString(",")})")
     }
+  }
 
   /** One OutCol → its output Column, shared by every aggregate path;
     * `slotCol` supplies the path's slot access (descaled for the
@@ -2664,13 +2681,22 @@ object IncrementalPlanner {
   // ------------------------------------------------------------------
 
   /** The value vectors a view's select items register into: numeric
-    * `slots`, string `svals`, and `tail` operands that ride AFTER the
-    * slots in every contribution (the DDSketch percentile operands; NaN =
-    * SQL NULL).
+    * `slots`, each a transform of one registered `operand` (evaluated
+    * once per change however many slots read it), string `svals`, and
+    * `tail` operands that ride AFTER the slots in every contribution (the
+    * DDSketch percentile operands; NaN = SQL NULL).
     */
   private final class AggRegs {
-    val slots, svals, tail = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addSlot(f: Eval): Int = { slots += f; slots.size - 1 }
+    val operands = scala.collection.mutable.ArrayBuffer.empty[Env => Any]
+    val slots    = scala.collection.mutable.ArrayBuffer.empty[(Int, Any => Double)]
+    val svals, tail = scala.collection.mutable.ArrayBuffer.empty[Eval]
+    /** Register `operand` and one slot per transform of its value. */
+    def addSlots[A](operand: Env => A)(fs: (A => Double)*): Seq[Int] = {
+      operands += operand
+      val o = operands.size - 1
+      fs.map { f => slots += ((o, (v: Any) => f(v.asInstanceOf[A]))); slots.size - 1 }
+    }
+    def addSlot[A](operand: Env => A)(f: A => Double): Int = addSlots(operand)(f).head
     def addSval(f: Eval): Int = { svals += f; svals.size - 1 }
     def addTail(f: Eval): Int = { tail += f; tail.size - 1 }
   }
@@ -2772,22 +2798,25 @@ object IncrementalPlanner {
             else f.arguments.map(groupIdx("grouping_id", _)), name)
         case f: UnresolvedFunction =>
           items.lift((f, name)).getOrElse(compileAggFnOut(f.nameParts.last.toLowerCase,
-            f.arguments, name, regs.addSlot, path.nullSumAsNaN))
+            f.arguments, name, regs, path.nullSumAsNaN))
         case other => throw unsupported(
           s"select item ${other.sql} (neither grouping expr nor a supported aggregate)")
       }
     }
 
-    val numeric = (regs.slots ++ regs.tail).toIndexedSeq
-    val strings = regs.svals.toIndexedSeq
+    val operands = regs.operands.toIndexedSeq
+    val slotFns  = regs.slots.toIndexedSeq
+    val tails    = regs.tail.toIndexedSeq
+    val strings  = regs.svals.toIndexedSeq
     val evTs    = path.evTs
     // serializable extractor: Change → Option[(group keys, slot values,
     // string values)]; None = the row does not contribute (filtered out,
     // NULL session time); an empty key list (NULL window time) is
-    // likewise a dead contribution. Slot closures coerce their own
-    // operands (asNum inside addSlot, which rejects NaN/Inf parses); do
-    // NOT re-coerce here — a min/max slot's NaN is the deliberate "SQL
-    // NULL, excluded" marker, and asNum would flatten it into a real 0.0
+    // likewise a dead contribution. Operands coerce themselves (asNum,
+    // which rejects NaN/Inf parses) and each slot transforms its
+    // operand's value; do NOT re-coerce here — a min/max slot's NaN is
+    // the deliberate "SQL NULL, excluded" marker, and asNum would
+    // flatten it into a real 0.0
     val extract: Change => Option[(Seq[String], Seq[Double], Seq[String])] = { c =>
       val env = envOf(c)
       if (!preds.forall(p => p(env).contains(true))) None
@@ -2795,7 +2824,9 @@ object IncrementalPlanner {
         val ev = evTs.map(_(env).flatMap(tsMicrosOf))
         if (ev.contains(None)) None
         else {
-          val vals = numeric.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 })
+          val ops  = operands.map(_(env))
+          val vals = slotFns.map { case (o, f) => f(ops(o)) } ++
+            tails.map(s => s(env) match { case Some(d: Double) => d; case _ => 0.0 })
           Some((groupKeysOf(groupSlots, levels, env),
             ev.flatten.fold(vals)(t => t.toDouble +: vals),
             strings.map(s => s(env).map(String.valueOf(_)).getOrElse(NullMark))))
@@ -2883,9 +2914,10 @@ object IncrementalPlanner {
   /** The flat path. Two stage-2 strategies, picked by the SELECT list:
     * count/sum/avg only → signed-delta running totals (O(1) state per
     * group); any min/max → per-group keyed contributions re-aggregated
-    * on touch (subtracting an extremum is meaningless; deleting the
-    * group's max must re-emit the next best — the liveExtremes
-    * strategy, O(live keys in touched groups) per batch).
+    * on touch by [[holisticFold]] with no holistic items (subtracting
+    * an extremum is meaningless; deleting the group's max must re-emit
+    * the next best — the liveExtremes strategy, O(live keys in touched
+    * groups) per batch, unbounded as before).
     */
   private def compileAggregateFlat(spark: SparkSession, agg: Aggregate,
       feeds: Map[String, Dataset[Change]],
@@ -2894,7 +2926,7 @@ object IncrementalPlanner {
       keepMeta: Boolean = false): PlannedView =
     compileGrouped(spark, agg, feeds, ttl, having, keepMeta, AggPath(deltas = true, flow = p =>
       if (p.scaled) twoStage(p, aggFold(p.extract))(_.group, groupFold)
-      else twoStage(p, keyFold(p.extract))(_.group, groupFoldKeyed(p.slotOps))))
+      else twoStage(p, keyFold(p.extract))(_.group, holisticFold(p.slotOps, p.outCols, Int.MaxValue))))
 
   /** HOLISTIC aggregate views: exact `percentile_cont/percentile_disc
     * (f) WITHIN GROUP (ORDER BY x [DESC])`, `median(x)`, `percentile(x,
@@ -2937,14 +2969,9 @@ object IncrementalPlanner {
     compileGrouped(spark, agg, feeds, ttl, having, keepMeta, AggPath(nullSumAsNaN = true,
       item = r => {
         case (f, name) if HolisticFns(f.nameParts.last.toLowerCase) =>
-          compileHolisticFnOut(f, name, r.addSlot, r.addSval)
+          compileHolisticFnOut(f, name, r)
       },
-      flow = p => twoStage(p, keyFold(p.extract))(_.group, holisticFold(p.slotOps,
-        p.outCols.collect { case PercOut(s, f, d, de, _) => (s, f, d, de) },
-        p.outCols.collect { case ListAggOut(v, o, d, sep, _) => (v, o, d, sep) },
-        p.outCols.collect { case ArgExtOut(v, o, mx, _) => (v, o, mx) },
-        p.outCols.collect { case ModeOut(v, _) => v },
-        p.outCols.collect { case BitOut(v, op, _) => (v, op) }, maxRows)),
+      flow = p => twoStage(p, keyFold(p.extract))(_.group, holisticFold(p.slotOps, p.outCols, maxRows)),
       render = (p, extra) => {
         // string results ride `strs` in holisticFold's order: listaggs,
         // then min_by/max_by, then modes, then bit folds
@@ -2982,13 +3009,12 @@ object IncrementalPlanner {
     * [0, 1]; `median(x)` ≡ `percentile_cont(0.5) WITHIN GROUP (ORDER BY
     * x)`; Spark's `percentile(x, f)` is the same interpolating form.
     */
-  private def compileHolisticFnOut(f: UnresolvedFunction, name: String,
-      addSlot: Eval => Int, addSval: Eval => Int): OutCol = {
+  private def compileHolisticFnOut(f: UnresolvedFunction, name: String, regs: AggRegs): OutCol = {
     val fn = f.nameParts.last.toLowerCase
     require(!f.isDistinct, s"$fn(DISTINCT ...) is unsupported in planner views")
     def numSlot(e: Expression): Int = {
       val ca = compileExpr(e)
-      addSlot(env => Some(ca(env).flatMap(asNum).getOrElse(Double.NaN)))
+      regs.addSlot((env: Env) => ca(env).flatMap(asNum))(_.getOrElse(Double.NaN))
     }
     (fn, f.arguments, f.orderingWithinGroup) match {
       case ("median", Seq(e), Seq()) =>
@@ -3005,10 +3031,10 @@ object IncrementalPlanner {
           case other => throw unsupported(
             s"$fn(${other.map(_.sql).mkString(",")}) (need $fn(<expr>[, '<sep>']))")
         }
-        val vIdx = addSval(compileExpr(vE))
+        val vIdx = regs.addSval(compileExpr(vE))
         owg match {
           case Seq()   => ListAggOut(vIdx, vIdx, desc = false, sep, name)
-          case Seq(so) => ListAggOut(vIdx, addSval(compileExpr(so.child)),
+          case Seq(so) => ListAggOut(vIdx, regs.addSval(compileExpr(so.child)),
             desc = so.direction == Descending, sep, name)
           case _ => throw unsupported(
             s"$fn WITHIN GROUP with multiple sort keys (order by one expression)")
@@ -3016,162 +3042,149 @@ object IncrementalPlanner {
       // min_by/max_by(x, y): x of the live row with extreme NON-NULL y
       // (rows with NULL y are ignored — Spark's own rule)
       case ("min_by" | "max_by", Seq(vE, oE), Seq()) =>
-        ArgExtOut(addSval(compileExpr(vE)), numSlot(oE), max = fn == "max_by", name)
+        ArgExtOut(regs.addSval(compileExpr(vE)), numSlot(oE), max = fn == "max_by", name)
       case ("mode", Seq(e), Seq()) =>
-        ModeOut(addSval(compileExpr(e)), name)
+        ModeOut(regs.addSval(compileExpr(e)), name)
       case ("bit_and" | "bit_or" | "bit_xor", Seq(e), Seq()) =>
-        BitOut(addSval(compileExpr(e)), fn, name)
+        BitOut(regs.addSval(compileExpr(e)), fn, name)
       case _ => throw unsupported(s"holistic aggregate ${f.sql}")
     }
   }
 
-  /** Stage-2 fold of the holistic path: maintain the group's per-key
-    * raw contributions and RE-DERIVE every result on touch — order
-    * statistics from the sorted non-NULL slot values, listagg from the
-    * (order key, change key)-sorted string values, plain slots exactly
-    * as [[sessionFold]]'s per-session aggregation. Cost O(live rows in
-    * the touched group · log) per batch, paid only by touched groups.
+  /** Stage-2 fold of the holistic path, and of the flat path with
+    * min/max (no holistic items, `maxRows` unbounded): maintain the
+    * group's per-key raw contributions and RE-DERIVE every result on
+    * touch — plain slots through [[reaggregate]], order statistics from
+    * the sorted non-NULL slot values, listagg from the (order key,
+    * change key)-sorted string values. Cost O(live rows in the touched
+    * group · log) per batch, paid only by touched groups.
     */
-  private def holisticFold(slotOps: Seq[String], pSpecs: Seq[(Int, Double, Boolean, Boolean)],
-      lSpecs: Seq[(Int, Int, Boolean, String)], aSpecs: Seq[(Int, Int, Boolean)],
-      mSpecs: Seq[Int], bSpecs: Seq[(Int, String)],
-      maxRows: Int)(
-      group: String,
-      changes: Iterator[PlannedKeyChange],
-      state: GroupState[HolisticContribs]): Iterator[HolisticGroupRow] = {
-    val before = state.getOption.map(_.contribs).getOrElse(Map.empty[Long, HContrib])
-    var posTs  = 0L
-    var posSeq = 0L
-    val after = changes.foldLeft(before) { (m, c) =>
-      if (c.tsUs > posTs || (c.tsUs == posTs && c.seq > posSeq)) { posTs = c.tsUs; posSeq = c.seq }
-      if (c.live) m + (c.key -> HContrib(c.slots, c.svals)) else m - c.key
-    }
-    if (after == before) Iterator.empty // batch net-cancelled
-    else if (after.isEmpty) {
-      state.remove()
-      Iterator.single(HolisticGroupRow(group, 0L,
-        Seq.fill(slotOps.length + pSpecs.length)(0.0),
-        Seq.fill(lSpecs.length + aSpecs.length + mSpecs.length + bSpecs.length)(NullMark),
-        posTs, posSeq))
-    } else {
+  private def holisticFold(slotOps: Seq[String], outCols: Seq[OutCol], maxRows: Int)
+      : (String, Iterator[PlannedKeyChange], GroupState[HolisticContribs]) => Iterator[HolisticGroupRow] = {
+    val pSpecs = outCols.collect { case PercOut(s, f, d, de, _) => (s, f, d, de) }
+    val lSpecs = outCols.collect { case ListAggOut(v, o, d, sep, _) => (v, o, d, sep) }
+    val aSpecs = outCols.collect { case ArgExtOut(v, o, mx, _) => (v, o, mx) }
+    val mSpecs = outCols.collect { case ModeOut(v, _) => v }
+    val bSpecs = outCols.collect { case BitOut(v, op, _) => (v, op) }
+    val nStrs  = lSpecs.length + aSpecs.length + mSpecs.length + bSpecs.length
+    groupStage(HolisticContribs(Map.empty), (c: PlannedKeyChange) => (c.tsUs, c.seq)) { (s, cs) =>
+      val after = keyStep(s.contribs, cs)(c => HContrib(c.slots, c.svals))
       require(after.size <= maxRows,
         s"holistic view group has ${after.size} live rows, over " +
           s"spark.graft.holistic.maxRowsPerGroup=$maxRows — exact percentile/listagg under " +
           "retraction holds the group's full value multiset; prefilter with WHERE, raise " +
           "the bound deliberately, or accept approximation (approx_count_distinct-class " +
           "sketches) if exactness is not required")
-      state.update(HolisticContribs(after))
-      val sums = slotOps.zipWithIndex.map { case (op, i) =>
-        val vs = after.values.iterator.map(h => if (i < h.slots.length) h.slots(i) else Double.NaN)
-        val xs = vs.filterNot(_.isNaN).toSeq
-        op match {
-          case "sum" => if (xs.isEmpty) Double.NaN else xs.sum
-          case "min" => if (xs.isEmpty) Double.NaN else xs.min
-          case "max" => if (xs.isEmpty) Double.NaN else xs.max
-        }
-      }
-      val psums = pSpecs.map { case (slot, frac, disc, desc) =>
-        val xs = after.values.iterator
-          .map(h => if (slot < h.slots.length) h.slots(slot) else Double.NaN)
-          .filterNot(_.isNaN).toArray
-        if (xs.isEmpty) Double.NaN
-        else {
-          java.util.Arrays.sort(xs)
-          val n = xs.length
-          if (disc) {
-            // the first value (walking the requested direction) whose
-            // cumulative share reaches frac: ceil(frac·n)-th element
-            val k = math.max(0, math.min(n - 1, math.ceil(frac * n).toInt - 1))
-            if (desc) xs(n - 1 - k) else xs(k)
-          } else {
-            // linear interpolation at (n−1)·f over the ascending sort;
-            // DESC mirrors the position (cont over the reversed order ≡
-            // cont at 1−f over the ascending one)
-            val fAsc = if (desc) 1.0 - frac else frac
-            val h    = (n - 1).toDouble * fAsc
-            val lo   = math.floor(h).toInt
-            val hi   = math.min(lo + 1, n - 1)
-            xs(lo) + (h - lo) * (xs(hi) - xs(lo))
+      s.copy(contribs = after)
+    } { (group, _, s, pos) =>
+      val after = s.contribs
+      if (!s.live) Iterator.single(HolisticGroupRow(group, 0L,
+        Seq.fill(slotOps.length + pSpecs.length)(0.0), Seq.fill(nStrs)(NullMark), pos._1, pos._2))
+      else {
+        val sums = reaggregate(slotOps, after.values.map(_.slots))
+        val psums = pSpecs.map { case (slot, frac, disc, desc) =>
+          val xs = after.values.iterator
+            .map(h => if (slot < h.slots.length) h.slots(slot) else Double.NaN)
+            .filterNot(_.isNaN).toArray
+          if (xs.isEmpty) Double.NaN
+          else {
+            java.util.Arrays.sort(xs)
+            val n = xs.length
+            if (disc) {
+              // the first value (walking the requested direction) whose
+              // cumulative share reaches frac: ceil(frac·n)-th element
+              val k = math.max(0, math.min(n - 1, math.ceil(frac * n).toInt - 1))
+              if (desc) xs(n - 1 - k) else xs(k)
+            } else {
+              // linear interpolation at (n−1)·f over the ascending sort;
+              // DESC mirrors the position (cont over the reversed order ≡
+              // cont at 1−f over the ascending one)
+              val fAsc = if (desc) 1.0 - frac else frac
+              val h    = (n - 1).toDouble * fAsc
+              val lo   = math.floor(h).toInt
+              val hi   = math.min(lo + 1, n - 1)
+              xs(lo) + (h - lo) * (xs(hi) - xs(lo))
+            }
           }
         }
-      }
-      val strs = lSpecs.map { case (vIdx, oIdx, desc, sep) =>
-        val items = after.iterator.map { case (k, h) =>
-          val v = if (vIdx < h.svals.length) h.svals(vIdx) else NullMark
-          val o = if (oIdx < h.svals.length) h.svals(oIdx) else NullMark
-          (v, o, k)
-        }.filter(_._1 != NullMark).toSeq // SQL listagg skips NULL operands
-        if (items.isEmpty) NullMark
-        else items.sortWith { case ((_, o1, k1), (_, o2, k2)) =>
-          // ASC defaults NULLS FIRST, DESC defaults NULLS LAST (Spark's
-          // own rule); ties (and the no-ORDER-BY case's equal operands)
-          // break by change key for batch-invariant determinism
-          val c = cmpSort(o1, o2, asc = !desc, nullsFirst = !desc)
-          if (c != 0) c < 0 else k1 < k2
-        }.map(_._1).mkString(sep)
-      }
-      val astrs = aSpecs.map { case (vIdx, oSlot, mx) =>
-        // rows with NULL (NaN) ordering operand are ignored; among the
-        // rest pick the extreme, ties by SMALLEST change key either way
-        // (deterministic however batches sliced the history)
-        val items = after.iterator.map { case (k, h) =>
-          val o = if (oSlot < h.slots.length) h.slots(oSlot) else Double.NaN
-          val v = if (vIdx < h.svals.length) h.svals(vIdx) else NullMark
-          (v, o, k)
-        }.filterNot(_._2.isNaN).toSeq
-        if (items.isEmpty) NullMark
-        else items.minBy { case (_, o, k) => (if (mx) -o else o, k) }._1
-      }
-      val mstrs = mSpecs.map { vIdx =>
-        // frequency argmax over the live non-NULL values; ties break by
-        // smallest value under the listagg comparator (numeric when
-        // both sides parse, else lexical) — the q56 deterministic-mode
-        // convention, batch-invariant. Buckets key on the NUMERIC value
-        // when the rendering parses (so "6" and "6.0" count as one
-        // value, mirroring cmpSort's numeric-first comparator — not
-        // string identity, which would split them and diverge from
-        // batch mode over numeric columns); the emitted representative
-        // is the lexically smallest live rendering of the bucket
-        // (deterministic however batches sliced the history).
-        val vs = after.values.iterator
-          .map(h => if (vIdx < h.svals.length) h.svals(vIdx) else NullMark)
-          .filter(_ != NullMark).toSeq
-        if (vs.isEmpty) NullMark
-        else vs.groupBy(s => s.toDoubleOption.filter(d => !d.isNaN && !d.isInfinite)
-            .map(_.toString).getOrElse(s))
-          .view.mapValues(g => (g.min, g.size)).values.toSeq.sortWith {
-          case ((v1, c1), (v2, c2)) =>
-            if (c1 != c2) c1 > c2
-            else cmpSort(v1, v2, asc = true, nullsFirst = false) < 0
-        }.head._1
-      }
-      val bstrs = bSpecs.map { case (vIdx, op) =>
-        // integral operands only, fail-fast (Spark rejects non-integral
-        // bit-aggregate operands at analysis; a stringly feed can only
-        // enforce that at fold time): integral-VALUED renderings
-        // ("6", "6.0") coerce, fractional or unparseable non-NULL
-        // operands throw instead of silently truncating/dropping
-        val xs = after.values.iterator
-          .map(h => if (vIdx < h.svals.length) h.svals(vIdx) else NullMark)
-          .filter(_ != NullMark)
-          .map(s => s.toLongOption.getOrElse {
-            s.toDoubleOption match {
-              case Some(d) if d == math.rint(d) && math.abs(d) <= 9.007199254740992e15 =>
-                d.toLong
-              case _ => throw new IllegalArgumentException(
-                s"$op operand '$s' is not integral: bit aggregates accept integral values only")
-            }
+        val strs = lSpecs.map { case (vIdx, oIdx, desc, sep) =>
+          val items = after.iterator.map { case (k, h) =>
+            val v = if (vIdx < h.svals.length) h.svals(vIdx) else NullMark
+            val o = if (oIdx < h.svals.length) h.svals(oIdx) else NullMark
+            (v, o, k)
+          }.filter(_._1 != NullMark).toSeq // SQL listagg skips NULL operands
+          if (items.isEmpty) NullMark
+          else items.sortWith { case ((_, o1, k1), (_, o2, k2)) =>
+            // ASC defaults NULLS FIRST, DESC defaults NULLS LAST (Spark's
+            // own rule); ties (and the no-ORDER-BY case's equal operands)
+            // break by change key for batch-invariant determinism
+            val c = cmpSort(o1, o2, asc = !desc, nullsFirst = !desc)
+            if (c != 0) c < 0 else k1 < k2
+          }.map(_._1).mkString(sep)
+        }
+        val astrs = aSpecs.map { case (vIdx, oSlot, mx) =>
+          // rows with NULL (NaN) ordering operand are ignored; among the
+          // rest pick the extreme, ties by SMALLEST change key either way
+          // (deterministic however batches sliced the history)
+          val items = after.iterator.map { case (k, h) =>
+            val o = if (oSlot < h.slots.length) h.slots(oSlot) else Double.NaN
+            val v = if (vIdx < h.svals.length) h.svals(vIdx) else NullMark
+            (v, o, k)
+          }.filterNot(_._2.isNaN).toSeq
+          if (items.isEmpty) NullMark
+          else items.minBy { case (_, o, k) => (if (mx) -o else o, k) }._1
+        }
+        val mstrs = mSpecs.map { vIdx =>
+          // frequency argmax over the live non-NULL values; ties break by
+          // smallest value under the listagg comparator (numeric when
+          // both sides parse, else lexical) — the q56 deterministic-mode
+          // convention, batch-invariant. Buckets key on the NUMERIC value
+          // when the rendering parses (so "6" and "6.0" count as one
+          // value, mirroring cmpSort's numeric-first comparator — not
+          // string identity, which would split them and diverge from
+          // batch mode over numeric columns); the emitted representative
+          // is the lexically smallest live rendering of the bucket
+          // (deterministic however batches sliced the history).
+          val vs = after.values.iterator
+            .map(h => if (vIdx < h.svals.length) h.svals(vIdx) else NullMark)
+            .filter(_ != NullMark).toSeq
+          if (vs.isEmpty) NullMark
+          else vs.groupBy(s => s.toDoubleOption.filter(d => !d.isNaN && !d.isInfinite)
+              .map(_.toString).getOrElse(s))
+            .view.mapValues(g => (g.min, g.size)).values.toSeq.sortWith {
+            case ((v1, c1), (v2, c2)) =>
+              if (c1 != c2) c1 > c2
+              else cmpSort(v1, v2, asc = true, nullsFirst = false) < 0
+          }.head._1
+        }
+        val bstrs = bSpecs.map { case (vIdx, op) =>
+          // integral operands only, fail-fast (Spark rejects non-integral
+          // bit-aggregate operands at analysis; a stringly feed can only
+          // enforce that at fold time): integral-VALUED renderings
+          // ("6", "6.0") coerce, fractional or unparseable non-NULL
+          // operands throw instead of silently truncating/dropping
+          val xs = after.values.iterator
+            .map(h => if (vIdx < h.svals.length) h.svals(vIdx) else NullMark)
+            .filter(_ != NullMark)
+            .map(s => s.toLongOption.getOrElse {
+              s.toDoubleOption match {
+                case Some(d) if d == math.rint(d) && math.abs(d) <= 9.007199254740992e15 =>
+                  d.toLong
+                case _ => throw new IllegalArgumentException(
+                  s"$op operand '$s' is not integral: bit aggregates accept integral values only")
+              }
+            })
+            .toSeq
+          if (xs.isEmpty) NullMark
+          else String.valueOf(op match {
+            case "bit_and" => xs.reduce(_ & _)
+            case "bit_or"  => xs.reduce(_ | _)
+            case "bit_xor" => xs.reduce(_ ^ _)
           })
-          .toSeq
-        if (xs.isEmpty) NullMark
-        else String.valueOf(op match {
-          case "bit_and" => xs.reduce(_ & _)
-          case "bit_or"  => xs.reduce(_ | _)
-          case "bit_xor" => xs.reduce(_ ^ _)
-        })
+        }
+        Iterator.single(HolisticGroupRow(group, after.size.toLong, sums ++ psums,
+          strs ++ astrs ++ mstrs ++ bstrs, pos._1, pos._2))
       }
-      Iterator.single(HolisticGroupRow(group, after.size.toLong, sums ++ psums,
-        strs ++ astrs ++ mstrs ++ bstrs, posTs, posSeq))
     }
   }
 
@@ -3302,7 +3315,7 @@ object IncrementalPlanner {
       render = (_, extra) => { case DistinctOut(_, _, name) => Seq(extra().cast("long").as(name)) }))
   }
 
-  /** Stage-1 fold of the approx path: LWW apply, but RAISE on any
+  /** Stage-1 fold of the approx path: [[keyFold]], but RAISE on any
     * retraction — delete, predicate/group exit, or contribution-changing
     * update — because downstream sketch state cannot un-see a value.
     * Byte-identical re-application is a no-op (allowed).
@@ -3312,21 +3325,14 @@ object IncrementalPlanner {
       changes: Iterator[Change],
       state: GroupState[PlannedContrib]): Iterator[PlannedKeyChange] = {
     val (before, cur) = applyContrib(extract)(changes, state)
-    val bOpt = before.filter(_.live)
     val aOpt = cur.filter(_.live)
-    def same(x: PlannedContrib, y: PlannedContrib) =
-      x.groups == y.groups && x.slots == y.slots && x.svals == y.svals
-    (bOpt, aOpt) match {
-      case (None, None)                     => Iterator.empty
-      case (None, Some(a))                  =>
-        a.groups.iterator.map(g =>
-          PlannedKeyChange(g, key, a.slots, live = true, a.tsUs, a.seq, a.svals))
-      case (Some(b), Some(a)) if same(b, a) => Iterator.empty
-      case _ => throw new IllegalStateException(
+    if (before.filter(_.live).exists(b =>
+        !aOpt.exists(a => b.groups == a.groups && b.slots == a.slots && b.svals == a.svals)))
+      throw new IllegalStateException(
         "approx_count_distinct view received a RETRACTION (delete, group move, or " +
           "value-changing update) — sketches cannot retract. This view requires an " +
           "append-only feed; for retraction-bearing sources use exact count(DISTINCT x).")
-    }
+    keyDiff(key, before, cur)
   }
 
   /** Stage-2 fold of the approx path: bump the group's append-only
@@ -3365,50 +3371,39 @@ object IncrementalPlanner {
     if (e <= 2.5 * m && zeros > 0) m * math.log(m.toDouble / zeros) else e
   }
 
-  private def approxFold(slotOps: Seq[String], nSketch: Int)(
-      group: String,
-      changes: Iterator[PlannedKeyChange],
-      state: GroupState[ApproxGroupState]): Iterator[PlannedGroupRow] = {
-    val s0 = state.getOption.getOrElse(
-      ApproxGroupState(0L, Seq.fill(slotOps.length)(Double.NaN), Seq.fill(nSketch)(new Array[Byte](HllM))))
-    var n      = s0.n
-    val sums   = s0.sums.toArray
-    val hlls   = s0.hlls.map(_.clone())
-    var posTs  = s0.posTs
-    var posSeq = s0.posSeq
-    var touched = false
-    changes.foreach { c =>
-      touched = true
-      if (c.tsUs > posTs || (c.tsUs == posTs && c.seq > posSeq)) { posTs = c.tsUs; posSeq = c.seq }
-      n += 1
-      slotOps.indices.foreach { i =>
-        val v = if (i < c.slots.length) c.slots(i) else Double.NaN
-        if (!v.isNaN) sums(i) = slotOps(i) match {
-          case _ if sums(i).isNaN => v
-          case "sum"              => sums(i) + v
-          case "min"              => math.min(sums(i), v)
-          case "max"              => math.max(sums(i), v)
+  private def approxFold(slotOps: Seq[String], nSketch: Int)
+      : (String, Iterator[PlannedKeyChange], GroupState[ApproxGroupState]) => Iterator[PlannedGroupRow] =
+    groupStage(ApproxGroupState(0L, Seq.fill(slotOps.length)(Double.NaN), Seq.fill(nSketch)(new Array[Byte](HllM))),
+        (c: PlannedKeyChange) => (c.tsUs, c.seq)) { (s, cs) =>
+      val sums = s.sums.toArray
+      val hlls = s.hlls.map(_.clone())
+      cs.foreach { c =>
+        slotOps.indices.foreach { i =>
+          val v = if (i < c.slots.length) c.slots(i) else Double.NaN
+          if (!v.isNaN) sums(i) = slotOps(i) match {
+            case _ if sums(i).isNaN => v
+            case "sum"              => sums(i) + v
+            case "min"              => math.min(sums(i), v)
+            case "max"              => math.max(sums(i), v)
+          }
+        }
+        (0 until nSketch).foreach { j =>
+          val sv = if (j < c.svals.length) c.svals(j) else NullMark
+          if (sv != NullMark) { // SQL NULLs never count toward DISTINCT
+            val h   = hllHash(sv)
+            val idx = (h >>> (64 - HllP)).toInt
+            val rho = (java.lang.Long.numberOfLeadingZeros(h << HllP) + 1).min(64 - HllP + 1).toByte
+            if (rho > hlls(j)(idx)) hlls(j)(idx) = rho
+          }
         }
       }
-      (0 until nSketch).foreach { j =>
-        val sv = if (j < c.svals.length) c.svals(j) else NullMark
-        if (sv != NullMark) { // SQL NULLs never count toward DISTINCT
-          val h   = hllHash(sv)
-          val idx = (h >>> (64 - HllP)).toInt
-          val rho = (java.lang.Long.numberOfLeadingZeros(h << HllP) + 1).min(64 - HllP + 1).toByte
-          if (rho > hlls(j)(idx)) hlls(j)(idx) = rho
-        }
-      }
-    }
-    if (!touched) Iterator.empty
-    else {
-      state.update(ApproxGroupState(n, sums.toSeq, hlls, posTs, posSeq))
+      s.copy(n = s.n + cs.length, sums = sums.toSeq, hlls = hlls)
+    } { (group, _, s, pos) =>
       // NaN slots (no non-null min/max operand yet) ride through — the
       // output layer's isnan→NULL handles them, the keyed convention
-      val out = sums.toSeq ++ hlls.map(r => math.rint(hllEstimate(r)))
-      Iterator.single(PlannedGroupRow(group, n, out, posTs, posSeq))
+      Iterator.single(PlannedGroupRow(group, s.n, s.sums ++ s.hlls.map(r => math.rint(hllEstimate(r))),
+        pos._1, pos._2))
     }
-  }
 
   // ------------------------------------------------------------------
   // approx_percentile: the DDSketch path (Masson, Lee & Rim, VLDB 2019)
@@ -3576,55 +3571,42 @@ object IncrementalPlanner {
     * re-read each requested quantile, emit the group's current row.
     * State O(plain slots + sketch buckets) per group — never O(rows).
     */
-  private def ddqGroupFold(nPlain: Int, nQ: Int, qOuts: Seq[(Int, Double)])(
-      group: String,
-      deltas: Iterator[DdqDelta],
-      state: GroupState[DdqGroupState]): Iterator[PlannedGroupRow] = {
-    val s0 = state.getOption.getOrElse(
-      DdqGroupState(0L, Seq.fill(nPlain)(0.0), Seq.fill(nQ)(Map.empty[Long, Long])))
-    var n    = s0.n
-    val sums = s0.sums.toArray
-    val bks  = s0.buckets.map(m => scala.collection.mutable.Map.empty[Long, Long] ++= m).toArray
-    var touched = false
-    var posTs   = 0L
-    var posSeq  = 0L
-    deltas.foreach { d =>
-      touched = true
-      n += d.d_keys
-      d.d_slots.zipWithIndex.foreach { case (v, i) => if (i < nPlain) sums(i) += v }
-      var j = 0
-      while (j < nQ) {
-        if (j < d.d_buckets.length) {
-          val pairs = d.d_buckets(j)
-          var p = 0
-          while (p + 1 < pairs.length) {
-            val k = pairs(p); val dd = pairs(p + 1)
-            val c = bks(j).getOrElse(k, 0L) + dd
-            if (c < 0L) throw new IllegalStateException(
-              s"approx_percentile sketch undercount (bucket $k of sketch $j) — a " +
-                "retraction arrived for a value the sketch never saw; state is corrupt")
-            if (c == 0L) bks(j) -= k else bks(j)(k) = c
-            p += 2
+  private def ddqGroupFold(nPlain: Int, nQ: Int, qOuts: Seq[(Int, Double)])
+      : (String, Iterator[DdqDelta], GroupState[DdqGroupState]) => Iterator[PlannedGroupRow] =
+    groupStage(DdqGroupState(0L, Seq.fill(nPlain)(0.0), Seq.fill(nQ)(Map.empty[Long, Long])),
+        (d: DdqDelta) => (d.tsUs, d.seq)) { (s, ds) =>
+      val sums = s.sums.toArray
+      val bks  = s.buckets.map(m => scala.collection.mutable.Map.empty[Long, Long] ++= m).toArray
+      ds.foreach { d =>
+        d.d_slots.zipWithIndex.foreach { case (v, i) => if (i < nPlain) sums(i) += v }
+        var j = 0
+        while (j < nQ) {
+          if (j < d.d_buckets.length) {
+            val pairs = d.d_buckets(j)
+            var p = 0
+            while (p + 1 < pairs.length) {
+              val k = pairs(p); val dd = pairs(p + 1)
+              val c = bks(j).getOrElse(k, 0L) + dd
+              if (c < 0L) throw new IllegalStateException(
+                s"approx_percentile sketch undercount (bucket $k of sketch $j) — a " +
+                  "retraction arrived for a value the sketch never saw; state is corrupt")
+              if (c == 0L) bks(j) -= k else bks(j)(k) = c
+              p += 2
+            }
           }
+          j += 1
         }
-        j += 1
       }
-      if (d.tsUs > posTs || (d.tsUs == posTs && d.seq > posSeq)) { posTs = d.tsUs; posSeq = d.seq }
+      s.copy(n = s.n + ds.map(_.d_keys).sum, sums = sums.toSeq, buckets = bks.map(_.toMap).toSeq)
+    } { (group, _, s, pos) =>
+      Iterator.single(
+        if (s.live) PlannedGroupRow(group, s.n,
+          s.sums ++ qOuts.map { case (q, f) => ddqQuantile(s.buckets(q), f) }, pos._1, pos._2)
+        // plain slots zero explicitly (no float residue in the tombstone);
+        // estimates NaN → SQL NULL downstream
+        else PlannedGroupRow(group, 0L,
+          Seq.fill(nPlain)(0.0) ++ Seq.fill(qOuts.length)(Double.NaN), pos._1, pos._2))
     }
-    if (!touched) Iterator.empty
-    else if (n <= 0L) {
-      state.remove()
-      // plain slots zero explicitly (no float residue in the tombstone);
-      // estimates NaN → SQL NULL downstream
-      Iterator.single(PlannedGroupRow(group,
-        0L, Seq.fill(nPlain)(0.0) ++ Seq.fill(qOuts.length)(Double.NaN), posTs, posSeq))
-    } else {
-      val frozen = bks.map(_.toMap)
-      state.update(DdqGroupState(n, sums.toSeq, frozen.toSeq))
-      val ests = qOuts.map { case (q, f) => ddqQuantile(frozen(q), f) }
-      Iterator.single(PlannedGroupRow(group, n, sums.toSeq ++ ests, posTs, posSeq))
-    }
-  }
 
   /** Stage-2 fold of a session-window view: maintain the group's live
     * contributions, re-derive + re-aggregate its sessions, and emit the
@@ -3632,126 +3614,145 @@ object IncrementalPlanner {
     * touched group) per batch, paid only by touched groups; at scale
     * each group's state lives on exactly one shard, guarded by
     * `maxRows`. (A NaN slot value — min/max's NULL marker — defeats the
-    * equality short-circuits below because NaN ≠ NaN; the cost is a
+    * emitted-session equality below because NaN ≠ NaN; the cost is a
     * redundant idempotent re-emission, never a wrong row.)
     */
-  private def sessionFold(gapUs: Long, slotOps: Seq[String], dOps: Seq[(String, Int)], maxRows: Int)(
-      group: String,
-      changes: Iterator[PlannedKeyChange],
-      state: GroupState[SessionGroupState]): Iterator[SessionRow] = {
-    val s0     = state.getOption.getOrElse(SessionGroupState(Map.empty, Map.empty))
-    // monotone per-group position (the rankFold/valBucket discipline):
-    // a straggler batch must not stamp session re-emissions older than
-    // the group's past emissions, or a per-identity LWW consumer drops
-    // the newer row
-    var posTs  = s0.posTs
-    var posSeq = s0.posSeq
-    val after = changes.foldLeft(s0.contribs) { (m, c) =>
-      if (c.tsUs > posTs || (c.tsUs == posTs && c.seq > posSeq)) { posTs = c.tsUs; posSeq = c.seq }
-      if (c.live) m + (c.key -> SessionContrib(c.slots.head.toLong, c.slots.tail, c.svals))
-      else m - c.key
-    }
-    if (after == s0.contribs) Iterator.empty // batch net-cancelled
-    else {
-      require(after.size <= maxRows,
-        s"session view group has ${after.size} live rows, over spark.graft.session.maxRowsPerGroup=" +
-          s"$maxRows — exact sessionization under retraction holds the full per-group row set; " +
-          "prefilter with WHERE, raise the bound deliberately, or use WindowedAggs.sessionize " +
-          "(append-only, watermark-evicting) if retraction is not needed")
-      // ascending event time; a row joins the open session iff its event
-      // time falls strictly inside [start, lastEv + gap) — Spark's own
-      // session-merge rule — else it opens a new one
-      var sessions = Vector.empty[(Long, Long, Vector[SessionContrib])] // (startUs, maxEvUs, members)
-      after.toSeq.sortBy { case (k, c) => (c.evUs, k) }.foreach { case (_, c) =>
-        sessions match {
-          case init :+ ((start, maxEv, members)) if c.evUs < maxEv + gapUs =>
-            sessions = init :+ ((start, c.evUs, members :+ c))
-          case _ =>
-            sessions = sessions :+ ((c.evUs, c.evUs, Vector(c)))
+  private def sessionFold(gapUs: Long, slotOps: Seq[String], dOps: Seq[(String, Int)], maxRows: Int)
+      : (String, Iterator[PlannedKeyChange], GroupState[SessionGroupState]) => Iterator[SessionRow] =
+    groupStage(SessionGroupState(Map.empty, Map.empty), (c: PlannedKeyChange) => (c.tsUs, c.seq)) { (s, cs) =>
+      val after = keyStep(s.contribs, cs)(c => SessionContrib(c.slots.head.toLong, c.slots.tail, c.svals))
+      if (after == s.contribs) s // batch net-cancelled: nothing to re-derive
+      else {
+        require(after.size <= maxRows,
+          s"session view group has ${after.size} live rows, over spark.graft.session.maxRowsPerGroup=" +
+            s"$maxRows — exact sessionization under retraction holds the full per-group row set; " +
+            "prefilter with WHERE, raise the bound deliberately, or use WindowedAggs.sessionize " +
+            "(append-only, watermark-evicting) if retraction is not needed")
+        // ascending event time; a row joins the open session iff its event
+        // time falls strictly inside [start, lastEv + gap) — Spark's own
+        // session-merge rule — else it opens a new one
+        var sessions = Vector.empty[(Long, Long, Vector[SessionContrib])] // (startUs, maxEvUs, members)
+        after.toSeq.sortBy { case (k, c) => (c.evUs, k) }.foreach { case (_, c) =>
+          sessions match {
+            case init :+ ((start, maxEv, members)) if c.evUs < maxEv + gapUs =>
+              sessions = init :+ ((start, c.evUs, members :+ c))
+            case _ =>
+              sessions = sessions :+ ((c.evUs, c.evUs, Vector(c)))
+          }
         }
-      }
-      val newEmitted: Map[Long, SessionEmitted] = sessions.map { case (start, maxEv, members) =>
-        val sums = slotOps.zipWithIndex.map { case (op, i) =>
-          val vs = members.iterator.map(m => if (i < m.slots.length) m.slots(i) else Double.NaN)
+        val newEmitted: Map[Long, SessionEmitted] = sessions.map { case (start, maxEv, members) =>
           // NaN is the NULL marker in min/max and sum slots alike: an
           // all-NULL session stays NaN → emitted as SQL NULL
-          val xs = vs.filterNot(_.isNaN).toSeq
-          op match {
-            case "sum" => if (xs.isEmpty) Double.NaN else xs.sum
-            case "min" => if (xs.isEmpty) Double.NaN else xs.min
-            case "max" => if (xs.isEmpty) Double.NaN else xs.max
+          val sums = reaggregate(slotOps, members.map(_.slots))
+          // distinct-multiset aggregations over the session's members
+          // (NullMark excluded — SQL DISTINCT-aggregate NULL exclusion);
+          // sum/avg read each distinct VALUE numerically, non-numeric
+          // distinct values are the engine's NULL stance (excluded)
+          val dsums = dOps.map { case (op, sIdx) =>
+            val distinct = members.iterator
+              .map(m => if (sIdx < m.svals.length) m.svals(sIdx) else NullMark)
+              .filter(_ != NullMark).toSet
+            op match {
+              case "count" => distinct.size.toDouble
+              case _ =>
+                val nums = distinct.iterator.flatMap(_.toDoubleOption)
+                  .filterNot(d => d.isNaN || d.isInfinite).toSeq
+                if (nums.isEmpty) Double.NaN
+                else if (op == "sum") nums.sum
+                else nums.sum / nums.size
+            }
           }
-        }
-        // distinct-multiset aggregations over the session's members
-        // (NullMark excluded — SQL DISTINCT-aggregate NULL exclusion);
-        // sum/avg read each distinct VALUE numerically, non-numeric
-        // distinct values are the engine's NULL stance (excluded)
-        val dsums = dOps.map { case (op, sIdx) =>
-          val distinct = members.iterator
-            .map(m => if (sIdx < m.svals.length) m.svals(sIdx) else NullMark)
-            .filter(_ != NullMark).toSet
-          op match {
-            case "count" => distinct.size.toDouble
-            case _ =>
-              val nums = distinct.iterator.flatMap(_.toDoubleOption)
-                .filterNot(d => d.isNaN || d.isInfinite).toSeq
-              if (nums.isEmpty) Double.NaN
-              else if (op == "sum") nums.sum
-              else nums.sum / nums.size
-          }
-        }
-        start -> SessionEmitted(maxEv + gapUs, members.size.toLong, sums ++ dsums)
-      }.toMap
-      val dead = (s0.emitted.keySet -- newEmitted.keySet).iterator.map { st =>
+          start -> SessionEmitted(maxEv + gapUs, members.size.toLong, sums ++ dsums)
+        }.toMap
+        s.copy(contribs = after, emitted = newEmitted)
+      }
+    } { (group, s0, s, pos) =>
+      val dead = (s0.emitted.keySet -- s.emitted.keySet).iterator.map { st =>
         SessionRow(group, st, s0.emitted(st).endUs, 0L,
-          Seq.fill(slotOps.length + dOps.length)(0.0), posTs, posSeq)
+          Seq.fill(slotOps.length + dOps.length)(0.0), pos._1, pos._2)
       }
-      val lived = newEmitted.iterator.collect {
+      val lived = s.emitted.iterator.collect {
         case (st, e) if !s0.emitted.get(st).contains(e) =>
-          SessionRow(group, st, e.endUs, e.n, e.sums, posTs, posSeq)
+          SessionRow(group, st, e.endUs, e.n, e.sums, pos._1, pos._2)
       }
-      // keep the high-water mark even when the group empties: a
-      // repopulated group must not emit "older" changes than its own
-      // past tombstones
-      state.update(SessionGroupState(after, newEmitted, posTs, posSeq))
       dead ++ lived
+    }
+
+  /** Stage-2 fold of the signed-delta path: apply the batch's deltas
+    * to the group's running totals and re-emit the group's current row —
+    * or its tombstone (`live_rows = 0`) when the last live row left.
+    * Only groups the batch touched are called, so untouched groups'
+    * state is never read (the [[IncrementalView]] contract).
+    */
+  private def groupFold
+      : (String, Iterator[PlannedDelta], GroupState[PlannedGroupState]) => Iterator[PlannedGroupRow] =
+    groupStage(PlannedGroupState(0L, Nil), (d: PlannedDelta) => (d.tsUs, d.seq)) { (s, ds) =>
+      val sums = scala.collection.mutable.ArrayBuffer(s.sums: _*)
+      ds.foreach { d =>
+        while (sums.length < d.d_slots.length) sums += 0.0
+        d.d_slots.zipWithIndex.foreach { case (v, i) => sums(i) += v }
+      }
+      s.copy(n = s.n + ds.map(_.d_keys).sum, sums = sums.toSeq)
+    } { (group, _, s, pos) =>
+      // a tombstone zeroes the slots explicitly: float residue from
+      // retraction arithmetic must not leak into it
+      Iterator.single(
+        if (s.live) PlannedGroupRow(group, s.n, s.sums, pos._1, pos._2)
+        else PlannedGroupRow(group, 0L, Seq.fill(s.sums.length)(0.0), pos._1, pos._2))
+    }
+
+  /** The stage-2 skeleton every aggregate path's group fold runs, once
+    * per group the batch touched. It owns, once:
+    *  - the emission high-water: the later of the stored position and
+    *    every input's ([[CdcMaterializer.laterPos]]), stamped on the
+    *    rows and kept in state, so a batch carrying an older-positioned
+    *    change never re-emits the group older than its last emission;
+    *  - the no-op: a batch that leaves the contents unchanged emits and
+    *    writes nothing;
+    *  - the emptied group: its state resets to `empty` and keeps only
+    *    the position, so a repopulated group cannot emit "older" rows;
+    *  - the state write.
+    * The path supplies `step`, its contents update (the input state's
+    * position rides through untouched), and `rows`, its result rows
+    * from the pre- and post-batch states at the stamp — the tombstone
+    * when the post-batch state is not live.
+    */
+  private def groupStage[I, S <: GroupPosState[S], R](empty: S, posOf: I => (Long, Long))(
+      step: (S, Seq[I]) => S)(
+      rows: (String, S, S, (Long, Long)) => Iterator[R])(
+      group: String, inputs: Iterator[I], state: GroupState[S]): Iterator[R] = {
+    val s0    = state.getOption.getOrElse(empty)
+    val batch = inputs.toSeq
+    val s1    = step(s0, batch)
+    if (s1 == s0) Iterator.empty
+    else {
+      val pos = batch.iterator.map(posOf).foldLeft((s0.posTs, s0.posSeq))(CdcMaterializer.laterPos)
+      state.update((if (s1.live) s1 else empty).at(pos))
+      rows(group, s0, s1, pos)
     }
   }
 
-  /** Stage-2 fold: apply the batch's signed deltas to the group's
-    * running totals and re-emit the group's current row — or its
-    * tombstone (`live_rows = 0`, state removed) when the last live row
-    * left. Only groups the batch touched are called, so untouched
-    * groups' state is never read (the [[IncrementalView]] contract).
+  /** A keyed stage-2 step: each key change puts or removes the key's
+    * contribution.
     */
-  private def groupFold(
-      group: String,
-      deltas: Iterator[PlannedDelta],
-      state: GroupState[PlannedGroupState]): Iterator[PlannedGroupRow] = {
-    val s0   = state.getOption.getOrElse(PlannedGroupState(0L, Nil))
-    var n    = s0.n
-    val sums = scala.collection.mutable.ArrayBuffer(s0.sums: _*)
-    var touched = false
-    var posTs   = 0L
-    var posSeq  = 0L
-    deltas.foreach { d =>
-      touched = true
-      n += d.d_keys
-      while (sums.length < d.d_slots.length) sums += 0.0
-      d.d_slots.zipWithIndex.foreach { case (v, i) => sums(i) += v }
-      if (d.tsUs > posTs || (d.tsUs == posTs && d.seq > posSeq)) { posTs = d.tsUs; posSeq = d.seq }
+  private def keyStep[V](m: Map[Long, V], cs: Seq[PlannedKeyChange])(v: PlannedKeyChange => V): Map[Long, V] =
+    cs.foldLeft(m)((acc, c) => if (c.live) acc + (c.key -> v(c)) else acc - c.key)
+
+  /** Re-aggregate each slot from a group's (or a session's) live raw
+    * contributions; `slotOps` says how — sum for count/sum/avg slots,
+    * min/max for extremum slots. NaN is the NULL marker: skipped, and a
+    * slot with no non-NULL value stays NaN.
+    */
+  private def reaggregate(slotOps: Seq[String], rows: Iterable[Seq[Double]]): Seq[Double] =
+    slotOps.zipWithIndex.map { case (op, i) =>
+      val xs = rows.iterator.map(r => if (i < r.length) r(i) else Double.NaN).filterNot(_.isNaN).toSeq
+      if (xs.isEmpty) Double.NaN
+      else op match {
+        case "sum" => xs.sum
+        case "min" => xs.min
+        case "max" => xs.max
+      }
     }
-    if (!touched) Iterator.empty
-    else if (n <= 0L) {
-      state.remove()
-      // zero the slots explicitly: float residue from retraction
-      // arithmetic must not leak into the tombstone
-      Iterator.single(PlannedGroupRow(group, 0L, Seq.fill(sums.length)(0.0), posTs, posSeq))
-    } else {
-      state.update(PlannedGroupState(n, sums.toSeq))
-      Iterator.single(PlannedGroupRow(group, n, sums.toSeq, posTs, posSeq))
-    }
-  }
 
   /** Wrap a stage-1 fold with tombstone-TTL expiry (the
     * [[IncrementalView.deltasExpiring]] mechanics): a DEAD contribution
@@ -3852,7 +3853,8 @@ object IncrementalPlanner {
     }
   }
 
-  /** Stage-1 fold of the MIN/MAX path: same LWW apply as [[aggFold]],
+  /** Stage-1 fold of the keyed paths (flat min/max, holistic, session;
+    * approx through [[appendOnlyKeyFold]]): same LWW apply as [[aggFold]],
     * but emitting the KEY-level contribution change (which key, which
     * group, what slot values) — the downstream re-aggregation needs to
     * know WHICH contribution left, not by how much a sum moved.
@@ -3862,10 +3864,18 @@ object IncrementalPlanner {
       changes: Iterator[Change],
       state: GroupState[PlannedContrib]): Iterator[PlannedKeyChange] = {
     val (before, cur) = applyContrib(extract)(changes, state)
+    keyDiff(key, before, cur)
+  }
+
+  /** [[keyFold]]'s key-level diff of a key's pre- and post-batch
+    * contributions, stamped with the post-batch position: a per-group
+    * set diff (a sliding-window key lives in several groups) — leave
+    * groups it left, enter groups it entered, re-emit groups it stays in
+    * only when the slot (or distinct-arg) values changed.
+    */
+  private def keyDiff(key: Long, before: Option[PlannedContrib],
+      cur: Option[PlannedContrib]): Iterator[PlannedKeyChange] = {
     val (posTs, posSeq) = cur.map(c => (c.tsUs, c.seq)).getOrElse((0L, 0L))
-    // per-group set diff (a sliding-window key lives in several groups):
-    // leave groups it left, enter groups it entered, re-emit groups it
-    // stays in only when the slot (or distinct-arg) values changed
     val bOpt = before.filter(_.live)
     val aOpt = cur.filter(_.live)
     val bg = bOpt.map(_.groups.toSet).getOrElse(Set.empty[String])
@@ -3880,46 +3890,6 @@ object IncrementalPlanner {
         PlannedKeyChange(g, key, aOpt.get.slots, live = true, posTs, posSeq, aOpt.get.svals))
       else Iterator.empty
     exits ++ enters ++ stays
-  }
-
-  /** Stage-2 fold of the MIN/MAX path: maintain the group's per-key
-    * contribution map and RE-AGGREGATE every slot on touch (`slotOps`
-    * says how: sum for count/sum/avg slots, min/max with NaN-as-NULL
-    * skipping for extremum slots). Cost O(live keys in the touched
-    * group) per batch, paid only by touched groups — at scale each
-    * group's map lives on exactly one state shard.
-    */
-  private def groupFoldKeyed(slotOps: Seq[String])(
-      group: String,
-      changes: Iterator[PlannedKeyChange],
-      state: GroupState[PlannedGroupContribs]): Iterator[PlannedGroupRow] = {
-    val before = state.getOption.map(_.contribs).getOrElse(Map.empty[Long, Seq[Double]])
-    var posTs  = 0L
-    var posSeq = 0L
-    val after = changes.foldLeft(before) { (m, c) =>
-      if (c.tsUs > posTs || (c.tsUs == posTs && c.seq > posSeq)) { posTs = c.tsUs; posSeq = c.seq }
-      if (c.live) m + (c.key -> c.slots) else m - c.key
-    }
-    if (after == before) Iterator.empty // batch net-cancelled
-    else if (after.isEmpty) {
-      state.remove()
-      Iterator.single(PlannedGroupRow(group, 0L, Seq.fill(slotOps.length)(0.0), posTs, posSeq))
-    } else {
-      state.update(PlannedGroupContribs(after))
-      val sums = slotOps.zipWithIndex.map { case (op, i) =>
-        val vs = after.values.iterator.map(s => if (i < s.length) s(i) else Double.NaN)
-        op match {
-          case "sum" => vs.filterNot(_.isNaN).sum
-          case "min" =>
-            val xs = vs.filterNot(_.isNaN).toSeq
-            if (xs.isEmpty) Double.NaN else xs.min
-          case "max" =>
-            val xs = vs.filterNot(_.isNaN).toSeq
-            if (xs.isEmpty) Double.NaN else xs.max
-        }
-      }
-      Iterator.single(PlannedGroupRow(group, after.size.toLong, sums, posTs, posSeq))
-    }
   }
 
   // ------------------------------------------------------------------
@@ -4567,12 +4537,12 @@ object IncrementalPlanner {
       state: GroupState[MixedWinState]): Iterator[PlannedRowChange] = {
     val s0      = state.getOption.getOrElse(MixedWinState(Map.empty, Map.empty, live = false, 0L, 0L))
     var entries = s0.entries
-    var posTs   = s0.posTs
-    var posSeq  = s0.posSeq
+    var pos     = (s0.posTs, s0.posSeq)
     events.toSeq.sortBy(e => (e.tsUs, e.seq)).foreach { e =>
-      if (e.tsUs > posTs || (e.tsUs == posTs && e.seq > posSeq)) { posTs = e.tsUs; posSeq = e.seq }
+      pos = CdcMaterializer.laterPos(pos, (e.tsUs, e.seq))
       if (e.live) entries += (e.entry -> e.proj) else entries -= e.entry
     }
+    val (posTs, posSeq) = pos
     def specOf(id: String) = id.substring(0, id.indexOf('\u0001')).toInt
     val bySpec  = entries.groupBy { case (id, _) => specOf(id) }
     val nowLive = (0 until nSpecs).forall(bySpec.contains)
@@ -4756,12 +4726,12 @@ object IncrementalPlanner {
     val s0     = state.getOption.getOrElse(RankedGroupState(Map.empty, Map.empty))
     // monotone per-partition position: max of the stored high-water mark
     // and this batch's changes, so derived re-emissions never time-travel
-    var posTs  = s0.posTs
-    var posSeq = s0.posSeq
+    var pos = (s0.posTs, s0.posSeq)
     val after = changes.foldLeft(s0.contribs) { (m, c) =>
-      if (c.tsUs > posTs || (c.tsUs == posTs && c.seq > posSeq)) { posTs = c.tsUs; posSeq = c.seq }
+      pos = CdcMaterializer.laterPos(pos, (c.tsUs, c.seq))
       if (c.live) m + (c.key -> RankedEntry(c.sortVals, c.proj)) else m - c.key
     }
+    val (posTs, posSeq) = pos
     if (after == s0.contribs) Iterator.empty // batch net-cancelled
     else {
       require(after.size <= maxRows,

@@ -74,8 +74,7 @@ object JoinView {
     // the triggering commit position: the max position across both sides
     val (posTs, posSeq) = (l.toSeq ++ r.toSeq)
       .map(s => (s.tsUs, s.seq))
-      .maxOption
-      .getOrElse((0L, 0L))
+      .foldLeft((0L, 0L))(CdcMaterializer.laterPos)
     val prevPair = (s0.left.filter(!_.deleted).map(_.payload), s0.right.filter(!_.deleted).map(_.payload))
     val nowPair  = (liveL.map(_.payload), liveR.map(_.payload))
     val joined   = (liveL.nonEmpty && liveR.nonEmpty) ||
@@ -153,13 +152,22 @@ object JoinView {
   case class FkEvent(fk: Long, kind: String, factKey: Long, op: String,
       ts: java.sql.Timestamp, payload: Map[String, String], seq: Long, moved: Boolean) extends LwwEvent
 
-  /** Hop-2 state: the dim row plus subscribed fact payloads. */
-  case class FkState(dim: Option[SideState], facts: Map[Long, Map[String, String]])
+  /** A fact subscribed to a dim key: its payload and the position of
+    * its last joined-view emission (0 before the first).
+    */
+  case class FkFact(payload: Map[String, String], posTs: Long = 0L, posSeq: Long = 0L)
+
+  /** Hop-2 state: the dim row, the subscribed facts, and the group's
+    * emission high-water `(posTs, posSeq)`, the floor for facts that
+    * (re-)enter the group.
+    */
+  case class FkState(dim: Option[SideState], facts: Map[Long, FkFact], posTs: Long = 0L, posSeq: Long = 0L)
 
   /** One change of the FK-joined view's changefeed, keyed by FACT.
-    * `tsUs`/`seq` carry the triggering batch's max commit position so
-    * downstream LWW consumers (the planner layering this feed) keep
-    * their ordering contract.
+    * `tsUs`/`seq` are the later of the batch's max commit position and
+    * the fact's last emission (see [[foldFkGroup]]), so downstream LWW
+    * consumers (the planner layering this feed) keep their ordering
+    * contract.
     */
   case class FkJoinedChange(op: String, fact_key: Long, fk: Long,
       fact_payload: Map[String, String], dim_payload: Map[String, String],
@@ -228,17 +236,17 @@ object JoinView {
     val dim      = CdcMaterializer.applyLww(s0.dim, evs.iterator.filter(_.kind == "dim"))(sideStep)
     evs.filter(_.kind != "dim").foreach { e =>
       if (e.kind == "sub") {
-        facts += (e.factKey -> e.payload)
+        facts += (e.factKey -> facts.get(e.factKey).fold(FkFact(e.payload))(_.copy(payload = e.payload)))
         if (e.moved) movedIn += e.factKey
       } else {
         facts -= e.factKey
         if (e.moved) movedOut += e.factKey
       }
     }
-    def visibleSet(d: Option[SideState], fs: Map[Long, Map[String, String]]) = {
+    def visibleSet(d: Option[SideState], fs: Map[Long, FkFact]) = {
       val dimPayload = d.filter(!_.deleted).map(_.payload)
-      if (leftOuter) fs.map { case (k, p) => k -> (p, dimPayload.getOrElse(Map.empty[String, String])) }
-      else dimPayload.map(dp => fs.map { case (k, p) => k -> (p, dp) }).getOrElse(Map.empty)
+      if (leftOuter) fs.map { case (k, f) => k -> (f.payload, dimPayload.getOrElse(Map.empty[String, String])) }
+      else dimPayload.map(dp => fs.map { case (k, f) => k -> (f.payload, dp) }).getOrElse(Map.empty)
     }
     require(facts.size <= maxFacts,
       s"fk-join group holds ${facts.size} subscribed rows, over the maxRowsPerShard bound " +
@@ -249,23 +257,39 @@ object JoinView {
         "deliberately")
     val prevVisible: Map[Long, (Map[String, String], Map[String, String])] = visibleSet(s0.dim, s0.facts)
     val nowVisible: Map[Long, (Map[String, String], Map[String, String])]  = visibleSet(dim, facts)
-    if (facts.isEmpty && dim.isEmpty) state.remove() else state.update(FkState(dim, facts))
-    // the triggering commit position: max across the batch's events
-    val (posTs, posSeq) = evs.map(e => (CdcMaterializer.micros(e.ts), e.seq)).maxOption.getOrElse((0L, 0L))
+    // a fact's stamp: the later of the batch's max event position and the
+    // fact's last emission — the group's high-water for a fact new to the
+    // group, so a re-subscribed fact cannot emit under its own earlier
+    // tombstone. A dim change older than a fact's last emission then
+    // still re-emits the fact newer than that emission.
+    val batchPos = evs.map(e => (CdcMaterializer.micros(e.ts), e.seq)).foldLeft((0L, 0L))(CdcMaterializer.laterPos)
+    val groupPos = (s0.posTs, s0.posSeq)
+    def stamp(k: Long): (Long, Long) = CdcMaterializer.laterPos(batchPos,
+      s0.facts.get(k).fold(groupPos)(f => (f.posTs, f.posSeq)))
+    def change(op: String, k: Long, fp: Map[String, String], dp: Map[String, String]) = {
+      val (t, q) = stamp(k)
+      FkJoinedChange(op, k, fk, fp, dp, t, q)
+    }
     val upserts = nowVisible.iterator.collect {
-      case (k, (fp, dp)) if !prevVisible.get(k).contains((fp, dp)) =>
-        FkJoinedChange("upsert", k, fk, fp, dp, posTs, posSeq)
+      case (k, (fp, dp)) if !prevVisible.get(k).contains((fp, dp)) => change("upsert", k, fp, dp)
     }
     val deletes = prevVisible.keysIterator.collect {
-      case k if !nowVisible.contains(k) && !movedOut.contains(k) =>
-        FkJoinedChange("delete", k, fk, Map.empty, Map.empty, posTs, posSeq)
+      case k if !nowVisible.contains(k) && !movedOut.contains(k) => change("delete", k, Map.empty, Map.empty)
     }
     // moved-in fact with a dead dim: the old group stayed silent, so this
     // group must tombstone the fact to evict any previously-visible row
     val moveTombstones = movedIn.iterator.collect {
-      case k if !nowVisible.contains(k) => FkJoinedChange("delete", k, fk, Map.empty, Map.empty, posTs, posSeq)
+      case k if !nowVisible.contains(k) => change("delete", k, Map.empty, Map.empty)
     }
-    (upserts ++ deletes ++ moveTombstones).toSeq.sortBy(_.fact_key).iterator
+    val out = (upserts ++ deletes ++ moveTombstones).toSeq.sortBy(_.fact_key)
+    val emitted = out.foldLeft(groupPos)((p, c) => CdcMaterializer.laterPos(p, (c.tsUs, c.seq)))
+    facts = out.foldLeft(facts) { (fs, c) =>
+      fs.get(c.fact_key).fold(fs)(f => fs + (c.fact_key -> f.copy(posTs = c.tsUs, posSeq = c.seq)))
+    }
+    // the state outlives its last fact and dim: the high-water must
+    // survive for facts that subscribe again
+    state.update(FkState(dim, facts, emitted._1, emitted._2))
+    out.iterator
   }
 
   /** Wire the two hops over a fact changefeed (own PK, fk in
@@ -413,8 +437,7 @@ object JoinView {
     val s0     = state.getOption.getOrElse(ValBucketState(Map.empty, Map.empty, 0L, 0L))
     var lrows  = s0.lrows
     var rrows  = s0.rrows
-    var posTs  = s0.posTs
-    var posSeq = s0.posSeq
+    var pos    = (s0.posTs, s0.posSeq)
     // PER-IDENTITY COALESCING (the 140k/s-knee fix): within one
     // micro-batch only an identity's LAST emission ships — intermediate
     // pair states are unobservable downstream (consumers fold
@@ -433,18 +456,18 @@ object JoinView {
     def solo(op: String, left: Boolean, k: Long, p: Map[String, String]): Unit = {
       val id = soloKey(left, k)
       out(id) = JoinedChange(op, id,
-        if (left) p else Map.empty, if (left) Map.empty else p, posTs, posSeq)
+        if (left) p else Map.empty, if (left) Map.empty else p, pos._1, pos._2)
     }
     def pair(op: String, meLeft: Boolean, myK: Long, myP: Map[String, String],
         otherK: Long, otherP: Map[String, String]): Unit = {
       val id = if (meLeft) pairKey(myK, otherK) else pairKey(otherK, myK)
       out(id) =
-        if (meLeft) JoinedChange(op, id, myP, otherP, posTs, posSeq)
-        else JoinedChange(op, id, otherP, myP, posTs, posSeq)
+        if (meLeft) JoinedChange(op, id, myP, otherP, pos._1, pos._2)
+        else JoinedChange(op, id, otherP, myP, pos._1, pos._2)
     }
 
     changes.toSeq.sortBy(c => (c.tsUs, c.seq)).foreach { c =>
-      if (c.tsUs > posTs || (c.tsUs == posTs && c.seq > posSeq)) { posTs = c.tsUs; posSeq = c.seq }
+      pos = CdcMaterializer.laterPos(pos, (c.tsUs, c.seq))
       val meLeft        = c.leftSide
       val mine          = if (meLeft) lrows else rrows
       val other         = if (meLeft) rrows else lrows
@@ -489,7 +512,7 @@ object JoinView {
     // state persists even when emptied: the high-water mark must survive
     // so a repopulated bucket cannot emit positions older than its own
     // past deletes
-    state.update(ValBucketState(lrows, rrows, posTs, posSeq))
+    state.update(ValBucketState(lrows, rrows, pos._1, pos._2))
     out.valuesIterator
   }
 
@@ -532,10 +555,9 @@ object JoinView {
     val s0     = state.getOption.getOrElse(ValBucketState(Map.empty, Map.empty, 0L, 0L))
     var lrows  = s0.lrows
     var rrows  = s0.rrows
-    var posTs  = s0.posTs
-    var posSeq = s0.posSeq
+    var pos    = (s0.posTs, s0.posSeq)
     changes.toSeq.sortBy(c => (c.tsUs, c.seq)).foreach { c =>
-      if (c.tsUs > posTs || (c.tsUs == posTs && c.seq > posSeq)) { posTs = c.tsUs; posSeq = c.seq }
+      pos = CdcMaterializer.laterPos(pos, (c.tsUs, c.seq))
       if (c.live) { if (c.leftSide) lrows += (c.key -> c.payload) else rrows += (c.key -> c.payload) }
       else { if (c.leftSide) lrows -= c.key else rrows -= c.key }
     }
@@ -587,13 +609,13 @@ object JoinView {
       }
     val prev = visible(s0.lrows, s0.rrows)
     val now  = visible(lrows, rrows)
-    state.update(ValBucketState(lrows, rrows, posTs, posSeq))
+    state.update(ValBucketState(lrows, rrows, pos._1, pos._2))
     val ups = now.iterator.collect {
       case (id, (lp, rp)) if !prev.get(id).contains((lp, rp)) =>
-        JoinedChange("upsert", id, lp, rp, posTs, posSeq)
+        JoinedChange("upsert", id, lp, rp, pos._1, pos._2)
     }
     val dels = prev.keysIterator.collect {
-      case id if !now.contains(id) => JoinedChange("delete", id, Map.empty, Map.empty, posTs, posSeq)
+      case id if !now.contains(id) => JoinedChange("delete", id, Map.empty, Map.empty, pos._1, pos._2)
     }
     (ups ++ dels).toSeq.sortBy(_.key).iterator
   }

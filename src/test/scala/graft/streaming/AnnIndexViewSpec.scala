@@ -45,9 +45,9 @@ class AnnIndexViewSpec extends SparkSpec {
     def chg(op: String, id: Long, emb: Array[Float], ts: Long): VecChg = VecChg(op, id, emb, ts, id)
     val byId = vecs.toMap
 
-    val b1: Seq[VecChg] = vecs.take(30).map { case (id, e) => chg("I", id, e, 1000L) } ++
+    val b1: Seq[VecChg] = vecs.take(30).toSeq.map { case (id, e) => chg("I", id, e, 1000L) } ++
       Seq(chg("I", 0L, byId(0L), 1000L)) // in-batch duplicate delivery
-    val b2: Seq[VecChg] = vecs.drop(30).map { case (id, e) => chg("I", id, e, 1000L) } ++
+    val b2: Seq[VecChg] = vecs.drop(30).toSeq.map { case (id, e) => chg("I", id, e, 1000L) } ++
       Seq(chg("U", 2L, neg(byId(2L)), 5000L), chg("D", 4L, byId(4L), 6000L))
     val b3: Seq[VecChg] = Seq(
       chg("U", 2L, byId(3L), 900L),  // stale: must lose to the ts=5000 update

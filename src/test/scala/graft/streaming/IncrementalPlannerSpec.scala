@@ -2513,6 +2513,114 @@ class IncrementalPlannerSpec extends SparkSpec {
     assert(staleState == run(Seq(early))._2, "stale L change moved the pair state")
   }
 
+  /** Run `sql` as a named changefeed over `batches` of feed `t` and
+    * return its LWW-final rows (key → payload): a fold by `(ts, seq)`
+    * over the emitted changes, ties resolved by emission order (the
+    * later wins, `FeedSink.stateAsOf`'s batch-id rule).
+    */
+  private def lwwFinal(sql: String, name: String, batches: Seq[Seq[Change]]): Map[Long, Map[String, String]] = {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Change]
+    val (changes, _) = IncrementalPlanner.namedChanges(spark, sql, Map("t" -> input.toDS()))
+    val q = changes.writeStream.format("memory").queryName(name).outputMode("append")
+      .option("checkpointLocation", tmp(name)).start()
+    val emitted = try {
+      batches.foldLeft(Vector.empty[Change]) { (acc, b) =>
+        input.addData(b: _*); q.processAllAvailable()
+        acc ++ spark.table(name).as[Change].collect().drop(acc.length)
+      }
+    } finally q.stop()
+    emitted.zipWithIndex.sortBy { case (c, i) => (CdcMaterializer.micros(c.ts), c.seq, i) }
+      .foldLeft(Map.empty[Long, Map[String, String]]) { case (m, (c, _)) =>
+        if (c.op == "delete") m - c.key else m + (c.key -> c.payload)
+      }
+  }
+
+  test("#171ct emission position: every aggregate class re-emits a group no older than its last emission, so split batches fold like one") {
+    // group a: key 1 at ts+10 min, then key 2 at ts+5 min in a LATER
+    // batch; group b: key 3 lives, dies at ts+20 min, and key 4
+    // repopulates it at ts+8 min — the emptied group must remember its
+    // tombstone's position
+    val ev0 = CdcMaterializer.micros(ts(0))
+    def row(g: String, v: Int, evMin: Int) =
+      Map("g" -> g, "v" -> v.toString, "ev" -> (ev0 + evMin * 60000000L).toString)
+    val k1 = Change("insert", 1L, ts(10), row("a", 20, 0), 1L)
+    val k2 = Change("insert", 2L, ts(5), row("a", 10, 2), 2L)
+    val k3 = Change("insert", 3L, ts(1), row("b", 30, 0), 3L)
+    val k3d = Change("delete", 3L, ts(20), Map.empty, 4L)
+    val k4 = Change("insert", 4L, ts(8), row("b", 40, 0), 5L)
+    val one   = Seq(Seq(k1, k3, k3d, k2, k4))
+    val split = Seq(Seq(k1, k3), Seq(k3d), Seq(k2, k4))
+    val classes = Seq(
+      "flat"     -> "SELECT g, count(*) AS n, sum(v) AS s FROM t GROUP BY g",
+      "minmax"   -> "SELECT g, count(*) AS n, max(v) AS mx, min(v) AS mn FROM t GROUP BY g",
+      "holistic" -> "SELECT g, count(*) AS n, median(v) AS med FROM t GROUP BY g",
+      "ddsketch" -> "SELECT g, count(*) AS n, approx_percentile(v, 0.5) AS p50 FROM t GROUP BY g",
+      "session"  -> ("SELECT g, session_window(ev, '10 minutes') AS sw, count(*) AS n " +
+        "FROM t GROUP BY g, session_window(ev, '10 minutes')"),
+      "ranked"   -> "SELECT g, v, row_number() OVER (PARTITION BY g ORDER BY v) AS rn FROM t")
+    classes.foreach { case (cls, sql) =>
+      val a = lwwFinal(sql, s"pos_${cls}_one", one)
+      val b = lwwFinal(sql, s"pos_${cls}_split", split)
+      assert(a.nonEmpty && a.values.exists(_.get("g").contains("b")), s"$cls one-batch view: $a")
+      assert(b == a, s"$cls: split batches fold to $b, one batch to $a")
+    }
+    val flat = lwwFinal(classes.head._2, "pos_flat_check", split).values.map(p => p("g") -> p("n")).toMap
+    assert(flat == Map("a" -> "2", "b" -> "1"), s"flat split view: $flat")
+    // approx views are append-only and expose no positions (they refuse
+    // keepMeta), so the check is the last emission per group
+    def approxLast(name: String, batches: Seq[Seq[Change]]) = {
+      runView("SELECT g, count(*) AS n, approx_count_distinct(v) AS d FROM t GROUP BY g", name,
+        batches.map(b => Map("t" -> b)))
+      aggState(name, Seq("g"))
+    }
+    val approxOne = approxLast("pos_approx_one", Seq(Seq(k1, k2)))
+    assert(approxLast("pos_approx_split", Seq(Seq(k1), Seq(k2))) == approxOne)
+    assert(approxOne == Map(Seq[Any]("a") -> Seq[Any](2L, 2L)), s"approx view: $approxOne")
+  }
+
+  test("#171cu FK join: a dim update older than a fact's last emission still supersedes it; a re-subscribed fact stamps above its tombstone") {
+    import org.apache.spark.sql.streaming.TestGroupState
+    import JoinView.{FkEvent, FkJoinedChange, FkState}
+    def gs(s0: Option[FkState]) = TestGroupState.create[FkState](
+      optionalState = s0.map(org.apache.spark.api.java.Optional.of[FkState])
+        .getOrElse(org.apache.spark.api.java.Optional.empty[FkState]()),
+      timeoutConf = org.apache.spark.sql.streaming.GroupStateTimeout.NoTimeout(),
+      batchProcessingTimeMs = 0L,
+      eventTimeWatermarkMs = org.apache.spark.api.java.Optional.empty[Long](),
+      hasTimedOut = false)
+    def sub(min: Int, seq: Long) =
+      FkEvent(7L, "sub", 1L, "upsert", ts(min), Map("amount" -> "5"), seq, moved = false)
+    def unsub(min: Int, seq: Long) =
+      FkEvent(7L, "unsub", 1L, "delete", ts(min), Map.empty, seq, moved = false)
+    def dim(min: Int, seq: Long, name: String) =
+      FkEvent(7L, "dim", 0L, "upsert", ts(min), Map("name" -> name), seq, moved = false)
+    def run(batches: Seq[Seq[FkEvent]]): Map[Long, Map[String, String]] = {
+      val out = batches.foldLeft((Vector.empty[FkJoinedChange], Option.empty[FkState])) {
+        case ((acc, s0), b) =>
+          val st = gs(s0)
+          (acc ++ JoinView.foldFkGroup(leftOuter = false)(7L, b.iterator, st), Some(st.get))
+      }._1
+      out.zipWithIndex.sortBy { case (c, i) => (c.tsUs, c.seq, i) }
+        .foldLeft(Map.empty[Long, Map[String, String]]) { case (m, (c, _)) =>
+          if (c.op == "delete") m - c.fact_key else m + (c.fact_key -> c.dim_payload)
+        }
+    }
+    // the fact at ts+10 min joins dim v1 (ts+1 min); dim v2 (ts+5 min)
+    // arrives in a later batch — older than the fact's emission
+    val dimOne = run(Seq(Seq(sub(10, 1L), dim(1, 1L, "v1"), dim(5, 2L, "v2"))))
+    assert(dimOne == Map(1L -> Map("name" -> "v2")), s"one batch: $dimOne")
+    val dimSplit = run(Seq(Seq(sub(10, 1L), dim(1, 1L, "v1")), Seq(dim(5, 2L, "v2"))))
+    assert(dimSplit == dimOne, s"split batches: $dimSplit")
+    // the fact's delete is stamped at its v1 emission (ts+10 min, the dim's
+    // position); its re-subscription at ts+3 min must not fall under it
+    val reOne = run(Seq(Seq(sub(1, 1L), dim(10, 1L, "v1"), unsub(2, 2L), sub(3, 3L))))
+    assert(reOne == Map(1L -> Map("name" -> "v1")), s"one batch: $reOne")
+    val reSplit = run(Seq(Seq(sub(1, 1L), dim(10, 1L, "v1")), Seq(unsub(2, 2L)), Seq(sub(3, 3L))))
+    assert(reSplit == reOne, s"split batches: $reSplit")
+  }
+
   test("#171bi OUTER joins with non-equi residuals: residual decides match status, crossings retract pairs and resurrect solos") {
     // LEFT JOIN ON equi AND non-equi: the residual's truth value is LIVE —
     // either side moving across it flips pairs <-> solos

@@ -58,8 +58,8 @@ class IvfIndexViewSpec extends SparkSpec {
     val input = MemoryStream[VecChg]
     val q = IvfIndexView.maintain(input.toDF(), root, tmp("ivfck"), keyBuckets = 8).start()
     try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
+      input.addData(b1.toSeq: _*); q.processAllAvailable()
+      input.addData(b2.toSeq: _*); q.processAllAvailable()
       input.addData(b3: _*); q.processAllAvailable()
     } finally q.stop()
 

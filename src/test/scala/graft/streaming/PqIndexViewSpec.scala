@@ -84,8 +84,8 @@ class PqIndexViewSpec extends SparkSpec {
     val input = MemoryStream[VecChg]
     val q = PqIndexView.maintain(input.toDF(), root, tmp("pqck"), m = 4, keyBuckets = 8).start()
     try {
-      input.addData(b1: _*); q.processAllAvailable()
-      input.addData(b2: _*); q.processAllAvailable()
+      input.addData(b1.toSeq: _*); q.processAllAvailable()
+      input.addData(b2.toSeq: _*); q.processAllAvailable()
       input.addData(b3: _*); q.processAllAvailable()
     } finally q.stop()
 

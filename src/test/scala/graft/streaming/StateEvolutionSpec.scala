@@ -25,7 +25,7 @@ class EvoProcessorV1 extends StatefulProcessor[Long, Change, EvoOut] {
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     state = getHandle.getValueState("evo", Encoders.product[EvoStateV1], TTLConfig.NONE)
   override def handleInputRows(key: Long, rows: Iterator[Change], timers: TimerValues): Iterator[EvoOut] = {
-    var cur = if (state.exists) state.get() else EvoStateV1(Long.MinValue, Long.MinValue, 0.0)
+    var cur = if (state.exists()) state.get() else EvoStateV1(Long.MinValue, Long.MinValue, 0.0)
     rows.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
       cur = EvoStateV1(CdcMaterializer.micros(c.ts), c.seq,
         cur.total + c.payload.getOrElse("v", "0").toDouble)
@@ -40,7 +40,7 @@ class EvoProcessorV2 extends StatefulProcessor[Long, Change, EvoOut] {
   override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
     state = getHandle.getValueState("evo", Encoders.product[EvoStateV2], TTLConfig.NONE)
   override def handleInputRows(key: Long, rows: Iterator[Change], timers: TimerValues): Iterator[EvoOut] = {
-    var cur = if (state.exists) state.get() else EvoStateV2(Long.MinValue, Long.MinValue, 0.0, None)
+    var cur = if (state.exists()) state.get() else EvoStateV2(Long.MinValue, Long.MinValue, 0.0, None)
     rows.toSeq.sortBy(c => (CdcMaterializer.micros(c.ts), c.seq)).foreach { c =>
       cur = EvoStateV2(CdcMaterializer.micros(c.ts), c.seq,
         cur.total + c.payload.getOrElse("v", "0").toDouble,

@@ -1858,9 +1858,9 @@ class DriftStreamSpec extends SparkSpec {
       .option("checkpointLocation", tmp("cusumck")).start()
     try {
       // three uneven in-order batches
-      input.addData(ev.take(100): _*); q.processAllAvailable()
-      input.addData(ev.slice(100, 617): _*); q.processAllAvailable()
-      input.addData(ev.drop(617): _*); q.processAllAvailable()
+      input.addData(ev.take(100).toSeq: _*); q.processAllAvailable()
+      input.addData(ev.slice(100, 617).toSeq: _*); q.processAllAvailable()
+      input.addData(ev.drop(617).toSeq: _*); q.processAllAvailable()
       val got = spark.sql("select * from cusum_live").as[CusumReport].collect()
         .groupBy(_.key).map { case (k, rs) => k -> rs.maxBy(_.nTotal) }
       expect.foreach { case (k, (n, mx, al, first)) =>

@@ -91,6 +91,41 @@ class ViewCatalogSpec extends SparkSpec {
     cat.stopAll()
   }
 
+  test("#234ah view over an aggregate view: an older-positioned change in a later batch folds as in one batch") {
+    val (root, src) = (tmp("vcpos"), tmp("vcpsrc"))
+    val cat = new ViewCatalog(spark, root)
+    cat.registerSource("t", () => ChangeFeed.readJsonDir(spark, src).as[Change])
+    val aggSql  = "SELECT g, count(*) AS n, sum(v) AS s FROM t GROUP BY g"
+    val overSql = "SELECT n, count(*) AS k, sum(s) AS total FROM agg GROUP BY n"
+    val agg  = cat.createView("agg", aggSql)
+    val over = cat.createView("over", overSql)
+    // group a gains key 2 at ts+5 min after key 1 at ts+10 min; group b
+    // empties at ts+20 min and is repopulated at ts+8 min — each in a
+    // later batch, so each re-emission must stamp at its group's
+    // high-water, not at its batch's own older position
+    val batches = Seq(
+      Seq(Change("insert", 1L, ts(10), Map("g" -> "a", "v" -> "20"), 1L),
+        Change("insert", 3L, ts(1), Map("g" -> "b", "v" -> "30"), 3L)),
+      Seq(Change("delete", 3L, ts(20), Map.empty, 4L)),
+      Seq(Change("insert", 2L, ts(5), Map("g" -> "a", "v" -> "10"), 2L),
+        Change("insert", 4L, ts(8), Map("g" -> "b", "v" -> "40"), 5L)))
+    batches.zipWithIndex.foreach { case (b, i) =>
+      writeChanges(src, s"b$i.json", b)
+      cat.awaitAll()
+    }
+    // batch SQL over the LWW-final feed
+    val last = batches.flatten.groupBy(_.key).values
+      .map(_.maxBy(c => (CdcMaterializer.micros(c.ts), c.seq))).filter(_.op != "delete")
+    last.map(c => (c.payload("g"), c.payload("v").toDouble)).toSeq.toDF("g", "v").createOrReplaceTempView("t")
+    spark.sql(aggSql).createOrReplaceTempView("agg")
+    def batchRows(sql: String) = spark.sql(sql).collect().toSet.map((r: org.apache.spark.sql.Row) =>
+      r.toSeq.map(String.valueOf))
+    assert(batchRows(aggSql) == Set(Seq("a", "2", "30.0"), Seq("b", "1", "40.0")))
+    assert(snapRows(cat, "agg", agg.cols) == batchRows(aggSql), "aggregate view")
+    assert(snapRows(cat, "over", over.cols) == batchRows(overSql), "view over the aggregate view")
+    cat.stopAll()
+  }
+
   test("#234c DDL discipline: duplicates, unknown refs, dependent drops, full teardown") {
     val (root, src) = (tmp("vcddl"), tmp("vcdsrc"))
     val cat = new ViewCatalog(spark, root)
