@@ -218,7 +218,7 @@ case class RankedRowChange(op: String, key: Long, group: String, rn: Long,
     proj: Map[String, String], ts_us: Long, seq: Long)
 
 /** Stage-2 → merge wire of a mixed-OVER view (see
-  * IncrementalPlanner.compileMixedWinView): one spec's ranked dataflow
+  * IncrementalPlanner.compileRankedView): one spec's ranked dataflow
   * reporting the row's current (partition, outputs) under
   * `entry` = "<specIdx>\u0001<partition>".
   */
@@ -732,8 +732,7 @@ object IncrementalPlanner {
   }
 
   private def unsupported(what: String): IllegalArgumentException =
-    new IllegalArgumentException(
-      s"IncrementalPlanner supports the SPJA subset (filter/project/key-equi-join/count·sum·avg·min·max/window grouping); got $what")
+    new IllegalArgumentException(s"IncrementalPlanner does not compile $what")
 
   // ------------------------------------------------------------------
   // Source compiler: the FROM/WHERE part of the plan → a Change stream
@@ -743,7 +742,7 @@ object IncrementalPlanner {
   private final case class Source(changes: Dataset[Change], filters: Seq[Expression])
 
   /** `ASOF [LEFT] JOIN` surface syntax: Spark's parser has no ASOF rule,
-    * so [[materialize]] strips the keyword pre-parse and flags the
+    * so [[parseStatement]] strips the keyword pre-parse and flags the
     * statement — the (single) JOIN then compiles through the as-of
     * dataflow. One ASOF JOIN per statement.
     */
@@ -854,8 +853,8 @@ object IncrementalPlanner {
   }
 
   /** [[stripAsofSyntax]] + GROUPS-frame stripping, for callers that only
-    * need a PARSEABLE statement (table-reference walks, catalogs) — the
-    * side-channel map is dropped.
+    * need PARSEABLE SQL — the side-channel map is dropped. Inside the
+    * package, [[parseStatement]] is the parse.
     */
   def stripPlannerSyntax(sql: String): String = stripGroupsSyntax(stripAsofSyntax(sql))._1
   private val asofStatement = new scala.util.DynamicVariable[Boolean](false)
@@ -900,33 +899,6 @@ object IncrementalPlanner {
       val feed = feeds.getOrElse(name,
         throw new IllegalArgumentException(s"IncrementalPlanner: unknown feed '$name'; have ${feeds.keys.mkString(", ")}"))
       Source(qualify(feed, name), Nil)
-    case u: Union => Source(unionChanges(spark, u, feeds)._1, Nil)
-    // a DERIVED TABLE — `FROM (SELECT …) x`: the subquery compiles to
-    // its OWN maintained changefeed (row view, aggregate view, or
-    // distinct view) which then serves as this query's source —
-    // view-over-view composition INSIDE one SQL string, the same
-    // layering materializeChanges/materializeAggChanges expose across
-    // statements. An aggregate subquery's changefeed carries its output
-    // columns as the payload and tombstones exiting groups, so an outer
-    // `WHERE n > 5` behaves exactly like HAVING (threshold exits emit
-    // deletes downstream).
-    case p: Project if hasGeneratorItem(p) =>
-      // a generator subquery — `FROM (SELECT explode(split(…)) AS x …) d`:
-      // the family changefeed is the source, so the outer statement
-      // aggregates/filters ELEMENTS in one SQL string
-      Source(genChangesOf(spark, p, feeds)._1, Nil)
-    case p: Project =>
-      globalAgg(p) match {
-        case Some(_) => Source(aggChangesOf(spark, p, feeds)._1, Nil)
-        case None    => Source(rowChangesOf(spark, p, feeds)._1, Nil)
-      }
-    case a: Aggregate => Source(aggChangesOf(spark, a, feeds)._1, Nil)
-    case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving =>
-      Source(aggChangesOf(spark, h, feeds)._1, Nil)
-    case Distinct(p: Project) =>
-      Source(aggChangesOf(spark, Aggregate(p.projectList, p.projectList, p.child), feeds)._1, Nil)
-    case e: Except    => Source(aggChangesOf(spark, e, feeds)._1, Nil)
-    case i: Intersect => Source(aggChangesOf(spark, i, feeds)._1, Nil)
     case j: Join =>
       // preserve flags: which side stays visible while unmatched — the
       // one-axis encoding of all four ANSI join types
@@ -948,7 +920,8 @@ object IncrementalPlanner {
           if (c.payload.isEmpty) c
           else c.copy(payload = c.payload.filter(kv => s(kv._1)))), t._2)
       }
-      val (lsrc, rsrc) = (pruneFeed(leaf(spark, j.left, feeds)), pruneFeed(leaf(spark, j.right, feeds)))
+      val (lside, rside) = (leaf(spark, j.left, feeds), leaf(spark, j.right, feeds))
+      val (lsrc, rsrc) = (pruneFeed((lside._1.changes, lside._2)), pruneFeed((rside._1.changes, rside._2)))
       // a nested-join side has no alias of its own (its fields are
       // already qualified by the inner sides) — don't re-qualify with ""
       def qual(alias: String, p: Map[String, String]): Map[String, String] =
@@ -974,9 +947,10 @@ object IncrementalPlanner {
         b.result()
       }
       def rejectAggSide(shape: String): Unit =
-        if (isAggPlan(j.left) || isAggPlan(j.right)) throw unsupported(
-          s"$shape join of an aggregate subquery (its keys are group-identity hashes); " +
-            "join on the subquery's group columns instead (a.city = b.city)")
+        if (!lside._1.sourceKeys || !rside._1.sourceKeys) throw unsupported(
+          s"$shape join of a re-keyed subquery (aggregate, union, generator and ranked views " +
+            "key by group-identity hashes, not source row keys); join on the subquery's " +
+            "columns instead (a.city = b.city)")
       // the composite VALUE-equi dataflow: one arrangement on the
       // Sep-joined tuple of equality values (SQL semantics fall out: a
       // NULL in ANY equality operand → no tuple → never matches)
@@ -1204,7 +1178,14 @@ object IncrementalPlanner {
           }
       }
       Source(joined, Nil)
-    case other => throw unsupported(s"plan node ${other.getClass.getSimpleName}")
+    // a DERIVED TABLE — `FROM (SELECT …) x`: the subquery compiles to
+    // its OWN maintained changefeed (any view shape) which then serves
+    // as this query's source — view-over-view composition INSIDE one
+    // SQL string. An aggregate subquery's changefeed carries its output
+    // columns as the payload and tombstones exiting groups, so an outer
+    // `WHERE n > 5` behaves exactly like HAVING (threshold exits emit
+    // deletes downstream).
+    case view => Source(keyedPlan(spark, view, feeds).changes, Nil)
   }
 
   /** Subqueries in WHERE predicates and SELECT lists, hoisted onto the
@@ -1217,7 +1198,7 @@ object IncrementalPlanner {
     *  - '''Scalar''' — `amount > (SELECT avg(x) FROM s)`, the
     *    DYNAMIC-THRESHOLD view class (a filter whose cut moves as the
     *    data moves): the uncorrelated global-aggregate subquery
-    *    compiles to its one-group changefeed ([[aggChangesOf]]), every
+    *    compiles to its one-group changefeed ([[keyedPlan]]), every
     *    fact subscribes with a constant FK, and the fact-preserving
     *    FK-join dataflow pairs each row with the CURRENT scalar; the
     *    downstream no-change suppression emits only rows that actually
@@ -1407,7 +1388,7 @@ object IncrementalPlanner {
             "scalar subquery (must be a GLOBAL aggregate, e.g. (SELECT avg(x) FROM s), or an " +
               "equi-correlated one; a grouped subquery has many rows and is not a scalar)")
         }
-        val (aggFeed, outNames) = aggChangesOf(spark, sq.plan, feeds)
+        val Keyed(aggFeed, outNames, _) = keyedPlan(spark, sq.plan, feeds)
         require(outNames.length == 1,
           s"scalar subquery must select exactly one column; got ${outNames.mkString(", ")}")
         val scalarName = outNames.head
@@ -1426,8 +1407,8 @@ object IncrementalPlanner {
             "correlated scalar subquery item (must be one aggregate call, e.g. count(*) or avg(x))")
         }
         if (nonEquis.isEmpty)
-          layer(aggChangesOf(spark, groupedDim(pairs.map(_._1), innerCs,
-              Seq(Alias(core, "_s")()), subChild), feeds)._1,
+          layer(keyedPlan(spark, groupedDim(pairs.map(_._1), innerCs,
+              Seq(Alias(core, "_s")()), subChild), feeds).changes,
             p => p.get("_s").map(v => Map(nm -> v)).getOrElse(Map.empty),
             probeEnc(pairs.map(p => compileExpr(p._2))))
         else nonEquiScalarLayer(nm, pairs, nonEquis, innerCs, core, subChild)
@@ -1520,9 +1501,9 @@ object IncrementalPlanner {
         val aggItems = Seq(Alias(attr("_ck"), "_ck")(), Alias(aggCore, "_s")()) ++
           sumOperand.map(op =>
             Alias(UnresolvedFunction(Seq("count"), Seq(op), isDistinct = false), "_n")())
-        val aggDim = aggChangesOf(spark,
+        val aggDim = keyedPlan(spark,
           Aggregate(Seq(attr("_ck")), aggItems, UnresolvedRelation(Seq("__corr"))),
-          Map("__corr" -> pairFeed))._1
+          Map("__corr" -> pairFeed)).changes
           .map(c => if (c.op == "delete") c
             else if (sumOperand.nonEmpty && c.payload.get("_n").contains("0"))
               c.copy(payload = Map.empty)
@@ -1560,8 +1541,8 @@ object IncrementalPlanner {
       if (nonEquis.nonEmpty) return nonEquiInExpr(probeExpr, vExpr, pairs, nonEquis, innerCs, subChild, negated)
       val corrExprs = pairs.map(_._1)
       val mk = s"_h${n}_m"
-      layer(aggChangesOf(spark, groupedDim(corrExprs :+ vExpr, innerCs,
-          Seq(cnt(Literal(1), "_n")), subChild), feeds)._1,
+      layer(keyedPlan(spark, groupedDim(corrExprs :+ vExpr, innerCs,
+          Seq(cnt(Literal(1), "_n")), subChild), feeds).changes,
         _ => Map(mk -> "1"),
         probeEnc((pairs.map(_._2) :+ probeExpr).map(compileExpr)))
       n += 1
@@ -1579,7 +1560,7 @@ object IncrementalPlanner {
           if (corrExprs.isEmpty)
             Aggregate(Nil, counts, innerCs.reduceOption(And).map(Filter(_, subChild)).getOrElse(subChild))
           else groupedDim(corrExprs, innerCs, counts, subChild)
-        layer(aggChangesOf(spark, cntPlan, feeds)._1,
+        layer(keyedPlan(spark, cntPlan, feeds).changes,
           p => Seq("_t" -> tN, "_nn" -> nnN).flatMap { case (f, o) => p.get(f).map(o -> _) }.toMap,
           probeEnc(pairs.map(p => compileExpr(p._2))))
         n += 1
@@ -1606,11 +1587,11 @@ object IncrementalPlanner {
         // uncorrelated EXISTS: "is the (filtered) subquery non-empty" —
         // one global count, constant-keyed like a scalar
         val filtered = innerCs.reduceOption(And).map(Filter(_, subChild)).getOrElse(subChild)
-        layer(aggChangesOf(spark, Aggregate(Nil, Seq(cnt(Literal(1), "_n")), filtered), feeds)._1,
+        layer(keyedPlan(spark, Aggregate(Nil, Seq(cnt(Literal(1), "_n")), filtered), feeds).changes,
           _ => Map(mk -> "1"), _ => "")
       } else {
-        layer(aggChangesOf(spark, groupedDim(pairs.map(_._1), innerCs,
-            Seq(cnt(Literal(1), "_n")), subChild), feeds)._1,
+        layer(keyedPlan(spark, groupedDim(pairs.map(_._1), innerCs,
+            Seq(cnt(Literal(1), "_n")), subChild), feeds).changes,
           _ => Map(mk -> "1"),
           probeEnc(pairs.map(p => compileExpr(p._2))))
       }
@@ -1681,26 +1662,26 @@ object IncrementalPlanner {
     * flatten, ordinals following the SQL's branch order.
     */
   private def unionChanges(spark: SparkSession, u: Union,
-      feeds: Map[String, Dataset[Change]]): (Dataset[Change], Seq[String]) = {
+      feeds: Map[String, Dataset[Change]]): Keyed = {
     def flatten(p: LogicalPlan): Seq[LogicalPlan] = p match {
       case un: Union => un.children.flatMap(flatten)
       case other     => Seq(other)
     }
     val branches = flatten(u).map {
-      case p: Project => rowChangesOf(spark, p, feeds)
+      case p: Project => rowChangesOf(spark, p, feeds, None)
       case other => throw unsupported(
         s"UNION branch ${other.getClass.getSimpleName} (each branch must be a plain SELECT; " +
           "for UNION DISTINCT write SELECT DISTINCT over the UNION ALL)")
     }
-    val nameLists = branches.map(_._2)
+    val nameLists = branches.map(_.names)
     require(nameLists.distinct.length == 1,
       s"UNION branches must project the same column names; got " +
         nameLists.distinct.map(_.mkString("(", ",", ")")).mkString(" vs "))
     implicit val changeEnc = Encoders.product[Change]
-    val rekeyed = branches.zipWithIndex.map { case ((ds, _), i) =>
-      ds.map(c => c.copy(key = fnv64("u" + i + Sep + c.key)))
+    val rekeyed = branches.zipWithIndex.map { case (b, i) =>
+      b.changes.map(c => c.copy(key = fnv64("u" + i + Sep + c.key)))
     }
-    (rekeyed.reduce(_ union _), nameLists.head)
+    Keyed(rekeyed.reduce(_ union _), nameLists.head, sourceKeys = false)
   }
 
   /** Wire [[JoinView.materializeFkJoin]] for the planner: facts carry
@@ -1766,54 +1747,26 @@ object IncrementalPlanner {
     }
   }
 
-  /** A join side: a bare (possibly aliased) feed, or ANOTHER JOIN —
-    * `a JOIN b ... JOIN c ...` parses left-deep, so compiling the inner
-    * join to its changefeed and feeding it to the outer hop layers
-    * 3+-feed views out of the same two-feed dataflows (the planner's
-    * own materializeChanges composition, done internally). The inner
-    * join's payload already carries both sides' qualified fields, so
-    * outer conditions like `f.fk2 = d2.key` resolve through it.
-    * Subqueries (a SELECT under a join) stay outside the subset.
+  /** A join side and its alias: a bare (possibly aliased) feed, ANOTHER
+    * JOIN — `a JOIN b ... JOIN c ...` parses left-deep, so the inner
+    * join's changefeed feeds the outer hop and 3+-feed views layer out
+    * of the same two-feed dataflows; its payload already carries both
+    * sides' qualified fields, so outer conditions like `f.fk2 = d2.key`
+    * resolve through it — or a derived table of any view shape. A side
+    * whose keys are not source row keys (aggregate, union, generator,
+    * ranked) joins only through the VALUE-equi shape (join on its
+    * columns — `a.city = b.city`); the key/fk-shaped conditions reject
+    * it instead of silently joining hash garbage.
     */
   private def leaf(spark: SparkSession, plan: LogicalPlan,
-      feeds: Map[String, Dataset[Change]]): (Dataset[Change], String) = plan match {
-    case sa: SubqueryAlias =>
-      val (ds, _) = leaf(spark, sa.child, feeds)
-      (ds, sa.alias)
+      feeds: Map[String, Dataset[Change]]): (Keyed, String) = plan match {
+    case sa: SubqueryAlias => (leaf(spark, sa.child, feeds)._1, sa.alias)
     case r: UnresolvedRelation =>
       val name = r.multipartIdentifier.last
-      (feeds.getOrElse(name, throw new IllegalArgumentException(s"unknown feed '$name'")), name)
-    case j: Join => (compileSource(spark, j, feeds).changes, "")
-    // a derived ROW view as a join side — `JOIN (SELECT … WHERE …) d ON
-    // …`: keeps its source keys, so both join shapes apply unchanged.
-    case p: Project if globalAgg(p).isEmpty => (rowChangesOf(spark, p, feeds)._1, "")
-    // an AGGREGATE-class subquery as a join side: its changefeed is
-    // keyed by the group-identity hash, so it only joins through the
-    // VALUE-equi shape (join on its GROUP COLUMNS — `a.city = b.city`,
-    // or an output column of a GROUP-BY-less global aggregate); the
-    // key/fk-shaped conditions reject it (see [[isAggPlan]] guards)
-    // instead of silently joining hash garbage.
-    case p: Project if globalAgg(p).isDefined => (aggChangesOf(spark, p, feeds)._1, "")
-    case a: Aggregate => (aggChangesOf(spark, a, feeds)._1, "")
-    case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving =>
-      (aggChangesOf(spark, h, feeds)._1, "")
-    case Distinct(p: Project) =>
-      (aggChangesOf(spark, Aggregate(p.projectList, p.projectList, p.child), feeds)._1, "")
-    case other => throw unsupported(
-      s"join input ${other.getClass.getSimpleName} (feeds, nested joins, and derived tables join)")
-  }
-
-  /** Is this join side an aggregate-class subquery (changefeed keyed by
-    * the group-identity hash rather than a source row key)? Such sides
-    * join only through the value-equi shape.
-    */
-  private def isAggPlan(plan: LogicalPlan): Boolean = plan match {
-    case sa: SubqueryAlias => isAggPlan(sa.child)
-    case _: Aggregate      => true
-    case _: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving => true
-    case _: Distinct       => true
-    case p: Project        => globalAgg(p).isDefined
-    case _                 => false
+      (Keyed(feeds.getOrElse(name, throw new IllegalArgumentException(s"unknown feed '$name'")),
+        Nil, sourceKeys = true), name)
+    case j: Join => (Keyed(compileSource(spark, j, feeds).changes, Nil, sourceKeys = true), "")
+    case view    => (keyedPlan(spark, view, feeds), "")
   }
 
   /** Merge qualified copies of every payload field into the payload so
@@ -2614,7 +2567,7 @@ object IncrementalPlanner {
         (active.map(i => Alias(baseExprs(i), s"_dg$i")()) :+
           Alias(dArg, "_dx")()) ++ (if (ai == 0) innerExtra.toSeq else Nil)
       val inner = Aggregate(active.map(baseExprs(_)) :+ dArg, innerOut, agg.child)
-      val (feed, _) = aggChangesOf(spark, inner, feeds)
+      val feed = keyedPlan(spark, inner, feeds).changes
       val inactive = (0 until n).filterNot(active.contains)
       val tag      = inactive.map(i => s"_dg$i" -> RollMark) ++
         (if (multiArg) Seq("_arg" -> ai.toString) else Nil)
@@ -2838,23 +2791,10 @@ object IncrementalPlanner {
       case (ops, MaxOut(s, _)) => ops.updated(s, "max")
       case (ops, _)            => ops
     }
-    // with a TTL the input carries a watermark and stage 1 runs under
-    // EventTimeTimeout: DEAD contributions (deletes, filtered-out rows)
-    // leave the store once the watermark passes their ts + ttl — state
-    // bounded by live + recently-dead keys on an unbounded feed (the
-    // deltasExpiring contract; retractions were already emitted when
-    // the death was applied, so expiry changes state size, not view
-    // contents — at the documented cost that a straggler older than an
-    // expired tombstone re-materializes)
-    val inChanges = ttl match {
-      case Some((delay, _)) => src.changes.withWatermark("ts", delay)
-      case None             => src.changes
-    }
-    val timeout =
-      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
     val scaled = path.deltas && slotOps.forall(_ == "sum")
     val parts  = AggParts(outCols, regs.slots.length, strings.length, regs.tail.length, slotOps,
-      scaled, extract, inChanges.groupByKey(_.key)(Encoders.scalaLong), timeout, ttl)
+      scaled, extract, watermarked(src.changes, ttl).groupByKey(_.key)(Encoders.scalaLong),
+      timeoutOf(ttl), ttl)
     val groupRows = path.flow(parts)
 
     val groupParts = split(col("group"), Sep)
@@ -3895,16 +3835,19 @@ object IncrementalPlanner {
   // ------------------------------------------------------------------
   // Non-aggregate (select-where / join) view compilation
   // ------------------------------------------------------------------
-  private def compileProject(spark: SparkSession, proj: Project,
-      feeds: Map[String, Dataset[Change]],
-      ttl: Option[(String, Long)] = None): PlannedView = {
-    val src0  = compileSource(spark, proj.child, feeds)
-    // SELECT-list subqueries hoist exactly like WHERE-clause ones: each
-    // becomes a dim-join layer and the item reads the injected field —
-    // `SELECT c.name, (SELECT count(*) FROM ord WHERE ord.cid = c.id)`
-    // is a live per-parent child count (0 included, the COUNT bug
-    // handled in the hoister). Layers compose with any WHERE layers
-    // already wired by compileSource.
+
+  /** A projected ROW view (filter + project over a feed, join, or
+    * derived table) as a keyed changefeed, keyed by source row key —
+    * every position compiles a row view here. SELECT-list subqueries
+    * hoist exactly like WHERE-clause ones: each becomes a dim-join layer
+    * and the item reads the injected field — `SELECT c.name, (SELECT
+    * count(*) FROM ord WHERE ord.cid = c.id)` is a live per-parent child
+    * count (0 included, the COUNT bug handled in the hoister). Layers
+    * compose with any WHERE layers already wired by compileSource.
+    */
+  private def rowChangesOf(spark: SparkSession, proj: Project,
+      feeds: Map[String, Dataset[Change]], ttl: Option[(String, Long)]): Keyed = {
+    val src0 = compileSource(spark, proj.child, feeds)
     val h = new SubqueryHoister(spark, feeds)
     val items = proj.projectList.map { ne =>
       if (ne.isInstanceOf[UnresolvedStar]) throw unsupported("SELECT * (name the projected fields)")
@@ -3922,27 +3865,32 @@ object IncrementalPlanner {
       if (!preds.forall(p => p(env).contains(true))) None
       else Some(names.zip(fns).flatMap { case (n, f) => f(env).map(v => n -> String.valueOf(v)) }.toMap)
     }
-
     implicit val rowEnc    = Encoders.product[PlannedRow]
-    implicit val changeEnc = Encoders.product[PlannedRowChange]
+    implicit val rcEnc     = Encoders.product[PlannedRowChange]
+    implicit val changeEnc = Encoders.product[Change]
     implicit val longEnc   = Encoders.scalaLong
-    val inChanges = ttl match {
-      case Some((delay, _)) => src.changes.withWatermark("ts", delay)
-      case None             => src.changes
-    }
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
-    val feedChanges = inChanges
+    val changes = watermarked(src.changes, ttl)
       .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append(), timeoutOf(ttl))(
         expiringState[PlannedRow, PlannedRowChange](ttl, !_.live, _.tsUs)(rowFold(extract)))
-      .toDF()
-
-    val outExprs =
-      col("op") +: col("key") +:
-        names.map(n => element_at(col("proj"), n).as(n)) :+ col("ts_us") :+ col("seq")
-    PlannedView(feedChanges.select(outExprs: _*), OutputMode.Append())
+      .map(rc => Change(rc.op, rc.key, tsOfMicros(rc.ts_us), rc.proj, rc.seq))
+    Keyed(changes, names, sourceKeys = true)
   }
+
+  /** A stage-1 input under `ttl`: watermarked by its delay, with stage 1
+    * under EventTimeTimeout ([[timeoutOf]]), so DEAD contributions
+    * (deletes, filtered-out rows) leave the store once the watermark
+    * passes their ts + ttl — state bounded by live + recently-dead keys
+    * on an unbounded feed. Retractions were already emitted when the
+    * death applied, so expiry changes state size, not view contents, at
+    * the documented cost that a straggler older than an expired
+    * tombstone re-materializes ([[expiringState]]).
+    */
+  private def watermarked(changes: Dataset[Change], ttl: Option[(String, Long)]): Dataset[Change] =
+    ttl.fold(changes) { case (delay, _) => changes.withWatermark("ts", delay) }
+
+  private def timeoutOf(ttl: Option[(String, Long)]): GroupStateTimeout =
+    if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
 
   /** Stage-1 fold of a planned row view: LWW apply, then emit the net
     * row change — upsert when the projected row (re)appears or changes,
@@ -3978,8 +3926,8 @@ object IncrementalPlanner {
   private val GeneratorFns = Set("explode", "posexplode")
 
   /** Is there a generator function anywhere in the select list? Used
-    * only for dispatch — [[compileGenerateProject]] then enforces the
-    * supported top-level shape and rejects the rest loudly.
+    * only for dispatch — [[genChangesOf]] then enforces the supported
+    * top-level shape and rejects the rest loudly.
     */
   private def hasGeneratorItem(p: Project): Boolean =
     p.projectList.exists(_.exists {
@@ -4023,25 +3971,8 @@ object IncrementalPlanner {
     * 10k rows. One generator per statement (Spark's own batch rule);
     * scalars ride every element's row, `pos` is emitted for posexplode.
     */
-  private def compileGenerateProject(spark: SparkSession, proj: Project,
-      feeds: Map[String, Dataset[Change]],
-      ttl: Option[(String, Long)] = None): PlannedView = {
-    val (changes, names) = genChangesOf(spark, proj, feeds, ttl)
-    val df = changes.toDF().select(
-      col("op") +: col("key") +:
-        names.map(n => element_at(col("payload"), n).as(n)) :+
-        expr("unix_micros(ts)").as("ts_us") :+ col("seq"): _*)
-    PlannedView(df, OutputMode.Append())
-  }
-
-  /** The generator view as a keyed [[Change]] stream — the composition
-    * primitive behind [[compileGenerateProject]], and what lets a NAMED
-    * generator view feed downstream planner views (the
-    * [[materializeChanges]] layering contract).
-    */
   private def genChangesOf(spark: SparkSession, proj: Project,
-      feeds: Map[String, Dataset[Change]],
-      ttl: Option[(String, Long)] = None): (Dataset[Change], Seq[String]) = {
+      feeds: Map[String, Dataset[Change]], ttl: Option[(String, Long)]): Keyed = {
     val src   = compileSource(spark, proj.child, feeds)
     val preds = src.filters.map(compileExpr)
 
@@ -4096,21 +4027,15 @@ object IncrementalPlanner {
     implicit val rcEnc     = Encoders.product[PlannedRowChange]
     implicit val changeEnc = Encoders.product[Change]
     implicit val longEnc   = Encoders.scalaLong
-    val inChanges = ttl match {
-      case Some((delay, _)) => src.changes.withWatermark("ts", delay)
-      case None             => src.changes
-    }
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
     val posName  = if (genItem.fn == "posexplode") Some(genItem.names.head) else None
     val itemName = genItem.names.last
-    val changes = inChanges
+    val changes = watermarked(src.changes, ttl)
       .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
+      .flatMapGroupsWithState(OutputMode.Append(), timeoutOf(ttl))(
         expiringState[PlannedGenRow, PlannedRowChange](ttl, !_.live, _.tsUs)(
           genFold(extract, itemName, posName)))
       .map(rc => Change(rc.op, rc.key, tsOfMicros(rc.ts_us), rc.proj, rc.seq))
-    (changes, outNames.toSeq)
+    Keyed(changes, outNames.toSeq, sourceKeys = false)
   }
 
   /** Stage-1 fold of a generator view: LWW apply (identical discipline
@@ -4273,6 +4198,17 @@ object IncrementalPlanner {
     * broken by change key for a deterministic `row_number`; `rank`/
     * `dense_rank` tie on equal ORDER BY values, and a bound keeps
     * ties (`rank() <= k` is top-k WITH ties, the SQL meaning).
+    *
+    * MIXED OVER clauses — window functions over two or more DISTINCT
+    * `(PARTITION BY, ORDER BY)` specs: each spec runs its OWN two-stage
+    * dataflow ([[rankStages]], unbounded), and a final per-row-key
+    * [[mixedWinFold]] joins the spec outputs on the change key. The
+    * merged view has no `_partition` column (whole-row identity),
+    * because entry identities inside the merge already carry the
+    * partition. Each spec pays the single-spec price, plus one keyed
+    * shuffle for the merge. A top-k bound (`WHERE rn <= k`) reads ONE
+    * spec's rank and is rejected — bound the single-spec subquery, then
+    * join.
     */
   private def compileRankedView(spark: SparkSession, inner: Project,
       feeds: Map[String, Dataset[Change]],
@@ -4296,66 +4232,44 @@ object IncrementalPlanner {
     }
     // two or more DISTINCT OVER clauses route to the mixed-spec merge
     // dataflow (each spec its own ranked pipeline, joined on change key)
-    if (parsed.map(_._3).distinct.length > 1)
-      return compileMixedWinView(spark, src, parsed, plainItems, outerCond, outerNames)
-    val spec = parsed.head._3
-    val valFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-    def addVal(f: Eval): Int = { valFns += f; valFns.size - 1 }
-    val wins: Seq[WinOut] = parseWinFns(parsed.map(p => (p._1, p._2)), spec, addVal)
-
-    val partFs = spec.partitionSpec.map { e =>
-      compileGroupSlot(e) match {
-        case ScalarSlot(f) => f
-        case _             => throw unsupported(s"PARTITION BY ${e.sql} (scalar expressions only)")
-      }
-    }
-    val sortFs       = spec.orderSpec.map(so => compileExpr(so.child))
-    val sortN        = sortFs.length
-    val sortAsc      = spec.orderSpec.map(_.direction == Ascending)
-    val sortNullsFst = spec.orderSpec.map(_.nullOrdering == NullsFirst)
+    val specs = parsed.map(_._3).distinct
+    if (specs.length > 1 && outerCond.nonEmpty) throw unsupported(
+      "top-k bound over mixed OVER clauses (the bound reads one spec's rank) — bound a " +
+        "single-spec subquery and join the views on key")
     val cols: Seq[(String, Eval)] = plainItems.zipWithIndex.map { case (ne, i) =>
       (outName(ne, s"col$i"), compileExpr(coreOf(ne)))
     }
+    val maxRows = spark.conf.get("spark.graft.ranked.maxRowsPerGroup", "1000000").toInt
+    val stages = specs.map(spec => rankStages(src.changes, preds, cols,
+      parsed.collect { case (n, f, sp) if sp == spec => (n, f) }, spec, outerCond, maxRows))
     val names    = cols.map(_._1)
+    val wins     = stages.flatMap(_._2)
     val winNames = wins.map(_.name)
     require((names ++ winNames).distinct.length == names.length + winNames.length,
       s"duplicate output columns among ${(names ++ winNames).mkString(", ")}")
     outerNames.foreach(_.foreach(n => require((names ++ winNames).contains(n),
       s"outer select column $n is not an output of the subquery")))
-    // the outer WHERE bound applies to ONE ranking item (top-k per
-    // partition; rank() <= k keeps ties, the SQL meaning)
-    val bound: Option[(String, Long)] = outerCond.map { cond =>
-      val rankAliases = wins.collect { case WRank(rk, nm) => nm -> rk }.toMap
-      val (alias, k)  = rankBoundOf(cond, rankAliases.keySet)
-      (rankAliases(alias), k)
-    }
 
-    val valFnsSeq = valFns.toIndexedSeq
-    val extract: Change => Option[(String, Seq[String], Map[String, String])] = { c =>
-      val env = envOf(c)
-      if (!preds.forall(p => p(env).contains(true))) None
-      else Some((
-        partFs.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)).mkString(Sep),
-        sortFs.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)) ++
-          valFnsSeq.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)),
-        cols.flatMap { case (n, f) => f(env).map(v => n -> String.valueOf(v)) }.toMap))
-    }
-    val maxRows = spark.conf.get("spark.graft.ranked.maxRowsPerGroup", "1000000").toInt
-
-    implicit val contribEnc = Encoders.product[RankedContrib]
-    implicit val keyChEnc   = Encoders.product[RankedKeyChange]
-    implicit val stateEnc   = Encoders.product[RankedGroupState]
-    implicit val rowChEnc   = Encoders.product[RankedRowChange]
+    implicit val eventEnc   = Encoders.product[MixedWinEvent]
+    implicit val mergeEnc   = Encoders.product[MixedWinState]
+    implicit val plannedEnc = Encoders.product[PlannedRowChange]
     implicit val longEnc    = Encoders.scalaLong
-    implicit val stringEnc  = Encoders.STRING
-    val changes = src.changes
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(rankedKeyFold(extract))
-      .groupByKey(_.group)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        rankFold(wins, sortN, sortAsc, sortNullsFst, bound, maxRows))
-      .toDF()
-
+    // one spec: its rows carry `_partition` as part of the change
+    // identity (a partition move emits delete(old partition) +
+    // upsert(new partition) from two independent shards — consumers fold
+    // per (key, _partition)); several: [[mixedWinFold]] merges the specs'
+    // rows per change key, whose entry identities carry the partition
+    val (rows, partition) =
+      if (stages.length == 1) (stages.head._1.toDF(), Seq(col("group").as("_partition")))
+      else (stages.zipWithIndex.map { case ((ranked, _), i) =>
+        val prefix = i.toString + "\u0001"
+        ranked.map(rc => MixedWinEvent(rc.key, prefix + rc.group,
+          if (rc.op == "delete") Map.empty else rc.proj, rc.op != "delete", rc.ts_us, rc.seq))
+      }.reduce(_ union _)
+        .groupByKey(_.key)
+        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+          mixedWinFold(specs.length))
+        .toDF(), Nil)
     // ranking columns come back typed LONG; navigation/aggregate values
     // keep the stringly payload convention (operands are payload strings)
     val projected: Seq[(String, org.apache.spark.sql.Column)] =
@@ -4370,12 +4284,58 @@ object IncrementalPlanner {
       case Some(ns) => ns.map(n => projected.find(_._1 == n).get._2)
       case None     => projected.map(_._2)
     }
-    // _partition rides along as part of the change identity: a partition
-    // move emits delete(old partition) + upsert(new partition) from two
-    // independent shards — consumers fold per (key, _partition)
-    val outExprs = col("op") +: col("key") +: col("group").as("_partition") +:
-      keep :+ col("ts_us") :+ col("seq")
-    PlannedView(changes.select(outExprs: _*), OutputMode.Append())
+    val outExprs = (col("op") +: col("key") +: partition) ++ keep :+ col("ts_us") :+ col("seq")
+    PlannedView(rows.select(outExprs: _*), OutputMode.Append())
+  }
+
+  /** One OVER spec's two ranked stages: [[rankedKeyFold]] by change key,
+    * then [[rankFold]] by partition. `outerCond` is the outer `WHERE rn
+    * <= k`: it bounds ONE ranking item (top-k per partition; rank() <= k
+    * keeps ties, the SQL meaning).
+    */
+  private def rankStages(changes: Dataset[Change], preds: Seq[Eval], cols: Seq[(String, Eval)],
+      items: Seq[(String, UnresolvedFunction)], spec: WindowSpecDefinition,
+      outerCond: Option[Expression], maxRows: Int): (Dataset[RankedRowChange], Seq[WinOut]) = {
+    val valFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
+    def addVal(f: Eval): Int = { valFns += f; valFns.size - 1 }
+    val wins: Seq[WinOut] = parseWinFns(items, spec, addVal)
+    val partFs = spec.partitionSpec.map { e =>
+      compileGroupSlot(e) match {
+        case ScalarSlot(f) => f
+        case _             => throw unsupported(s"PARTITION BY ${e.sql} (scalar expressions only)")
+      }
+    }
+    val sortFs       = spec.orderSpec.map(so => compileExpr(so.child))
+    val sortAsc      = spec.orderSpec.map(_.direction == Ascending)
+    val sortNullsFst = spec.orderSpec.map(_.nullOrdering == NullsFirst)
+    val bound: Option[(String, Long)] = outerCond.map { cond =>
+      val rankAliases = wins.collect { case WRank(rk, nm) => nm -> rk }.toMap
+      val (alias, k)  = rankBoundOf(cond, rankAliases.keySet)
+      (rankAliases(alias), k)
+    }
+    val valFnsSeq = valFns.toIndexedSeq
+    val extract: Change => Option[(String, Seq[String], Map[String, String])] = { c =>
+      val env = envOf(c)
+      if (!preds.forall(p => p(env).contains(true))) None
+      else Some((
+        partFs.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)).mkString(Sep),
+        sortFs.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)) ++
+          valFnsSeq.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)),
+        cols.flatMap { case (n, f) => f(env).map(v => n -> String.valueOf(v)) }.toMap))
+    }
+    implicit val contribEnc = Encoders.product[RankedContrib]
+    implicit val keyChEnc   = Encoders.product[RankedKeyChange]
+    implicit val stateEnc   = Encoders.product[RankedGroupState]
+    implicit val rowChEnc   = Encoders.product[RankedRowChange]
+    implicit val longEnc    = Encoders.scalaLong
+    implicit val stringEnc  = Encoders.STRING
+    val ranked = changes
+      .groupByKey(_.key)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(rankedKeyFold(extract))
+      .groupByKey(_.group)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
+        rankFold(wins, sortFs.length, sortAsc, sortNullsFst, bound, maxRows))
+    (ranked, wins)
   }
 
   /** Parse one OVER clause's window items into [[WinOut]] descriptors;
@@ -4523,7 +4483,7 @@ object IncrementalPlanner {
   }
 
   /** Per-ROW-KEY merge fold of a mixed-OVER view (see
-    * [[compileMixedWinView]]): apply each spec dataflow's entry
+    * [[compileRankedView]]): apply each spec dataflow's entry
     * changes, then emit the row's merged output diff. Entry identities
     * are (spec, partition), so a partition move's delete (old
     * partition's shard) and upsert (new partition's shard) target
@@ -4561,111 +4521,6 @@ object IncrementalPlanner {
     // so a repopulated row cannot emit positions older than its own past
     state.update(MixedWinState(entries, nowProj, nowLive, posTs, posSeq))
     out
-  }
-
-  /** MIXED OVER clauses — a select list whose window functions use two
-    * or more DISTINCT `(PARTITION BY, ORDER BY)` specs: each distinct
-    * spec compiles to its OWN two-stage ranked dataflow (the same
-    * [[rankedKeyFold]]/[[rankFold]] pair, unbounded), and a final
-    * per-row-key [[mixedWinFold]] joins the spec outputs on the change
-    * key. The merged view is keyed by the row's change key — there is
-    * no `_partition` column (whole-row identity), because entry
-    * identities inside the merge already carry the partition.
-    *
-    * Cost: each spec pays the single-spec price (full live partition
-    * in its shard's state, `spark.graft.ranked.maxRowsPerGroup`
-    * guarded), plus one extra keyed shuffle for the merge — the
-    * dataflow a user would otherwise hand-build as N single-spec views
-    * joined on key, in one statement. A top-k bound (`WHERE rn <= k`)
-    * reads ONE spec's rank and is rejected here — bound the
-    * single-spec subquery, then join.
-    */
-  private def compileMixedWinView(spark: SparkSession, src: Source,
-      parsed: Seq[(String, UnresolvedFunction, WindowSpecDefinition)],
-      plainItems: Seq[NamedExpression],
-      outerCond: Option[Expression],
-      outerNames: Option[Seq[String]]): PlannedView = {
-    if (outerCond.nonEmpty) throw unsupported(
-      "top-k bound over mixed OVER clauses (the bound reads one spec's rank) — bound a " +
-        "single-spec subquery and join the views on key")
-    val preds   = src.filters.map(compileExpr)
-    val specs   = parsed.map(_._3).distinct
-    val cols: Seq[(String, Eval)] = plainItems.zipWithIndex.map { case (ne, i) =>
-      (outName(ne, s"col$i"), compileExpr(coreOf(ne)))
-    }
-    val names    = cols.map(_._1)
-    val winNames = parsed.map(_._1)
-    require((names ++ winNames).distinct.length == names.length + winNames.length,
-      s"duplicate output columns among ${(names ++ winNames).mkString(", ")}")
-    outerNames.foreach(_.foreach(n => require((names ++ winNames).contains(n),
-      s"outer select column $n is not an output of the subquery")))
-    val maxRows = spark.conf.get("spark.graft.ranked.maxRowsPerGroup", "1000000").toInt
-
-    implicit val contribEnc = Encoders.product[RankedContrib]
-    implicit val keyChEnc   = Encoders.product[RankedKeyChange]
-    implicit val stateEnc   = Encoders.product[RankedGroupState]
-    implicit val rowChEnc   = Encoders.product[RankedRowChange]
-    implicit val eventEnc   = Encoders.product[MixedWinEvent]
-    implicit val mergeEnc   = Encoders.product[MixedWinState]
-    implicit val plannedEnc = Encoders.product[PlannedRowChange]
-    implicit val longEnc    = Encoders.scalaLong
-    implicit val stringEnc  = Encoders.STRING
-
-    val allWins = scala.collection.mutable.ArrayBuffer.empty[WinOut]
-    val eventFeeds: Seq[Dataset[MixedWinEvent]] = specs.zipWithIndex.map { case (spec, i) =>
-      val valFns = scala.collection.mutable.ArrayBuffer.empty[Eval]
-      def addVal(f: Eval): Int = { valFns += f; valFns.size - 1 }
-      val wins = parseWinFns(
-        parsed.collect { case (n, f, sp) if sp == spec => (n, f) }, spec, addVal)
-      allWins ++= wins
-      val partFs = spec.partitionSpec.map { e =>
-        compileGroupSlot(e) match {
-          case ScalarSlot(f) => f
-          case _             => throw unsupported(s"PARTITION BY ${e.sql} (scalar expressions only)")
-        }
-      }
-      val sortFs       = spec.orderSpec.map(so => compileExpr(so.child))
-      val sortAsc      = spec.orderSpec.map(_.direction == Ascending)
-      val sortNullsFst = spec.orderSpec.map(_.nullOrdering == NullsFirst)
-      val valFnsSeq    = valFns.toIndexedSeq
-      val extract: Change => Option[(String, Seq[String], Map[String, String])] = { c =>
-        val env = envOf(c)
-        if (!preds.forall(p => p(env).contains(true))) None
-        else Some((
-          partFs.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)).mkString(Sep),
-          sortFs.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)) ++
-            valFnsSeq.map(f => f(env).map(String.valueOf(_)).getOrElse(NullMark)),
-          cols.flatMap { case (n, f) => f(env).map(v => n -> String.valueOf(v)) }.toMap))
-      }
-      val prefix = i.toString + "\u0001"
-      src.changes
-        .groupByKey(_.key)
-        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(rankedKeyFold(extract))
-        .groupByKey(_.group)
-        .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-          rankFold(wins, sortFs.length, sortAsc, sortNullsFst, None, maxRows))
-        .map(rc => MixedWinEvent(rc.key, prefix + rc.group,
-          if (rc.op == "delete") Map.empty else rc.proj, rc.op != "delete", rc.ts_us, rc.seq))
-    }
-    val merged = eventFeeds.reduce(_ union _)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.NoTimeout())(
-        mixedWinFold(specs.length))
-      .toDF()
-    val projected: Seq[(String, org.apache.spark.sql.Column)] =
-      names.map(n => n -> element_at(col("proj"), n).as(n)) ++
-        allWins.toSeq.map {
-          case WRank(_, nm)  => nm -> element_at(col("proj"), nm).cast("long").as(nm)
-          case WNtile(_, nm) => nm -> element_at(col("proj"), nm).cast("long").as(nm)
-          case WRel(_, nm)   => nm -> element_at(col("proj"), nm).cast("double").as(nm)
-          case w             => w.name -> element_at(col("proj"), w.name).as(w.name)
-        }
-    val keep = outerNames match {
-      case Some(ns) => ns.map(n => projected.find(_._1 == n).get._2)
-      case None     => projected.map(_._2)
-    }
-    val outExprs = col("op") +: col("key") +: keep :+ col("ts_us") :+ col("seq")
-    PlannedView(merged.select(outExprs: _*), OutputMode.Append())
   }
 
   /** Stage-1 fold of a ranked view: LWW apply, then emit the key's net
@@ -5149,12 +5004,16 @@ object IncrementalPlanner {
   }
 
   // ------------------------------------------------------------------
-  // Entry point
+  // Front end: one statement parse, one shape classifier, one keyed
+  // changefeed per shape. Every entry point and every nested position
+  // (derived table, join side, UNION / set-op branch, subquery layer)
+  // compiles through these, so a view shape compiles the same way
+  // wherever it appears.
   // ------------------------------------------------------------------
 
   /** A GROUP-BY-less SELECT whose list contains an aggregate function is
     * a GLOBAL aggregate — the parser leaves it a [[Project]] (aggregates
-    * are a resolution-time concept), so the dispatcher rewrites it to an
+    * are a resolution-time concept), so [[shapeOf]] rewrites it to an
     * empty-grouping [[Aggregate]]: one global group (empty group key),
     * full retraction contract included. An all-rows-deleted view emits
     * its `_live_rows = 0` tombstone — the changefeed's "the view is
@@ -5168,6 +5027,193 @@ object IncrementalPlanner {
       case _                     => false
     })
     if (hasAgg) Some(Aggregate(Nil, p.projectList, p.child)) else None
+  }
+
+  /** A parsed planner statement: the plan (ASOF and GROUPS syntax
+    * stripped), whether it carried an ASOF JOIN, and the GROUPS-frame
+    * side channel ([[stripGroupsSyntax]]).
+    */
+  private[streaming] final case class Statement(plan: LogicalPlan, asof: Boolean,
+      groups: Map[Int, WFrame])
+
+  /** Parse a planner statement — the one place planner SQL meets Spark's
+    * parser; [[ViewCatalog]] reads a definition's table references from
+    * the same parse.
+    */
+  private[streaming] def parseStatement(spark: SparkSession, sql: String): Statement = {
+    val (cleaned, groups) = stripGroupsSyntax(stripAsofSyntax(sql))
+    Statement(spark.sessionState.sqlParser.parsePlan(cleaned), AsofRe.findFirstIn(sql).nonEmpty, groups)
+  }
+
+  /** Run `body` on a statement's plan with its statement-scoped side
+    * channels set: the GROUPS frames, the ASOF flag, and the referenced
+    * attribute names (join projection pushdown, [[neededAttrs]]).
+    */
+  private def inStatement[A](spark: SparkSession, sql: String)(body: LogicalPlan => A): A = {
+    val st = parseStatement(spark, sql)
+    if (st.asof) require(st.plan.collect { case j: Join => j }.length == 1,
+      "one ASOF JOIN per statement (layer further joins as a second view over this one)")
+    groupsFrames.withValue(st.groups) {
+      asofStatement.withValue(st.asof) {
+        neededAttrs.withValue(Some(attrNamesOf(st.plan)))(body(st.plan))
+      }
+    }
+  }
+
+  /** [[inStatement]] over the statement's view shape, refusing a `ttl`
+    * the shape cannot honour ([[checkTtl]]) before anything compiles.
+    */
+  private def compileStatement[A](spark: SparkSession, sql: String,
+      ttl: Option[(String, Long)])(body: Shape => A): A = inStatement(spark, sql) { plan =>
+    val shape = shapeOf(plan)
+    if (ttl.isDefined) checkTtl(shape)
+    body(shape)
+  }
+
+  /** The view shapes the planner compiles. */
+  private sealed trait Shape
+  /** Filter + project over a feed, a join, or a derived table. */
+  private final case class RowShape(p: Project) extends Shape
+  /** explode / posexplode in the select list: the family view (#296). */
+  private final case class GenShape(p: Project) extends Shape
+  /** UNION ALL of plain SELECT branches. */
+  private final case class UnionShape(u: Union) extends Shape
+  /** The aggregate-class shapes: one typed group-row view each, keyed
+    * by group hash as a changefeed.
+    */
+  private sealed trait GroupedShape extends Shape
+  /** GROUP BY, HAVING, a global aggregate, or SELECT DISTINCT. */
+  private final case class AggShape(agg: Aggregate, having: Option[Expression]) extends GroupedShape
+  /** UNION DISTINCT: the distinct view over the UNION ALL changefeed. */
+  private final case class DistinctUnionShape(u: Union) extends GroupedShape
+  /** EXCEPT / INTERSECT [ALL]. */
+  private final case class SetOpShape(l: LogicalPlan, r: LogicalPlan, isAll: Boolean,
+      isExcept: Boolean) extends GroupedShape
+  /** Window functions in the select list, optionally bounded by an outer
+    * `WHERE rn <= k` around the subquery (top-k per partition) that keeps
+    * `outerNames` (None = `*`).
+    */
+  private final case class RankedShape(inner: Project, bound: Option[Expression],
+      outerNames: Option[Seq[String]]) extends Shape
+
+  /** Classify a plan into its view shape — the one dispatcher behind
+    * every entry point and nested position.
+    */
+  private def shapeOf(plan: LogicalPlan): Shape = plan match {
+    case a: Aggregate => AggShape(a, None)
+    case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving => h.child match {
+      case a: Aggregate => AggShape(a, Some(h.havingCondition))
+      case other        => throw unsupported(s"HAVING over ${other.getClass.getSimpleName}")
+    }
+    // SELECT DISTINCT a, b ≡ GROUP BY a, b with no aggregates: the
+    // maintained distinct-values view, tombstoning a value when its
+    // last contributing row leaves
+    case Distinct(p: Project) => AggShape(Aggregate(p.projectList, p.projectList, p.child), None)
+    // UNION DISTINCT: a value present in BOTH branches appears once and
+    // survives one branch's delete (its other contributor holds it)
+    case Distinct(u: Union) => DistinctUnionShape(u)
+    case e: Except          => SetOpShape(e.left, e.right, e.isAll, isExcept = true)
+    case i: Intersect       => SetOpShape(i.left, i.right, i.isAll, isExcept = false)
+    case u: Union           => UnionShape(u)
+    case p: Project if hasWindowItem(p) => RankedShape(p, None, None)
+    case Project(outer, Filter(cond, SubqueryAlias(_, inner: Project))) if hasWindowItem(inner) =>
+      RankedShape(inner, Some(cond), outer match {
+        case Seq(_: UnresolvedStar) => None
+        case items => Some(items.map {
+          case a: UnresolvedAttribute => a.nameParts.last
+          case other => throw unsupported(
+            s"outer select item ${other.sql} over a ranked subquery (plain column names or *)")
+        })
+      })
+    case p: Project if hasGeneratorItem(p) => GenShape(p)
+    case p: Project => globalAgg(p).fold[Shape](RowShape(p))(AggShape(_, None))
+    case other      => throw unsupported(s"plan node ${other.getClass.getSimpleName}")
+  }
+
+  /** The TTL rules, one set for every entry (`materializeExpiring`, an
+    * expiring named view): stage-1 tombstone expiry bounds aggregate,
+    * row and generator folds; every other state below has no sound TTL.
+    */
+  private def checkTtl(shape: Shape): Unit = {
+    def joinTtl = unsupported(
+      "a TTL over a JOIN (the join arrangements hold their own state; use " +
+        "JoinView.materializeValueJoinExpiring for the value-join form, or bound the feeds upstream)")
+    def hasJoin(p: Project) = p.exists(_.isInstanceOf[Join])
+    if (asofStatement.value) throw unsupported(
+      "a TTL over an ASOF JOIN (the as-of arrangement holds versioned right-side state; bound it upstream)")
+    shape match {
+      case _: RankedShape => throw unsupported(
+        "a TTL over a ranked view (an expiring NAMED ranked view, or materializeExpiring over one: " +
+          "rank state is whole-partition; bound the partition upstream)")
+      case _: UnionShape | _: DistinctUnionShape => throw unsupported(
+        "a TTL over a UNION (bound the branches upstream: each branch is its own named view " +
+          "with its own TTL)")
+      case _: SetOpShape => throw unsupported(
+        "a TTL over EXCEPT/INTERSECT (per-side multiset state has no sound tombstone TTL; " +
+          "bound the branches upstream)")
+      case RowShape(p) if hasJoin(p) => throw joinTtl
+      case GenShape(p) if hasJoin(p) => throw joinTtl
+      case _                         => ()
+    }
+  }
+
+  /** A view's keyed changefeed: its output column names (empty for a raw
+    * feed, whose payload is open), and whether its keys are source row
+    * keys. Aggregate, union, generator and ranked views re-key (group or
+    * branch/ordinal/partition hashes), so the key/fk join shapes refuse
+    * them as sides.
+    */
+  private final case class Keyed(changes: Dataset[Change], names: Seq[String], sourceKeys: Boolean)
+
+  /** Any view shape as its keyed changefeed: row-class views keep their
+    * change key (generator and union views their per-ordinal / per-branch
+    * keys), aggregate-class views key by the stable group hash, ranked
+    * views by the hash of `(partition, key)` ([[rankedChangesOf]]).
+    */
+  private def keyedOf(spark: SparkSession, shape: Shape, feeds: Map[String, Dataset[Change]],
+      ttl: Option[(String, Long)]): Keyed = shape match {
+    case RowShape(p)    => rowChangesOf(spark, p, feeds, ttl)
+    case GenShape(p)    => genChangesOf(spark, p, feeds, ttl)
+    case UnionShape(u)  => unionChanges(spark, u, feeds)
+    case r: RankedShape  => rankedChangesOf(viewOf(spark, r, feeds, ttl))
+    case g: GroupedShape => viewChanges(groupedView(spark, g, feeds, ttl, keepMeta = true).df)
+  }
+
+  /** A nested plan (derived table, join side, subquery layer) as its
+    * keyed changefeed.
+    */
+  private def keyedPlan(spark: SparkSession, plan: LogicalPlan,
+      feeds: Map[String, Dataset[Change]]): Keyed = keyedOf(spark, shapeOf(plan), feeds, None)
+
+  /** A view shape as [[materialize]]'s output: aggregate-class and ranked
+    * views keep their typed outputs; row, generator and union views
+    * render their keyed changefeed as `op, key, cols…, ts_us, seq`.
+    */
+  private def viewOf(spark: SparkSession, shape: Shape, feeds: Map[String, Dataset[Change]],
+      ttl: Option[(String, Long)]): PlannedView = shape match {
+    case RankedShape(inner, bound, names) => compileRankedView(spark, inner, feeds, bound, names)
+    case g: GroupedShape => groupedView(spark, g, feeds, ttl, keepMeta = false)
+    case rows =>
+      val k = keyedOf(spark, rows, feeds, ttl)
+      PlannedView(k.changes.toDF().select(
+        col("op") +: col("key") +:
+          k.names.map(n => element_at(col("payload"), n).as(n)) :+
+          expr("unix_micros(ts)").as("ts_us") :+ col("seq"): _*), OutputMode.Append())
+  }
+
+  /** An aggregate-class shape's typed view; `keepMeta` adds the group
+    * identity and position columns its changefeed is keyed by.
+    */
+  private def groupedView(spark: SparkSession, shape: GroupedShape, feeds: Map[String, Dataset[Change]],
+      ttl: Option[(String, Long)], keepMeta: Boolean): PlannedView = shape match {
+    case AggShape(a, having) => compileAggregate(spark, a, feeds, ttl, having, keepMeta)
+    case DistinctUnionShape(u) =>
+      val k = unionChanges(spark, u, feeds)
+      val attrs: Seq[NamedExpression] = k.names.map(n => UnresolvedAttribute(Seq(n)))
+      compileAggregate(spark, Aggregate(attrs, attrs, UnresolvedRelation(Seq("__union"))),
+        Map("__union" -> k.changes), keepMeta = keepMeta)
+    case SetOpShape(l, r, isAll, isExcept) =>
+      compileSetOp(spark, l, r, isAll, isExcept, feeds, keepMeta)
   }
 
   /** Compile `sql` over the named change feeds into a continuously
@@ -5185,74 +5231,8 @@ object IncrementalPlanner {
     * escape them upstream; this contract line is the honest boundary.
     */
   def materialize(spark: SparkSession, sql: String,
-      feeds: Map[String, Dataset[Change]]): PlannedView = {
-    val isAsof  = AsofRe.findFirstIn(sql).nonEmpty
-    val (cleaned, gframes) = stripGroupsSyntax(
-      if (!isAsof) sql
-      else AsofRe.replaceAllIn(sql, m => if (m.group(1) != null) "LEFT JOIN" else "JOIN"))
-    val plan = spark.sessionState.sqlParser.parsePlan(cleaned)
-    if (isAsof) require(plan.collect { case j: Join => j }.length == 1,
-      "one ASOF JOIN per statement (layer further joins as a second view over this one)")
-    groupsFrames.withValue(gframes) {
-    asofStatement.withValue(isAsof) { neededAttrs.withValue(Some(attrNamesOf(plan))) { plan match {
-      case a: Aggregate => compileAggregate(spark, a, feeds)
-      case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving => h.child match {
-        case a: Aggregate => compileAggregate(spark, a, feeds, having = Some(h.havingCondition))
-        case other        => throw unsupported(s"HAVING over ${other.getClass.getSimpleName}")
-      }
-      // SELECT DISTINCT a, b ≡ GROUP BY a, b with no aggregates: the
-      // maintained distinct-values view, tombstoning a value when its
-      // last contributing row leaves
-      case Distinct(p: Project) =>
-        compileAggregate(spark, Aggregate(p.projectList, p.projectList, p.child), feeds)
-      // UNION DISTINCT ≡ the maintained distinct view over the UNION ALL
-      // changefeed: a value present in BOTH branches appears once and
-      // survives one branch's delete (its other contributor holds it)
-      case Distinct(u: Union) =>
-        val (changes, names) = unionChanges(spark, u, feeds)
-        val attrs: Seq[NamedExpression] = names.map(n => UnresolvedAttribute(Seq(n)))
-        compileAggregate(spark, Aggregate(attrs, attrs, UnresolvedRelation(Seq("__union"))),
-          Map("__union" -> changes))
-      // EXCEPT / INTERSECT [ALL]: the maintained set-operation view
-      case e: Except =>
-        compileSetOp(spark, e.left, e.right, e.isAll, isExcept = true, feeds, keepMeta = false)
-      case i: Intersect =>
-        compileSetOp(spark, i.left, i.right, i.isAll, isExcept = false, feeds, keepMeta = false)
-      // top-level UNION ALL: the combined row-view changefeed
-      case u: Union =>
-        val (changes, names) = unionChanges(spark, u, feeds)
-        val df = changes.toDF().select(
-          col("op") +: col("key") +:
-            names.map(n => element_at(col("payload"), n).as(n)) :+
-            expr("unix_micros(ts)").as("ts_us") :+ col("seq"): _*)
-        PlannedView(df, OutputMode.Append())
-      // generator views: explode/posexplode in the select list — the
-      // family changefeed (#296)
-      case p: Project if hasGeneratorItem(p) =>
-        compileGenerateProject(spark, p, feeds)
-      // ranked views: a window function in the select list, optionally
-      // bounded by an outer WHERE rn <= k around the subquery (top-k
-      // per partition)
-      case p: Project if hasWindowItem(p) =>
-        compileRankedView(spark, p, feeds, outerCond = None, outerNames = None)
-      case Project(outer, Filter(cond, SubqueryAlias(_, inner: Project))) if hasWindowItem(inner) =>
-        val names = outer match {
-          case Seq(_: UnresolvedStar) => None
-          case items => Some(items.map {
-            case a: UnresolvedAttribute => a.nameParts.last
-            case other => throw unsupported(
-              s"outer select item ${other.sql} over a ranked subquery (plain column names or *)")
-          })
-        }
-        compileRankedView(spark, inner, feeds, Some(cond), names)
-      case p: Project =>
-        globalAgg(p) match {
-          case Some(a) => compileAggregate(spark, a, feeds)
-          case None    => compileProject(spark, p, feeds)
-        }
-      case other        => throw unsupported(s"top-level ${other.getClass.getSimpleName}")
-    } } } }
-  }
+      feeds: Map[String, Dataset[Change]]): PlannedView =
+    compileStatement(spark, sql, None)(viewOf(spark, _, feeds, None))
 
   /** [[materialize]] with BOUNDED state on an unbounded feed: the input
     * is watermarked and dead stage-1 contributions (deletes, rows that
@@ -5261,8 +5241,10 @@ object IncrementalPlanner {
     * contract behind the one-call SQL API. Retractions are emitted when
     * the death applies, so expiry changes state size, not view
     * contents; a straggler older than an expired tombstone
-    * re-materializes (the documented TTL trade). Aggregate views only —
-    * start the query inside
+    * re-materializes (the documented TTL trade). Aggregate (including
+    * DISTINCT), row and generator views compile; ranked, union, set-op,
+    * ASOF and row-over-join views refuse ([[checkTtl]], the same rules
+    * as an expiring named view). Start the query inside
     * [[IncrementalView.withRelaxedWatermarkCheck]] (same soundness
     * argument: the emitted deltas carry no event-time column, so
     * nothing downstream drops them as late).
@@ -5271,37 +5253,13 @@ object IncrementalPlanner {
       feeds: Map[String, Dataset[Change]],
       watermarkDelay: String = "10 minutes",
       tombstoneTtlMs: Long = 10L * 60 * 1000): PlannedView = {
-    val plan0 = spark.sessionState.sqlParser.parsePlan(sql)
-    neededAttrs.withValue(Some(attrNamesOf(plan0))) { plan0 match {
-      case a: Aggregate => compileAggregate(spark, a, feeds, Some((watermarkDelay, tombstoneTtlMs)))
-      case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving => h.child match {
-        case a: Aggregate =>
-          compileAggregate(spark, a, feeds, Some((watermarkDelay, tombstoneTtlMs)), Some(h.havingCondition))
-        case other => throw unsupported(s"HAVING over ${other.getClass.getSimpleName}")
-      }
-      case p: Project if globalAgg(p).isDefined =>
-        compileAggregate(spark, globalAgg(p).get, feeds, Some((watermarkDelay, tombstoneTtlMs)))
-      // ROW views (filter+project over one feed): the stage-1 LWW fold's
-      // dead states (deletes, rows filtered out of the WHERE) expire.
-      // Join children are rejected -- their internal arrangements keep
-      // their own state story (materializeValueJoinExpiring / guards),
-      // and expiring only the outer fold would misadvertise boundedness.
-      case p: Project if !hasWindowItem(p) =>
-        if (p.exists { case _: Join => true; case _ => false }) throw unsupported(
-          "materializeExpiring over a JOIN (the join arrangements hold their own state; " +
-            "use JoinView.materializeValueJoinExpiring for the value-join form, or bound " +
-            "the feeds upstream)")
-        if (hasGeneratorItem(p))
-          compileGenerateProject(spark, p, feeds, Some((watermarkDelay, tombstoneTtlMs)))
-        else compileProject(spark, p, feeds, Some((watermarkDelay, tombstoneTtlMs)))
-      case other => throw unsupported(
-        s"materializeExpiring covers aggregate and row views (got ${other.getClass.getSimpleName})")
-    } }
+    val ttl = Some((watermarkDelay, tombstoneTtlMs))
+    compileStatement(spark, sql, ttl)(viewOf(spark, _, feeds, ttl))
   }
 
   /** `SELECT … GROUP BY … ORDER BY <col> [ASC|DESC] LIMIT k` as a LIVE
     * top-k view (the Materialize TOP K shape): the aggregate compiles
-    * to its changefeed ([[aggChangesOf]]) and a final fold holds EVERY
+    * to its changefeed ([[keyedPlan]]) and a final fold holds EVERY
     * live group's current row, re-emitting the refreshed k-list (rank
     * column + output columns; consumers keep the max-`_emit` rows)
     * whenever the batch changed any group. Full-group state is the
@@ -5322,8 +5280,8 @@ object IncrementalPlanner {
     */
   def materializeTopK(spark: SparkSession, sql: String,
       feeds: Map[String, Dataset[Change]],
-      maxGroups: Int = 1000000): PlannedView = {
-    val (k, sortCol, asc, inner) = spark.sessionState.sqlParser.parsePlan(sql) match {
+      maxGroups: Int = 1000000): PlannedView = inStatement(spark, sql) { plan =>
+    val (k, sortCol, asc, inner) = plan match {
       case GlobalLimit(Literal(n: Int, _), LocalLimit(_, Sort(Seq(so), true, child, _))) =>
         val colName = so.child match {
           case a: UnresolvedAttribute => a.nameParts.last
@@ -5333,7 +5291,7 @@ object IncrementalPlanner {
       case other => throw unsupported(
         s"materializeTopK needs SELECT … ORDER BY <col> LIMIT k (got ${other.getClass.getSimpleName})")
     }
-    val (changes, outNames) = aggChangesOf(spark, inner, feeds)
+    val Keyed(changes, outNames, _) = keyedPlan(spark, inner, feeds)
     require(outNames.contains(sortCol),
       s"ORDER BY column '$sortCol' must be one of the view's output columns ${outNames.mkString(", ")}")
     implicit val stateEnc = Encoders.product[PlannedTopKState]
@@ -5383,100 +5341,55 @@ object IncrementalPlanner {
     */
   private def fnv64(s: String): Long = JoinView.fnv64(s)
 
-  /** An AGGREGATE view as a [[Change]] stream — the other half of the
-    * composition story (see [[materializeChanges]] for row views): each
-    * emitted group row becomes an upsert keyed by the group's stable
-    * hash with the output columns as the payload, and a `_live_rows=0`
-    * (or HAVING-exit) emission becomes the group's delete. Commit
-    * positions propagate from the underlying contributions (max across
-    * the batch), so downstream LWW consumers — including the planner
-    * itself — keep their ordering contract. This enables AGG-OVER-AGG
-    * layering: a per-city totals view feeding a totals-distribution
-    * view, retractions crossing both layers.
+  /** Any view as its keyed [[Change]] stream — the composition
+    * primitive: the view's upsert/delete changefeed is itself a feed, so
+    * planner views LAYER (`materialize` over `materializeChanges` over a
+    * raw feed — Materialize-class view-over-view), and every downstream
+    * operator in this package (CdcMaterializer, JoinView, the planner
+    * itself) consumes it unchanged. Row views keep their change key;
+    * aggregate views key by the group's stable hash, with the output
+    * columns as the payload and a `_live_rows=0` (or HAVING-exit)
+    * emission as the group's delete. Emitted changes carry their commit
+    * position (`ts`, `seq`), so the LWW / stale-drop contract survives
+    * the hop.
+    */
+  def materializeChanges(spark: SparkSession, sql: String,
+      feeds: Map[String, Dataset[Change]]): Dataset[Change] =
+    compileStatement(spark, sql, None)(keyedOf(spark, _, feeds, None).changes)
+
+  /** [[materializeChanges]] under its aggregate-layering name: a per-city
+    * totals view feeding a totals-distribution view, retractions
+    * crossing both layers.
     */
   def materializeAggChanges(spark: SparkSession, sql: String,
-      feeds: Map[String, Dataset[Change]]): Dataset[Change] = {
-    val plan = spark.sessionState.sqlParser.parsePlan(sql)
-    neededAttrs.withValue(Some(attrNamesOf(plan))) { aggChangesOf(spark, plan, feeds)._1 }
-  }
+      feeds: Map[String, Dataset[Change]]): Dataset[Change] = materializeChanges(spark, sql, feeds)
 
   /** ANY planner-compilable view as its keyed changefeed, plus its
-    * output column names — the one entry point [[ViewCatalog]] uses so a
-    * named view's shape (row, aggregate, HAVING, DISTINCT, union, set
-    * op) is an implementation detail of its SQL, not of its name.
-    * Row-class views keep their change key; aggregate-class views key by
-    * the stable group hash ([[materializeAggChanges]] semantics). Ranked
-    * / top-k views are rejected: their change identity is `(key,
-    * partition)` — two columns — which the single-key Change wire cannot
-    * carry without inventing an encoding consumers would have to know.
-    */
-  /** `ttl`: BOUNDED state on an unbounded feed — stage-1 dead
+    * output column names — the one entry point [[ViewCatalog]] uses, so a
+    * named view's shape is an implementation detail of its SQL, not of
+    * its name. Row-class views keep their change key; aggregate-class
+    * views key by the stable group hash; ranked views fold their `(key,
+    * partition)` identity into one stable key ([[rankedChangesOf]]), so
+    * partition moves land as delete(old identity) + upsert(new identity)
+    * and the sink's LWW fold is exact.
+    *
+    * `ttl`: BOUNDED state on an unbounded feed — stage-1 dead
     * contributions (deletes, rows that left the WHERE) expire once the
     * watermark passes their death + ttl, the [[materializeExpiring]]
-    * contract behind a NAMED view. Start the query inside
+    * contract and refusals behind a NAMED view. Start the query inside
     * [[IncrementalView.withRelaxedWatermarkCheck]] (the [[ViewCatalog]]
-    * does). Aggregate and single-feed row views only.
+    * does).
     */
   def namedChanges(spark: SparkSession, sql: String,
       feeds: Map[String, Dataset[Change]],
-      ttl: Option[(String, Long)] = None): (Dataset[Change], Seq[String]) = {
-    val isAsof  = AsofRe.findFirstIn(sql).nonEmpty
-    val (cleaned, gframes) = stripGroupsSyntax(stripAsofSyntax(sql))
-    val plan0 = spark.sessionState.sqlParser.parsePlan(cleaned)
-    if (isAsof) {
-      require(plan0.collect { case j: Join => j }.length == 1,
-        "one ASOF JOIN per statement (layer further joins as a second view over this one)")
-      require(ttl.isEmpty, "an expiring NAMED ASOF view is unsupported (the asof arrangement " +
-        "holds versioned right-side state; bound it upstream)")
+      ttl: Option[(String, Long)] = None): (Dataset[Change], Seq[String]) =
+    compileStatement(spark, sql, ttl) { shape =>
+      val k = keyedOf(spark, shape, feeds, ttl)
+      (k.changes, k.names)
     }
-    groupsFrames.withValue(gframes) {
-    asofStatement.withValue(isAsof) {
-    neededAttrs.withValue(Some(attrNamesOf(plan0))) { plan0 match {
-      // ranked views as NAMED feeds: the (key, partition) change identity
-      // folds into ONE stable change key (xxhash64 of both), so partition
-      // moves land as delete(old identity) + upsert(new identity) and the
-      // sink's LWW fold is exact. Rank-shift re-emissions supersede by
-      // commit position like any other upsert.
-      case p: Project if hasWindowItem(p) =>
-        require(ttl.isEmpty, "an expiring NAMED ranked view is unsupported (rank state is " +
-          "whole-partition; bound the partition upstream)")
-        rankedChangesOf(compileRankedView(spark, p, feeds, outerCond = None, outerNames = None))
-      case Project(outer, Filter(cond, SubqueryAlias(_, inner: Project))) if hasWindowItem(inner) =>
-        require(ttl.isEmpty, "an expiring NAMED ranked view is unsupported (rank state is " +
-          "whole-partition; bound the partition upstream)")
-        val names = outer match {
-          case Seq(_: UnresolvedStar) => None
-          case items => Some(items.map {
-            case a: UnresolvedAttribute => a.nameParts.last
-            case other => throw unsupported(
-              s"outer select item ${other.sql} over a ranked subquery (plain column names or *)")
-          })
-        }
-        rankedChangesOf(compileRankedView(spark, inner, feeds, Some(cond), names))
-      // generator views as NAMED feeds: per-ordinal keys are already
-      // stable change identities, so the sink's LWW fold applies as-is
-      case p: Project if hasGeneratorItem(p) => genChangesOf(spark, p, feeds, ttl)
-      case p: Project if globalAgg(p).isEmpty => rowChangesOf(spark, p, feeds, ttl)
-      case u: Union =>
-        require(ttl.isEmpty, "an expiring UNION view is unsupported — bound the branches " +
-          "upstream (each branch is its own named view with its own TTL)")
-        unionChanges(spark, u, feeds)
-      case Distinct(p: Project) =>
-        aggChangesOf(spark, Aggregate(p.projectList, p.projectList, p.child), feeds, ttl)
-      case Distinct(u: Union) =>
-        require(ttl.isEmpty, "an expiring UNION view is unsupported — bound the branches " +
-          "upstream (each branch is its own named view with its own TTL)")
-        val (changes, names) = unionChanges(spark, u, feeds)
-        val attrs: Seq[NamedExpression] = names.map(n => UnresolvedAttribute(Seq(n)))
-        aggChangesOf(spark, Aggregate(attrs, attrs, UnresolvedRelation(Seq("__union"))),
-          Map("__union" -> changes))
-      case plan => aggChangesOf(spark, plan, feeds, ttl)
-    } } } }
-  }
 
-  /** Rewrite `ASOF [LEFT] JOIN` into parser-legal `[LEFT] JOIN` syntax —
-    * exposed so callers that need the referenced-table list (the
-    * [[ViewCatalog]]) can parse an ASOF statement before compiling it.
+  /** Rewrite `ASOF [LEFT] JOIN` into parser-legal `[LEFT] JOIN` syntax
+    * (the first step of [[parseStatement]]).
     */
   def stripAsofSyntax(sql: String): String =
     if (AsofRe.findFirstIn(sql).isEmpty) sql
@@ -5485,12 +5398,15 @@ object IncrementalPlanner {
   /** A ranked [[PlannedView]] (op, key, _partition, cols…, ts_us, seq) as
     * a NAMED changefeed: identity = xxhash64(_partition, key) — stable
     * across rank shifts, distinct across partition moves, 64-bit
-    * collision odds. Delete rows keep only their identity (their payload
-    * values are already gone from the rank state).
+    * collision odds. A mixed-OVER view has no `_partition` (its rows are
+    * whole-row identities), so it keeps its change key. Delete rows keep
+    * only their identity (their payload values are already gone from
+    * the rank state).
     */
-  private def rankedChangesOf(view: PlannedView): (Dataset[Change], Seq[String]) = {
+  private def rankedChangesOf(view: PlannedView): Keyed = {
     val meta  = Set("op", "key", "_partition", "ts_us", "seq")
     val names = view.df.columns.filterNot(meta).toSeq
+    val byRow = !view.df.columns.contains("_partition")
     val payload = map_filter(
       map_from_arrays(
         array(names.map(lit): _*),
@@ -5499,44 +5415,19 @@ object IncrementalPlanner {
     implicit val changeEnc = Encoders.product[Change]
     val changes = view.df.select(
       col("op"),
-      xxhash64(col("_partition"), col("key")).as("key"),
+      (if (byRow) col("key") else xxhash64(col("_partition"), col("key"))).as("key"),
       expr("timestamp_micros(ts_us)").as("ts"),
       payload.as("payload"),
       col("seq")).as[Change]
-    (changes, names)
-  }
-
-  private def aggChangesOf(spark: SparkSession, plan: LogicalPlan,
-      feeds: Map[String, Dataset[Change]],
-      ttl: Option[(String, Long)] = None): (Dataset[Change], Seq[String]) = {
-    val view = plan match {
-      case a: Aggregate => compileAggregate(spark, a, feeds, ttl, keepMeta = true)
-      case h: org.apache.spark.sql.catalyst.analysis.UnresolvedHaving => h.child match {
-        case a: Aggregate => compileAggregate(spark, a, feeds, ttl, having = Some(h.havingCondition), keepMeta = true)
-        case other        => throw unsupported(s"HAVING over ${other.getClass.getSimpleName}")
-      }
-      case p: Project if globalAgg(p).isDefined =>
-        compileAggregate(spark, globalAgg(p).get, feeds, ttl, keepMeta = true)
-      case e: Except =>
-        require(ttl.isEmpty, "expiring set-operation views are unsupported (per-side " +
-          "multiset state has no sound tombstone TTL); bound the branches upstream")
-        compileSetOp(spark, e.left, e.right, e.isAll, isExcept = true, feeds, keepMeta = true)
-      case i: Intersect =>
-        require(ttl.isEmpty, "expiring set-operation views are unsupported (per-side " +
-          "multiset state has no sound tombstone TTL); bound the branches upstream")
-        compileSetOp(spark, i.left, i.right, i.isAll, isExcept = false, feeds, keepMeta = true)
-      case other => throw unsupported(
-        s"materializeAggChanges needs an aggregate SELECT (got ${other.getClass.getSimpleName})")
-    }
-    viewChanges(view.df)
+    Keyed(changes, names, sourceKeys = byRow)
   }
 
   /** The keepMeta form of an aggregate-class view as its changefeed:
     * live group rows become upserts keyed by the stable group hash,
     * `_live_rows = 0` emissions become deletes, commit positions
-    * propagate. Shared by [[aggChangesOf]] and set-operation views.
+    * propagate. Shared by every aggregate-class shape ([[keyedOf]]).
     */
-  private def viewChanges(df: DataFrame): (Dataset[Change], Seq[String]) = {
+  private def viewChanges(df: DataFrame): Keyed = {
     val outNames = df.columns.filterNot(Set("_live_rows", "_group", "_ts_us", "_seq")).toSeq
     implicit val changeEnc = Encoders.product[Change]
     val changes = df.map { r =>
@@ -5551,7 +5442,7 @@ object IncrementalPlanner {
         payload,
         r.getAs[Long]("_seq"))
     }
-    (changes, outNames)
+    Keyed(changes, outNames, sourceKeys = false)
   }
 
   /** EXCEPT / INTERSECT [ALL] as a maintained view — the set-operation
@@ -5578,7 +5469,7 @@ object IncrementalPlanner {
     implicit val changeEnc = Encoders.product[Change]
     def branch(p: LogicalPlan, i: Int): (Dataset[Change], Seq[String]) = p match {
       case proj: Project =>
-        val (ds, names) = rowChangesOf(spark, proj, feeds)
+        val Keyed(ds, names, _) = rowChangesOf(spark, proj, feeds, None)
         (ds.map(c => c.copy(
           key = fnv64("s" + i + Sep + c.key),
           payload = if (c.op == "delete") c.payload else c.payload + ("_side" -> i.toString))),
@@ -5622,69 +5513,5 @@ object IncrementalPlanner {
           ln.map(col) ++ (mult.cast("long").as("multiplicity") +: col("_live_rows") +: metaCols): _*)
       }
     PlannedView(out, view.outputMode)
-  }
-
-  /** A NON-AGGREGATE view as a [[Change]] stream — the composition
-    * primitive: the view's upsert/delete changefeed is itself a feed,
-    * so planner views LAYER (`materialize` over `materializeChanges`
-    * over a raw feed — Materialize-class view-over-view), and every
-    * downstream operator in this package (CdcMaterializer, JoinView,
-    * the planner itself) consumes it unchanged. Emitted changes carry
-    * the source change's commit position (`ts`, `seq`), so the LWW /
-    * stale-drop contract survives the hop.
-    */
-  def materializeChanges(spark: SparkSession, sql: String,
-      feeds: Map[String, Dataset[Change]]): Dataset[Change] = {
-    val plan0 = spark.sessionState.sqlParser.parsePlan(sql)
-    neededAttrs.withValue(Some(attrNamesOf(plan0))) { plan0 match {
-      case p: Project if hasGeneratorItem(p) => genChangesOf(spark, p, feeds)._1
-      case p: Project => rowChangesOf(spark, p, feeds)._1
-      case u: Union   => unionChanges(spark, u, feeds)._1
-      case other => throw unsupported(
-        s"materializeChanges needs a non-aggregate SELECT (got ${other.getClass.getSimpleName}); " +
-          "aggregate views emit group rows, not keyed changes")
-    } }
-  }
-
-  /** A projected row view as a keyed changefeed, plan-level: the shared
-    * engine of [[materializeChanges]] and UNION branch compilation.
-    * Returns the changefeed plus the projected column names.
-    */
-  private def rowChangesOf(spark: SparkSession, proj: Project,
-      feeds: Map[String, Dataset[Change]],
-      ttl: Option[(String, Long)] = None): (Dataset[Change], Seq[String]) = {
-    if (ttl.isDefined && proj.exists { case _: Join => true; case _ => false })
-      throw unsupported(
-        "an expiring NAMED row view over a JOIN (the join arrangements hold their own " +
-          "state story — see materializeExpiring's identical reject)")
-    val src   = compileSource(spark, proj.child, feeds)
-    val preds = src.filters.map(compileExpr)
-    val cols: Seq[(String, Eval)] = proj.projectList.zipWithIndex.map { case (ne, i) =>
-      if (ne.isInstanceOf[UnresolvedStar]) throw unsupported("SELECT * (name the projected fields)")
-      (outName(ne, s"col$i"), compileExpr(ne))
-    }
-    val names = cols.map(_._1)
-    val fns   = cols.map(_._2)
-    val extract: Change => Option[Map[String, String]] = { c =>
-      val env = envOf(c)
-      if (!preds.forall(p => p(env).contains(true))) None
-      else Some(names.zip(fns).flatMap { case (n, f) => f(env).map(v => n -> String.valueOf(v)) }.toMap)
-    }
-    implicit val rowEnc    = Encoders.product[PlannedRow]
-    implicit val rcEnc     = Encoders.product[PlannedRowChange]
-    implicit val changeEnc = Encoders.product[Change]
-    implicit val longEnc   = Encoders.scalaLong
-    val inChanges = ttl match {
-      case Some((delay, _)) => src.changes.withWatermark("ts", delay)
-      case None             => src.changes
-    }
-    val timeoutConf =
-      if (ttl.isDefined) GroupStateTimeout.EventTimeTimeout() else GroupStateTimeout.NoTimeout()
-    val changes = inChanges
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), timeoutConf)(
-        expiringState[PlannedRow, PlannedRowChange](ttl, !_.live, _.tsUs)(rowFold(extract)))
-      .map(rc => Change(rc.op, rc.key, tsOfMicros(rc.ts_us), rc.proj, rc.seq))
-    (changes, names)
   }
 }

@@ -191,8 +191,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     requireValidName(name)
     require(!views.contains(name) && !sources.contains(name),
       s"name $name already exists (DROP the view or pick another name)")
-    val refs = referencedTables(spark.sessionState.sqlParser.parsePlan(
-      IncrementalPlanner.stripPlannerSyntax(sql)))
+    val refs = referencedTables(IncrementalPlanner.parseStatement(spark, sql).plan)
     refs.foreach(r => require(sources.contains(r) || views.contains(r),
       s"view $name references unknown table $r (register the source or create the view first)"))
     val v = startView(name, sql, refs.toSeq.sorted, ttl)
@@ -240,8 +239,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     require(cascade || downstream.isEmpty,
       s"view $name has dependents ${downstream.mkString(", ")}; " +
         "drop them first or replace with CASCADE")
-    val refs = referencedTables(spark.sessionState.sqlParser.parsePlan(
-      IncrementalPlanner.stripPlannerSyntax(sql)))
+    val refs = referencedTables(IncrementalPlanner.parseStatement(spark, sql).plan)
     require(!refs.contains(name), s"view $name cannot reference itself")
     refs.foreach(r => require(sources.contains(r) || views.contains(r),
       s"view $name references unknown table $r (register the source or create the view first)"))
@@ -381,8 +379,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
     */
   private def lostColumns(dep: NamedView, replaced: String,
       newCols: Set[String]): (Seq[String], Seq[String]) = {
-    val stripped = IncrementalPlanner.stripPlannerSyntax(dep.sql)
-    val plan = spark.sessionState.sqlParser.parsePlan(stripped)
+    val plan = IncrementalPlanner.parseStatement(spark, dep.sql).plan
     // alias → relation bindings from FROM clauses (SubqueryAlias over
     // UnresolvedRelation); the bare relation name binds itself
     val aliases = mutable.Map.empty[String, String]
@@ -1260,8 +1257,7 @@ class ViewCatalog(val spark: SparkSession, val root: String)
             snapshotAsOfTimestamp(m.group(1), ms).createOrReplaceTempView(alias)
             alias
           } else m.matched)
-        val refs = referencedTables(spark.sessionState.sqlParser.parsePlan(
-          IncrementalPlanner.stripPlannerSyntax(rewritten)))
+        val refs = referencedTables(IncrementalPlanner.parseStatement(spark, rewritten).plan)
         refs.filter(views.contains).foreach(n => snapshot(n).createOrReplaceTempView(n))
         spark.sql(rewritten)
     }

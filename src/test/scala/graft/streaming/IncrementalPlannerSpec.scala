@@ -2621,6 +2621,226 @@ class IncrementalPlannerSpec extends SparkSpec {
     assert(reSplit == reOne, s"split batches: $reSplit")
   }
 
+  // ----------------------------------------------------------------
+  // #171cv: one front end — every view shape compiles the same way
+  // through every entry point and nested position
+  // ----------------------------------------------------------------
+
+  /** The feeds of the shape × entry matrix, three batches each: group
+    * and partition moves, deletes on every feed, and a version feed for
+    * the as-of join.
+    */
+  private val shapeFeeds: Seq[Map[String, Seq[Change]]] = {
+    def c(op: String, k: Long, m: Int, seq: Long, kv: (String, String)*) =
+      Change(op, k, ts(m), kv.toMap, seq)
+    Seq(
+      Map(
+        "cust" -> Seq(c("insert", 1L, 0, 1L, "name" -> "ann", "ckey" -> "1"),
+          c("insert", 2L, 0, 2L, "name" -> "bob", "ckey" -> "2"),
+          c("insert", 3L, 0, 3L, "name" -> "cat", "ckey" -> "3")),
+        "ord" -> Seq(c("insert", 101L, 0, 1L, "cid" -> "1"), c("insert", 102L, 0, 2L, "cid" -> "1"),
+          c("insert", 103L, 0, 3L, "cid" -> "2")),
+        "t" -> Seq(c("insert", 1L, 0, 1L, "g" -> "a", "name" -> "ann", "v" -> "5", "tags" -> "x,y"),
+          c("insert", 2L, 0, 2L, "g" -> "a", "name" -> "bob", "v" -> "3", "tags" -> "y"),
+          c("insert", 3L, 0, 3L, "g" -> "b", "name" -> "cat", "v" -> "7", "tags" -> "x,z"),
+          c("insert", 4L, 0, 4L, "g" -> "a", "name" -> "dan", "v" -> "9", "tags" -> "z")),
+        "a" -> Seq(c("insert", 1L, 0, 1L, "city" -> "ber"), c("insert", 2L, 0, 2L, "city" -> "par"),
+          c("insert", 3L, 0, 3L, "city" -> "rom"), c("insert", 4L, 0, 4L, "city" -> "ber")),
+        "b" -> Seq(c("insert", 11L, 0, 1L, "city" -> "par"), c("insert", 12L, 0, 2L, "city" -> "oslo")),
+        "e" -> Seq(c("insert", 1L, 0, 1L, "sym" -> "s1", "ets" -> "10", "val" -> "e1"),
+          c("insert", 2L, 0, 2L, "sym" -> "s1", "ets" -> "25", "val" -> "e2"),
+          c("insert", 3L, 0, 3L, "sym" -> "s2", "ets" -> "15", "val" -> "e3")),
+        "v" -> Seq(c("insert", 21L, 0, 1L, "sym" -> "s1", "vts" -> "5", "px" -> "p1"),
+          c("insert", 22L, 0, 2L, "sym" -> "s1", "vts" -> "20", "px" -> "p2"),
+          c("insert", 23L, 0, 3L, "sym" -> "s2", "vts" -> "12", "px" -> "p3")),
+        "o" -> Seq("ann", "bob", "cat", "eve", "ber", "par", "lis", "x", "y", "z", "e1", "e2", "e3", "e4")
+          .zipWithIndex.map { case (j, i) => c("insert", 500L + i, 0, 1L + i, "jc" -> j, "label" -> s"L$i") }),
+      Map(
+        "cust" -> Seq(c("update", 3L, 10, 4L, "name" -> "cat", "ckey" -> "1")),
+        "ord" -> Seq(c("delete", 102L, 10, 4L), c("insert", 104L, 10, 5L, "cid" -> "3")),
+        "t" -> Seq(c("update", 2L, 10, 5L, "g" -> "a", "name" -> "bob", "v" -> "10", "tags" -> "x"),
+          c("delete", 4L, 10, 6L)),
+        "a" -> Seq(c("delete", 1L, 10, 5L), c("update", 3L, 10, 6L, "city" -> "lis")),
+        "b" -> Seq(c("insert", 13L, 10, 3L, "city" -> "ber")),
+        "e" -> Seq(c("update", 1L, 10, 4L, "sym" -> "s1", "ets" -> "30", "val" -> "e1")),
+        "v" -> Seq(c("insert", 24L, 10, 4L, "sym" -> "s1", "vts" -> "28", "px" -> "p4"))),
+      Map(
+        "cust" -> Seq(c("delete", 2L, 20, 5L)),
+        "ord" -> Seq(c("update", 103L, 20, 6L, "cid" -> "1")),
+        "t" -> Seq(c("update", 3L, 20, 7L, "g" -> "a", "name" -> "cat", "v" -> "1", "tags" -> "z,z"),
+          c("insert", 5L, 20, 8L, "g" -> "b", "name" -> "eve", "v" -> "4", "tags" -> "y")),
+        "a" -> Seq(c("insert", 5L, 20, 7L, "city" -> "par")),
+        "b" -> Seq(c("delete", 11L, 20, 4L)),
+        "e" -> Seq(c("insert", 4L, 20, 5L, "sym" -> "s2", "ets" -> "5", "val" -> "e4")),
+        "v" -> Seq(c("delete", 22L, 20, 5L))))
+  }
+
+  /** Register each feed's LWW-final rows as a batch table of string
+    * columns (plus `key`), the oracle's input.
+    */
+  private def registerFinalFeeds(batches: Seq[Map[String, Seq[Change]]]): Unit = {
+    import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+    batches.flatMap(_.toSeq).groupBy(_._1).foreach { case (feed, parts) =>
+      val changes = parts.flatMap(_._2)
+      val cols    = changes.flatMap(_.payload.keys).distinct.sorted
+      val rows    = finalState(changes).toSeq.map { case (k, p) => Row.fromSeq(k +: cols.map(p.get(_).orNull)) }
+      val schema  = StructType(StructField("key", LongType) +: cols.map(StructField(_, StringType)))
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).createOrReplaceTempView(feed)
+    }
+  }
+
+  /** A result's rows as a sorted multiset of string maps (NULLs absent). */
+  private def bag(rows: Iterable[Map[String, String]]): Seq[Map[String, String]] =
+    rows.toSeq.map(_.filter(_._2 != null)).sortBy(_.toSeq.sorted.mkString("|"))
+
+  test("#171cv shape × entry: every view shape compiles the same way through materialize, namedChanges, a derived table and a value-join side") {
+    import org.apache.spark.sql.{DataFrame, Dataset}
+    import org.apache.spark.sql.streaming.OutputMode
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val cnt = "(SELECT count(*) FROM ord WHERE ord.cid = cust.ckey)"
+    val asof = "SELECT e.val AS val, v.px AS px FROM e ASOF JOIN v ON e.sym = v.sym AND e.ets >= v.vts"
+    val asofBatch = "SELECT val, px FROM (SELECT e.val AS val, v.px AS px, row_number() OVER " +
+      "(PARTITION BY e.key ORDER BY cast(v.vts AS INT) DESC) AS r FROM e JOIN v " +
+      "ON e.sym = v.sym AND cast(e.ets AS INT) >= cast(v.vts AS INT)) WHERE r = 1"
+    val ranked = "SELECT g, name, row_number() OVER (PARTITION BY g ORDER BY cast(v AS INT)) AS rn FROM t"
+    // (name, SQL, batch-SQL oracle, output columns, join column, the
+    // identity columns of materialize's typed aggregate output)
+    val shapes: Seq[(String, String, String, Seq[String], String, Seq[String])] = Seq(
+      ("row+select-list subquery", s"SELECT name, $cnt AS n_ord FROM cust", "",
+        Seq("name", "n_ord"), "name", Nil),
+      ("union all+select-list subquery",
+        s"SELECT name, $cnt AS n_ord FROM cust WHERE ckey = '1' UNION ALL " +
+          s"SELECT name, $cnt AS n_ord FROM cust WHERE ckey <> '1'", "", Seq("name", "n_ord"), "name", Nil),
+      ("asof join", asof, asofBatch, Seq("val", "px"), "val", Nil),
+      ("ranked", ranked, "", Seq("g", "name", "rn"), "name", Nil),
+      ("ranked top-k", s"SELECT g, name, rn FROM ($ranked) x WHERE rn <= 2", "",
+        Seq("g", "name", "rn"), "name", Nil),
+      ("mixed OVER", "SELECT name, row_number() OVER (PARTITION BY g ORDER BY cast(v AS INT)) AS r1, " +
+        "row_number() OVER (ORDER BY cast(v AS INT) DESC) AS r2 FROM t", "", Seq("name", "r1", "r2"), "name", Nil),
+      ("generator", "SELECT name, explode(split(tags, ',')) AS tag FROM t", "",
+        Seq("name", "tag"), "tag", Nil),
+      ("union all", "SELECT city FROM a UNION ALL SELECT city FROM b", "", Seq("city"), "city", Nil),
+      ("union distinct", "SELECT city FROM a UNION SELECT city FROM b", "", Seq("city"), "city", Seq("city")),
+      ("except", "SELECT city FROM a EXCEPT SELECT city FROM b", "", Seq("city"), "city", Seq("city")),
+      ("aggregate", "SELECT city, count(*) AS n FROM a GROUP BY city", "", Seq("city", "n"), "city",
+        Seq("city")))
+    val feedNames = shapeFeeds.flatMap(_.keys).distinct
+    registerFinalFeeds(shapeFeeds)
+    var runs = 0
+    /** Compile over fresh feeds, drive the three batches, and return the
+      * emitted rows in emission order.
+      */
+    def drive(compile: Map[String, Dataset[Change]] => (DataFrame, OutputMode)): Seq[Row] = {
+      runs += 1
+      val name   = s"shape_entry_$runs"
+      val inputs = feedNames.map(n => n -> MemoryStream[Change]).toMap
+      val (df, mode) = compile(inputs.map { case (n, s) => n -> s.toDS() })
+      val q = df.writeStream.format("memory").queryName(name).outputMode(mode)
+        .option("checkpointLocation", tmp(name)).start()
+      try shapeFeeds.foreach { b =>
+        b.foreach { case (f, cs) => inputs(f).addData(cs: _*) }
+        q.processAllAvailable()
+      } finally q.stop()
+      spark.table(name).collect().toSeq
+    }
+    /** Last-writer-wins fold of emitted rows by `identity` in `pos`
+      * order, ties by emission order; the live rows that remain.
+      */
+    def lww(rows: Seq[Row], identity: Seq[String], pos: Row => (Long, Long),
+        live: Row => Boolean): Seq[Row] =
+      rows.zipWithIndex.sortBy { case (r, i) => (pos(r), i) }
+        .foldLeft(Map.empty[Seq[Any], Row]) { case (m, (r, _)) => m + (identity.map(r.getAs[Any]) -> r) }
+        .values.filter(live).toSeq
+    def cells(r: Row, cols: Seq[String]): Map[String, String] =
+      cols.map(c => c -> Option(r.getAs[Any](c)).map(String.valueOf).orNull).toMap
+    def named(sql: String): Seq[Map[String, String]] =
+      lww(drive(fs => (IncrementalPlanner.namedChanges(spark, sql, fs)._1.toDF(), OutputMode.Append())),
+        Seq("key"), r => (CdcMaterializer.micros(r.getAs[Timestamp]("ts")), r.getAs[Long]("seq")),
+        _.getAs[String]("op") != "delete")
+        .map(r => r.getMap[String, String](r.fieldIndex("payload")).toMap)
+    def materialized(sql: String, cols: Seq[String], groupCols: Seq[String]): Seq[Map[String, String]] = {
+      var out = Set.empty[String]
+      val rows = drive { fs =>
+        val view = IncrementalPlanner.materialize(spark, sql, fs)
+        out = view.df.columns.toSet
+        (view.df, view.outputMode)
+      }
+      // typed aggregate output: the latest row per group; row-class and
+      // ranked outputs: a fold by change identity in commit order
+      val live =
+        if (out("_live_rows")) lww(rows, groupCols, _ => (0L, 0L), _.getAs[Long]("_live_rows") > 0L)
+        else lww(rows, if (out("_partition")) Seq("key", "_partition") else Seq("key"),
+          r => (r.getAs[Long]("ts_us"), r.getAs[Long]("seq")), _.getAs[String]("op") != "delete")
+      live.map(cells(_, cols))
+    }
+    val problems = scala.collection.mutable.ArrayBuffer.empty[String]
+    shapes.foreach { case (shape, sql, batchSql0, cols, jc, groupCols) =>
+      val batchSql = if (batchSql0.isEmpty) sql else batchSql0
+      val derivedCols = cols.map(c => s"d.$c AS $c").mkString(", ")
+      val positions: Seq[(String, String, () => Seq[Map[String, String]])] = {
+        val dSql = s"SELECT $derivedCols FROM ($sql) d"
+        val jSql = s"SELECT $derivedCols, o.label AS label FROM ($sql) d JOIN o ON d.$jc = o.jc"
+        Seq(
+          ("materialize", batchSql, () => materialized(sql, cols, groupCols)),
+          ("namedChanges", batchSql, () => named(sql)),
+          ("derived table", s"SELECT $derivedCols FROM ($batchSql) d", () => named(dSql)),
+          ("value-join side",
+            s"SELECT $derivedCols, o.label AS label FROM ($batchSql) d JOIN o ON d.$jc = o.jc",
+            () => named(jSql)))
+      }
+      positions.foreach { case (pos, oracleSql, run) =>
+        val want = bag(spark.sql(oracleSql).collect().toSeq.map(r =>
+          r.schema.fieldNames.map(f => f -> Option(r.getAs[Any](f)).map(String.valueOf).orNull).toMap))
+        if (want.isEmpty) problems += s"$shape via $pos: the oracle is empty"
+        try {
+          val got = bag(run())
+          if (got != want) problems += s"$shape via $pos: view $got != batch $want"
+        } catch {
+          // one ASOF JOIN per statement: the as-of join cannot be a join side
+          case e: IllegalArgumentException
+              if shape == "asof join" && pos == "value-join side" &&
+                e.getMessage.contains("one ASOF JOIN per statement") => ()
+          case e: Exception => problems += s"$shape via $pos threw ${e.getMessage}"
+        }
+      }
+    }
+    // refusals: one message, whichever entry compiles the statement
+    val ttl   = Some(("10 minutes", 60000L))
+    val feeds = feedNames.map(n => n -> MemoryStream[Change].toDS()).toMap
+    val entries: Seq[(String, String => Any)] = Seq(
+      "materialize"          -> (IncrementalPlanner.materialize(spark, _, feeds)),
+      "materializeChanges"   -> (IncrementalPlanner.materializeChanges(spark, _, feeds)),
+      "materializeAggChanges" -> (IncrementalPlanner.materializeAggChanges(spark, _, feeds)),
+      "namedChanges"         -> (IncrementalPlanner.namedChanges(spark, _, feeds)))
+    val ttlEntries: Seq[(String, String => Any)] = Seq(
+      "materializeExpiring"  -> (IncrementalPlanner.materializeExpiring(spark, _, feeds)),
+      "namedChanges(ttl)"    -> (IncrementalPlanner.namedChanges(spark, _, feeds, ttl)))
+    val refused: Seq[(String, Seq[(String, String => Any)], String)] = Seq(
+      ("key-equi join on a union side", entries,
+        "SELECT d.city AS city FROM (SELECT city FROM a UNION ALL SELECT city FROM b) d JOIN o ON d.key = o.key"),
+      ("key-equi join on a generator side", entries,
+        "SELECT d.tag AS tag FROM (SELECT explode(split(tags, ',')) AS tag FROM t) d JOIN o ON d.key = o.key"),
+      ("FK join on an aggregate side", entries,
+        "SELECT d.city AS city FROM (SELECT city, count(*) AS n FROM a GROUP BY city) d JOIN o ON o.jc = d.key"),
+      ("ASOF join as a join side", entries, s"SELECT d.val AS val FROM ($asof) d JOIN o ON d.val = o.jc"),
+      ("TTL over ASOF", ttlEntries, asof),
+      ("TTL over a ranked view", ttlEntries, ranked),
+      ("TTL over a union", ttlEntries, "SELECT city FROM a UNION ALL SELECT city FROM b"),
+      ("TTL over EXCEPT", ttlEntries, "SELECT city FROM a EXCEPT SELECT city FROM b"),
+      ("TTL over a row view over a join", ttlEntries,
+        "SELECT d.city AS city FROM a d JOIN o ON d.city = o.jc"))
+    refused.foreach { case (what, es, sql) =>
+      val msgs = es.map { case (entry, compile) =>
+        entry -> (try { compile(sql); "compiled" } catch { case e: IllegalArgumentException => e.getMessage })
+      }
+      if (msgs.map(_._2).distinct.length != 1 || msgs.head._2 == "compiled")
+        problems += s"$what: ${msgs.map { case (e, m) => s"$e -> $m" }.mkString("; ")}"
+    }
+    feedNames.foreach(spark.catalog.dropTempView)
+    assert(problems.isEmpty, problems.mkString("\n"))
+  }
+
   test("#171bi OUTER joins with non-equi residuals: residual decides match status, crossings retract pairs and resurrect solos") {
     // LEFT JOIN ON equi AND non-equi: the residual's truth value is LIVE —
     // either side moving across it flips pairs <-> solos

@@ -126,6 +126,43 @@ class ViewCatalogSpec extends SparkSpec {
     cat.stopAll()
   }
 
+  test("#234ai named row view with a SELECT-list subquery: the COUNT-bug query by name equals batch SQL after every batch") {
+    val (root, custDir, ordDir) = (tmp("vcsub"), tmp("vcscust"), tmp("vcsord"))
+    val cat = new ViewCatalog(spark, root)
+    cat.registerSource("cust", () => ChangeFeed.readJsonDir(spark, custDir).as[Change])
+    cat.registerSource("ord", () => ChangeFeed.readJsonDir(spark, ordDir).as[Change])
+    val sql = "SELECT name, (SELECT count(*) FROM ord WHERE ord.cid = cust.ckey) AS n_ord FROM cust"
+    val v = cat.createView("cust_orders", sql)
+    def c(op: String, k: Long, m: Int, seq: Long, kv: (String, String)*) = Change(op, k, ts(m), kv.toMap, seq)
+    // (cust changes, ord changes) per batch: a customer with zero orders
+    // must show 0, an order's delete must decrement, a customer's delete
+    // must leave the view
+    val batches = Seq(
+      (Seq(c("insert", 1L, 0, 1L, "name" -> "ann", "ckey" -> "1"),
+        c("insert", 2L, 1, 2L, "name" -> "bob", "ckey" -> "2")), Nil),
+      (Nil, Seq(c("insert", 101L, 2, 1L, "cid" -> "1"), c("insert", 102L, 3, 2L, "cid" -> "1"))),
+      (Nil, Seq(c("delete", 102L, 4, 3L))),
+      (Seq(c("delete", 2L, 5, 3L)), Nil))
+    def lwwFinal(cs: Seq[Change]): Seq[Change] = cs.groupBy(_.key).values
+      .map(_.maxBy(c => (CdcMaterializer.micros(c.ts), c.seq))).filter(_.op != "delete").toSeq
+    batches.zipWithIndex.foreach { case ((custBatch, ordBatch), i) =>
+      if (custBatch.nonEmpty) writeChanges(custDir, s"b$i.json", custBatch)
+      if (ordBatch.nonEmpty) writeChanges(ordDir, s"b$i.json", ordBatch)
+      cat.awaitAll()
+      // batch SQL over the LWW-final feeds so far
+      val sofar = batches.take(i + 1)
+      lwwFinal(sofar.flatMap(_._1)).map(c => (c.payload("name"), c.payload("ckey")))
+        .toDF("name", "ckey").createOrReplaceTempView("cust")
+      lwwFinal(sofar.flatMap(_._2)).map(c => Tuple1(c.payload("cid"))).toDF("cid")
+        .createOrReplaceTempView("ord")
+      val want = spark.sql(sql).collect().toSet.map((r: org.apache.spark.sql.Row) =>
+        r.toSeq.map(String.valueOf))
+      assert(snapRows(cat, "cust_orders", v.cols) == want, s"after batch $i")
+    }
+    Seq("cust", "ord").foreach(spark.catalog.dropTempView)
+    cat.stopAll()
+  }
+
   test("#234c DDL discipline: duplicates, unknown refs, dependent drops, full teardown") {
     val (root, src) = (tmp("vcddl"), tmp("vcdsrc"))
     val cat = new ViewCatalog(spark, root)
