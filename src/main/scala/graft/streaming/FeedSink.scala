@@ -41,7 +41,7 @@ object FeedSink {
     *    or none of it.
     */
   def writeBatch(states: DataFrame, batchId: Long, feedDir: String): Unit = {
-    states
+    val batch = states
       .select(
         lit(batchId).as("batch_id"),
         when(col("deleted"), "delete").otherwise("upsert").as("op"),
@@ -57,13 +57,22 @@ object FeedSink {
       // (KB–MB scale); a monster batch becoming one write task is the
       // documented store trade (compaction/census watch it).
       .repartition(col("batch_id"))
-      .write
+    writePartitioned(batch, feedDir)
+    commitMarker(feedDir, batchId)
+  }
+
+  /** The one batch-partitioned write: each `batch_id` value in `rows`
+    * replaces its own `batch_id=<id>` partition under `dir` (dynamic
+    * partition overwrite), leaving every other partition untouched, so a
+    * replayed batch overwrites itself and never unions with its earlier
+    * attempt.
+    */
+  private def writePartitioned(rows: DataFrame, dir: String): Unit =
+    rows.write
       .mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("batch_id")
-      .parquet(feedDir)
-    commitMarker(feedDir, batchId)
-  }
+      .parquet(dir)
 
   /** [[writeBatch]] for a [[Change]]-typed micro-batch (the
     * [[IncrementalPlanner.namedChanges]] wire): same batch-partitioned
@@ -72,7 +81,7 @@ object FeedSink {
     * every [[ViewCatalog]] named view.
     */
   def writeChangeBatch(changes: DataFrame, batchId: Long, feedDir: String): Unit = {
-    changes
+    writePartitioned(changes
       .select(
         lit(batchId).as("batch_id"),
         col("op"),
@@ -81,12 +90,8 @@ object FeedSink {
         col("seq"),
         col("payload"),
       )
-      .repartition(col("batch_id")) // r17: one file per batch dir (see writeBatch)
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(feedDir)
+      .repartition(col("batch_id")), // r17: one file per batch dir (see writeBatch)
+      feedDir)
     commitMarker(feedDir, batchId)
   }
 
@@ -228,13 +233,7 @@ object FeedSink {
     * the producer transaction id's role.
     */
   def writeWireBatch(changes: DataFrame, batchId: Long, wireDir: String): Unit =
-    ChangeFeed.toWire(changes)
-      .withColumn("batch_id", lit(batchId))
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(wireDir)
+    writePartitioned(ChangeFeed.toWire(changes).withColumn("batch_id", lit(batchId)), wireDir)
 
   def writeWire(changes: DataFrame, wireDir: String, checkpointDir: String): DataStreamWriter[Row] =
     changes.writeStream
@@ -256,16 +255,11 @@ object FeedSink {
     * live-keys + post-horizon deltas instead of the full change history.
     */
   def compact(spark: org.apache.spark.sql.SparkSession, feedDir: String, upTo: Long): Unit = {
-    stateAsOf(spark, feedDir, upTo)
+    writePartitioned(stateAsOf(spark, feedDir, upTo)
       .select(lit(upTo).as("batch_id"), lit("upsert").as("op"),
         col("key"), col("ts_us"), col("seq"), col("payload"))
       // the feed is both source and sink of this job — cut the read path
-      .localCheckpoint(true)
-      .write
-      .mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("batch_id")
-      .parquet(feedDir)
+      .localCheckpoint(true), feedDir)
     val root = new java.io.File(feedDir)
     root.listFiles().filter { f =>
       f.isDirectory && f.getName.startsWith("batch_id=") &&

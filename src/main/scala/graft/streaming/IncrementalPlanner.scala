@@ -131,7 +131,9 @@ case class HolisticGroupRow(group: String, live_rows: Long, sums: Seq[Double],
 /** A key's current projected row in a PLANNED select-where view. */
 case class PlannedRow(proj: Map[String, String], tsUs: Long, seq: Long, live: Boolean) extends LwwState
 
-/** One change of a planned non-aggregate view's changefeed. */
+/** One change of a planned mixed-OVER view's changefeed ([[IncrementalPlanner]]'s
+  * `mixedWinFold`); the row and generator folds emit [[Change]] directly.
+  */
 case class PlannedRowChange(op: String, key: Long, proj: Map[String, String], ts_us: Long, seq: Long)
 
 /** A key's current exploded FAMILY in a planned generator view
@@ -272,9 +274,14 @@ case class MixedWinState(entries: Map[String, Map[String, String]],
   *    are possible; such consumers take the later emission.
   *
   * Feed payloads are stringly-typed (`Map[String,String]`, the Change
-  * wire contract), so the compiled expressions coerce: comparisons and
-  * arithmetic go numeric when both operands parse as numbers, else
-  * lexicographic — the documented semantic of a schema-on-read feed.
+  * wire contract). Every view expression compiles through one
+  * evaluator, [[PlannerExpr]]: Spark's analyzer resolves it and Spark
+  * evaluates it, so function bodies are Spark's own, while the
+  * planner's value contract coerces each operand — comparisons go
+  * numeric when both operands parse as numbers, else lexicographic;
+  * arithmetic runs on the parsed doubles and a non-finite result is
+  * NULL; a boolean operand is `true`/`false` only — the documented
+  * semantic of a schema-on-read feed (README "Value contract").
   *
   * Temporal views: `GROUP BY window(<ts>, '<dur>'[, '<slide>'])` groups
   * by the containing time window(s) — the window start (epoch micros)
@@ -296,6 +303,7 @@ case class MixedWinState(entries: Map[String, Map[String, String]],
   * what those two stages pay.
   */
 object IncrementalPlanner {
+  import PlannerExpr.{asBool, asNum, cmpVals, litValue, unsupported, Env, Eval}
 
   /** Internal null marker inside group-key strings (a grouping column may
     * legitimately evaluate to SQL NULL; NULL is one group).
@@ -330,409 +338,10 @@ object IncrementalPlanner {
   final case class PlannedView(df: DataFrame, outputMode: OutputMode)
 
   // ------------------------------------------------------------------
-  // Expression compiler: Catalyst unresolved Expression → serializable
-  // closure over the change's field environment. Values are Option[Any]
-  // (None = SQL NULL); only plain Scala values are captured, never
-  // Expression objects, so the closures ship to executors.
+  // Expressions: one evaluator, [[PlannerExpr]] — Spark evaluates every
+  // view expression under the planner's value contract.
   // ------------------------------------------------------------------
-  private type Env  = Map[String, String]
-  private type Eval = Env => Option[Any]
-
-  /** Numeric coercion for stringly payloads. Non-finite values (a "NaN"
-    * or "Infinity" string, a NaN upstream) are rejected as NULL: a
-    * non-finite value entering signed-delta aggregate state could never
-    * be retracted (Inf − Inf = NaN), so one malformed row would poison
-    * its group's running totals permanently — the same
-    * malformed-operand-filters-the-row stance as [[asBool]].
-    */
-  private def asNum(v: Any): Option[Double] = (v match {
-    case d: Double  => Some(d)
-    case l: Long    => Some(l.toDouble)
-    case i: Int     => Some(i.toDouble)
-    case f: Float   => Some(f.toDouble)
-    case s: String  => s.toDoubleOption
-    case _          => None
-  }).filter(d => !d.isNaN && !d.isInfinite)
-
-  /** Boolean coercion for logical operators: true booleans pass, the
-    * strings "true"/"false" parse (stringly payloads), anything else is
-    * NULL — a malformed predicate operand filters the row instead of
-    * throwing a ClassCastException in the executor.
-    */
-  private def asBool(v: Any): Option[Boolean] = v match {
-    case b: Boolean => Some(b)
-    case s: String  => s.toBooleanOption
-    case _          => None
-  }
-
-  private def cmpVals(a: Any, b: Any): Int = (asNum(a), asNum(b)) match {
-    case (Some(x), Some(y)) => java.lang.Double.compare(x, y)
-    case _                  => a.toString.compareTo(b.toString)
-  }
-
-  private def litValue(v: Any): Option[Any] = v match {
-    case null            => None
-    case u: UTF8String   => Some(u.toString)
-    case d: org.apache.spark.sql.types.Decimal => Some(d.toDouble)
-    case n: java.lang.Number => Some(n.doubleValue)
-    case b: Boolean      => Some(b)
-    case other           => Some(other.toString)
-  }
-
-  private def compileExpr(e: Expression): Eval = e match {
-    case a: UnresolvedAttribute =>
-      val qualified = a.nameParts.mkString(".")
-      val bare      = a.nameParts.last
-      env => env.get(qualified).orElse(env.get(bare))
-    case l: Literal =>
-      val v = litValue(l.value)
-      _ => v
-    case al: Alias => compileExpr(al.child)
-    case c: Cast =>
-      val child   = compileExpr(c.child)
-      val numeric = c.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-      env => child(env).flatMap(v => if (numeric) asNum(v) else Some(v.toString))
-    // Kleene three-valued AND/OR (SQL semantics): FALSE AND NULL is
-    // FALSE, TRUE OR NULL is TRUE — a NULL operand only yields NULL
-    // when the other side cannot decide alone. The strict pre-r7 form
-    // (any NULL → NULL) silently filtered `p OR q` rows where p was
-    // TRUE but q involved a NULL field.
-    case And(l, r) =>
-      val (cl, cr) = (compileExpr(l), compileExpr(r))
-      env => (cl(env).flatMap(asBool), cr(env).flatMap(asBool)) match {
-        case (Some(false), _) | (_, Some(false)) => Some(false)
-        case (Some(true), Some(true))            => Some(true)
-        case _                                   => None
-      }
-    case Or(l, r) =>
-      val (cl, cr) = (compileExpr(l), compileExpr(r))
-      env => (cl(env).flatMap(asBool), cr(env).flatMap(asBool)) match {
-        case (Some(true), _) | (_, Some(true)) => Some(true)
-        case (Some(false), Some(false))        => Some(false)
-        case _                                 => None
-      }
-    case Not(c) =>
-      val cc = compileExpr(c)
-      env => cc(env).flatMap(asBool).map(!_)
-    // null-safe equality (BEFORE the generic BinaryComparison case —
-    // EqualNullSafe extends it but must not null-propagate):
-    // NULL <=> NULL is TRUE, NULL <=> x is FALSE, never NULL
-    case EqualNullSafe(l, r) =>
-      val (cl, cr) = (compileExpr(l), compileExpr(r))
-      env => (cl(env), cr(env)) match {
-        case (None, None)       => Some(true)
-        case (Some(a), Some(b)) => Some(cmpVals(a, b) == 0)
-        case _                  => Some(false)
-      }
-    case cmp: BinaryComparison =>
-      val (cl, cr) = (compileExpr(cmp.left), compileExpr(cmp.right))
-      val test: Int => Boolean = cmp match {
-        case _: EqualTo            => _ == 0
-        case _: LessThan           => _ < 0
-        case _: LessThanOrEqual    => _ <= 0
-        case _: GreaterThan        => _ > 0
-        case _: GreaterThanOrEqual => _ >= 0
-        case other => throw unsupported(s"comparison ${other.getClass.getSimpleName}")
-      }
-      env => for (a <- cl(env); b <- cr(env)) yield test(cmpVals(a, b))
-    // LIKE with a LITERAL pattern (the WHERE vocabulary): % → .*, _ → .,
-    // escape char honored, everything else regex-quoted
-    case Like(l, p: Literal, escapeChar) =>
-      val cl  = compileExpr(l)
-      val pat = String.valueOf(litValue(p.value).getOrElse(
-        throw unsupported("LIKE with a NULL pattern")))
-      val sb  = new StringBuilder
-      var i = 0
-      while (i < pat.length) {
-        val ch = pat.charAt(i)
-        if (ch == escapeChar && i + 1 < pat.length) { sb.append(java.util.regex.Pattern.quote(pat.charAt(i + 1).toString)); i += 1 }
-        else if (ch == '%') sb.append("(?s).*")
-        else if (ch == '_') sb.append("(?s).")
-        else sb.append(java.util.regex.Pattern.quote(ch.toString))
-        i += 1
-      }
-      val rx = sb.toString
-      env => cl(env).map(v => String.valueOf(v).matches(rx))
-    case ar: BinaryArithmetic =>
-      val (cl, cr) = (compileExpr(ar.left), compileExpr(ar.right))
-      val op: (Double, Double) => Double = ar match {
-        case _: Add       => _ + _
-        case _: Subtract  => _ - _
-        case _: Multiply  => _ * _
-        case _: Divide    => _ / _
-        case _: Remainder => _ % _ // Spark's % (sign follows the dividend)
-        case _: Pmod      => (a, b) => { val m = a % b; if (m < 0 != b < 0 && m != 0) m + b else m }
-        case other => throw unsupported(s"arithmetic ${other.getClass.getSimpleName}")
-      }
-      // non-finite results (x/0 → Infinity, Inf−Inf → NaN) become NULL,
-      // matching Spark's non-ANSI divide-by-zero → NULL and keeping
-      // non-retractable values out of the aggregate state
-      env => (for {
-        a <- cl(env); b <- cr(env)
-        x <- asNum(a); y <- asNum(b)
-      } yield op(x, y)).filter(r => !r.isNaN && !r.isInfinite)
-    case CaseWhen(branches, elseValue) =>
-      val cbs  = branches.map { case (c, v) => (compileExpr(c), compileExpr(v)) }
-      val cels = elseValue.map(compileExpr)
-      env => cbs.collectFirst { case (c, v) if c(env).flatMap(asBool).contains(true) => v(env) }
-        .getOrElse(cels.flatMap(_(env)))
-    case IsNull(c) =>
-      val cc = compileExpr(c)
-      env => Some(cc(env).isEmpty)
-    case IsNotNull(c) =>
-      val cc = compileExpr(c)
-      env => Some(cc(env).isDefined)
-    case In(value, list) =>
-      val cv = compileExpr(value)
-      val cs = list.map(compileExpr)
-      // three-valued IN: match → true; no match but a NULL candidate →
-      // NULL (it COULD have matched); all non-NULL misses → false
-      env => cv(env).flatMap { v =>
-        val cands = cs.map(_(env))
-        if (cands.exists(_.exists(c => cmpVals(v, c) == 0))) Some(true)
-        else if (cands.exists(_.isEmpty)) None
-        else Some(false)
-      }
-    case f: UnresolvedFunction => compileFunction(f)
-    case other => throw unsupported(s"expression ${other.getClass.getSimpleName} in ${other.sql}")
-  }
-
-  /** Wall-clock reading of an event-time value for the date FIELD
-    * functions: numeric strings are epoch MICROS read in UTC (the
-    * session timezone this library pins everywhere), `yyyy-mm-dd
-    * hh:mm:ss[.f]` and `yyyy-mm-dd` parse as the naive local datetime —
-    * exactly the fields Spark's own year()/month()/… return under a UTC
-    * session, so planned views agree with batch recompute of the same
-    * SQL. Unparseable → None → SQL NULL propagation.
-    */
-  private def localDtOf(v: Any): Option[java.time.LocalDateTime] = {
-    def ofMicros(us: Long) = java.time.LocalDateTime.ofEpochSecond(
-      Math.floorDiv(us, 1000000L), (Math.floorMod(us, 1000000L) * 1000L).toInt,
-      java.time.ZoneOffset.UTC)
-    v match {
-      case t: Timestamp => Some(ofMicros(CdcMaterializer.micros(t)))
-      case s: String =>
-        s.toLongOption.map(ofMicros)
-          .orElse(scala.util.Try(java.time.LocalDateTime.parse(s.trim.replace(' ', 'T'))).toOption)
-          .orElse(scala.util.Try(java.time.LocalDate.parse(s.trim)).toOption.map(_.atStartOfDay))
-      case other => asNum(other).map(d => ofMicros(d.toLong))
-    }
-  }
-
-  /** `yyyy-MM-dd HH:mm:ss` (Spark's timestamp string form) without a
-    * captured DateTimeFormatter — formatters are not serializable, and
-    * this formats inside executor-side closures.
-    */
-  private def fmtDt(dt: java.time.LocalDateTime): String =
-    f"${dt.getYear}%04d-${dt.getMonthValue}%02d-${dt.getDayOfMonth}%02d " +
-      f"${dt.getHour}%02d:${dt.getMinute}%02d:${dt.getSecond}%02d"
-
-  /** Scalar functions over the stringly env: the common WHERE/projection
-    * vocabulary (upper/lower/trim/length/substring/concat/coalesce) plus
-    * the date/time field functions (year/month/day/hour/minute/second/
-    * dayofweek/to_date/date_trunc/datediff — see [[localDtOf]] for the
-    * event-time coercion), each with SQL NULL propagation (concat is
-    * NULL if ANY argument is, per ANSI; coalesce takes the first
-    * non-NULL). Field functions return integral Longs so group keys
-    * stringify clean (`month=3`, not `3.0`).
-    */
-  private def compileFunction(f: UnresolvedFunction): Eval = {
-    val args = f.arguments.map(compileExpr)
-    def one(g: String => Any): Eval = {
-      require(args.length == 1, s"${f.nameParts.last} takes one argument")
-      env => args.head(env).map(v => g(String.valueOf(v)))
-    }
-    def dtField(g: java.time.LocalDateTime => Any): Eval = {
-      require(args.length == 1, s"${f.nameParts.last} takes one argument")
-      env => args.head(env).flatMap(localDtOf).map(g)
-    }
-    f.nameParts.last.toLowerCase match {
-      case "upper"  => one(_.toUpperCase)
-      case "lower"  => one(_.toLowerCase)
-      case "trim"   => one(_.trim)
-      // the engine-portable stable hash (the q42 "never rand()" membership
-      // discipline, live): md5 in the planner makes hash splits, bucket
-      // routing, and bottom-k reservoirs expressible as ordinary views
-      case "md5" =>
-        one(s => java.security.MessageDigest.getInstance("MD5")
-          .digest(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-          .map("%02x".format(_)).mkString)
-      case "length" => one(_.length.toDouble)
-      case "concat" =>
-        env => {
-          val vs = args.map(_(env))
-          if (vs.exists(_.isEmpty)) None
-          else Some(vs.flatten.map(String.valueOf(_)).mkString)
-        }
-      case "coalesce" =>
-        env => args.iterator.map(_(env)).collectFirst { case Some(v) => v }
-      case "substring" | "substr" =>
-        require(args.length == 2 || args.length == 3,
-          "substring takes (str, pos[, len])")
-        env => for {
-          s   <- args.head(env).map(String.valueOf(_))
-          pos <- args(1)(env).flatMap(asNum).map(_.toInt)
-          len <- if (args.length == 3) args(2)(env).flatMap(asNum).map(_.toInt)
-                 else Some(Int.MaxValue)
-        } yield {
-          // SQL 1-based positions; negative counts from the end; pos 0
-          // behaves as 1 (Spark's substring semantics)
-          val from = if (pos > 0) pos - 1 else if (pos < 0) s.length + pos else 0
-          val lo   = math.max(0, from)
-          // clamp in Long: from + len can exceed Int range
-          val hi   = math.min(s.length.toLong, math.max(lo.toLong, from.toLong + math.max(0, len))).toInt
-          if (lo >= s.length) "" else s.substring(lo, hi)
-        }
-      case "ltrim" if args.length == 1   => one(s => s.dropWhile(_ == ' '))
-      case "rtrim" if args.length == 1   => one(s => s.reverse.dropWhile(_ == ' ').reverse)
-      case "reverse"                     => one(_.reverse)
-      case "initcap" =>
-        one(_.toLowerCase.split(" ", -1).map(w =>
-          if (w.isEmpty) w else w.substring(0, 1).toUpperCase + w.substring(1)).mkString(" "))
-      case "repeat" =>
-        require(args.length == 2, "repeat takes (str, n)")
-        env => for {
-          s <- args.head(env).map(String.valueOf(_))
-          k <- args(1)(env).flatMap(asNum).map(_.toInt)
-        } yield s * math.max(0, k)
-      case "left" | "right" =>
-        val fromLeft = f.nameParts.last.equalsIgnoreCase("left")
-        require(args.length == 2, "left/right take (str, n)")
-        env => for {
-          s <- args.head(env).map(String.valueOf(_))
-          k <- args(1)(env).flatMap(asNum).map(_.toInt)
-        } yield {
-          val m = math.min(math.max(0, k), s.length)
-          if (fromLeft) s.substring(0, m) else s.substring(s.length - m)
-        }
-      case "lpad" | "rpad" =>
-        val isL = f.nameParts.last.equalsIgnoreCase("lpad")
-        require(args.length == 2 || args.length == 3, "lpad/rpad take (str, len[, pad])")
-        env => for {
-          s   <- args.head(env).map(String.valueOf(_))
-          len <- args(1)(env).flatMap(asNum).map(_.toInt)
-          pad <- if (args.length == 3) args(2)(env).map(String.valueOf(_)) else Some(" ")
-        } yield {
-          if (len <= s.length) s.substring(0, math.max(0, len))
-          else if (pad.isEmpty) s
-          else {
-            val fill = (pad * ((len - s.length) / pad.length + 1)).substring(0, len - s.length)
-            if (isL) fill + s else s + fill
-          }
-        }
-      // 1-based position of the first match, 0 when absent (SQL instr)
-      case "instr" | "position" =>
-        require(args.length == 2, s"${f.nameParts.last} takes two arguments")
-        val flip = f.nameParts.last.equalsIgnoreCase("position") // position(sub IN str)
-        env => for {
-          a <- args.head(env).map(String.valueOf(_))
-          b <- args(1)(env).map(String.valueOf(_))
-        } yield { val (str, sub) = if (flip) (b, a) else (a, b); (str.indexOf(sub) + 1).toLong }
-      case "startswith" | "endswith" | "contains" =>
-        val kind = f.nameParts.last.toLowerCase
-        require(args.length == 2, s"$kind takes two arguments")
-        env => for {
-          s <- args.head(env).map(String.valueOf(_))
-          p <- args(1)(env).map(String.valueOf(_))
-        } yield kind match {
-          case "startswith" => s.startsWith(p)
-          case "endswith"   => s.endsWith(p)
-          case _            => s.contains(p)
-        }
-      // 1-based field split; out-of-range → empty string (Spark's split_part)
-      case "split_part" =>
-        require(args.length == 3, "split_part takes (str, delim, n)")
-        env => for {
-          s <- args.head(env).map(String.valueOf(_))
-          d <- args(1)(env).map(String.valueOf(_))
-          k <- args(2)(env).flatMap(asNum).map(_.toInt)
-        } yield {
-          val parts = if (d.isEmpty) Array(s) else s.split(java.util.regex.Pattern.quote(d), -1)
-          val idx   = if (k < 0) parts.length + k else k - 1
-          if (k == 0 || idx < 0 || idx >= parts.length) "" else parts(idx)
-        }
-      case "abs" =>
-        require(args.length == 1, "abs takes one argument")
-        env => args.head(env).flatMap(asNum).map(math.abs)
-      case "pmod" =>
-        require(args.length == 2, "pmod takes two arguments")
-        env => (for {
-          a <- args.head(env).flatMap(asNum)
-          b <- args(1)(env).flatMap(asNum)
-        } yield { val m = a % b; if (m < 0 != b < 0 && m != 0) m + b else m })
-          .filter(r => !r.isNaN && !r.isInfinite)
-      case "floor" =>
-        require(args.length == 1, "floor takes one argument")
-        env => args.head(env).flatMap(asNum).map(d => math.floor(d).toLong)
-      case "ceil" | "ceiling" =>
-        require(args.length == 1, "ceil takes one argument")
-        env => args.head(env).flatMap(asNum).map(d => math.ceil(d).toLong)
-      case "round" =>
-        // HALF_UP at scale d (Spark's round semantics)
-        require(args.length == 1 || args.length == 2, "round takes (x[, d])")
-        env => for {
-          x <- args.head(env).flatMap(asNum)
-          d <- if (args.length == 2) args(1)(env).flatMap(asNum).map(_.toInt) else Some(0)
-        } yield BigDecimal(x).setScale(d, BigDecimal.RoundingMode.HALF_UP).toDouble
-      // greatest/least skip NULL operands (Spark's semantics); all-NULL → NULL
-      case "greatest" | "least" =>
-        val wantMax = f.nameParts.last.equalsIgnoreCase("greatest")
-        env => {
-          val vs = args.flatMap(_(env))
-          if (vs.isEmpty) None
-          else Some(vs.reduce((a, b) => if ((cmpVals(a, b) > 0) == wantMax) a else b))
-        }
-      case "nullif" =>
-        require(args.length == 2, "nullif takes two arguments")
-        env => args.head(env).filterNot(a => args(1)(env).exists(b => cmpVals(a, b) == 0))
-      // if(c, a, b): a NULL condition takes the else branch (SQL IF)
-      case "if" =>
-        require(args.length == 3, "if takes (cond, then, else)")
-        env => if (args.head(env).flatMap(asBool).contains(true)) args(1)(env) else args(2)(env)
-      case "replace" =>
-        require(args.length == 2 || args.length == 3, "replace takes (str, search[, repl])")
-        env => for {
-          s  <- args.head(env).map(String.valueOf(_))
-          q  <- args(1)(env).map(String.valueOf(_))
-          r  <- if (args.length == 3) args(2)(env).map(String.valueOf(_)) else Some("")
-        } yield s.replace(q, r)
-      case "year"               => dtField(_.getYear.toLong)
-      case "month"              => dtField(_.getMonthValue.toLong)
-      case "day" | "dayofmonth" => dtField(_.getDayOfMonth.toLong)
-      case "hour"               => dtField(_.getHour.toLong)
-      case "minute"             => dtField(_.getMinute.toLong)
-      case "second"             => dtField(_.getSecond.toLong)
-      // Spark's dayofweek: 1 = Sunday … 7 = Saturday
-      case "dayofweek"          => dtField(dt => (dt.getDayOfWeek.getValue % 7 + 1).toLong)
-      case "to_date"            => dtField(_.toLocalDate.toString)
-      case "date_trunc" =>
-        require(args.length == 2, "date_trunc takes ('unit', ts)")
-        // unit is a literal: compile it once against the empty env
-        val unit = args.head(Map.empty).map(String.valueOf(_).toLowerCase).getOrElse(
-          throw unsupported("date_trunc with a non-literal unit"))
-        val trunc: java.time.LocalDateTime => java.time.LocalDateTime = unit match {
-          case "year"   => dt => dt.toLocalDate.withDayOfYear(1).atStartOfDay
-          case "month"  => dt => dt.toLocalDate.withDayOfMonth(1).atStartOfDay
-          case "week"   => dt => dt.toLocalDate.`with`(java.time.DayOfWeek.MONDAY).atStartOfDay
-          case "day"    => _.toLocalDate.atStartOfDay
-          case "hour"   => _.truncatedTo(java.time.temporal.ChronoUnit.HOURS)
-          case "minute" => _.truncatedTo(java.time.temporal.ChronoUnit.MINUTES)
-          case "second" => _.truncatedTo(java.time.temporal.ChronoUnit.SECONDS)
-          case u        => throw unsupported(s"date_trunc unit '$u'")
-        }
-        env => args(1)(env).flatMap(localDtOf).map(dt => fmtDt(trunc(dt)))
-      case "datediff" =>
-        require(args.length == 2, "datediff takes (end, start)")
-        env => for {
-          e <- args.head(env).flatMap(localDtOf)
-          s <- args(1)(env).flatMap(localDtOf)
-        } yield java.time.temporal.ChronoUnit.DAYS.between(s.toLocalDate, e.toLocalDate)
-      case other => throw unsupported(s"function $other(...)")
-    }
-  }
-
-  private def unsupported(what: String): IllegalArgumentException =
-    new IllegalArgumentException(s"IncrementalPlanner does not compile $what")
+  private def compileExpr(e: Expression): Eval = PlannerExpr.compile(e)
 
   // ------------------------------------------------------------------
   // Source compiler: the FROM/WHERE part of the plan → a Change stream
@@ -3866,14 +3475,12 @@ object IncrementalPlanner {
       else Some(names.zip(fns).flatMap { case (n, f) => f(env).map(v => n -> String.valueOf(v)) }.toMap)
     }
     implicit val rowEnc    = Encoders.product[PlannedRow]
-    implicit val rcEnc     = Encoders.product[PlannedRowChange]
     implicit val changeEnc = Encoders.product[Change]
     implicit val longEnc   = Encoders.scalaLong
     val changes = watermarked(src.changes, ttl)
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append(), timeoutOf(ttl))(
-        expiringState[PlannedRow, PlannedRowChange](ttl, !_.live, _.tsUs)(rowFold(extract)))
-      .map(rc => Change(rc.op, rc.key, tsOfMicros(rc.ts_us), rc.proj, rc.seq))
+        expiringState[PlannedRow, Change](ttl, !_.live, _.tsUs)(rowFold(extract)))
     Keyed(changes, names, sourceKeys = true)
   }
 
@@ -3900,7 +3507,7 @@ object IncrementalPlanner {
   private def rowFold(extract: Change => Option[Map[String, String]])(
       key: Long,
       changes: Iterator[Change],
-      state: GroupState[PlannedRow]): Iterator[PlannedRowChange] = {
+      state: GroupState[PlannedRow]): Iterator[Change] = {
     val before = state.getOption
     val cur = CdcMaterializer.applyLww(before, changes) { (_, c, tsUs) =>
       if (c.op == "delete") PlannedRow(Map.empty, tsUs, c.seq, live = false)
@@ -3910,11 +3517,11 @@ object IncrementalPlanner {
       }
     }
     cur.foreach(state.update)
-    val (posTs, posSeq) = cur.map(r => (r.tsUs, r.seq)).getOrElse((0L, 0L))
+    val (at, posSeq) = cur.map(r => (tsOfMicros(r.tsUs), r.seq)).getOrElse((tsOfMicros(0L), 0L))
     (before.filter(_.live), cur.filter(_.live)) match {
       case (Some(b), Some(a)) if b.proj == a.proj => Iterator.empty
-      case (_, Some(a))       => Iterator.single(PlannedRowChange("upsert", key, a.proj, posTs, posSeq))
-      case (Some(_), None)    => Iterator.single(PlannedRowChange("delete", key, Map.empty, posTs, posSeq))
+      case (_, Some(a))       => Iterator.single(Change("upsert", key, at, a.proj, posSeq))
+      case (Some(_), None)    => Iterator.single(Change("delete", key, at, Map.empty, posSeq))
       case (None, None)       => Iterator.empty
     }
   }
@@ -3938,21 +3545,21 @@ object IncrementalPlanner {
   /** The one supported array constructor under a generator:
     * `split(<string expr>, '<regex>')` — feeds carry string payloads, so
     * the delimited-list field is THE array shape a changefeed actually
-    * has. Returns the ordered element renderings; a NULL string (or a
+    * has. Spark's own `split` computes the elements; a NULL string (or a
     * row the WHERE rejected) explodes to nothing, exactly like batch
-    * `explode` of a NULL array. Spark `split` keeps trailing empties
-    * (java limit -1) — matched here so the live view and a batch replay
-    * agree element-for-element.
+    * `explode` of a NULL array. The regex is checked here, so a bad one
+    * is refused at compile time.
     */
   private def compileArrayExpr(e: Expression): Env => Option[Seq[String]] = e match {
     case f: UnresolvedFunction if f.nameParts.last.equalsIgnoreCase("split") =>
-      require(f.arguments.length == 2, "split takes (str, delimiter-regex)")
-      val strF = compileExpr(f.arguments.head)
-      val delim = f.arguments(1) match {
-        case Literal(v: UTF8String, _) => v.toString
-        case other => throw unsupported(s"split delimiter ${other.sql} (literal regex only)")
+      f.arguments match {
+        case Seq(_, Literal(v: UTF8String, _)) =>
+          try java.util.regex.Pattern.compile(v.toString)
+          catch { case x: java.util.regex.PatternSyntaxException => throw unsupported(s"split regex: ${x.getMessage}") }
+        case args => throw unsupported(s"split(${args.map(_.sql).mkString(", ")}) (need a literal regex delimiter)")
       }
-      env => strF(env).map(s => String.valueOf(s).split(delim, -1).toSeq)
+      val arr = PlannerExpr.compile(f, generator = true)
+      env => arr(env).map(_.asInstanceOf[Seq[String]])
     case other => throw unsupported(
       s"generator argument ${other.sql} (supported: explode(split(<expr>, '<regex>')))")
   }
@@ -4024,7 +3631,6 @@ object IncrementalPlanner {
     }
 
     implicit val rowEnc    = Encoders.product[PlannedGenRow]
-    implicit val rcEnc     = Encoders.product[PlannedRowChange]
     implicit val changeEnc = Encoders.product[Change]
     implicit val longEnc   = Encoders.scalaLong
     val posName  = if (genItem.fn == "posexplode") Some(genItem.names.head) else None
@@ -4032,9 +3638,8 @@ object IncrementalPlanner {
     val changes = watermarked(src.changes, ttl)
       .groupByKey(_.key)
       .flatMapGroupsWithState(OutputMode.Append(), timeoutOf(ttl))(
-        expiringState[PlannedGenRow, PlannedRowChange](ttl, !_.live, _.tsUs)(
+        expiringState[PlannedGenRow, Change](ttl, !_.live, _.tsUs)(
           genFold(extract, itemName, posName)))
-      .map(rc => Change(rc.op, rc.key, tsOfMicros(rc.ts_us), rc.proj, rc.seq))
     Keyed(changes, outNames.toSeq, sourceKeys = false)
   }
 
@@ -4048,7 +3653,7 @@ object IncrementalPlanner {
       itemName: String, posName: Option[String])(
       key: Long,
       changes: Iterator[Change],
-      state: GroupState[PlannedGenRow]): Iterator[PlannedRowChange] = {
+      state: GroupState[PlannedGenRow]): Iterator[Change] = {
     val before = state.getOption
     val cur = CdcMaterializer.applyLww(before, changes) { (_, c, tsUs) =>
       if (c.op == "delete") PlannedGenRow(Map.empty, Nil, tsUs, c.seq, live = false)
@@ -4058,7 +3663,7 @@ object IncrementalPlanner {
       }
     }
     cur.foreach(state.update)
-    val (posTs, posSeq) = cur.map(r => (r.tsUs, r.seq)).getOrElse((0L, 0L))
+    val (at, posSeq) = cur.map(r => (tsOfMicros(r.tsUs), r.seq)).getOrElse((tsOfMicros(0L), 0L))
     def okey(i: Int): Long = JoinView.fnv64("g" + i + Sep + key)
     def rowOf(r: PlannedGenRow, i: Int): Map[String, String] =
       r.scalars + (itemName -> r.elems(i)) ++ posName.map(_ -> i.toString)
@@ -4068,10 +3673,10 @@ object IncrementalPlanner {
     val aScal  = cur.filter(_.live).map(_.scalars)
     val ups = (0 until aElems.length).iterator.collect {
       case i if i >= bElems.length || bElems(i) != aElems(i) || bScal != aScal =>
-        PlannedRowChange("upsert", okey(i), rowOf(cur.get, i), posTs, posSeq)
+        Change("upsert", okey(i), at, rowOf(cur.get, i), posSeq)
     }
     val dels = (aElems.length until bElems.length).iterator.map(i =>
-      PlannedRowChange("delete", okey(i), Map.empty, posTs, posSeq))
+      Change("delete", okey(i), at, Map.empty, posSeq))
     ups ++ dels
   }
 

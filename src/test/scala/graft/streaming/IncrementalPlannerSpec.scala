@@ -4622,4 +4622,337 @@ class IncrementalPlannerSpec extends SparkSpec {
         s"both ordinals of the exiting family appeared then retracted: $k1ops")
     } finally q.stop()
   }
+
+  // ----------------------------------------------------------------
+  // #171cw expression parity: every function the planner accepts and
+  // every operator, evaluated in three positions (a row view's SELECT,
+  // a WHERE, a GROUP BY key) over edge payloads. Expected values are
+  // pinned; where the result is Spark's function body and differs from
+  // the earlier hand-written one, the case must equal batch Spark SQL
+  // over the same rows instead (parityBatch).
+  // ----------------------------------------------------------------
+
+  private val parityRows: Seq[Map[String, String]] = Seq(
+    Map("s" -> "Hello World", "n" -> "12", "m" -> "5", "b" -> "true",
+      "t" -> "2024-03-15 10:30:00", "u" -> "2024-01-01", "d" -> "a,b,c"),
+    Map.empty, // every field missing
+    Map("s" -> "abc", "n" -> "NaN", "m" -> "0", "b" -> "TRUE",
+      "t" -> "1710500000000000", "u" -> "2024-03-15 23:59:59.5", "d" -> "x"),
+    Map("s" -> "\tpad\t", "n" -> "Infinity", "m" -> "-3", "b" -> "yes",
+      "t" -> "2023-12-31", "u" -> "1700000000000000", "d" -> ",,"),
+    Map("s" -> "hello-world foo", "n" -> "1e3", "m" -> "-7", "b" -> "false", "t" -> "garbage", "d" -> "only"),
+    Map("s" -> "\u0001ctl", "n" -> " 12 ", "m" -> "2.5", "b" -> "0", "t" -> "2024-02-29 23:00:00"),
+    Map("s" -> "𝄞ab", "n" -> "abc", "m" -> "10"),
+  )
+
+  private val parityValues: Seq[String] = Seq(
+    "upper(s)", "lower(s)", "trim(s)", "ltrim(s)", "rtrim(s)", "reverse(s)", "initcap(s)",
+    "md5(s)", "length(s)", "concat(s, '|', n)", "coalesce(s, n, 'none')", "coalesce(n, m)",
+    "substring(s, 2, 3)", "substr(s, -3)", "substring(s, -20, 22)", "substr(s, 0, 2)",
+    "substring(s, 3, -1)", "repeat(s, 2)", "left(s, 3)", "right(s, 2)", "left(s, -1)",
+    "lpad(s, 14, '*-')", "rpad(s, 14, '*')", "lpad(s, 20, '')", "rpad(s, 3)",
+    "instr(s, 'l')", "position('l', s)",
+    "split_part(d, ',', 2)", "split_part(d, ',', 5)", "split_part(d, ',', -1)",
+    "split_part(d, ',', 0)", "split_part(d, '', 1)",
+    "abs(m)", "pmod(m, 3)", "pmod(m, -3)", "floor(m)", "ceil(m)", "ceiling(n)", "round(m)",
+    "round(m / 3, 2)", "greatest(n, m, 1)", "least(n, m)", "greatest(s, n)", "least(m, 'abc')",
+    "nullif(n, m)", "nullif(n, 12)", "if(b, 'y', 'n')", "if(n > m, n, m)",
+    "replace(s, 'l', 'L')", "replace(s, 'l')", "replace(s, '', 'x')",
+    "year(t)", "month(t)", "day(t)", "dayofmonth(t)", "hour(t)", "minute(t)", "second(t)",
+    "dayofweek(t)", "to_date(t)", "to_date(u)", "date_trunc('day', t)", "date_trunc('hour', u)",
+    "date_trunc('week', t)", "date_trunc('month', t)", "datediff(t, u)", "datediff(t, '2024-01-01')",
+    "n + m", "n - m", "n * m", "n / m", "n % m", "n / 0", "n % 0", "pmod(n, 0)", "m * 1e308 * 10",
+    "CAST(n AS INT)", "CAST(n AS DOUBLE)", "CAST(b AS STRING)", "CAST(m AS STRING)",
+    "CASE WHEN n > 10 THEN 'big' WHEN n IS NULL THEN 'none' ELSE 'small' END",
+    "CASE WHEN b THEN m ELSE 0 END", "CASE m WHEN 5 THEN 'five' ELSE 'other' END",
+    "md5(concat(s, n))", "upper(n + m)", "2.5", "'lit'",
+  )
+
+  private val parityPredicates: Seq[String] = Seq(
+    "startswith(s, 'ab')", "endswith(s, 'ld')", "contains(s, 'b')",
+    "n > 10", "n < m", "n <= 12", "n >= 1000", "n = 12", "s = 'abc'", "s > 5", "n = s",
+    "n <=> m", "s <=> NULL", "n != m", "n IN (12, 1000)", "n NOT IN (12)", "s IN ('abc', 'x')",
+    "m IN (5, NULL)", "b AND n > 10", "b OR n > 10", "NOT b", "b", "b = true",
+    "s LIKE 'a%'", "s LIKE '%l_o%'", "s NOT LIKE 'H%'", "s LIKE '_ctl'",
+    "s IS NULL", "n IS NOT NULL", "coalesce(n > 10, false)", "if(b, n > 10, false)",
+    "CASE WHEN b THEN true ELSE NULL END", "length(s) > 3", "year(t) = 2024",
+  )
+
+  /** Each expression's value per row (null = SQL NULL) in a row view's
+    * SELECT, as the planner's own interpreter computed it.
+    */
+  private val parityPinned: Map[String, Seq[String]] = Map(
+    "upper(s)" -> Seq("HELLO WORLD", null, "ABC", "\u0009PAD\u0009", "HELLO-WORLD FOO", "\u0001CTL", "\ud834\udd1eAB"),
+    "lower(s)" -> Seq("hello world", null, "abc", "\u0009pad\u0009", "hello-world foo", "\u0001ctl", "\ud834\udd1eab"),
+    "trim(s)" -> Seq("Hello World", null, "abc", "pad", "hello-world foo", "ctl", "\ud834\udd1eab"),
+    "ltrim(s)" -> Seq("Hello World", null, "abc", "\u0009pad\u0009", "hello-world foo", "\u0001ctl", "\ud834\udd1eab"),
+    "rtrim(s)" -> Seq("Hello World", null, "abc", "\u0009pad\u0009", "hello-world foo", "\u0001ctl", "\ud834\udd1eab"),
+    "reverse(s)" -> Seq("dlroW olleH", null, "cba", "\u0009dap\u0009", "oof dlrow-olleh", "ltc\u0001", "ba\ud834\udd1e"),
+    "initcap(s)" -> Seq("Hello World", null, "Abc", "\u0009pad\u0009", "Hello-world Foo", "\u0001ctl", "\ud834\udd1eab"),
+    "md5(s)" -> Seq("b10a8db164e0754105b7a99be72e3fe5", null, "900150983cd24fb0d6963f7d28e17f72", "0be236f38fdf2734560d2d2c0c2789e8", "9d9c4834eb823af24274a4132f3bca06", "483b7bbb719c347f2fd722a0627308c2", "0e94e05d2405b43df870ac7614965632"),
+    "length(s)" -> Seq("11.0", null, "3.0", "5.0", "15.0", "4.0", "4.0"),
+    "concat(s, '|', n)" -> Seq("Hello World|12", null, "abc|NaN", "\u0009pad\u0009|Infinity", "hello-world foo|1e3", "\u0001ctl| 12 ", "\ud834\udd1eab|abc"),
+    "coalesce(s, n, 'none')" -> Seq("Hello World", "none", "abc", "\u0009pad\u0009", "hello-world foo", "\u0001ctl", "\ud834\udd1eab"),
+    "coalesce(n, m)" -> Seq("12", null, "NaN", "Infinity", "1e3", " 12 ", "abc"),
+    "substring(s, 2, 3)" -> Seq("ell", null, "bc", "pad", "ell", "ctl", "?ab"),
+    "substr(s, -3)" -> Seq("rld", null, "abc", "ad\u0009", "foo", "ctl", "?ab"),
+    "substring(s, -20, 22)" -> Seq("Hello World", null, "abc", "\u0009pad\u0009", "hello-world foo", "\u0001ctl", "\ud834\udd1eab"),
+    "substr(s, 0, 2)" -> Seq("He", null, "ab", "\u0009p", "he", "\u0001c", "\ud834\udd1e"),
+    "substring(s, 3, -1)" -> Seq("", null, "", "", "", "", ""),
+    "repeat(s, 2)" -> Seq("Hello WorldHello World", null, "abcabc", "\u0009pad\u0009\u0009pad\u0009", "hello-world foohello-world foo", "\u0001ctl\u0001ctl", "\ud834\udd1eab\ud834\udd1eab"),
+    "left(s, 3)" -> Seq("Hel", null, "abc", "\u0009pa", "hel", "\u0001ct", "\ud834\udd1ea"),
+    "right(s, 2)" -> Seq("ld", null, "bc", "d\u0009", "oo", "tl", "ab"),
+    "left(s, -1)" -> Seq("", null, "", "", "", "", ""),
+    "lpad(s, 14, '*-')" -> Seq("*-*Hello World", null, "*-*-*-*-*-*abc", "*-*-*-*-*\u0009pad\u0009", "hello-world fo", "*-*-*-*-*-\u0001ctl", "*-*-*-*-*-\ud834\udd1eab"),
+    "rpad(s, 14, '*')" -> Seq("Hello World***", null, "abc***********", "\u0009pad\u0009*********", "hello-world fo", "\u0001ctl**********", "\ud834\udd1eab**********"),
+    "lpad(s, 20, '')" -> Seq("Hello World", null, "abc", "\u0009pad\u0009", "hello-world foo", "\u0001ctl", "\ud834\udd1eab"),
+    "rpad(s, 3)" -> Seq("Hel", null, "abc", "\u0009pa", "hel", "\u0001ct", "\ud834\udd1ea"),
+    "instr(s, 'l')" -> Seq("3", null, "0", "0", "3", "4", "0"),
+    "position('l', s)" -> Seq("3", null, "0", "0", "3", "4", "0"),
+    "split_part(d, ',', 2)" -> Seq("b", null, "", "", "", null, null),
+    "split_part(d, ',', 5)" -> Seq("", null, "", "", "", null, null),
+    "split_part(d, ',', -1)" -> Seq("c", null, "x", "", "only", null, null),
+    "split_part(d, ',', 0)" -> Seq("", null, "", "", "", null, null),
+    "split_part(d, '', 1)" -> Seq("a,b,c", null, "x", ",,", "only", null, null),
+    "abs(m)" -> Seq("5.0", null, "0.0", "3.0", "7.0", "2.5", "10.0"),
+    "pmod(m, 3)" -> Seq("2.0", null, "0.0", "-0.0", "2.0", "2.5", "1.0"),
+    "pmod(m, -3)" -> Seq("-1.0", null, "0.0", "-0.0", "-1.0", "-0.5", "-2.0"),
+    "floor(m)" -> Seq("5", null, "0", "-3", "-7", "2", "10"),
+    "ceil(m)" -> Seq("5", null, "0", "-3", "-7", "3", "10"),
+    "ceiling(n)" -> Seq("12", null, null, null, "1000", "12", null),
+    "round(m)" -> Seq("5.0", null, "0.0", "-3.0", "-7.0", "3.0", "10.0"),
+    "round(m / 3, 2)" -> Seq("1.67", null, "0.0", "-1.0", "-2.33", "0.83", "3.33"),
+    "greatest(n, m, 1)" -> Seq("12", "1.0", "NaN", "Infinity", "1e3", " 12 ", "abc"),
+    "least(n, m)" -> Seq("5", null, "0", "-3", "-7", "2.5", "10"),
+    "greatest(s, n)" -> Seq("Hello World", null, "abc", "Infinity", "hello-world foo", " 12 ", "\ud834\udd1eab"),
+    "least(m, 'abc')" -> Seq("5", "abc", "0", "-3", "-7", "2.5", "10"),
+    "nullif(n, m)" -> Seq("12", null, "NaN", "Infinity", "1e3", " 12 ", "abc"),
+    "nullif(n, 12)" -> Seq(null, null, "NaN", "Infinity", "1e3", null, "abc"),
+    "if(b, 'y', 'n')" -> Seq("y", "n", "y", "n", "n", "n", "n"),
+    "if(n > m, n, m)" -> Seq("12", null, "NaN", "Infinity", "1e3", " 12 ", "abc"),
+    "replace(s, 'l', 'L')" -> Seq("HeLLo WorLd", null, "abc", "\u0009pad\u0009", "heLLo-worLd foo", "\u0001ctL", "\ud834\udd1eab"),
+    "replace(s, 'l')" -> Seq("Heo Word", null, "abc", "\u0009pad\u0009", "heo-word foo", "\u0001ct", "\ud834\udd1eab"),
+    "replace(s, '', 'x')" -> Seq("xHxexlxlxox xWxoxrxlxdx", null, "xaxbxcx", "x\u0009xpxaxdx\u0009x", "xhxexlxlxox-xwxoxrxlxdx xfxoxox", "x\u0001xcxtxlx", "x?x?xaxbx"),
+    "year(t)" -> Seq("2024", null, "2024", "2023", null, "2024", null),
+    "month(t)" -> Seq("3", null, "3", "12", null, "2", null),
+    "day(t)" -> Seq("15", null, "15", "31", null, "29", null),
+    "dayofmonth(t)" -> Seq("15", null, "15", "31", null, "29", null),
+    "hour(t)" -> Seq("10", null, "10", "0", null, "23", null),
+    "minute(t)" -> Seq("30", null, "53", "0", null, "0", null),
+    "second(t)" -> Seq("0", null, "20", "0", null, "0", null),
+    "dayofweek(t)" -> Seq("6", null, "6", "1", null, "5", null),
+    "to_date(t)" -> Seq("2024-03-15", null, "2024-03-15", "2023-12-31", null, "2024-02-29", null),
+    "to_date(u)" -> Seq("2024-01-01", null, "2024-03-15", "2023-11-14", null, null, null),
+    "date_trunc('day', t)" -> Seq("2024-03-15 00:00:00", null, "2024-03-15 00:00:00", "2023-12-31 00:00:00", null, "2024-02-29 00:00:00", null),
+    "date_trunc('hour', u)" -> Seq("2024-01-01 00:00:00", null, "2024-03-15 23:00:00", "2023-11-14 22:00:00", null, null, null),
+    "date_trunc('week', t)" -> Seq("2024-03-11 00:00:00", null, "2024-03-11 00:00:00", "2023-12-25 00:00:00", null, "2024-02-26 00:00:00", null),
+    "date_trunc('month', t)" -> Seq("2024-03-01 00:00:00", null, "2024-03-01 00:00:00", "2023-12-01 00:00:00", null, "2024-02-01 00:00:00", null),
+    "datediff(t, u)" -> Seq("74", null, "0", "47", null, null, null),
+    "datediff(t, '2024-01-01')" -> Seq("74", null, "74", "-1", null, "59", null),
+    "n + m" -> Seq("17.0", null, null, null, "993.0", "14.5", null),
+    "n - m" -> Seq("7.0", null, null, null, "1007.0", "9.5", null),
+    "n * m" -> Seq("60.0", null, null, null, "-7000.0", "30.0", null),
+    "n / m" -> Seq("2.4", null, null, null, "-142.85714285714286", "4.8", null),
+    "n % m" -> Seq("2.0", null, null, null, "6.0", "2.0", null),
+    "n / 0" -> Seq(null, null, null, null, null, null, null),
+    "n % 0" -> Seq(null, null, null, null, null, null, null),
+    "pmod(n, 0)" -> Seq(null, null, null, null, null, null, null),
+    "m * 1e308 * 10" -> Seq(null, null, "0.0", null, null, null, null),
+    "CAST(n AS INT)" -> Seq("12.0", null, null, null, "1000.0", "12.0", null),
+    "CAST(n AS DOUBLE)" -> Seq("12.0", null, null, null, "1000.0", "12.0", null),
+    "CAST(b AS STRING)" -> Seq("true", null, "TRUE", "yes", "false", "0", null),
+    "CAST(m AS STRING)" -> Seq("5", null, "0", "-3", "-7", "2.5", "10"),
+    "CASE WHEN n > 10 THEN 'big' WHEN n IS NULL THEN 'none' ELSE 'small' END" -> Seq("big", "none", "big", "big", "big", "big", "big"),
+    "CASE WHEN b THEN m ELSE 0 END" -> Seq("5", "0.0", "0", "0.0", "0.0", "0.0", "0.0"),
+    "CASE m WHEN 5 THEN 'five' ELSE 'other' END" -> Seq("five", "other", "other", "other", "other", "other", "other"),
+    "md5(concat(s, n))" -> Seq("8d3f54d8b27841be967054bc8a5337a7", null, "cdbef312322bdf871904c2530d9e1cee", "d0c4e592395e6bc63acd1a577982c4bd", "967c9eb2aff7d8f91c2259d60aabaa18", "361d75bc7ff947e265c21d703392e25a", "d4f37cb2d87448744f91d153d29cfb6a"),
+    "upper(n + m)" -> Seq("17.0", null, null, null, "993.0", "14.5", null),
+    "2.5" -> Seq("2.5", "2.5", "2.5", "2.5", "2.5", "2.5", "2.5"),
+    "'lit'" -> Seq("lit", "lit", "lit", "lit", "lit", "lit", "lit"),
+    "startswith(s, 'ab')" -> Seq("false", null, "true", "false", "false", "false", "false"),
+    "endswith(s, 'ld')" -> Seq("true", null, "false", "false", "false", "false", "false"),
+    "contains(s, 'b')" -> Seq("false", null, "true", "false", "false", "false", "true"),
+    "n > 10" -> Seq("true", null, "true", "true", "true", "true", "true"),
+    "n < m" -> Seq("false", null, "false", "false", "false", "false", "false"),
+    "n <= 12" -> Seq("true", null, "false", "false", "false", "true", "false"),
+    "n >= 1000" -> Seq("false", null, "true", "true", "true", "false", "true"),
+    "n = 12" -> Seq("true", null, "false", "false", "false", "true", "false"),
+    "s = 'abc'" -> Seq("false", null, "true", "false", "false", "false", "false"),
+    "s > 5" -> Seq("true", null, "true", "false", "true", "false", "true"),
+    "n = s" -> Seq("false", null, "false", "false", "false", "false", "false"),
+    "n <=> m" -> Seq("false", "true", "false", "false", "false", "false", "false"),
+    "s <=> NULL" -> Seq("false", "true", "false", "false", "false", "false", "false"),
+    "n != m" -> Seq("true", null, "true", "true", "true", "true", "true"),
+    "n IN (12, 1000)" -> Seq("true", null, "false", "false", "true", "true", "false"),
+    "n NOT IN (12)" -> Seq("false", null, "true", "true", "true", "false", "true"),
+    "s IN ('abc', 'x')" -> Seq("false", null, "true", "false", "false", "false", "false"),
+    "m IN (5, NULL)" -> Seq("true", null, null, null, null, null, null),
+    "b AND n > 10" -> Seq("true", null, "true", null, "false", null, null),
+    "b OR n > 10" -> Seq("true", null, "true", "true", "true", "true", "true"),
+    "NOT b" -> Seq("false", null, "false", null, "true", null, null),
+    "b" -> Seq("true", null, "TRUE", "yes", "false", "0", null),
+    "b = true" -> Seq("true", null, "false", "false", "false", "false", null),
+    "s LIKE 'a%'" -> Seq("false", null, "true", "false", "false", "false", "false"),
+    "s LIKE '%l_o%'" -> Seq("true", null, "false", "false", "true", "false", "false"),
+    "s NOT LIKE 'H%'" -> Seq("false", null, "true", "true", "true", "true", "true"),
+    "s LIKE '_ctl'" -> Seq("false", null, "false", "false", "false", "true", "false"),
+    "s IS NULL" -> Seq("false", "true", "false", "false", "false", "false", "false"),
+    "n IS NOT NULL" -> Seq("true", "false", "true", "true", "true", "true", "true"),
+    "coalesce(n > 10, false)" -> Seq("true", "false", "true", "true", "true", "true", "true"),
+    "if(b, n > 10, false)" -> Seq("true", "false", "true", "false", "false", "false", "false"),
+    "CASE WHEN b THEN true ELSE NULL END" -> Seq("true", null, "true", null, null, null, null),
+    "length(s) > 3" -> Seq("true", null, "false", "true", "true", "true", "true"),
+    "year(t) = 2024" -> Seq("true", null, "true", "false", null, "true", null)
+  )
+
+  /** The rows a WHERE keeps for each predicate. A bare string field is
+    * not a boolean, so `WHERE b` keeps no row.
+    */
+  private val parityWherePinned: Map[String, Seq[Int]] = Map(
+    "startswith(s, 'ab')" -> Seq(3),
+    "endswith(s, 'ld')" -> Seq(1),
+    "contains(s, 'b')" -> Seq(3, 7),
+    "n > 10" -> Seq(1, 3, 4, 5, 6, 7),
+    "n < m" -> Seq(),
+    "n <= 12" -> Seq(1, 6),
+    "n >= 1000" -> Seq(3, 4, 5, 7),
+    "n = 12" -> Seq(1, 6),
+    "s = 'abc'" -> Seq(3),
+    "s > 5" -> Seq(1, 3, 5, 7),
+    "n = s" -> Seq(),
+    "n <=> m" -> Seq(2),
+    "s <=> NULL" -> Seq(2),
+    "n != m" -> Seq(1, 3, 4, 5, 6, 7),
+    "n IN (12, 1000)" -> Seq(1, 5, 6),
+    "n NOT IN (12)" -> Seq(3, 4, 5, 7),
+    "s IN ('abc', 'x')" -> Seq(3),
+    "m IN (5, NULL)" -> Seq(1),
+    "b AND n > 10" -> Seq(1, 3),
+    "b OR n > 10" -> Seq(1, 3, 4, 5, 6, 7),
+    "NOT b" -> Seq(5),
+    "b" -> Seq(),
+    "b = true" -> Seq(1),
+    "s LIKE 'a%'" -> Seq(3),
+    "s LIKE '%l_o%'" -> Seq(1, 5),
+    "s NOT LIKE 'H%'" -> Seq(3, 4, 5, 6, 7),
+    "s LIKE '_ctl'" -> Seq(6),
+    "s IS NULL" -> Seq(2),
+    "n IS NOT NULL" -> Seq(1, 3, 4, 5, 6, 7),
+    "coalesce(n > 10, false)" -> Seq(1, 3, 4, 5, 6, 7),
+    "if(b, n > 10, false)" -> Seq(1, 3),
+    "CASE WHEN b THEN true ELSE NULL END" -> Seq(1, 3),
+    "length(s) > 3" -> Seq(1, 4, 5, 6, 7),
+    "year(t) = 2024" -> Seq(1, 3, 6)
+  )
+
+  /** Expressions whose result is now Spark's function body where the
+    * earlier interpreter differed: live expression -> the batch SQL over
+    * the same rows it must equal.
+    */
+  private val parityBatch: Map[String, String] = Map(
+    // Spark's trim strips spaces only; String.trim stripped every char <= U+0020
+    "trim(s)" -> "trim(s)",
+    // an int, counted in code points: "11", not "11.0"; 𝄞 is one character
+    "length(s)" -> "length(s)", "length(s) > 3" -> "length(s) > 3",
+    // positions and widths count code points, not UTF-16 units
+    "substring(s, 2, 3)" -> "substring(s, 2, 3)", "substr(s, -3)" -> "substr(s, -3)",
+    "substr(s, 0, 2)" -> "substr(s, 0, 2)", "left(s, 3)" -> "left(s, 3)",
+    "lpad(s, 14, '*-')" -> "lpad(s, 14, '*-')", "rpad(s, 14, '*')" -> "rpad(s, 14, '*')",
+    "rpad(s, 3)" -> "rpad(s, 3)",
+    // a negative divisor: Spark adds the divisor only to a negative
+    // remainder, where the interpreter followed the divisor's sign
+    "pmod(m, -3)" -> "pmod(CAST(m AS DOUBLE), -3D)",
+    // an empty search string replaces nothing
+    "replace(s, '', 'x')" -> "replace(s, '', 'x')",
+  )
+
+  private def parityFeed: Seq[Change] = parityRows.zipWithIndex.map { case (p, i) =>
+    Change("insert", i + 1L, ts(i), p + ("id" -> (i + 1).toString), i + 1L)
+  }
+
+  /** Batch Spark SQL of `e` over the parity rows, rendered like the view. */
+  private def parityBatchOf(e: String): Seq[String] = {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val cols   = Seq("id", "s", "n", "m", "b", "t", "u", "d")
+    val schema = StructType(cols.map(StructField(_, StringType)))
+    val rows   = parityRows.zipWithIndex.map { case (p, i) =>
+      Row.fromSeq(cols.map(c => if (c == "id") (i + 1).toString else p.getOrElse(c, null)))
+    }
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema).createOrReplaceTempView("parity_batch")
+    spark.sql(s"SELECT CAST(id AS INT) AS id, $e AS v FROM parity_batch ORDER BY id").collect().toSeq
+      .map(r => if (r.isNullAt(1)) null else String.valueOf(r.get(1)))
+  }
+
+  test("#171cw expression parity: every function and operator in SELECT, WHERE and GROUP BY over edge payloads") {
+    val exprs = parityValues ++ parityPredicates
+    val ids   = 1 to parityRows.size
+    // SELECT position: one row view carries every expression
+    runView(exprs.zipWithIndex.map { case (e, i) => s"$e AS c$i" }
+      .mkString("SELECT id, ", ", ", " FROM p"), "pv_parity_sel", Seq(Map("p" -> parityFeed)))
+    val sel = rowState("pv_parity_sel", "id" +: exprs.indices.map(i => s"c$i"))
+      .values.map(r => r.head.toString.toInt -> r.tail.map(v => if (v == null) null else v.toString)).toMap
+    val got = exprs.zipWithIndex.map { case (e, i) => e -> ids.map(id => sel(id)(i)) }.toMap
+    val expected = exprs.map(e => e -> parityBatch.get(e).map(parityBatchOf).getOrElse(parityPinned(e))).toMap
+    val bad = scala.collection.mutable.ArrayBuffer.empty[String]
+    exprs.filter(e => got(e) != expected(e)).foreach(e => bad +=
+      s"SELECT $e: got ${got(e)}, expected ${expected(e)}" +
+        parityBatch.get(e).fold(" (pinned)")(b => s" (batch Spark SQL $b)"))
+    // GROUP BY position: one aggregate view per expression, keyed by the
+    // row id and the expression. A value holding U+0001 is cut there: the
+    // group key is U+0001-joined text, so the separator collides
+    exprs.zipWithIndex.foreach { case (e, i) =>
+      runView(s"SELECT id, $e AS g, count(*) AS n FROM p GROUP BY id, $e", s"pv_parity_grp$i",
+        Seq(Map("p" -> parityFeed)))
+      val grp = aggState(s"pv_parity_grp$i", Seq("id", "g")).keys
+        .map(g => g.head.toString.toInt -> (if (g(1) == null) null else g(1).toString)).toMap
+      val want = expected(e).map(v => if (v == null) null else v.takeWhile(_ != '\u0001'))
+      if (ids.map(grp) != want) bad += s"GROUP BY $e: got ${ids.map(grp)}, expected $want"
+    }
+    // WHERE position: a predicate keeps its pinned rows (or, for a listed
+    // Spark-body difference, the rows batch SQL finds true); a value
+    // expression is tested for NULL there
+    exprs.zipWithIndex.foreach { case (e, i) =>
+      val isPred = parityPredicates.contains(e)
+      runView(s"SELECT id FROM p WHERE ${if (isPred) e else s"($e) IS NOT NULL"}", s"pv_parity_wh$i",
+        Seq(Map("p" -> parityFeed)))
+      val kept = rowState(s"pv_parity_wh$i", Seq("id")).values.map(_.head.toString.toInt).toSeq.sorted
+      val want =
+        if (!isPred) ids.filter(id => expected(e)(id - 1) != null)
+        else if (parityBatch.contains(e)) ids.filter(id => expected(e)(id - 1) == "true")
+        else parityWherePinned(e)
+      if (kept != want) bad += s"WHERE $e: kept $kept, expected $want"
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("#171cx an unlisted function is refused at compile time in every expression position") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val feeds = Map("t" -> MemoryStream[Change].toDS(), "u" -> MemoryStream[Change].toDS())
+    val positions = Seq(
+      "WHERE"               -> "SELECT name FROM t WHERE %s < 2",
+      "SELECT"              -> "SELECT %s AS d FROM t",
+      "GROUP BY"            -> "SELECT %1$s AS d, count(*) AS n FROM t GROUP BY %1$s",
+      "OVER PARTITION BY"   -> "SELECT name, row_number() OVER (PARTITION BY %s ORDER BY v) AS rn FROM t",
+      "OVER ORDER BY"       -> "SELECT name, row_number() OVER (PARTITION BY city ORDER BY %s) AS rn FROM t",
+      "join ON residual"    -> "SELECT t.name FROM t JOIN u ON t.city = u.city AND %s < 2",
+      "SELECT subquery"     -> ("SELECT name, (SELECT count(*) FROM u WHERE u.city = t.city AND %s < 2) " +
+        "AS c FROM t"))
+    for ((fn, call) <- Seq("levenshtein" -> "levenshtein(name, 'x')", "rand" -> "rand()");
+         (where, sql) <- positions) {
+      val e = intercept[IllegalArgumentException] {
+        IncrementalPlanner.materialize(spark, sql.format(call), feeds)
+      }
+      assert(e.getMessage.contains(s"function $fn("),
+        s"$fn in $where must be refused at compile time, naming the function: ${e.getMessage}")
+    }
+    // a LIKE escape Spark rejects, and a date_trunc unit it does not
+    // know, are refused at compile time too, never at run time
+    for (bad <- Seq("name LIKE 'a\\\\qb'", "date_trunc('fortnight', name) IS NULL")) {
+      val e = intercept[IllegalArgumentException] {
+        IncrementalPlanner.materialize(spark, s"SELECT name FROM t WHERE $bad", feeds)
+      }
+      assert(e.getMessage.contains("IncrementalPlanner does not compile"), e.getMessage)
+    }
+  }
 }
